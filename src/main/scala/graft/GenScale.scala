@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 import org.apache.spark.sql.functions._
 
 /** DEV harness (not part of the engine): derive the sf1-equivalent
   * scaling fixture (VERDICT r9 #3) — a deterministic 10× expansion of
   * sf0.1's documents / embeddings / supplier into `fixtures/sf1`, giving
   * the text/embedding families a second genuine 10× step
-  * (sf0.01 → sf0.1 → sf1) for the ScaleBench exponent table.
+  * (sf0.01 → sf0.1 → sf1) for the sf1 parity sweeps and the Round13Spec
+  * anchors.
   *
   * The expansion is designed so the STRUCTURE scales linearly instead of
   * manufacturing artificial quadratic blowups:
@@ -34,13 +35,10 @@ import org.apache.spark.sql.functions._
 object GenScale {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val out = if (args.length > 1) args(1) else "/root/repo/fixtures/sf1"
+    val out =
+      if (args.length > 1) args(1) else graft.core.Tables.fixture("sf1")
     val reps = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder("graft-genscale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.core.Tables.t
     def replicated(name: String) = t(spark, src, name)

@@ -2,13 +2,20 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Engine entry contract — see SURVEY.md §7.
   *
   * `queries` is the full operator inventory (SURVEY.md §2); every entry with
   * a matching `oracleSql` is hash-checked against DuckDB on the same
   * parquet. Entries without oracle SQL (engine-specific hashes, ANN, ML
   * pipelines) get the driver's rows-only check and are validated in
   * ScalaTest instead.
+  *
+  * Session contract: every query runs on a session built by
+  * [[graft.core.Session.builder]], or on any session that carries
+  * `spark.sql.extensions=graft.plans.GraftExtensions`. The extension is the
+  * only install path for the graft SQL functions and the native join
+  * strategies; on a session without it a query fails when it is analysed
+  * (unresolved function) or planned (no strategy for the native join).
   */
 object SparkEntry {
 

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,14 +16,7 @@ object Verify {
     val prefixes = sel.filter(_.endsWith("*")).map(_.dropRight(1))
     def selected(name: String): Boolean =
       sel.isEmpty || exact(name) || prefixes.exists(name.startsWith)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder("graft-verify")
       // Deliberately KEEP the INT96 default for the dumped result parquet:
       // INT64-micros timestamps carry isAdjustedToUTC=true, which DuckDB
       // surfaces as TIMESTAMP WITH TIME ZONE ("+00:00" suffix) — every

@@ -35,9 +35,9 @@ import org.apache.spark.sql.SparkSession
   * parquet scans and build their own broadcasts/shuffles.
   *
   * The sweep is synchronous and blocking, so a caller that runs it
-  * OUTSIDE a timed window (Bench/TimeQuery do) guarantees none of the
-  * release churn bleeds into the next measurement — unlike the GC +
-  * async-cleaner path it replaces.
+  * OUTSIDE a timed window guarantees none of the release churn bleeds
+  * into the next measurement — unlike the GC + async-cleaner path it
+  * replaces.
   */
 object Debris {
 
@@ -50,7 +50,7 @@ object Debris {
     * threads (guide §2.6) must not have one query's boundary sweep rip a
     * broadcast out from under another query mid-flight (observed as a
     * TorrentBroadcast FAILED_READ race when test suites share the
-    * session). Bench/TimeQuery call between sequential queries, where the
+    * session). perfbench calls it between sequential ops, where the
     * tracker is empty and the sweep always proceeds; the check leaves a
     * small start-after-check window, so quiescence at the call site is
     * still the caller's contract — this guard just fails safe. */

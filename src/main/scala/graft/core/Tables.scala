@@ -16,6 +16,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** A committed or generated fixture directory, `fixtures/<name>`,
+    * resolved against the working directory (the repo root under sbt). */
+  def fixture(name: String): String =
+    new java.io.File(s"fixtures/$name").getAbsolutePath
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       // events.ts has shipped as parquet timestamp[ns] in some data drops

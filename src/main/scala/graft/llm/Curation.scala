@@ -68,7 +68,6 @@ object Curation {
     // the group key would be xxhash64(w) (8 bytes vs 24) — the string key
     // here keeps the oracle exact.
     "llm_substring_dup" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val grouped = spread(t(s, d, "documents"))
         .filter(length(col("text")) >= 24)
         .withColumn("p", explode(sequence(lit(1), length(col("text")) - 23)))

@@ -6,7 +6,6 @@ import org.apache.spark.ml.linalg.SparseVector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables.{spread, t}
-import graft.functions.GraftFunctions
 
 /** Approximate dedup family for 100 TB corpora (BASELINE.json north_star).
   * Exact anchors (md5 group, exact n-gram Jaccard) live in [[TextOps]];
@@ -310,14 +309,12 @@ object Dedup {
     // root the component min at every step, so find() IS the min), every
     // vertex labeled, isolated vertices labeled themselves. DedupSpec's
     // differential suite (fast ≡ min-label reference) covers this path;
-    // `graft.cc.driverCap` (tests: set 0) forces the distributed form,
-    // which remains the production path for corpus-scale edge sets.
-    val cap = sys.props.get("graft.cc.driverCap").map(_.toInt)
-      .getOrElse(524288)
+    // the distributed form (ccFastLabels) remains the production path for
+    // edge sets beyond ccDriverCap.
     val edgeTypesOk = e.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    val probe = if (edgeTypesOk) e.limit(cap + 1).collect() else null
-    if (probe != null && probe.length <= cap) {
+    val probe = if (edgeTypesOk) e.limit(ccDriverCap + 1).collect() else null
+    if (probe != null && probe.length <= ccDriverCap) {
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -347,6 +344,10 @@ object Dedup {
           coalesce(col("cclab"), col("doc_id")).as("label"))
     } else ccFastFromEdges(e, vertices, maxIter)._1
   }
+
+  /** Largest distinct edge set [[connectedComponentsFast]] labels on the
+    * driver instead of by distributed star rounds. */
+  private val ccDriverCap = 524288
 
   /** (doc1, doc2) → distinct big→small (u, v) edges, self-loops dropped —
     * the normalized form both CC kernels consume. */
@@ -422,10 +423,9 @@ object Dedup {
     * probe shows exactly this: 16×4 banding at cos 0.45 went 0.68 s →
     * 15.0 s across the 10× step while the cos-0.95 production tuning
     * stays bucket-sparse. */
-  def embeddingNearDup(s: SparkSession, emb: DataFrame,
+  def embeddingNearDup(emb: DataFrame,
                        minCos: Double = 0.95,
                        nTables: Int = 8, bitsPerTable: Int = 8): DataFrame = {
-    GraftFunctions.register(s)
     // the bucket self-join carries ONLY (sig, id) — 16 bytes/row — through
     // the shuffle; embeddings (~dim×4 bytes each) are joined back by id
     // for just the deduped candidate pairs. The earlier form shuffled both
@@ -544,7 +544,7 @@ object Dedup {
     // table, so the twin replays buckets AND verified pairs verbatim
     // (llm_embedding_neardup_exact below remains the axis-aligned anchor).
     "llm_embedding_neardup" -> ((s, d) =>
-      embeddingNearDup(s, spread(t(s, d, "embeddings")), minCos = 0.45,
+      embeddingNearDup(spread(t(s, d, "embeddings")), minCos = 0.45,
         nTables = 16, bitsPerTable = 4)),
 
     // SimHash near-dup pairs at hamming ≤ 3 (banked, recall-exact; see
@@ -625,7 +625,6 @@ object Dedup {
     // DuckDB. Recall vs all-pairs is the sign-LSH collision rate — the
     // seeded random-hyperplane variant above remains the production path.
     "llm_embedding_neardup_exact" -> ((s, d) => {
-      GraftFunctions.register(s)
       val bucketed = spread(t(s, d, "embeddings"))
         .select(col("vec_id"), col("embedding"),
           (0 until 8).map(i =>

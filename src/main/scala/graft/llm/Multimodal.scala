@@ -95,14 +95,14 @@ object Multimodal {
 
   /** Committed deterministic fixture assets (LCG byte streams — see
     * fixtures/multimodal/) so the binary-column contract has a
-    * hash-checkable oracle row like every other operator family. */
-  val fixtureDir = "/root/repo/fixtures/multimodal"
+    * hash-checkable oracle row like every other operator family.
+    * The DuckDB twins in [[sql]] read the same directory. */
+  val fixtureDir: String = graft.core.Tables.fixture("multimodal")
 
-  // The mm kernels are parameterized by the asset DIRECTORY (r11,
-  // VERDICT r10 #6) so ScaleBench can probe them against the generated
-  // 10× fixture (fixtures/mm10, graft.MmGen) for a real explode-path
-  // exponent; the board defs stay pinned to the committed fixtureDir the
-  // DuckDB twins read.
+  // The mm kernels are parameterized by the asset DIRECTORY so a caller
+  // can run them over any asset set (perfbench runs them on its own copy
+  // of the fixture); the defs stay pinned to fixtureDir, which the DuckDB
+  // twins read.
 
   // frame sampling with a hash-checkable contract: every 4th 256-byte
   // chunk of each payload (the stub stand-in for decoded video frames)
@@ -261,18 +261,18 @@ object Multimodal {
     "mm_patch_grid" -> ((s, _) => patchGrid(s, fixtureDir)))
 
   val sql: Map[String, String] = Map(
-    "llm_multimodal_meta" -> """
-      SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
-             regexp_extract(filename, '\.([A-Za-z0-9]+)$', 1) AS fmt,
+    "llm_multimodal_meta" -> s"""
+      SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
+             regexp_extract(filename, '\\.([A-Za-z0-9]+)$$', 1) AS fmt,
              octet_length(content) AS byte_len,
              sha256(hex(content)) AS sha_hex
-      FROM read_blob('/root/repo/fixtures/multimodal/*')""",
+      FROM read_blob('$fixtureDir/*')""",
 
-    "mm_frame_sample" -> """
+    "mm_frame_sample" -> s"""
       WITH a AS (
-        SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
+        SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
                hex(content) AS hx, octet_length(content) AS bl
-        FROM read_blob('/root/repo/fixtures/multimodal/*')
+        FROM read_blob('$fixtureDir/*')
       ), idx AS (
         SELECT file_name, hx,
                unnest(range(0, greatest(1, bl // 256))) AS frame_idx
@@ -284,11 +284,11 @@ object Multimodal {
                AS chunk_sha
       FROM idx WHERE frame_idx % 4 = 0""",
 
-    "mm_shot_boundary" -> """
+    "mm_shot_boundary" -> s"""
       WITH a AS (
-        SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
+        SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
                hex(content) AS hx, octet_length(content) AS bl
-        FROM read_blob('/root/repo/fixtures/multimodal/*.vid')
+        FROM read_blob('$fixtureDir/*.vid')
       ), bytes AS (
         SELECT file_name,
                CAST(unnest(range(0, (bl // 256) * 256)) AS BIGINT) AS i, hx
@@ -319,12 +319,12 @@ object Multimodal {
                AS BIGINT) AS n_scenes
       FROM fl GROUP BY file_name""",
 
-    "mm_audio_rms" -> """
+    "mm_audio_rms" -> s"""
       WITH a AS (
-        SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
+        SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
                hex(content) AS hx,
                CAST(octet_length(content) // 2 AS BIGINT) AS n_samples
-        FROM read_blob('/root/repo/fixtures/multimodal/*')
+        FROM read_blob('$fixtureDir/*')
       ), smp AS (
         SELECT file_name,
                CAST(unnest(range(0, n_samples)) AS BIGINT) AS i, hx
@@ -350,12 +350,12 @@ object Multimodal {
              CAST(floor(1e6 * sqrt(energy / n) + 0.5) AS BIGINT) AS rms_ppm
       FROM agg""",
 
-    "mm_audio_vad" -> """
+    "mm_audio_vad" -> s"""
       WITH a AS (
-        SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
+        SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
                hex(content) AS hx,
                CAST(octet_length(content) // 2 AS BIGINT) AS n_samples
-        FROM read_blob('/root/repo/fixtures/multimodal/*')
+        FROM read_blob('$fixtureDir/*')
       ), smp AS (
         SELECT file_name,
                CAST(unnest(range(0, n_samples)) AS BIGINT) AS i, hx
@@ -396,11 +396,11 @@ object Multimodal {
              CAST(sum(energy) AS BIGINT) AS seg_energy
       FROM isl GROUP BY file_name, grp""",
 
-    "mm_patch_grid" -> """
+    "mm_patch_grid" -> s"""
       WITH a AS (
-        SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
+        SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
                octet_length(content) AS bl
-        FROM read_blob('/root/repo/fixtures/multimodal/*')
+        FROM read_blob('$fixtureDir/*')
       ), dims AS (
         SELECT file_name,
                CAST(64 + bl % 193 AS BIGINT) AS w,

@@ -5,7 +5,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables.{spread, t}
-import graft.functions.GraftFunctions
 
 /** Semantic curation operators — the embedding-space and
   * distribution-matching half of a training-data pipeline, built from
@@ -147,7 +146,6 @@ object Semantic {
     // per-vector nearest-centroid assignment — the Lloyd "assign" half
     // of k-means as a standalone, oracle-checked operator.
     "llm_kmeans_assign" -> ((s, d) => {
-      GraftFunctions.register(s)
       assignCells(d, spread(t(s, d, "embeddings")))
         .select(col("vec_id"), col("cell"), round(col("sim"), 4).as("cos_sim"))
     }),
@@ -158,7 +156,6 @@ object Semantic {
     // 6-decimal-rounded terms so partial-aggregation order cannot move
     // the 4-decimal output.
     "llm_kmeans_step" -> ((s, d) => {
-      GraftFunctions.register(s)
       assignCells(d, spread(t(s, d, "embeddings")))
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n_members"),
@@ -176,7 +173,6 @@ object Semantic {
     // |cell|² cosines inside one task's hash join — with K ∝ n/100
     // that is O(n·100) total, linear in the corpus.
     "llm_semdedup" -> ((s, d) => {
-      GraftFunctions.register(s)
       val emb = spread(t(s, d, "embeddings"))
       val a = assignCells(d, emb)
         .join(emb.select(col("vec_id"), col("embedding")), Seq("vec_id"))
@@ -354,7 +350,6 @@ object Semantic {
     // the driver. SemanticSpec pins the contract: mean member-cosine
     // must not decrease across rounds.
     "llm_kmeans_iterate" -> ((s, d) => {
-      GraftFunctions.register(s)
       kmeansRounds(d, spread(t(s, d, "embeddings")), rounds = 3)
         .select(col("vec_id"), col("cell"))
     }),

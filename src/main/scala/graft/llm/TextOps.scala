@@ -60,7 +60,6 @@ object TextOps {
           phoneRe, "<PHONE>"))
 
   def shingles(s: SparkSession, d: String, k: Int = 3): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     spread(t(s, d, "documents"))
       .selectExpr("doc_id", s"word_shingles(text, $k) AS shingle")
       .distinct()
@@ -116,7 +115,6 @@ object TextOps {
     * pass is unwanted; it is no longer needed for memory safety. */
   private[graft] def exactAnchorFrames(s: SparkSession, d: String,
       who: String): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(s)
     val raw = spread(t(s, d, "documents"))
       .selectExpr("doc_id", "word_shingles(text, 3) AS shingle")
     exactAnchorFrames(raw,
@@ -128,7 +126,6 @@ object TextOps {
   private[graft] def exactAnchorFrames(raw: DataFrame, precheck: Boolean,
       who: String, budget: Long = maxAnchorShingleDf)
       : (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(raw.sparkSession)
     def overBudget(df: Long) =
       s"$who: shingle document frequency $df exceeds the exact-anchor " +
         s"pairing budget $budget (f^2 pair rows) — use the banded-LSH " +
@@ -193,7 +190,6 @@ object TextOps {
     * lang), with add-one smoothing. Profiles are a (lang, gram)-keyed
     * aggregate small enough to broadcast (|langs| × |grams|). */
   def langidNaiveBayes(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = spread(t(s, d, "documents"))
     // char_grams generator: lazy rows straight off the scan — the earlier
     // transform(sequence(...)) HOF ran its lambda interpreted per element
@@ -269,7 +265,6 @@ object TextOps {
 
   def decontaminate(s: SparkSession, d: String,
                     evalBloom: Boolean): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // one lazy materialization of (doc, shingle, bucket): three plan legs
     // consume it (train side, the bloom-build subquery, the eval join
     // side) and without the cut each would replay the scan+generate
@@ -321,7 +316,6 @@ object TextOps {
     * merge table — shared by [[bpeEncode]] and the roundtrip audit. */
   def bpeEncodeWords(docs: DataFrame,
                      merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val words = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
@@ -337,7 +331,7 @@ object TextOps {
       sum(length(col("w"))).as("n_chars"))
 
   // one trained merge table per corpus per JVM (the ivfCache amortization
-  // pattern: Verify/Bench time ENCODE, not repeated training)
+  // pattern: Verify and perfbench time ENCODE, not repeated training)
   private val bpeCache =
     scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
 
@@ -362,7 +356,6 @@ object TextOps {
     * EdgeSemanticsSpec anchors it against an in-test reference implementation. */
   def bpeTrain(docs: DataFrame, nMerges: Int = 10): DataFrame = {
     val s = docs.sparkSession
-    graft.functions.GraftFunctions.register(s)
     var cur = docs
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
@@ -783,7 +776,6 @@ object TextOps {
     }),
 
     "llm_vocab_topk" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       spread(t(s, d, "documents"))
         .selectExpr("word_shingles(text, 1) AS tok")
         .groupBy(col("tok")).agg(count(lit(1)).as("n"))
@@ -914,7 +906,6 @@ object TextOps {
     // boilerplate signal. One generator pass + one per-doc aggregate; the
     // 100 TB shape is a free ride on the scan like the other doc stats.
     "llm_repetition" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       spread(t(s, d, "documents"))
         .selectExpr("doc_id", "word_shingles(text, 3) AS shingle")
         .groupBy(col("doc_id"))
@@ -938,7 +929,6 @@ object TextOps {
     // and degrades to a bounded hash join when a pathological corpus
     // makes it large — never a collect.
     "llm_boilerplate" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val inst = spread(t(s, d, "documents"))
         .selectExpr("doc_id", "word_shingles(text, 3) AS shingle")
         .ckpt(eager = false)
@@ -1369,7 +1359,6 @@ object TextOps {
     // fp = (7·31^n + Σ cp_i·31^(n-i)) mod p with a recursive-CTE power
     // table; also golden-value tested in ScalaTest.
     "llm_fingerprint" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       spread(t(s, d, "documents")).select(
         col("doc_id"),
         expr("poly_hash(text)")
@@ -1732,7 +1721,6 @@ object TextOps {
     // xxhash64, which only matters against adversarial token sets.
     "llm_simhash" -> ((s, d) => {
       graft.functions.Aggregators.register(s)
-      graft.functions.GraftFunctions.register(s)
       spread(t(s, d, "documents"))
         .select(col("doc_id"),
           explode(array_distinct(split(col("text"), " "))).as("tok"))
@@ -1756,7 +1744,6 @@ object TextOps {
     // sides. Empty tokens (split artifacts) are dropped on both sides.
     "llm_simhash_poly" -> ((s, d) => {
       graft.functions.Aggregators.register(s)
-      graft.functions.GraftFunctions.register(s)
       spread(t(s, d, "documents"))
         .select(col("doc_id"),
           explode(array_distinct(split(col("text"), " "))).as("tok"))
@@ -1772,7 +1759,6 @@ object TextOps {
     // minhash signature semantics (min over a permuted hash, distinct
     // tokens), mirroring what minhash16/64 do with the splitmix remix.
     "llm_minhash_poly" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       spread(t(s, d, "documents"))
         .select(col("doc_id"),
           explode(array_distinct(split(col("text"), " "))).as("tok"))

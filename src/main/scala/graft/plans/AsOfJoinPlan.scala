@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LogicalPlan}
@@ -25,9 +25,9 @@ import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
   *    interleaved pass per partition with O(1) state (a single remembered
   *    row), no window buffer, no per-key materialization;
   *  - [[GraftExtensions]]: the `SparkSessionExtensions` hook
-  *    (`spark.sql.extensions=graft.plans.GraftExtensions`) that installs
-  *    rule + strategy at session build; [[AsOfNative.ensureRegistered]]
-  *    is the runtime fallback for sessions built without the config.
+  *    (`spark.sql.extensions=graft.plans.GraftExtensions`, set by
+  *    [[graft.core.Session]]) that installs rule + strategy at session
+  *    build — the only install path.
   *
   * Why a custom operator beats the composed form at 100 TB: the
   * union+window plan shuffles BOTH sides into one partition-wide sort and
@@ -244,17 +244,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 /** Public construction API for the native operator. */
 object AsOfNative {
 
-  /** Runtime fallback for sessions built without
-    * `spark.sql.extensions=graft.plans.GraftExtensions` — idempotently
-    * installs the strategy + rule through the public experimental hooks. */
-  def ensureRegistered(s: SparkSession): Unit = {
-    val exp = s.experimental
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
-    if (!exp.extraOptimizations.contains(AsOfJoinKeyPushdown))
-      exp.extraOptimizations = exp.extraOptimizations :+ AsOfJoinKeyPushdown
-  }
-
   /** As-of join `left` to `right` on equi-keys + event time.
     *
     * @param forward false → latest right with `rt < lt` (backward);
@@ -269,7 +258,6 @@ object AsOfNative {
                      leftTs: String, rightTs: String,
                      forward: Boolean = false): DataFrame = {
     val s = left.sparkSession
-    ensureRegistered(s)
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     require(lp.outputSet.intersect(rp.outputSet).isEmpty,

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -139,12 +139,6 @@ case class BroadcastRangeJoinExec(
 /** Public construction API for the native range join. */
 object RangeNative {
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(RangeJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ RangeJoinStrategy
-  }
-
   /** Join each `points` row to every `intervals` row whose half-open
     * [startCol, endCol) contains pointCol. The interval side is
     * broadcast — use [[graft.ops.IntervalJoin]] when it is data-sized.
@@ -153,7 +147,6 @@ object RangeNative {
                       pointCol: String, startCol: String,
                       endCol: String): DataFrame = {
     val spark = points.sparkSession
-    ensureRegistered(spark)
     val lp = points.queryExecution.analyzed
     val rp = intervals.queryExecution.analyzed
     require(lp.outputSet.intersect(rp.outputSet).isEmpty,

@@ -1099,7 +1099,7 @@ object Graph {
     // by its minimum member reproduces min-label semantics exactly. For
     // unbounded vertex sets the production CC is
     // [[graft.llm.Dedup.connectedComponentsFast]] (large-star/small-star,
-    // O(log d) rounds — see docs/PLANS.md and CcBench).
+    // O(log d) rounds — see docs/PLANS.md).
     "graph_components" -> ((s, d) => {
       val nation = t(s, d, "nation")
       val und = exactEdges(s, d).filter(col("src") =!= col("dst"))

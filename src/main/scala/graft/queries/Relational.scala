@@ -214,7 +214,6 @@ object Relational {
     // per-part totals broadcast-join back for lift. Top 50 by
     // (count, pair) is a deterministic TakeOrdered.
     "join_basket_pairs" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // r14: bounded_collect_set + fail-loud probe (see rec_item_cosine —
       // same basket kernel, same exactness contract), and the pair
       // expansion runs as the stacked posexplode + sliced-explode codegen
@@ -1117,7 +1116,6 @@ object Relational {
     // neighborhood. Cosine inputs are exact integers; the score lands
     // on the floor-ppm grid.
     "rec_item_cosine" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       // r14: bounded_collect_set(l_partkey, 64) — the basket buffer is a
       // primitive long[66] with flat serialization, so the sort-based
       // aggregation this near-unique key stream falls back to sorts flat

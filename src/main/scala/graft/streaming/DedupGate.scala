@@ -70,7 +70,6 @@ object DedupGate {
     * signature `mh0..mh7` as pure scalar expressions (docs under 3 tokens
     * have no shingles, get NULL signatures, and can never match a band). */
   def withSignature(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sig = perms.zipWithIndex.map { case ((a, c), i) =>
       array_min(transform(col("hs"), h => pmod(h * a + c, lit(P))))
         .as(s"mh$i")
@@ -134,7 +133,6 @@ object DedupGate {
     * batch/oracle twins' engine-exact cut. */
   def fuzzyGate(incoming: DataFrame, index: DataFrame,
                 minJw: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(incoming.sparkSession)
     incoming
       .select(col("rid").as("new_id"), col("name").as("new_name"),
         substring(col("name"), 1, 1).as("blk"))
@@ -165,7 +163,6 @@ object DedupGate {
     * append-safe under readStream like [[gate]]. */
   def embedGate(incoming: DataFrame, index: DataFrame,
                 minCos: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(incoming.sparkSession)
     incoming
       .select(col("vec_id").as("new_id"), col("embedding").as("qvec"),
         signOctant(col("embedding")).as("bucket"))

@@ -111,9 +111,8 @@ object EventStreams {
     // `horizon` bounds how long a click can precede its purchase — and
     // with it how long click state must be retained past the watermark:
     // the symmetric state store keeps ~rate×(horizon+watermark) click
-    // rows per side, so the horizon IS the state-size knob (StreamBench's
-    // ssjoin_10m probe measures the tradeoff; the board query keeps the
-    // 1 h semantics its batch twin pins)
+    // rows per side, so the horizon IS the state-size knob (the board
+    // query keeps the 1 h semantics its batch twin pins)
     val c = clicks.select(
         col("event_id").as("click_id"),
         col("user_id").as("click_user"),

@@ -66,16 +66,23 @@ class AsOfNativeSpec extends AnyFunSuite {
   }
 
   test("key-pushdown rule mirrors left-key predicates onto the right side") {
-    AsOfNative.ensureRegistered(spark)
     val df = AsOfNative.joinAsOfNative(purchases(), clicks("click_ts"),
         Seq("user_id"), Seq("c_user_id"), "ts", "click_ts")
       .filter(col("user_id") < 10)
     val optimized = df.queryExecution.optimizedPlan
     val asof = optimized.collect { case j: graft.plans.AsOfJoin => j }.head
+    // the mirrored `< 10` lands on the right key; the optimizer may push it
+    // through the renaming projection onto the column it renames and merge
+    // it with the side's own filter, so look for the conjunct itself
+    val rightKeyCols = Set("c_user_id", "user_id")
     val rightFiltered = asof.right.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-        if f.condition.references.map(_.name).toSet == Set("c_user_id") => f
-    }
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.collect {
+          case lt: org.apache.spark.sql.catalyst.expressions.LessThan
+            if lt.references.size == 1 &&
+              rightKeyCols(lt.references.head.name) => lt
+        }
+    }.flatten
     assert(rightFiltered.nonEmpty,
       s"mirrored right-side key filter missing:\n$optimized")
     // and the mirrored plan returns the same rows as filtering after

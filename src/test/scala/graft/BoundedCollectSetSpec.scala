@@ -13,11 +13,7 @@ import org.apache.spark.sql.functions._
 class BoundedCollectSetSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
 
-  private def registered(): Unit =
-    graft.functions.GraftFunctions.register(spark)
-
   test("groups at or under the cap get the exact sorted distinct set") {
-    registered()
     import spark.implicits._
     // key k has df = k (1..10, all within cap), values deliberately
     // unsorted and duplicated; 16 partitions force partial-buffer merges
@@ -35,7 +31,6 @@ class BoundedCollectSetSpec extends AnyFunSuite {
   }
 
   test("groups over the cap saturate at cap+1 distinct values, across merges") {
-    registered()
     import spark.implicits._
     // df = 50 with cap = 10: every partial buffer stops at 11 and so does
     // the final merge — the group stays provably over-cap without ever
@@ -50,7 +45,6 @@ class BoundedCollectSetSpec extends AnyFunSuite {
   }
 
   test("null keys are skipped; an all-null group yields an empty array") {
-    registered()
     import spark.implicits._
     val got = Seq(("a", Some(1L)), ("a", None), ("b", None))
       .toDF("k", "v")
@@ -90,7 +84,6 @@ class BoundedCollectSetSpec extends AnyFunSuite {
   }
 
   test("lazy buffer growth: large caps stay exact through doubling and merges") {
-    registered()
     import spark.implicits._
     // cap 10000 (the exact-anchor budget): the buffer starts at 10 slots
     // and doubles on demand, so a df=500 group crosses several growth
@@ -107,7 +100,6 @@ class BoundedCollectSetSpec extends AnyFunSuite {
   }
 
   test("sorted-region membership (r15): exactness around and far past SORT_AT") {
-    registered()
     import spark.implicits._
     // the membership strategy flips from linear scan to sorted + binary
     // search at 64 values; exercise groups straddling the boundary

@@ -94,7 +94,7 @@ class CkptLifecycleSpec extends AnyFunSuite {
   }
 
   test("real board queries run scoped without storage growth") {
-    // the exact harness shape Bench/Verify use, over queries known to
+    // the exact harness shape Verify uses, over queries known to
     // checkpoint internally (anchor kernel, ks-test, graph iteration)
     val before = storedRdds
     for (name <- Seq("llm_ngram_jaccard", "agg_ks_test", "graph_simrank")) {

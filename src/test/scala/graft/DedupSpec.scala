@@ -117,8 +117,8 @@ class DedupSpec extends AnyFunSuite {
   test("CC driver union-find path ≡ the distributed star rounds (r15)") {
     import spark.implicits._
     // the driver short-circuit must be label-identical to the distributed
-    // form it replaces below the probe bound; graft.cc.driverCap=0 forces
-    // the distributed fallback through the SAME public entry point
+    // form it replaces below the probe bound; ccFastLabels always runs the
+    // distributed star rounds
     val rnd = new scala.util.Random(23)
     val verts = (0L to 199L).toDF("doc_id")
     val pairs = Seq.fill(300)(
@@ -127,11 +127,7 @@ class DedupSpec extends AnyFunSuite {
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaDriver = asMap(Dedup.connectedComponentsFast(verts, pairs))
-    val viaStars =
-      try {
-        System.setProperty("graft.cc.driverCap", "0")
-        asMap(Dedup.connectedComponentsFast(verts, pairs))
-      } finally System.clearProperty("graft.cc.driverCap")
+    val viaStars = asMap(Dedup.ccFastLabels(verts, pairs)._1)
     assert(viaDriver == viaStars,
       "driver union-find labels diverge from the distributed star rounds")
     // sanity: labels are component minima (every label ≤ its doc_id)
@@ -178,7 +174,7 @@ class DedupSpec extends AnyFunSuite {
       (i + 1000L, v.map(x => x + 0.05f * rnd.nextGaussian().toFloat))
     }
     val emb = (base ++ dups).toDF("vec_id", "embedding")
-    val got = Dedup.embeddingNearDup(spark, emb)
+    val got = Dedup.embeddingNearDup(emb)
       .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val planted = (0 until 12).map(i => (i.toLong, i + 1000L)).toSet
     // exact cosine re-check ⇒ anything found must really be ≥ 0.95

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.core.Tables.t
-import graft.functions.GraftFunctions
 
 /** Differential test for the custom Catalyst expressions (SURVEY.md §7.3):
   * the codegen'd kernel must agree with the higher-order-function
@@ -20,7 +19,6 @@ class ExpressionSpec extends AnyFunSuite {
             CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))""")
 
   test("cosine_similarity matches HOF formulation on real embeddings") {
-    GraftFunctions.register(spark)
     val emb = t(spark, TestSession.sf, "embeddings")
     val pairs = emb.select(col("vec_id").as("ida"), col("embedding").as("a"))
       .crossJoin(broadcast(
@@ -34,7 +32,6 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("nulls propagate; zero vectors yield 0.0; dot_product works") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Some(Array(1.0f, 0.0f)), Some(Array(1.0f, 0.0f))),
@@ -56,7 +53,6 @@ class ExpressionSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, FloatType}
     import spark.implicits._
-    GraftFunctions.register(spark)
     val a = Array(0.3f, -1.2f, 2.5f, 0.0f)
     val b = Array(1.0f, 0.5f, -0.25f, 4.5f)
     def litOf(xs: Array[Float]) = Literal.create(xs, ArrayType(FloatType))
@@ -73,7 +69,6 @@ class ExpressionSpec extends AnyFunSuite {
   test("hyperplane_sigs fused kernel ≡ composed dot_product formulation") {
     // the fused expression replaced a 96-node dot_product/when tree; the
     // signatures must be BIT-IDENTICAL or every LSH bucket assignment moves
-    GraftFunctions.register(spark)
     val nTables = 24; val bits = 4; val dim = 64
     val emb = t(spark, TestSession.sf, "embeddings").limit(200)
     val composed = (0 until nTables).map { tt =>
@@ -117,9 +112,8 @@ class ExpressionSpec extends AnyFunSuite {
   }
 
   test("extension-injected functions resolve in a fresh session without register()") {
-    // newSession() rebuilds session state from spark.sql.extensions alone —
-    // temp functions registered elsewhere in the suite don't carry over, so
-    // resolution here proves the injectFunction path, not a leftover
+    // newSession() rebuilds session state from spark.sql.extensions alone,
+    // so resolution here proves the injectFunction path
     val fresh = spark.newSession()
     val sim = fresh.sql(
       "SELECT cosine_similarity(array(3.0F, 4.0F), array(3.0F, 4.0F))")
@@ -127,5 +121,19 @@ class ExpressionSpec extends AnyFunSuite {
     assert(math.abs(sim - 1.0) < 1e-9)
     val sh = fresh.sql("SELECT word_shingles('a b c d', 3)")
     assert(sh.count() == 2)
+    // ...and the native join strategies: no runtime install path exists,
+    // so planning the native nodes proves the extension installed them
+    def side(k: String, t: String) = fresh.sql(
+      s"SELECT 1L AS $k, TIMESTAMP'2024-01-01 00:00:00' AS $t")
+    def plans(df: org.apache.spark.sql.DataFrame, cls: Class[_]) =
+      df.queryExecution.sparkPlan.find(cls.isInstance(_)).isDefined
+    val asof = graft.plans.AsOfNative.joinAsOfNative(side("k", "t"),
+      side("rk", "rt"), Seq("k"), Seq("rk"), "t", "rt")
+    assert(plans(asof, classOf[graft.plans.AsOfJoinExec]))
+    val range = graft.plans.RangeNative.joinRangeNative(side("k", "t"),
+      fresh.sql("SELECT TIMESTAMP'2023-12-31 00:00:00' AS s, " +
+        "TIMESTAMP'2024-01-02 00:00:00' AS e"), "t", "s", "e")
+    assert(plans(range, classOf[graft.plans.BroadcastRangeJoinExec]))
+    assert(range.count() == 1)
   }
 }

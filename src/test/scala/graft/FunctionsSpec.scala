@@ -17,7 +17,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("word_shingles generator (UDTF): select-list, lateral view, edge cases") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Seq((1L, "a b c d"), (2L, "one two"), (3L, null),
       (4L, "x  y z")).toDF("id", "text")
     docs.createOrReplaceTempView("ws_docs")
@@ -36,7 +35,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("char_grams generator matches the transform(sequence) HOF formulation") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Seq((1L, "abcdef"), (2L, "ab"), (3L, null), (4L, "héllo"))
       .toDF("id", "text")
     val gen = docs.selectExpr("id", "char_grams(text, 3) AS gram")

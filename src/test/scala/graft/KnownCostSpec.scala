@@ -5,14 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** r14 (VERDICT r13 #1): the known-cost invariant, enforced by a test
   * instead of by hand. BASELINE.md's known-cost table must carry an
   * attribution row for every query whose latest measured board read is
-  * ≥ 2 s — "no undocumented slow query". Two sources are checked, both
-  * honestly partial on a fresh clone (the test cancels, not fails):
-  *
-  *  - `bench_local.json`, the full per-query map Bench writes on every
-  *    run (gitignored) — checked only when it is an sf0.1 board, the
-  *    scale the known-cost table is defined at;
-  *  - the newest driver artifact `BENCH_r*.json`, whose retained tail is
-  *    scanned for every visible "query":seconds pair.
+  * ≥ 2 s — "no undocumented slow query". The source is the newest round
+  * artifact `BENCH_r*.json`, whose retained tail is scanned for every
+  * visible "query":seconds pair (the test cancels, not fails, when no
+  * artifact exists).
   *
   * An attribution row is any BASELINE.md table row starting `| <name> `.
   * The 2 s threshold matches the VERDICT r12 #7 / r13 #1 definition.
@@ -37,17 +33,6 @@ class KnownCostSpec extends AnyFunSuite {
       .map(m => m.group(1) -> m.group(2).toDouble)
       .filter { case (n, v) => knownNames(n) && v >= 2.0 }
       .toSeq
-
-  test("every >=2s sf0.1 board read in bench_local.json is attributed") {
-    val local = readIf(new java.io.File(repo, "bench_local.json"))
-    assume(local.isDefined, "no bench_local.json (fresh clone)")
-    assume(local.get.contains("sf0.1"),
-      "bench_local.json is not an sf0.1 board")
-    val missing = slowEntries(local.get).filterNot(e => attributed(e._1))
-    assert(missing.isEmpty,
-      s"queries >=2s with NO known-cost row in BASELINE.md: " +
-        missing.map { case (n, v) => f"$n ($v%.2f s)" }.mkString(", "))
-  }
 
   test("every >=2s read visible in the newest driver artifact is attributed") {
     val arts = Option(repo.listFiles()).getOrElse(Array.empty)

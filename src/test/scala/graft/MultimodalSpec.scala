@@ -21,6 +21,22 @@ class MultimodalSpec extends AnyFunSuite {
       spark.sparkContext.parallelize(rows, 2), Multimodal.assetSchema)
   }
 
+  test("every DuckDB twin reads fixtureDir, inside the working directory") {
+    // no fixed absolute path: a checkout anywhere finds its own assets,
+    // and every twin's read_blob names the directory the defs read
+    assert(new java.io.File(Multimodal.fixtureDir).listFiles.nonEmpty)
+    assert(Multimodal.sql.keySet == Multimodal.defs.keySet)
+    val blob = """read_blob\('([^']*)'\)""".r
+    Multimodal.sql.foreach { case (name, twin) =>
+      val dirs = blob.findAllMatchIn(twin).map(_.group(1)).toSeq
+      assert(dirs.nonEmpty, s"$name: twin reads no blob")
+      assert(dirs.forall(_.startsWith(Multimodal.fixtureDir + "/")),
+        s"$name: twin reads ${dirs.mkString(", ")}, not Multimodal.fixtureDir")
+      assert(dirs.forall(_.startsWith(sys.props("user.dir") + "/")),
+        s"$name: twin reads ${dirs.mkString(", ")}, outside the checkout")
+    }
+  }
+
   test("decodeStub appends a deterministic feature vector, schema intact") {
     val out = Multimodal.decodeStub(assets, dim = 16)
     assert(out.schema.fieldNames.toSeq ==
@@ -44,7 +60,7 @@ class MultimodalSpec extends AnyFunSuite {
     // operator exactly as a text embedding column would
     val emb = Multimodal.decodeStub(assets, dim = 16)
       .select(col("asset_id").as("vec_id"), col("features").as("embedding"))
-    val pairs = graft.llm.Dedup.embeddingNearDup(spark, emb)
+    val pairs = graft.llm.Dedup.embeddingNearDup(emb)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.exists { case (a, b, c) =>
       ((a, b) == (0L, 7L) || (a, b) == (7L, 0L)) && math.abs(c - 1.0) < 1e-9

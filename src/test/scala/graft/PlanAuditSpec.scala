@@ -322,7 +322,6 @@ class PlanAuditSpec extends AnyFunSuite
     assert(ZOrderBits.interleave16(0xFFFF, 0xFFFF) == 0xFFFFFFFFL)
     // masking: only the low 16 bits participate
     assert(ZOrderBits.interleave16(0x1FFFF, 0) == 0x55555555L)
-    graft.functions.GraftFunctions.register(spark)
     val rows = spark.range(1000)
       .selectExpr("cast(id % 97 as int) a", "cast(id % 89 as int) b")
       .selectExpr("a", "b", "interleave_bits(a, b) z")
@@ -340,7 +339,7 @@ class PlanAuditSpec extends AnyFunSuite
     // scan's PushedFilters metadata but no row-group filter is created, so
     // every row is read. Pinned so a future Spark upgrade that lifts the
     // limitation (or a regression that breaks DATE skipping) is noticed —
-    // the clustering-key guidance in Partitioning/Bench rests on it.
+    // the clustering-key guidance in Partitioning rests on it.
     val dir = tmpDir("graft-ntz")
     val li = graft.core.Tables.t(spark, sf, "lineitem")
       .select(col("l_shipdate"), col("l_quantity"))

@@ -51,7 +51,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("cosine similarity is symmetric, bounded, and 1.0 on self") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val vecGen = Gen.listOfN(8, Gen.choose(-5.0f, 5.0f)).map(_.toArray)
       .suchThat(v => v.exists(_ != 0.0f))

@@ -152,7 +152,6 @@ class Round11Spec extends AnyFunSuite {
       .toMap
     // rebuild the pool + pairwise sims driver-side and replay the greedy
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.core.Tables.t(spark, sf, "embeddings")
     val q = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
 class Round13Spec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   private val sf01 = "/root/testdata/sf0.1"
-  private val sf1 = "/root/repo/fixtures/sf1"
+  private val sf1 = graft.core.Tables.fixture("sf1")
   private val REP = 10000000L
   private def haveSf1 =
     new java.io.File(s"$sf1/documents.parquet").exists &&
@@ -104,7 +104,6 @@ class Round13Spec extends AnyFunSuite {
 
   test("sf1: llm_coreset_kcenter greedy trajectory verifies at 10x") {
     assume(haveSf1)
-    graft.functions.GraftFunctions.register(spark)
     val sel = q("llm_coreset_kcenter", sf1).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1)

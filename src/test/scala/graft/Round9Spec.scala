@@ -493,7 +493,7 @@ class Round9Spec extends AnyFunSuite {
     val got = SparkEntry.queries("mm_audio_rms")(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    val files = new java.io.File("/root/repo/fixtures/multimodal").listFiles
+    val files = new java.io.File(graft.llm.Multimodal.fixtureDir).listFiles
     assert(files.nonEmpty)
     var checked = 0
     files.foreach { f =>
