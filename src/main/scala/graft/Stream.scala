@@ -10,10 +10,12 @@ import graft.streaming.EventStreams
   * the runnable proof that the oracle-checked batch expressions run
   * unchanged under `readStream` + watermark.
   *
-  *   runMain graft.Stream <eventsDir> [tumbling|sliding|session|dedup]
+  *   runMain graft.Stream <eventsDir|sfDir>
+  *     [tumbling|sliding|session|dedup|totals|join|sessions_et|gate]
   *
   * `<eventsDir>` must contain micros-timestamp events parquet (e.g. written
-  * by `Tables.t(spark, sf, "events").write.parquet(dir)`).
+  * by `Tables.t(spark, sf, "events").write.parquet(dir)`); the `gate` op
+  * takes an sf dir instead.
   */
 object Stream {
   def main(args: Array[String]): Unit = {

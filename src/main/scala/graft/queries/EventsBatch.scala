@@ -184,10 +184,10 @@ object EventsBatch {
           max(col("latency_s")).as("max_s"))
     }),
 
-    // stream-stream join, batch twin (SURVEY §2 streaming table): runs the
-    // EXACT code of EventStreams.attributeClicks — watermarks are no-ops in
-    // batch, so the oracle hash here certifies the streaming semantics too
-    // (StreamingSpec proves streamed ≡ this).
+    // click→purchase attribution, batch twin (SURVEY §2 streaming table):
+    // on batch inputs EventStreams.attributeClicks runs the plain join,
+    // which is the reference its streamed keyed-state path must equal;
+    // StreamingSpec and perfbench's ssjoin op check streamed ≡ this.
     "evt_stream_join" -> ((s, d) => {
       val ev = t(s, d, "events")
       graft.streaming.EventStreams.attributeClicks(

@@ -10,6 +10,8 @@ import org.apache.spark.sql.types._
   * DataFrame, so the SAME code runs in batch (oracle-checked in
   * [[graft.queries.EventsBatch]]) and under `readStream` (exercised in
   * `StreamingSpec` with file-source replay + `Trigger.AvailableNow`).
+  * [[attributeClicks]] is the one operator with a separate streamed path,
+  * checked against its batch form.
   *
   * Scale: state stores are keyed by (window, event_type) / user_id —
   * bounded by watermark eviction; no unbounded state.
@@ -85,52 +87,161 @@ object EventStreams {
   def enrich(events: DataFrame, dim: DataFrame): DataFrame =
     events.join(broadcast(dim), Seq("event_type"), "left")
 
-  /** Stream-stream inner join with watermarks on BOTH sides (SURVEY.md §2
-    * streaming table): click→purchase attribution — every purchase is
-    * paired with each click by the same user in the preceding hour.
+  /** Click→purchase attribution (SURVEY.md §2 streaming table): every
+    * purchase paired with each click by the same user in the hour up to
+    * and including it (`click_ts ≤ purchase_ts ≤ click_ts + 1 hour`).
+    * `joinType` is `inner` or `left_outer`; `left_outer` also keeps each
+    * purchase with no qualifying click, null-extended. Output columns:
+    * purchase_id, user_id, purchase_ts, purchase_value, click_id,
+    * click_ts.
     *
-    * The two ingredients Spark needs to keep join state bounded are both
-    * here: a watermark on each input (how late events can be) and a
-    * time-range predicate tying the two event-time columns together (how
-    * long a click stays joinable). Together they let the state store evict
-    * clicks older than `purchase watermark − 1 hour` instead of buffering
-    * the full history — the difference between O(window) and O(stream)
-    * state at 100 TB/day rates.
+    * Batch inputs run the plain join below. It is the reference: the
+    * DuckDB-checked twins `evt_stream_join` / `evt_stream_join_left` in
+    * [[graft.queries.EventsBatch]] run it, and `StreamingSpec` checks the
+    * streamed form against Spark's own stream-stream join of the same
+    * expression.
     *
-    * `joinType` extends the same plan to outer attribution: `left_outer`
-    * keeps purchases with NO qualifying click (null-extended once the
-    * click-side watermark passes the purchase's match window — streaming
-    * can only declare "no click arrived" after late clicks are ruled out).
-    *
-    * Defined over plain DataFrames: `withWatermark` is a no-op in batch, so
-    * [[graft.queries.EventsBatch]] runs the SAME code as the DuckDB-checked
-    * batch twins (`evt_stream_join`, `evt_stream_join_left`). */
+    * Streaming inputs (both sides `isStreaming`) run one keyed stateful
+    * operator instead of Spark's symmetric hash join, which keeps four
+    * state stores per shuffle partition (key-to-count and
+    * key-with-index-to-value, per side) and commits each one every
+    * micro-batch. Here each input keeps its own 10-minute watermark,
+    * applied before the union, so the global (min) watermark and the late
+    * rows dropped are the join's; `flatMapGroupsWithState` keyed by
+    * `user_id` with `EventTimeTimeout` then keeps ONE store per partition
+    * holding, per user, the clicks still inside the 1-hour horizon and the
+    * purchases a later click could still match. See [[attributeStep]] for
+    * the pairs emitted: exactly the ones the symmetric join emits. */
   def attributeClicks(clicks: DataFrame, purchases: DataFrame,
-                      joinType: String = "inner",
-                      horizon: String = "1 hour"): DataFrame = {
-    // `horizon` bounds how long a click can precede its purchase — and
-    // with it how long click state must be retained past the watermark:
-    // the symmetric state store keeps ~rate×(horizon+watermark) click
-    // rows per side, so the horizon IS the state-size knob (the board
-    // query keeps the 1 h semantics its batch twin pins)
-    val c = clicks.select(
-        col("event_id").as("click_id"),
-        col("user_id").as("click_user"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "10 minutes")
-    val p = purchases.select(
-        col("event_id").as("purchase_id"),
-        col("user_id"),
-        col("ts").as("purchase_ts"),
-        col("value").as("purchase_value"))
-      .withWatermark("purchase_ts", "10 minutes")
-    p.join(c,
-        col("user_id") === col("click_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr(s"interval $horizon"),
-        joinType)
-      .select(col("purchase_id"), col("user_id"), col("purchase_ts"),
-        col("purchase_value"), col("click_id"), col("click_ts"))
+                      joinType: String = "inner"): DataFrame = {
+    require(joinType == "inner" || joinType == "left_outer",
+      s"attributeClicks joinType must be inner or left_outer, got '$joinType'")
+    if (clicks.isStreaming && purchases.isStreaming)
+      attributeStream(clicks, purchases, outer = joinType == "left_outer")
+    else {
+      val c = clicks.select(
+          col("event_id").as("click_id"),
+          col("user_id").as("click_user"),
+          col("ts").as("click_ts"))
+      val p = purchases.select(
+          col("event_id").as("purchase_id"),
+          col("user_id"),
+          col("ts").as("purchase_ts"),
+          col("value").as("purchase_value"))
+      p.join(c,
+          col("user_id") === col("click_user") &&
+          col("click_ts") <= col("purchase_ts") &&
+          col("purchase_ts") <= col("click_ts") + expr("interval 1 hour"),
+          joinType)
+        .select(col("purchase_id"), col("user_id"), col("purchase_ts"),
+          col("purchase_value"), col("click_id"), col("click_ts"))
+    }
+  }
+
+  /** How long a click stays attributable, in microseconds. */
+  private val HorizonUs = 3600L * 1000 * 1000
+
+  // Typed rows of the streamed attribution. Ids, users and values are
+  // boxed: a null passes through as in the join instead of failing the
+  // decoder (a null user reaches the operator only as a `left_outer`
+  // purchase). Times are epoch microseconds (`unix_micros`), the unit the
+  // join compares in.
+  private[streaming] case class AttrIn(is_click: Boolean,
+      id: java.lang.Long, user_id: java.lang.Long, us: Long,
+      value: java.lang.Double)
+  private[streaming] case class StoredClick(id: java.lang.Long, us: Long)
+  private[streaming] case class StoredPurchase(id: java.lang.Long, us: Long,
+      value: java.lang.Double, matched: Boolean)
+  private[streaming] case class AttrState(clicks: Seq[StoredClick],
+      purchases: Seq[StoredPurchase])
+  private[streaming] case class AttrOut(purchase_id: java.lang.Long,
+      user_id: java.lang.Long, purchase_us: Long,
+      purchase_value: java.lang.Double, click_id: java.lang.Long,
+      click_us: java.lang.Long)
+
+  private def attributeStream(clicks: DataFrame, purchases: DataFrame,
+                              outer: Boolean): DataFrame = {
+    import clicks.sparkSession.implicits._
+    // the join's inferred null filters, applied where it applies them:
+    // below the watermark, so null-user rows never move it either
+    def side(df: DataFrame, isClick: Boolean) = df
+      .filter(col("ts").isNotNull &&
+        (if (isClick || !outer) col("user_id").isNotNull else lit(true)))
+      .select(lit(isClick).as("is_click"), col("event_id").as("id"),
+        col("user_id"), col("ts"), unix_micros(col("ts")).as("us"),
+        (if (isClick) lit(null).cast(DoubleType) else col("value")).as("value"))
+      .withWatermark("ts", "10 minutes")
+    side(purchases, isClick = false).union(side(clicks, isClick = true))
+      .as[AttrIn]
+      .groupByKey(_.user_id)
+      .flatMapGroupsWithState[AttrState, AttrOut](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (user: java.lang.Long, rows: Iterator[AttrIn],
+         state: GroupState[AttrState]) => attributeStep(user, rows, state, outer)
+      }
+      .select(col("purchase_id"), col("user_id"),
+        timestamp_micros(col("purchase_us")).as("purchase_ts"),
+        col("purchase_value"), col("click_id"),
+        timestamp_micros(col("click_us")).as("click_ts"))
+  }
+
+  /** One micro-batch of one user, emitting the pairs the symmetric join
+    * emits. The operator has already dropped rows at or below the
+    * previous batch's watermark.
+    *
+    *  1. Each new click pairs with the purchases stored by earlier
+    *     batches, marking them matched, and is stored.
+    *  2. Each new purchase pairs with the stored clicks, this batch's
+    *     included, and is stored.
+    *  3. Rows no later row can pair with are evicted: purchases with
+    *     `purchase_ts ≤ bound` and clicks with `click_ts + 1 hour ≤ bound`,
+    *     `bound` being this batch's watermark less 1 ms, as in the join's
+    *     state cleanup predicates, so the state holds the rows the join's
+    *     state holds. Under `left_outer` an evicted purchase that never
+    *     matched is emitted null-extended.
+    *
+    * The timeout fires at the first watermark that evicts a row; a
+    * timed-out call has no rows and runs only step 3. */
+  private def attributeStep(user: java.lang.Long, rows: Iterator[AttrIn],
+      state: GroupState[AttrState], outer: Boolean): Iterator[AttrOut] = {
+    val prev = state.getOption.getOrElse(AttrState(Nil, Nil))
+    val purchases = scala.collection.mutable.ArrayBuffer.from(prev.purchases)
+    val out = scala.collection.mutable.ArrayBuffer.empty[AttrOut]
+    def pair(p: StoredPurchase, c: StoredClick) =
+      AttrOut(p.id, user, p.us, p.value, c.id, c.us)
+    def attributable(c: StoredClick, p: StoredPurchase) =
+      c.us <= p.us && p.us <= c.us + HorizonUs
+    val (newClicks, newPurchases) = rows.toVector.partition(_.is_click)
+    val fresh = newClicks.map(r => StoredClick(r.id, r.us))
+    fresh.foreach { c =>
+      purchases.mapInPlace { p =>
+        if (attributable(c, p)) { out += pair(p, c); p.copy(matched = true) }
+        else p
+      }
+    }
+    val clicks = prev.clicks ++ fresh
+    newPurchases.foreach { r =>
+      val p = StoredPurchase(r.id, r.us, r.value, matched = false)
+      val hits = clicks.filter(attributable(_, p))
+      hits.foreach(c => out += pair(p, c))
+      purchases += p.copy(matched = hits.nonEmpty)
+    }
+    val bound = (state.getCurrentWatermarkMs() - 1) * 1000
+    val (evicted, kept) = purchases.partition(_.us <= bound)
+    if (outer) evicted.filterNot(_.matched).foreach { p =>
+      out += AttrOut(p.id, user, p.us, p.value, null, null)
+    }
+    val live = clicks.filter(_.us + HorizonUs > bound)
+    if (live.isEmpty && kept.isEmpty) state.remove()
+    else {
+      state.update(AttrState(live, kept.toSeq))
+      // a row of time u goes once the watermark passes ceil(u / 1 ms);
+      // the timeout fires at the first watermark strictly past its value,
+      // which is at or past the current watermark
+      val evictUs = (kept.map(_.us) ++ live.map(_.us + HorizonUs)).min
+      state.setTimeoutTimestamp(Math.floorDiv(evictUs + 999, 1000L))
+    }
+    out.iterator
   }
 
   // ---- arbitrary stateful processing -----------------------------------
@@ -519,8 +630,9 @@ object EventStreams {
       }
   }
 
-  /** Run any of the above to a memory sink, processing all available input
-    * once (deterministic batch-replay for tests). Returns the sink table name. */
+  /** Run any of the above to the memory sink table `name`, processing all
+    * available input once (deterministic batch replay for tests); read the
+    * result back with `spark.table(name)`. */
   def runToMemory(df: DataFrame, name: String,
                   mode: OutputMode = OutputMode.Append): Unit = {
     val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables.t
 import graft.streaming.EventStreams
@@ -299,6 +300,170 @@ class StreamingSpec extends AnyFunSuite {
         .map(_.getLong(0)).toSet
     assert(unmatched(streamed).subsetOf(unmatched(batch)))
     assert(streamed.count() >= matched(batch).size)
+  }
+
+  /** Spark's own stream-stream join of the attribution expression: the
+    * reference the keyed-state streamed path of `attributeClicks` must
+    * reproduce row for row. */
+  def symmetricJoin(clicks: DataFrame, purchases: DataFrame,
+                    joinType: String): DataFrame = {
+    val c = clicks.select(col("event_id").as("click_id"),
+        col("user_id").as("click_user"), col("ts").as("click_ts"))
+      .withWatermark("click_ts", "10 minutes")
+    val p = purchases.select(col("event_id").as("purchase_id"),
+        col("user_id"), col("ts").as("purchase_ts"),
+        col("value").as("purchase_value"))
+      .withWatermark("purchase_ts", "10 minutes")
+    p.join(c,
+        col("user_id") === col("click_user") &&
+        col("click_ts") <= col("purchase_ts") &&
+        col("purchase_ts") <= col("click_ts") + expr("interval 1 hour"),
+        joinType)
+      .select(col("purchase_id"), col("user_id"), col("purchase_ts"),
+        col("purchase_value"), col("click_id"), col("click_ts"))
+  }
+
+  /** Seeded replay of `nFiles` event files, read one per micro-batch.
+    * Each file's events straddle its 40-minute step of the event-time
+    * frontier by ±1 hour, so files overlap out of order, and a tenth of
+    * the rows lag 2–4 hours: older than the watermark when they arrive.
+    * Times sit on a 10-minute grid (the watermark delay) moved by 0, ±1 µs
+    * or ±1 ms, so watermark, eviction and horizon bounds are hit exactly
+    * and from either side. The second file adds a click and a purchase
+    * with no user and two with no time. */
+  def disorderedReplay(seed: Long, nFiles: Int): String = {
+    val rng = new scala.util.Random(seed)
+    val dir = Files.createTempDirectory("graft-attr").toString + "/in"
+    new java.io.File(dir).mkdirs()
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").getEpochSecond *
+      1000000L
+    val step = 10L * 60 * 1000000
+    val jitter = Array(0L, 1L, -1L, 1000L, -1000L)
+    val stamp = System.currentTimeMillis() - 600000L
+    (0 until nFiles).foreach { i =>
+      val rows = (0 until 30).map { j =>
+        val slot =
+          if (rng.nextInt(10) == 0) 4 * i - 12 - rng.nextInt(12)
+          else 4 * i + rng.nextInt(13) - 6
+        (i * 1000L + j,
+          Option(t0 + slot * step + jitter(rng.nextInt(jitter.length))),
+          Option(1L + rng.nextInt(5)),
+          if (rng.nextBoolean()) "click" else "purchase",
+          rng.nextInt(10000) / 100.0)
+      } ++ (if (i != 1) Nil else Seq(
+        (1900L, Option(t0 + 4 * step), None, "click", 1.0),
+        (1901L, Option(t0 + 4 * step + 1), None, "purchase", 2.0),
+        (1902L, None, Option(1L), "click", 3.0),
+        (1903L, None, Option(1L), "purchase", 4.0)))
+      val tmp = s"$dir.tmp$i"
+      spark.createDataFrame(rows).toDF("event_id", "us", "user_id",
+          "event_type", "value")
+        .select(col("event_id"), timestamp_micros(col("us")).as("ts"),
+          col("user_id"), col("event_type"), col("value"),
+          lit(null).cast("string").as("props"))
+        .coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val to = new java.io.File(dir, s"part-$i.parquet")
+      Files.move(part.toPath, to.toPath)
+      to.setLastModified(stamp + i * 1000L)
+    }
+    dir
+  }
+
+  type AttrRow = (Long, Option[Long], Long, Double, Option[Long], Option[Long])
+
+  /** Replays `dir` one file per micro-batch through `attribute` and
+    * returns every row the query emitted, sorted, times in µs. */
+  def replayAttribution(session: SparkSession, dir: String,
+      attribute: (DataFrame, DataFrame) => DataFrame): Seq[AttrRow] = {
+    val s = session.readStream.schema(EventStreams.eventSchema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+    val name = s"attr_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val q = attribute(s.filter(col("event_type") === "click"),
+        s.filter(col("event_type") === "purchase"))
+      .writeStream.format("memory").queryName(name).outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(120000), "replay did not finish")
+    q.exception.foreach(e => throw e)
+    session.table(name)
+      .select(col("purchase_id"), col("user_id"),
+        unix_micros(col("purchase_ts")), col("purchase_value"),
+        col("click_id"), unix_micros(col("click_ts")))
+      .collect().map { r =>
+        def opt(i: Int) = Option(r.get(i)).map(_.asInstanceOf[Long])
+        (r.getLong(0), opt(1), r.getLong(2), r.getDouble(3), opt(4), opt(5))
+      }
+      .toSeq.sorted
+  }
+
+  /** Streamed `attributeClicks` ≡ the symmetric join, inner and
+    * left_outer, on a disordered replay with late rows, in a fresh session
+    * on the given state store provider (None = the HDFS-backed default). */
+  def attributionMatchesJoin(provider: Option[String]): Unit = {
+    val session = spark.newSession()
+    provider.foreach(
+      session.conf.set("spark.sql.streaming.stateStore.providerClass", _))
+    val dir = disorderedReplay(seed = 7L, nFiles = 5)
+    Seq("inner", "left_outer").foreach { jt =>
+      val got = replayAttribution(session, dir,
+        EventStreams.attributeClicks(_, _, jt))
+      val want = replayAttribution(session, dir, symmetricJoin(_, _, jt))
+      val (extra, missing) = (got.diff(want), want.diff(got))
+      assert(extra.isEmpty && missing.isEmpty, s"$jt: streamed ${got.size}" +
+        s" rows, join ${want.size}; only streamed: $extra; only join: $missing")
+      assert(got.exists(_._5.isDefined), s"$jt: no pairs emitted")
+      if (jt == "left_outer")
+        assert(got.exists(_._5.isEmpty), "no purchase null-extended")
+    }
+    // the late rows are really dropped: the same files as one batch pair
+    // more purchases than the replay does
+    val events = session.read.schema(EventStreams.eventSchema).parquet(dir)
+    val all = EventStreams.attributeClicks(
+      events.filter(col("event_type") === "click"),
+      events.filter(col("event_type") === "purchase")).count()
+    val replayed = replayAttribution(session, dir,
+      EventStreams.attributeClicks(_, _, "inner")).size
+    assert(replayed < all, s"replay paired $replayed, one batch $all")
+  }
+
+  test("streamed attribution equals Spark's stream-stream join (HDFS state store)") {
+    attributionMatchesJoin(None)
+  }
+
+  test("streamed attribution equals Spark's stream-stream join (RocksDB state store)") {
+    attributionMatchesJoin(Some(
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+  }
+
+  test("streamed attribution keeps one state store per shuffle partition") {
+    val s = EventStreams.readEventStream(spark, replayDir)
+    val q = EventStreams.attributeClicks(
+        s.filter(col("event_type") === "click"),
+        s.filter(col("event_type") === "purchase"))
+      .writeStream.format("memory").queryName("attr_stores")
+      .outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    val ops = q.lastProgress.stateOperators
+    assert(ops.length == 1, s"stateful operators: ${ops.map(_.operatorName).toSeq}")
+    assert(ops.head.numStateStoreInstances ==
+      spark.conf.get("spark.sql.shuffle.partitions").toLong)
+    val plan = q.asInstanceOf[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.toString
+    assert(!plan.contains("StreamingSymmetricHashJoin"), plan)
+  }
+
+  test("attributeClicks rejects join types other than inner and left_outer") {
+    val ev = t(spark, sf, "events")
+    val s = EventStreams.readEventStream(spark, replayDir)
+    Seq(ev, s).foreach { in =>
+      val e = intercept[IllegalArgumentException](
+        EventStreams.attributeClicks(in, in, "right_outer"))
+      assert(e.getMessage.contains("inner") &&
+        e.getMessage.contains("left_outer"), e.getMessage)
+    }
   }
 
   test("streamed seq gate emits exactly the batch evt_frequent_seq2 support") {
