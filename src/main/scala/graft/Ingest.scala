@@ -9,7 +9,8 @@ import graft.etl.Pipeline
   *   runMain graft.Ingest <tripsParquet> <zonesCsv> <warehouseDir>
   *
   * Normalizes + loads zones (truncate-replace) and trips (month-partitioned
-  * dynamic overwrite). Re-running is idempotent.
+  * dynamic overwrite). Re-running is idempotent. Prints each load's rows
+  * in, rejected and written, counted by the write itself.
   */
 object Ingest {
   def main(args: Array[String]): Unit = {
@@ -19,9 +20,9 @@ object Ingest {
     spark.sparkContext.setLogLevel("WARN")
     val conf = Pipeline.Conf(tripsSource = args(0), zonesSource = args(1),
       warehouse = args(2))
-    val zones = Pipeline.refreshZones(spark, conf)
-    val trips = Pipeline.loadTrips(spark, conf)
-    println(s"[ingest] zones=${zones.count()} trips=${trips.count()} -> ${conf.warehouse}")
+    for ((what, r) <- Seq("zones" -> Pipeline.refreshZones(spark, conf),
+                          "trips" -> Pipeline.loadTrips(spark, conf)))
+      println(s"[ingest] $what: in=${r.rowsIn} rejected=${r.rejected} written=${r.written} -> ${conf.warehouse}")
     spark.stop()
   }
 }

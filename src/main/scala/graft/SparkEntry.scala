@@ -2,48 +2,72 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** A query family: its named query builders and their DuckDB twins. */
+trait Family {
+  /** A query: (session, data directory) → result. */
+  type Q = (SparkSession, String) => DataFrame
+  def defs: Map[String, Q]
+  def sql: Map[String, String]
+}
+
 /** Engine entry contract — see SURVEY.md §7.
   *
-  * `queries` is the full operator inventory (SURVEY.md §2); every entry with
-  * a matching `oracleSql` is hash-checked against DuckDB on the same
-  * parquet. Entries without oracle SQL (engine-specific hashes, ANN, ML
-  * pipelines) get the driver's rows-only check and are validated in
-  * ScalaTest instead.
+  * `queries` is the full operator inventory (SURVEY.md §2), built from the
+  * one list of query families, [[families]]; every entry with a matching
+  * `oracleSql` is hash-checked against DuckDB on the same parquet. Entries
+  * without oracle SQL (engine-specific hashes, ANN, ML pipelines) get a
+  * rows-only check and are validated in ScalaTest instead.
   *
   * Session contract: every query runs on a session built by
   * [[graft.core.Session.builder]], or on any session that carries
   * `spark.sql.extensions=graft.plans.GraftExtensions`. The extension is the
-  * only install path for the graft SQL functions and the native join
-  * strategies; on a session without it a query fails when it is analysed
-  * (unresolved function) or planned (no strategy for the native join).
+  * only install path for the graft SQL functions, the typed aggregates
+  * included, and the native join strategies; no query registers anything.
+  * On a session without it a query fails when it is analysed (unresolved
+  * function) or planned (no strategy for the native join).
   */
 object SparkEntry {
+
+  /** Every query family, each named once. */
+  private[graft] val families: Seq[Family] = Seq(
+    graft.queries.Relational,
+    graft.queries.Windows,
+    graft.queries.Scalars,
+    graft.queries.Taxi,
+    graft.queries.EventsBatch,
+    graft.queries.Extended,
+    graft.queries.Subqueries,
+    graft.queries.Graph,
+    graft.queries.Analytics,
+    graft.queries.FeatureEng,
+    graft.queries.Hypothesis,
+    graft.queries.EntityRes,
+    graft.queries.MlTrain,
+    graft.queries.Resampling,
+    graft.llm.TextOps,
+    graft.llm.Semantic,
+    graft.llm.SimSearch,
+    graft.llm.Dedup,
+    graft.llm.Multimodal,
+    graft.llm.Curation)
+
+  /** The union of one map per family. A name two families define throws,
+    * naming both, instead of one silently shadowing the other. */
+  private[graft] def byName[V](fs: Seq[Family])(part: Family => Map[String, V]): Map[String, V] = {
+    val entries = for (f <- fs; (k, v) <- part(f)) yield (k, f, v)
+    entries.groupBy(_._1).foreach { case (k, es) =>
+      if (es.size > 1)
+        throw new IllegalArgumentException(s"query $k is defined by more than one family: " +
+          es.map(_._2.getClass.getSimpleName.stripSuffix("$")).mkString(" and "))
+    }
+    entries.map { case (k, _, v) => k -> v }.toMap
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("join_star_revenue")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.defs ++
-    graft.queries.Windows.defs ++
-    graft.queries.Scalars.defs ++
-    graft.queries.Taxi.defs ++
-    graft.queries.EventsBatch.defs ++
-    graft.queries.Extended.defs ++
-    graft.queries.Subqueries.defs ++
-    graft.queries.Graph.defs ++
-    graft.queries.Analytics.defs ++
-    graft.queries.FeatureEng.defs ++
-    graft.queries.Hypothesis.defs ++
-    graft.queries.EntityRes.defs ++
-    graft.queries.MlTrain.defs ++
-    graft.queries.Resampling.defs ++
-    graft.llm.TextOps.defs ++
-    graft.llm.Semantic.defs ++
-    graft.llm.SimSearch.defs ++
-    graft.llm.Dedup.defs ++
-    graft.llm.Multimodal.defs ++
-    graft.llm.Curation.defs
+  val queries: Map[String, (SparkSession, String) => DataFrame] = byName(families)(_.defs)
 
   /** Oracle twins, each rewritten by [[graft.core.TwinSql.materialize]]:
     * DuckDB inlines CTEs by default, so the unrolled-iteration twin
@@ -56,25 +80,5 @@ object SparkEntry {
     k -> graft.core.TwinSql.materialize(v)
   }
 
-  private[graft] def rawOracleSql: Map[String, String] =
-    graft.queries.Relational.sql ++
-    graft.queries.Windows.sql ++
-    graft.queries.Scalars.sql ++
-    graft.queries.Taxi.sql ++
-    graft.queries.EventsBatch.sql ++
-    graft.queries.Extended.sql ++
-    graft.queries.Subqueries.sql ++
-    graft.queries.Graph.sql ++
-    graft.queries.Analytics.sql ++
-    graft.queries.FeatureEng.sql ++
-    graft.queries.Hypothesis.sql ++
-    graft.queries.EntityRes.sql ++
-    graft.queries.MlTrain.sql ++
-    graft.queries.Resampling.sql ++
-    graft.llm.TextOps.sql ++
-    graft.llm.Semantic.sql ++
-    graft.llm.SimSearch.sql ++
-    graft.llm.Dedup.sql ++
-    graft.llm.Multimodal.sql ++
-    graft.llm.Curation.sql
+  private[graft] def rawOracleSql: Map[String, String] = byName(families)(_.sql)
 }

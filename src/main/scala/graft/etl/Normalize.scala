@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -84,36 +84,32 @@ object Normalize {
     }
   }
 
-  /** Full trip normalization: resolve + cast + reject rows with no pickup
-    * timestamp (ingest_data.py:147-148). One narrow select + filter —
-    * pushdown-friendly, zero shuffles. */
-  def normalizeTrips(raw: DataFrame): DataFrame =
-    raw.select(resolve(raw, tripColumns): _*)
-      .filter(col("pickup_datetime").isNotNull)
-
-  /** Trip normalization with in-flight load metrics: `observe` attaches
-    * accumulator-backed aggregates to the SAME pass that writes the data,
-    * so row accounting (reference A12, `ingest_data.py` printed counts)
-    * costs zero extra scans at any scale — unlike a count() before and
-    * after, which would re-read the source twice. Read the metrics off
-    * the returned Observation AFTER an action on the frame. */
-  def normalizeTripsObserved(raw: DataFrame)
-      : (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation("trip_load")
-    val resolved = raw.select(resolve(raw, tripColumns): _*)
-      .observe(obs,
-        count(lit(1)).as("rows_in"),
-        sum(when(col("pickup_datetime").isNull, 1L).otherwise(0L))
-          .as("rows_rejected"),
-        sum(when(col("passenger_count").isNull, 1L).otherwise(0L))
-          .as("null_passengers"))
-    (resolved.filter(col("pickup_datetime").isNotNull), obs)
+  /** Resolve + cast + reject rows whose `key` is NULL, in one narrow
+    * select + filter (pushdown-friendly, zero shuffles). `observe` counts
+    * `rows_in` and `rows_rejected` (plus any `extra` metrics) in the SAME
+    * pass that consumes the frame, so the load's row accounting (reference
+    * A12, `ingest_data.py:172-183` logs its counts from the load itself)
+    * costs no extra scan, unlike a count() that re-reads the source. Read
+    * the metrics off the returned Observation AFTER an action on the frame. */
+  private def observed(raw: DataFrame, specs: Seq[ColumnSpec], key: String,
+      extra: Column*): (DataFrame, Observation) = {
+    val obs = Observation()
+    val resolved = raw.select(resolve(raw, specs): _*)
+      .observe(obs, count(lit(1)).as("rows_in"),
+        count_if(col(key).isNull).as("rows_rejected") +: extra: _*)
+    (resolved.filter(col(key).isNotNull), obs)
   }
 
-  /** Zone dimension normalization (ingest_data.py:95-102). */
-  def normalizeZones(raw: DataFrame): DataFrame =
-    raw.select(resolve(raw, zoneColumns): _*)
-      .filter(col("location_id").isNotNull)
+  /** Trip normalization: resolve + cast + reject rows with no pickup
+    * timestamp (ingest_data.py:147-148), observed; also counts the NULL
+    * passenger counts the load keeps (`null_passengers`). */
+  def normalizeTrips(raw: DataFrame): (DataFrame, Observation) =
+    observed(raw, tripColumns, "pickup_datetime",
+      count_if(col("passenger_count").isNull).as("null_passengers"))
+
+  /** Zone dimension normalization (ingest_data.py:95-102), observed. */
+  def normalizeZones(raw: DataFrame): (DataFrame, Observation) =
+    observed(raw, zoneColumns, "location_id")
 
   /** Surrogate key à la `BIGSERIAL trip_id` (`sql/init.sql:22`).
     * `monotonically_increasing_id` is the scale-correct choice (no global

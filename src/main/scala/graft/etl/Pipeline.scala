@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
 
 /** EP1 end-to-end (SURVEY.md §3): the reference's
   * `python/ingest_data.py main()` dataflow as one declarative Spark job —
@@ -15,26 +15,32 @@ object Pipeline {
       zonesSource: String,
       warehouse: String)
 
+  /** Rows one load read, rejected (no key) and wrote — counted by the
+    * write's own pass, never by a second scan. */
+  final case class LoadReport(rowsIn: Long, rejected: Long, written: Long)
+
+  private def report(obs: Observation): LoadReport = {
+    val m = obs.get
+    val in = m("rows_in").asInstanceOf[Long]
+    val rejected = m("rows_rejected").asInstanceOf[Long]
+    LoadReport(in, rejected, in - rejected)
+  }
+
   /** Zones: CSV → normalize → truncate-replace dimension (A3, A4, A9). */
-  def refreshZones(spark: SparkSession, conf: Conf): DataFrame = {
+  def refreshZones(spark: SparkSession, conf: Conf): LoadReport = {
     val raw = spark.read.option("header", "true").csv(conf.zonesSource)
-    val zones = Normalize.normalizeZones(raw)
+    val (zones, obs) = Normalize.normalizeZones(raw)
     Writers.writeDimension(zones, s"${conf.warehouse}/taxi_zones")
-    zones
+    report(obs)
   }
 
   /** Trips: Parquet → normalize (multi-candidate resolution, coerce-to-NULL,
     * null-rejection) → month-partitioned dynamic-overwrite write (A2,
     * A4–A8). Re-running the same month is idempotent. */
-  def loadTrips(spark: SparkSession, conf: Conf): DataFrame = {
+  def loadTrips(spark: SparkSession, conf: Conf): LoadReport = {
     val raw = spark.read.parquet(conf.tripsSource)
-    val trips = Normalize.withTripId(Normalize.normalizeTrips(raw))
-    Writers.writeTripsMonthly(trips, s"${conf.warehouse}/taxi_trips")
-    trips
-  }
-
-  def run(spark: SparkSession, conf: Conf): Unit = {
-    refreshZones(spark, conf)
-    loadTrips(spark, conf)
+    val (trips, obs) = Normalize.normalizeTrips(raw)
+    Writers.writeTripsMonthly(Normalize.withTripId(trips), s"${conf.warehouse}/taxi_trips")
+    report(obs)
   }
 }

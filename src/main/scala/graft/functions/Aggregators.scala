@@ -1,12 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
 /** Typed custom aggregates (SURVEY §2 "custom typed aggregate" / "UDF-UDAF
-  * surface"): registered through `udaf(Aggregator)` so they run as real
-  * partial+final aggregates (map-side combine, no collect).
+  * surface"). [[builders]] wraps each `udaf(Aggregator)` in the same
+  * `ScalaAggregator` Spark's UDF registration builds, and
+  * [[GraftFunctions.builders]] hands them to `graft.plans.GraftExtensions`,
+  * which injects them at session build. They run as real partial+final
+  * aggregates (map-side combine, no collect), and nothing registers them
+  * at run time.
   */
 object Aggregators {
 
@@ -205,14 +210,18 @@ object Aggregators {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("kahan_sum", udaf(KahanSum))
-    spark.udf.register("dec_hist", udaf(DecHistAgg))
-    spark.udf.register("minhash16", udaf(new MinHashAgg(16)))
+  /** SQL name → aggregate builder, injected by `GraftExtensions`. */
+  private[functions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "kahan_sum" -> udaf(KahanSum),
+    "dec_hist" -> udaf(DecHistAgg),
+    "minhash16" -> udaf(new MinHashAgg(16)),
     // 64 permutations: feeds r=2/b=32 banding in Dedup (r·b = 64), which
     // needs the longer signature to keep recall ≥ 0.95 at J = 0.3
-    spark.udf.register("minhash64", udaf(new MinHashAgg(64)))
-    spark.udf.register("simhash64", udaf(SimHashAgg))
-    spark.udf.register("topk3_by", udaf(new TopKAgg(3)))
+    "minhash64" -> udaf(new MinHashAgg(64)),
+    "simhash64" -> udaf(SimHashAgg),
+    "topk3_by" -> udaf(new TopKAgg(3))
+  ).map { case (name, agg) =>
+    val named = agg.withName(name)
+    name -> ((es: Seq[Expression]) => GraftSqlBridge.scalaAggregator(named, es))
   }
 }

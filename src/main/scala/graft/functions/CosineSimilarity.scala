@@ -113,13 +113,16 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 /** SQL functions so queries can say `cosine_similarity(a, b)` /
-  * `dot_product(a, b)` via `expr(...)` without touching Column internals.
-  * [[graft.plans.GraftExtensions]] injects every builder below at session
-  * build (`spark.sql.extensions`, set by [[graft.core.Session]]). */
+  * `dot_product(a, b)` / `kahan_sum(x)` via `expr(...)` without touching
+  * Column internals. [[graft.plans.GraftExtensions]] injects every builder
+  * below, the typed aggregates of [[Aggregators]] included, at session
+  * build (`spark.sql.extensions`, set by [[graft.core.Session]]); nothing
+  * registers a function at run time. */
 object GraftFunctions {
 
   /** name → expression builder, the single source of truth. */
-  val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  val builders: Seq[(String, Seq[Expression] => Expression)] =
+    Seq[(String, Seq[Expression] => Expression)](
     "cosine_similarity" -> (es => CosineSimilarity(es.head, es(1))),
     "dot_product" -> (es => DotProduct(es.head, es(1))),
     "word_shingles" -> (es => WordShingles(es.head, es(1))),
@@ -158,5 +161,5 @@ object GraftFunctions {
     // bounded-buffer collect_set for the df-cutoff pattern (cap must be an
     // integer literal — it is baked into the aggregate's saturation point)
     "bounded_collect_set" -> (es => BoundedCollectSet(es.head,
-      es(1).eval().asInstanceOf[Number].intValue)))
+      es(1).eval().asInstanceOf[Number].intValue))) ++ Aggregators.builders
 }

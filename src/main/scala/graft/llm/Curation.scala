@@ -12,9 +12,7 @@ import graft.core.Tables.{spread, t}
   * substring-overlap detection, per-source admission caps, and data-mixture
   * weight design. All four are oracle-backed (DuckDB twins below).
   */
-object Curation {
-  type Q = (SparkSession, String) => DataFrame
-
+object Curation extends graft.Family {
   /** 31-polynomial rolling-hash over a fixed k=8 char gram starting at
     * lambda/column position `p` (1-based), mod 1e9+7 — the same
     * engine-portable hash family as llm_fingerprint, unrolled to the fixed

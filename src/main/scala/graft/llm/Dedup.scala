@@ -26,9 +26,7 @@ import graft.core.Tables.{spread, t}
   * oracle replays the production pipelines end to end. `DedupSpec`
   * additionally validates recall against the exact-Jaccard ground truth.
   */
-object Dedup {
-  type Q = (SparkSession, String) => DataFrame
-
+object Dedup extends graft.Family {
   /** Banded candidate pairs from MinHash signatures: signature positions
     * are grouped into `b` bands of `r` consecutive positions; two docs are
     * candidates iff they agree on ALL r positions of SOME band

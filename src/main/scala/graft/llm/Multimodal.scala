@@ -17,8 +17,7 @@ import org.apache.spark.sql.types._
   * one iterator per partition, so a real decoder would amortize model
   * init per-partition, not per-row), and the output schema.
   */
-object Multimodal {
-
+object Multimodal extends graft.Family {
   /** Contract for a multimodal asset row. */
   val assetSchema: StructType = StructType(Seq(
     StructField("asset_id", LongType, nullable = false),
@@ -91,7 +90,6 @@ object Multimodal {
       length(col("content")).cast(LongType).as("byte_len"),
       sha2(hex(col("content")), 256).as("sha_hex"))
 
-  type Q = (SparkSession, String) => DataFrame
 
   /** Committed deterministic fixture assets (LCG byte streams — see
     * fixtures/multimodal/) so the binary-column contract has a

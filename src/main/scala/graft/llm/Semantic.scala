@@ -27,9 +27,7 @@ import graft.core.Tables.{spread, t}
   * twin (portable md5-prefix hashes, double arithmetic mirrored
   * expression-for-expression).
   */
-object Semantic {
-  type Q = (SparkSession, String) => DataFrame
-
+object Semantic extends graft.Family {
   /** Number of k-means cells. Fixed, deterministic init: the vectors
     * with vec_id < K are the centroids (the "first k points" seeding
     * every engine can reproduce). At corpus scale SemDeDup uses

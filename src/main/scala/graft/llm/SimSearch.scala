@@ -19,9 +19,7 @@ import graft.core.Tables.{spread, t}
   *    on bucket, exact cosine within bucket. The 100 TB path: candidate
   *    pairs drop from O(N·Q) to O(N·Q / 2^bits) expected.
   */
-object SimSearch {
-  type Q = (SparkSession, String) => DataFrame
-
+object SimSearch extends graft.Family {
   /** Deterministic multi-table random-hyperplane signatures (the OR-of-ANDs
     * LSH construction: a neighbor is a candidate if it shares the FULL
     * signature in ANY table — recall grows with nTables, candidate-set
@@ -43,53 +41,26 @@ object SimSearch {
       col("embedding"), lit(nTables), lit(bitsPerTable), lit(dim)))
   }
 
-  /** Back-compat single-signature variant (table 0). */
-  def signature(df: DataFrame, nPlanes: Int = 12): DataFrame =
-    signatures(df, nTables = 1, bitsPerTable = nPlanes)
-      .withColumn("sig", expr("sigs[0]")).drop("sigs")
-
   /** A fitted IVF index: per-vector cell assignments + the (tiny, always
     * broadcast) centroid table. */
   case class IvfIndex(assigned: DataFrame, centroids: DataFrame, k: Int)
 
-  /** IVF coarse-quantizer fit: k-means cells over the corpus (fixed seed —
-    * reproducible across retries). Sizing at scale: k ≈ √N cells balances
-    * the two candidate-set terms (nProbe/k of the corpus scanned per query
-    * vs k centroid comparisons per query); the k = 16 default is sized for
-    * the ~√(N=500..50k) test fixtures, NOT for production — a 1B-vector
-    * corpus wants k ≈ 30k and a larger sample-based fit. The fit is an
-    * INDEX BUILD, not query work: amortized over every subsequent search,
-    * like any vector store's build/search split. */
-  def ivfFit(s: SparkSession, emb: DataFrame, k: Int,
-             seed: Long = 42L, maxIter: Int = 10): IvfIndex = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val fv = emb.withColumn("fv", array_to_vector(col("embedding")))
-    val km = new KMeans().setK(k).setSeed(seed).setFeaturesCol("fv")
-      .setPredictionCol("cell").setMaxIter(maxIter)
-    val model = km.fit(fv)
-    val assigned = model.transform(fv)
-      .select(col("vec_id"), col("embedding"), col("cell"))
-    val centroids = model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      (i, c.toArray.map(_.toFloat))
-    }.toSeq
-    IvfIndex(assigned, s.createDataFrame(centroids).toDF("cell", "centroid"), k)
-  }
-
-  /** PORTABLE integer-exact IVF fit (r10): the llm_kmeans_iterate Lloyd
-    * machinery ([[Semantic.kmeansFit]] — first-k seed, 6-decimal-rounded
-    * cosine argmax assign, floor-1e-6-grid integer M-step) applied as the
-    * ANN coarse quantizer. Same plan shape as [[ivfFit]] (broadcast
-    * ≤k-row centroid state, one assign + one (cell, dim) aggregate per
-    * round), but every step is replayable verbatim in DuckDB — which is
-    * what gives llm_ann_ivf / llm_ann_pq real value twins instead of
-    * rows-only checks. The spark.ml [[ivfFit]] stays as the generic API
-    * (arbitrary k / maxIter, SimSearchSpec coverage). */
+  /** IVF coarse-quantizer fit, integer-exact (r10): the llm_kmeans_iterate
+    * Lloyd machinery ([[Semantic.kmeansFit]] — first-k seed,
+    * 6-decimal-rounded cosine argmax assign, floor-1e-6-grid integer
+    * M-step) applied as the ANN coarse quantizer: broadcast ≤k-row
+    * centroid state, one assign + one (cell, dim) aggregate per round, and
+    * every step replayable verbatim in DuckDB — which is what gives
+    * llm_ann_ivf / llm_ann_pq real value twins instead of rows-only
+    * checks. Sizing at scale: k ≈ √N cells balances the two candidate-set
+    * terms (nProbe/k of the corpus scanned per query vs k centroid
+    * comparisons per query); the k = 16 default is sized for the test
+    * fixtures. The fit is an INDEX BUILD, amortized over every search. */
   def ivfFitPortable(s: SparkSession, emb: DataFrame, k: Int = 16,
                      rounds: Int = 3): IvfIndex = {
     val (assigned, cents) = Semantic.kmeansFit(emb, k, rounds)
-    // cell ids are seed vec_ids (< k) — cast to INT to keep the public
-    // IvfIndex schema identical to the spark.ml fit's prediction column
+    // cell ids are seed vec_ids (< k) — cast to INT, the public IvfIndex
+    // cell type
     IvfIndex(
       emb.join(assigned.select(col("vec_id"), col("cell").cast("int").as("cell")),
           Seq("vec_id"))
@@ -145,51 +116,6 @@ object SimSearch {
   case class PqIndex(codes: DataFrame, codebooks: DataFrame,
                      m: Int, dsub: Int, ksub: Int, n: Long)
 
-  /** Product-quantization fit (the third ANN family next to hyperplane
-    * LSH and IVF): the embedding splits into m sub-vectors of dsub dims,
-    * each sub-space gets its own ksub-cell k-means codebook, and a vector
-    * compresses to m small codes (m=8 × ksub=16 → 8 nibbles ≈ 16× smaller
-    * than float32). Like [[ivfFit]] this is an INDEX BUILD, cached per
-    * corpus and amortized over every search.
-    *
-    * Encoding is fully relational: the corpus explodes to (vector, sub)
-    * sub-vectors, joins the broadcast codebook, and a min-struct aggregate
-    * picks the nearest cell — the ksub-way expansion is collapsed by
-    * map-side partial aggregation before any shuffle, and the (d2, code)
-    * struct-min makes nearest-cell ties deterministic. */
-  def pqFit(s: SparkSession, emb: DataFrame, m: Int = 8, ksub: Int = 16,
-            dim: Int = 64, seed: Long = 42L): PqIndex = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val dsub = dim / m
-    val books = (0 until m).flatMap { j =>
-      val sv = emb
-        .select(slice(col("embedding"), j * dsub + 1, dsub).as("subvec"))
-        .withColumn("fv", array_to_vector(col("subvec")))
-      val model = new KMeans().setK(ksub).setSeed(seed + j)
-        .setFeaturesCol("fv").setPredictionCol("code").setMaxIter(10)
-        .fit(sv)
-      model.clusterCenters.zipWithIndex.map { case (c, i) =>
-        (j, i, c.toArray.map(_.toFloat)) }
-    }
-    val codebooks = s.createDataFrame(books).toDF("sub", "code", "centroid")
-    val exploded = emb.select(col("vec_id"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1})," +
-          s" j -> slice(embedding, j * $dsub + 1, $dsub))"))
-      .as(Seq("sub", "subvec")))
-    val codes = exploded.join(broadcast(codebooks), Seq("sub"))
-      .withColumn("d2", expr(
-        "aggregate(zip_with(subvec, centroid, (x, c) -> (x - c) * (x - c))," +
-          " CAST(0.0 AS DOUBLE), (a, v) -> a + CAST(v AS DOUBLE))"))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min(struct(col("d2"), col("code"))).getField("code").as("code"))
-      .groupBy(col("vec_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(sub, code)))," +
-        " p -> p.code)").as("codes"))
-    PqIndex(codes.ckpt(eager = false), codebooks, m, dsub, ksub,
-      emb.count())
-  }
-
   /** Persist a fitted IVF index. The assignment table is written
     * PARTITIONED BY cell: an [[ivfSearch]] over the loaded index joins the
     * corpus side on `cell` against the broadcast probe list, so Spark's
@@ -220,7 +146,7 @@ object SimSearch {
     * strict-improvement compare makes ties deterministic (lowest cell) —
     * the SAME argmax [[Semantic.kmeansFit]]'s assignTo computes, so the
     * expression agrees with the portable fit's own assignments exactly
-    * (r10: was squared-L2 argmin matching the spark.ml fit). Because no
+    * (r10). Because no
     * aggregate or model object is involved, the same expression assigns
     * cells in batch and under `readStream` with zero state — the
     * streaming ingest path of the vector index:
@@ -279,16 +205,19 @@ object SimSearch {
       meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getLong(3))
   }
 
-  /** PORTABLE integer-exact PQ fit (r10, completing the [[ivfFitPortable]]
-    * story): per sub-space Lloyd in squared-L2 — seed codebook = the
+  /** Product-quantization fit, integer-exact (r10; the third ANN family
+    * next to hyperplane LSH and IVF): the embedding splits into m
+    * sub-vectors of dsub dims, each sub-space gets its own ksub-cell
+    * codebook, and a vector compresses to m small codes (m=8 × ksub=16 →
+    * 8 nibbles ≈ 16× smaller than float32). Per sub-space Lloyd in
+    * squared-L2 — seed codebook = the
     * sub-vectors of vec_id < ksub, assignment = argmin of
     * round(d2, 6) (ties → lowest code; d2 accumulated in double from
     * exact float promotions), M-step = the floor-1e-6-grid integer mean
     * cast back to float. All m sub-spaces fit in ONE relational program
     * (the (sub) key rides every join/aggregate), so the plan is two
     * aggregates per round regardless of m, and every step is replayable
-    * verbatim in DuckDB — the llm_ann_pq twin. The spark.ml [[pqFit]]
-    * stays as the generic API (PqSpec, pqSave/pqLoad coverage). */
+    * verbatim in DuckDB — the llm_ann_pq twin. */
   def pqFitPortable(emb: DataFrame, m: Int = 8,
                     ksub: Int = 16, dim: Int = 64, rounds: Int = 3): PqIndex = {
     val dsub = dim / m
@@ -820,7 +749,7 @@ object SimSearch {
     // probed cells and a constant re-rank pool. Completes the ANN
     // family: brute force (exact), LSH (bucketing), IVF (coarse cells),
     // IVF-PQ (compressed-domain scan inside probed cells). The flat
-    // [[pqSearch]] stays as the single-index API (PqSpec coverage) but
+    // [[pqSearch]] stays as the single-index API (SimSearchSpec) but
     // the board entry is the composed, scale-safe shape (VERDICT r8).
     // FULLY ORACLE-CHECKED as of r10: both the IVF coarse fit and the
     // per-sub-space PQ codebooks come from the portable integer-exact

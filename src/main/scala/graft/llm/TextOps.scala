@@ -20,9 +20,7 @@ import graft.core.Tables.{spread, t}
   * ([[Dedup]]) are the path; the exact version stays as the correctness
   * anchor the approximate ones are tested against.
   */
-object TextOps {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextOps extends graft.Family {
   private val stopA = "the"
   private val stopB = "a"
 
@@ -109,33 +107,14 @@ object TextOps {
     * loud with zero pairs streamed. Groups at or under the budget are
     * exact, so in-budget corpora produce bit-identical results to stock
     * collect_set (BoundedCollectSetSpec). The primitive flat buffer also
-    * removes the boxed per-group set that drove GC on the basket family.
-    * `spark.graft.anchor.dfPrecheck=true` still runs the constant-memory
-    * count-only pre-pass for corpora where even the saturated aggregate
-    * pass is unwanted; it is no longer needed for memory safety. */
+    * removes the boxed per-group set that drove GC on the basket family. */
   private[graft] def exactAnchorFrames(s: SparkSession, d: String,
-      who: String): (DataFrame, DataFrame) = {
-    val raw = spread(t(s, d, "documents"))
-      .selectExpr("doc_id", "word_shingles(text, 3) AS shingle")
-    exactAnchorFrames(raw,
-      precheck = s.conf.getOption("spark.graft.anchor.dfPrecheck")
-        .contains("true"),
-      who)
-  }
+      who: String): (DataFrame, DataFrame) =
+    exactAnchorFrames(spread(t(s, d, "documents"))
+      .selectExpr("doc_id", "word_shingles(text, 3) AS shingle"), who)
 
-  private[graft] def exactAnchorFrames(raw: DataFrame, precheck: Boolean,
-      who: String, budget: Long = maxAnchorShingleDf)
-      : (DataFrame, DataFrame) = {
-    def overBudget(df: Long) =
-      s"$who: shingle document frequency $df exceeds the exact-anchor " +
-        s"pairing budget $budget (f^2 pair rows) — use the banded-LSH " +
-        "production path at this scale"
-    if (precheck) {
-      val df = raw.groupBy(col("shingle"))
-        .agg(countDistinct(col("doc_id")).as("df"))
-        .agg(coalesce(max(col("df")), lit(0L))).head().getLong(0)
-      require(df <= budget, overBudget(df))
-    }
+  private[graft] def exactAnchorFrames(raw: DataFrame, who: String,
+      budget: Long = maxAnchorShingleDf): (DataFrame, DataFrame) = {
     val grouped = raw.groupBy(col("shingle"))
       .agg(expr(s"bounded_collect_set(doc_id, $budget)").as("docs"))
       .ckpt(eager = false)
@@ -143,7 +122,10 @@ object TextOps {
     // memory it ever held was (budget + 1) longs
     val maxDf = grouped.agg(coalesce(max(size(col("docs"))), lit(0)))
       .head().getInt(0)
-    require(maxDf <= budget, overBudget(maxDf))
+    require(maxDf <= budget,
+      s"$who: shingle document frequency $maxDf exceeds the exact-anchor " +
+        s"pairing budget $budget (f^2 pair rows) — use the banded-LSH " +
+        "production path at this scale")
     // the overwhelming mass of shingles is df=1 (unique text) — prune
     // them BEFORE any pair machinery runs; then two stacked generators
     // (posexplode + sliced explode) emit the i<j pairs in codegen
@@ -1720,7 +1702,6 @@ object TextOps {
     // COVERAGE.md: a mod-p affine family has weaker avalanche than
     // xxhash64, which only matters against adversarial token sets.
     "llm_simhash" -> ((s, d) => {
-      graft.functions.Aggregators.register(s)
       spread(t(s, d, "documents"))
         .select(col("doc_id"),
           explode(array_distinct(split(col("text"), " "))).as("tok"))
@@ -1743,7 +1724,6 @@ object TextOps {
     // h < 2^30, so bits 30..63 vote -1 per token and stay clear on both
     // sides. Empty tokens (split artifacts) are dropped on both sides.
     "llm_simhash_poly" -> ((s, d) => {
-      graft.functions.Aggregators.register(s)
       spread(t(s, d, "documents"))
         .select(col("doc_id"),
           explode(array_distinct(split(col("text"), " "))).as("tok"))

@@ -135,6 +135,22 @@ object Partitioning {
       .drop("__ha", "__hb", "__hkey")
   }
 
+  /** The first level of every `ranked*` kernel below: range-partition on
+    * `order`, sort each partition locally, tag rows with their partition id
+    * (`__pid`) and checkpoint, so every consumer of the frame sees the same
+    * partition bounds. */
+  private def rangeSorted(df: DataFrame, order: Seq[Column], n: Int,
+                          eager: Boolean = true): DataFrame =
+    df.repartitionByRange(n, order: _*)
+      .sortWithinPartitions(order: _*)
+      .withColumn("__pid", spark_partition_id())
+      .ckpt(eager)
+
+  /** The window over every partition before this row's, in `__pid` order:
+    * the one sequential step of a `ranked*` kernel, over ≤ n rows. */
+  private def priorPartitions =
+    Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)
+
   /** Distributed prefix sum: cumulative `valueCol` in global `order`,
     * WITHOUT the single-partition global window (`Window.orderBy` with no
     * partitionBy funnels every row through one task — the classic scale
@@ -167,35 +183,8 @@ object Partitioning {
     * the repartition/sort/checkpoint k times over a frame that only grows
     * wider each call — agg_ks_test's two ECDFs are the motivating case. */
   def rankedCumSumMulti(df: DataFrame, measures: Seq[(Column, String)],
-                        order: Seq[Column], n: Int): DataFrame = {
-    require(measures.nonEmpty, "need at least one (valueCol, outCol)")
-    val sorted = df
-      .repartitionByRange(n, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .ckpt()
-    val localWin = Window.partitionBy(col("__pid")).orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offWin = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val idx = measures.indices
-    val offsets = sorted.groupBy(col("__pid"))
-      .agg(sum(measures.head._1).as("__psum0"),
-        measures.tail.zipWithIndex.map { case ((c, _), i) =>
-          sum(c).as(s"__psum${i + 1}") }: _*)
-      .select(col("__pid").as("__opid") +:
-        idx.map(i => coalesce(sum(col(s"__psum$i")).over(offWin), lit(0))
-          .as(s"__off$i")): _*)
-    val withLocal = idx.foldLeft(sorted) { case (acc, i) =>
-      acc.withColumn(s"__local$i", sum(measures(i)._1).over(localWin))
-    }
-    val joined = withLocal.join(broadcast(offsets), col("__pid") === col("__opid"))
-    idx.foldLeft(joined) { case (acc, i) =>
-        acc.withColumn(measures(i)._2, col(s"__local$i") + col(s"__off$i"))
-      }
-      .drop("__pid" :: "__opid" ::
-        idx.flatMap(i => Seq(s"__local$i", s"__off$i")).toList: _*)
-  }
+                        order: Seq[Column], n: Int): DataFrame =
+    rankedCumSumMultiShared(df, measures, order, n)._1
 
   /** [[rankedCumSumMulti]] that ALSO hands back its internally
     * checkpointed range-sorted frame (r15): callers that need totals (or
@@ -217,22 +206,16 @@ object Partitioning {
                               order: Seq[Column], n: Int)
       : (DataFrame, DataFrame) = {
     require(measures.nonEmpty, "need at least one (valueCol, outCol)")
-    val sorted = df
-      .repartitionByRange(n, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .ckpt()
+    val sorted = rangeSorted(df, order, n)
     val localWin = Window.partitionBy(col("__pid")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val offWin = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
     val idx = measures.indices
     val offsets = sorted.groupBy(col("__pid"))
       .agg(sum(measures.head._1).as("__psum0"),
         measures.tail.zipWithIndex.map { case ((c, _), i) =>
           sum(c).as(s"__psum${i + 1}") }: _*)
       .select(col("__pid").as("__opid") +:
-        idx.map(i => coalesce(sum(col(s"__psum$i")).over(offWin), lit(0))
+        idx.map(i => coalesce(sum(col(s"__psum$i")).over(priorPartitions), lit(0))
           .as(s"__off$i")): _*)
     val withLocal = idx.foldLeft(sorted) { case (acc, i) =>
       acc.withColumn(s"__local$i", sum(measures(i)._1).over(localWin))
@@ -265,18 +248,12 @@ object Partitioning {
     // offsets and rows read the same checkpointed RDD); callers ranking a
     // large frame consumed by a single downstream action (ml_conformal's
     // calibration scores) save the extra blocking materialization job
-    val sorted = df
-      .repartitionByRange(n, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .ckpt(eager)
+    val sorted = rangeSorted(df, order, n, eager)
     val localWin = Window.partitionBy(col("__pid")).orderBy(order: _*)
-    val offWin = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = sorted.groupBy(col("__pid"))
       .agg(count(lit(1)).as("__pc"))
       .select(col("__pid").as("__opid"),
-        coalesce(sum(col("__pc")).over(offWin), lit(0L)).as("__off"))
+        coalesce(sum(col("__pc")).over(priorPartitions), lit(0L)).as("__off"))
     sorted
       .withColumn("__local", row_number().over(localWin).cast("long"))
       .join(broadcast(offsets), col("__pid") === col("__opid"))
@@ -296,19 +273,13 @@ object Partitioning {
   def rankedRunningMin(df: DataFrame, valueCol: Column, order: Seq[Column],
                        n: Int, outCol: String,
                        inclusive: Boolean = true): DataFrame = {
-    val sorted = df
-      .repartitionByRange(n, order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .ckpt()
+    val sorted = rangeSorted(df, order, n)
     val hi = if (inclusive) Window.currentRow else -1L
     val localWin = Window.partitionBy(col("__pid")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, hi)
     val offsets = sorted.groupBy(col("__pid")).agg(min(valueCol).as("__pmin"))
       .withColumn("__off",
-        min(col("__pmin")).over(
-          Window.orderBy(col("__pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)))
+        min(col("__pmin")).over(priorPartitions))
       .select(col("__pid").as("__opid"), col("__off"))
     sorted
       .withColumn("__local", min(valueCol).over(localWin))

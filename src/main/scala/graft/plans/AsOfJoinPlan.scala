@@ -223,9 +223,11 @@ case class AsOfJoinExec(
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` — installs the
-  * as-of strategy, the key-mirror optimizer rule, and every graft SQL
-  * function at session build (so `spark.sql("SELECT cosine_similarity…")`
-  * works with no registration call). */
+  * as-of and range-join strategies, the key-mirror optimizer rule, and
+  * every graft SQL function of [[graft.functions.GraftFunctions.builders]],
+  * the typed aggregates (`kahan_sum`, `topk3_by`, …) included, at session
+  * build (so `spark.sql("SELECT cosine_similarity…")` works with no
+  * registration call). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)

@@ -19,9 +19,7 @@ import graft.ops.Partitioning
   * sequential order provably agree, and the derived doubles are then
   * bit-identical on both engines (same literal expression order).
   */
-object Analytics {
-  type Q = (SparkSession, String) => DataFrame
-
+object Analytics extends graft.Family {
   /** Exact revenue in 1/10000-dollar units: price cents × (100 − disc%),
     * both factors exact integers recovered from the 2-decimal doubles. */
   private def revU(price: Column, disc: Column): Column =

@@ -27,9 +27,7 @@ import graft.core.Tables.t
   * derived (min partkey per name) so both engines build the identical
   * universe with no engine-specific id generation.
   */
-object EntityRes {
-  type Q = (SparkSession, String) => DataFrame
-
+object EntityRes extends graft.Family {
   /** Variant-rid offset, derived FROM THE DATA: max(p_partkey) + 1.
     * A fixed constant (the old +100000) silently collides with clean
     * rids once |part| ≥ 100k (TPC-H sf ≥ 0.5) — and because both

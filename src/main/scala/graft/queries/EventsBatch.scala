@@ -12,13 +12,11 @@ import graft.core.Tables.t
   * `readStream` + watermark — Spark's batch/streaming unification means the
   * semantics checked here are the streaming semantics.
   */
-object EventsBatch {
-
+object EventsBatch extends graft.Family {
   // per-corpus event-type domain for evt_type_overlap's bitmask fast
   // path (plain values, not session-bound — the bpeCache pattern)
   private val typeDomainCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[String]]
-  type Q = (SparkSession, String) => DataFrame
 
   val defs: Map[String, Q] = Map(
     // frequent ordered 2-sequences (the sequence-mining support count):

@@ -9,9 +9,7 @@ import graft.core.Tables.{t, registerAll}
   * (explode/posexplode), unpivot, interval RANGE frames, approximate
   * distinct, TF-IDF.
   */
-object Extended {
-  type Q = (SparkSession, String) => DataFrame
-
+object Extended extends graft.Family {
   val defs: Map[String, Q] = Map(
     // map family over JSON-derived and constructed maps
     "fn_map" -> ((s, d) => {
@@ -215,7 +213,6 @@ object Extended {
     // array per group: map-side partials stay tiny and the shuffle
     // carries sketches, never values.
     "agg_hdr_quantiles" -> ((s, d) => {
-      graft.functions.Aggregators.register(s)
       t(s, d, "lineitem").groupBy(col("l_returnflag").as("g"))
         .agg(expr(
           "dec_hist(CAST(round(l_extendedprice * 100) AS BIGINT))").as("qs"))
@@ -224,7 +221,6 @@ object Extended {
     }),
 
     "agg_custom_udaf" -> ((s, d) => {
-      graft.functions.Aggregators.register(s)
       t(s, d, "lineitem").groupBy(col("l_returnflag"))
         // round to cents, and the twin compares against the EXACT
         // integer-cents sum: Kahan stays within 2ε·Σ|x| (~2e-5 at sf1's

@@ -19,9 +19,7 @@ import graft.core.Tables.t
   * can't flip a hash. Cent-square sums stay under 2^63 up to ~10^12 rows
   * of 6-figure values; past that, switch the sums to DECIMAL(38,0).
   */
-object FeatureEng {
-  type Q = (SparkSession, String) => DataFrame
-
+object FeatureEng extends graft.Family {
   /** Deterministic 16-bit salted hash of a string column — the same
     * portable construction llm_split_assign uses (md5 hex prefix). */
   private def h16(salt: String, c: org.apache.spark.sql.Column) =

@@ -26,9 +26,7 @@ import graft.core.Tables.t
   * pr/frontier stay DataFrames partitioned by node id, the per-step join is
   * a shuffle-hash join on node id, and checkpointing bounds lineage depth.
   */
-object Graph {
-  type Q = (SparkSession, String) => DataFrame
-
+object Graph extends graft.Family {
   // per-corpus edge-table caches: the trade/exact edge aggregates are
   // the one data-sized job every graph query shares — pagerank,
   // reachability, shortest path, triangles, clustering coeff,

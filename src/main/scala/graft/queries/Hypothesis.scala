@@ -28,9 +28,7 @@ import graft.ops.Partitioning
   * over bounded aggregates (|event types| rows, |distinct lifetime
   * days| rows), never over the raw data.
   */
-object Hypothesis {
-  type Q = (SparkSession, String) => DataFrame
-
+object Hypothesis extends graft.Family {
   /** Shared Welch layers (agg_welch_t): exact-integer moment sums →
     * means + squared standard errors (L1) → t and Welch-Satterthwaite
     * df (L2), every FP op an identical expression on identical operands;

@@ -34,13 +34,11 @@ import graft.ops.Partitioning
   *     only ever built over the frequent-item subset), thresholds
   *     compared in exact integer arithmetic.
   */
-object MlTrain {
-
+object MlTrain extends graft.Family {
   // per-corpus brand domain for ml_apriori_rules' bitmask fast path
   // (plain values, not session-bound — the bpeCache pattern)
   private val brandDomainCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[String]]
-  type Q = (SparkSession, String) => DataFrame
 
   // ---- shared closed-form texts (used verbatim by selectExpr AND the
   // DuckDB oracle, so both engines evaluate the identical IEEE tree) ----

@@ -27,8 +27,7 @@ import graft.core.Tables.t
   *  - The lineitem⋈orders join is an equi-join on the natural key, which
   *    AQE can convert or skew-split at runtime.
   */
-object Relational {
-
+object Relational extends graft.Family {
   // per-corpus max distinct-parts-per-order for the basket family's
   // bounded_collect_set(64) saturation guard (r15, the VERDICT r14 #2
   // domain-probe pattern): the max basket size is a corpus property, so
@@ -41,7 +40,6 @@ object Relational {
     basketMaxCache.getOrElseUpdate(d,
       baskets.agg(coalesce(max(size(col("parts"))), lit(0)))
         .head().getInt(0))
-  type Q = (SparkSession, String) => DataFrame
 
   private def revenue = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
 

@@ -28,9 +28,7 @@ import graft.core.Tables.t
   *     row-local from a hash — no sampling pass, no shuffle beyond the
   *     16-way aggregate.
   */
-object Resampling {
-  type Q = (SparkSession, String) => DataFrame
-
+object Resampling extends graft.Family {
   /** Poisson(1) inverse-CDF thresholds scaled to 2³² (⌊cdf_k · 2³²⌋):
     * u32 < t(0) → weight 0, < t(1) → 1, ... else 5. */
   private val pThresh = Seq(1580030168L, 3160060337L, 3950075421L,

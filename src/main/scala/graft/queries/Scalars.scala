@@ -12,9 +12,7 @@ import graft.core.Tables.{t, registerAll}
   * inline where Spark and DuckDB semantics diverge (dayofweek origin,
   * log vs ln, cast-truncation vs cast-rounding).
   */
-object Scalars {
-  type Q = (SparkSession, String) => DataFrame
-
+object Scalars extends graft.Family {
   val defs: Map[String, Q] = Map(
     "fn_string" -> ((s, d) => {
       t(s, d, "part").filter(col("p_partkey") <= 500).select(

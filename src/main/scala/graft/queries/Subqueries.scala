@@ -9,9 +9,7 @@ import graft.core.Tables.registerAll
   * `spark.sql` text API — identical SQL runs in DuckDB, making these
   * oracle rows that also cover the SQL entry point (SURVEY §3 EP3).
   */
-object Subqueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object Subqueries extends graft.Family {
   private def q(text: String): Q = (s, d) => { registerAll(s, d); s.sql(text) }
 
   private val sqls: Map[String, String] = Map(

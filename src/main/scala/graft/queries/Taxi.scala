@@ -15,9 +15,7 @@ import graft.core.Tables.t
   * row-group stats ≈ the `pickup_datetime` B-tree), location joins broadcast
   * (≈ the location-id B-trees).
   */
-object Taxi {
-  type Q = (SparkSession, String) => DataFrame
-
+object Taxi extends graft.Family {
   val defs: Map[String, Q] = Map(
     // B1: validation counts per table + windowed count
     "taxi_validation_counts" -> ((s, d) => {

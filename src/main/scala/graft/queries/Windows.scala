@@ -15,9 +15,7 @@ import graft.core.Tables.t
   * small partitions, never one giant partition (a single unpartitioned
   * window would serialize on one task at 100 TB).
   */
-object Windows {
-  type Q = (SparkSession, String) => DataFrame
-
+object Windows extends graft.Family {
   val defs: Map[String, Q] = Map(
     // h-index per supplier over per-part order reach: h = max h such that
     // h of the supplier's parts each appear in >= h orders — the classic
@@ -239,7 +237,6 @@ object Windows {
     // heap does O(n log k) updates with no sort and no final
     // sort+window pass. Oracle: identical SQL to win_topk_per_group.
     "win_topk_agg" -> ((s, d) => {
-      graft.functions.Aggregators.register(s)
       t(s, d, "orders")
         .groupBy(col("o_custkey"))
         .agg(expr("topk3_by(o_totalprice, o_orderkey)").as("top"))

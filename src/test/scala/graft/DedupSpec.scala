@@ -57,7 +57,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("r=2 banding admits strictly fewer candidates than r=1 on boilerplate") {
     import spark.implicits._
-    graft.functions.Aggregators.register(spark)
     // 40 docs sharing a 30-shingle boilerplate block plus 170 unique
     // shingles each → pairwise J = 30/370 ≈ 0.081: classic r=1 blowup
     // territory (p ≈ 1-(1-J)^64 ≈ 1.0 per pair) that r=2 must prune

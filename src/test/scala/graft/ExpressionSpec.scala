@@ -136,4 +136,29 @@ class ExpressionSpec extends AnyFunSuite {
     assert(plans(range, classOf[graft.plans.BroadcastRangeJoinExec]))
     assert(range.count() == 1)
   }
+
+  test("typed aggregates resolve in a fresh session without register() and plan as partial/final") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ScalaAggregator}
+    // newSession() has only what spark.sql.extensions injects
+    val df = spark.newSession().sql(
+      """SELECT kahan_sum(CAST(id AS DOUBLE)) AS k, dec_hist(id + 1) AS h,
+         minhash16(id) AS m16, minhash64(id) AS m64, simhash64(id) AS sh,
+         topk3_by(CAST(id AS DOUBLE), id) AS top FROM range(10)""")
+    val aggs = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case a: ScalaAggregator[_, _, _] => a.aggregatorName.get -> a.agg.getClass.getName
+    }))
+    assert(aggs.map(_._1).toSet ==
+      Set("kahan_sum", "dec_hist", "minhash16", "minhash64", "simhash64", "topk3_by"))
+    assert(aggs.forall(_._2.startsWith("graft.functions.Aggregators")), aggs)
+    val modes = df.queryExecution.sparkPlan.collect {
+      case a: BaseAggregateExec => a.aggregateExpressions.map(_.mode)
+    }.flatten.toSet
+    assert(modes == Set(Partial, Final), df.queryExecution.sparkPlan)
+    val r = df.head()
+    assert(r.getDouble(0) == 45.0)
+    assert(r.getSeq[Long](1).head == 10L) // dec_hist's n
+    assert(r.getSeq[Long](2).size == 16 && r.getSeq[Long](3).size == 64)
+    assert(r.getSeq[org.apache.spark.sql.Row](5).map(_.getLong(1)) == Seq(9L, 8L, 7L))
+  }
 }

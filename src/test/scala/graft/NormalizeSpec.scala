@@ -33,7 +33,7 @@ class NormalizeSpec extends AnyFunSuite {
         Integer.valueOf(3), 0.5, 4.0, 4.5))
     val raw = spark.createDataFrame(
       spark.sparkContext.parallelize(rows), schema)
-    val out = Normalize.normalizeTrips(raw)
+    val (out, _) = Normalize.normalizeTrips(raw)
 
     assert(out.columns.toSeq == Normalize.tripColumns.map(_.dest))
     val got = out.orderBy("pickup_datetime").collect()
@@ -62,7 +62,7 @@ class NormalizeSpec extends AnyFunSuite {
         Integer.valueOf(3)))
     val raw = spark.createDataFrame(
       spark.sparkContext.parallelize(rows), schema)
-    val (out, obs) = Normalize.normalizeTripsObserved(raw)
+    val (out, obs) = Normalize.normalizeTrips(raw)
     assert(out.count() == 2)
     val m = obs.get
     assert(m("rows_in") == 3L, s"rows_in: $m")
@@ -78,7 +78,7 @@ class NormalizeSpec extends AnyFunSuite {
     val rows = Seq(Row(java.sql.Timestamp.valueOf("2025-11-01 00:00:00"),
       java.lang.Long.valueOf(100L), java.lang.Long.valueOf(200L)))
     val raw = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
-    val got = Normalize.normalizeTrips(raw).collect()(0)
+    val got = Normalize.normalizeTrips(raw)._1.collect()(0)
     assert(got.getAs[Int]("pickup_location_id") == 100)
     assert(got.getAs[Int]("dropoff_location_id") == 200)
     assert(!got.isNullAt(got.fieldIndex("pickup_datetime")))
@@ -88,7 +88,7 @@ class NormalizeSpec extends AnyFunSuite {
     import spark.implicits._
     val raw = Seq(("1", "EWR", "Newark Airport", "EWR"))
       .toDF("LocationID", "Borough", "Zone", "service_zone")
-    val got = Normalize.normalizeZones(raw).collect()(0)
+    val got = Normalize.normalizeZones(raw)._1.collect()(0)
     assert(got.getAs[Int]("location_id") == 1)
     assert(got.getAs[String]("zone") == "Newark Airport")
   }

@@ -23,6 +23,24 @@ class QueriesSmokeSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  private object Left extends Family {
+    val defs: Map[String, Q] = Map("dup_q" -> ((s, _) => s.range(1).toDF()))
+    val sql: Map[String, String] = Map("dup_q" -> "SELECT 0 AS id")
+  }
+  private object Right extends Family {
+    val defs: Map[String, Q] = Map("dup_q" -> ((s, _) => s.range(2).toDF()))
+    val sql: Map[String, String] = Map.empty
+  }
+
+  test("a query name defined by two families throws, naming both families") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.byName(Seq(Left, Right))(_.defs))
+    assert(e.getMessage.contains("dup_q") && e.getMessage.contains("Left") &&
+      e.getMessage.contains("Right"), e.getMessage)
+    // one definition per name is fine
+    assert(SparkEntry.byName(Seq(Left, Right))(_.sql).keySet == Set("dup_q"))
+  }
+
   test("every oracleSql key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle without query: $missing")

@@ -82,23 +82,19 @@ class Round12Spec extends AnyFunSuite {
     // oracle; here: a synthetic corpus with one shingle in every doc must
     // abort once its df exceeds a small budget. Calls the REAL kernel
     // (r14: 1-row max-df probe on the grouped checkpoint), both the
-    // fail-loud and the pass-through paths, with and without the
-    // constant-memory pre-pass.
+    // fail-loud and the pass-through paths.
     import spark.implicits._
     val sh = (1 to 50).map(i => (i.toLong, "the same shingle"))
       .toDF("doc_id", "shingle")
-    for (pre <- Seq(false, true)) {
-      // ABORT-BEFORE-PAIRS (VERDICT r13 #2): the guard throws from the
-      // kernel CALL itself — the pair frame is never even constructed,
-      // so no pair row can have streamed (the r13 inline assert let
-      // sibling in-budget rows emit O(budget²) pairs before the hot
-      // aggregated row was reached)
-      val e = intercept[IllegalArgumentException] {
-        graft.llm.TextOps.exactAnchorFrames(sh, pre, "spec-hot",
-          budget = 10)
-      }
-      assert(e.getMessage.contains("budget 10"), e.getMessage)
+    // ABORT-BEFORE-PAIRS (VERDICT r13 #2): the guard throws from the
+    // kernel CALL itself — the pair frame is never even constructed,
+    // so no pair row can have streamed (the r13 inline assert let
+    // sibling in-budget rows emit O(budget²) pairs before the hot
+    // aggregated row was reached)
+    val e = intercept[IllegalArgumentException] {
+      graft.llm.TextOps.exactAnchorFrames(sh, "spec-hot", budget = 10)
     }
+    assert(e.getMessage.contains("budget 10"), e.getMessage)
     // a cool corpus yields the exact pair set: docs {1,2,3} share "s",
     // so C(3,2)=3 pairs each with common=1, plus {1,2} share "t" → the
     // (1,2) pair has common=2; duplicated raw rows must NOT inflate
@@ -107,8 +103,7 @@ class Round12Spec extends AnyFunSuite {
         (1L, "t"))
       .toDF("doc_id", "shingle")
     val (pairsDf, countsDf) =
-      graft.llm.TextOps.exactAnchorFrames(cool, precheck = false,
-        "spec-cool")
+      graft.llm.TextOps.exactAnchorFrames(cool, "spec-cool")
     val pairs = pairsDf
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(pairs == Set((1L, 2L, 2L), (1L, 3L, 1L), (2L, 3L, 1L)))
