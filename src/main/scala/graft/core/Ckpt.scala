@@ -91,7 +91,7 @@ object Ckpt {
         // a stopped context (or an already-unpersisted RDD) must not
         // turn cleanup into a failure
         try r.unpersist(blocking = true)
-        catch { case _: Throwable => () }
+        catch { case scala.util.control.NonFatal(_) => () }
       }
       mine.clear()
     }

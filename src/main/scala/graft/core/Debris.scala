@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.graft.LifecycleShim
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Deterministic release of dead broadcast relations and shuffle state at
   * query boundaries — the broadcast/shuffle half of the lifecycle story
@@ -61,12 +62,12 @@ object Debris {
     val bids = LifecycleShim.broadcastIds(sc)
     bids.foreach { id =>
       try LifecycleShim.removeBroadcast(sc, id)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     val sids = LifecycleShim.shuffleIds(sc)
     sids.foreach { id =>
       try LifecycleShim.removeShuffle(sc, id)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     (bids.size, sids.size)
   }

@@ -1,5 +1,7 @@
 package graft.etl
 
+import scala.util.control.NonFatal
+
 /** Readiness/retry wrapper replicating the reference's DB probe semantics
   * (`/root/reference/python/ingest_data.py:210-221`: `SELECT 1` up to 30
   * tries, 3 s apart) as a generic combinator for any flaky boundary
@@ -7,13 +9,17 @@ package graft.etl
   * executor-side work in sleeps.
   */
 object Retry {
+  /** Runs `op` up to `attempts` times, `delayMs` apart, retrying only
+    * [[NonFatal]] errors: an interrupt or a VM error (out of memory)
+    * propagates at once instead of being retried. */
   def withRetry[T](attempts: Int = 30, delayMs: Long = 3000)(op: => T): T = {
+    require(attempts >= 1, s"withRetry needs attempts >= 1, got $attempts")
     var last: Throwable = null
     var i = 0
     while (i < attempts) {
       try return op
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           last = e
           i += 1
           if (i < attempts) Thread.sleep(delayMs)

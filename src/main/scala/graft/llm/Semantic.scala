@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables.{spread, t}
+import graft.functions.SaltedHash.md5Prefix
 
 /** Semantic curation operators — the embedding-space and
   * distribution-matching half of a training-data pipeline, built from
@@ -40,12 +41,6 @@ object Semantic extends graft.Family {
     * near-dup anchor (`llm_embedding_neardup_exact`, Dedup.scala), so
     * the two queries agree on what "semantic duplicate" means. */
   private val Tau = 0.30
-
-  /** Portable 16-bit salted hash (md5 hex prefix) — the same
-    * construction FeatureEng.h16 / llm_split_assign use; duplicated
-    * here because it is 3 lines and the FeatureEng copy is private. */
-  private def h16(salt: String, c: Column): Column =
-    conv(substring(md5(concat(lit(salt), c)), 1, 4), 16, 10).cast("bigint")
 
   /** Nearest-centroid assignment: (vec_id, cell, sim) with cell = the
     * argmax-cosine centroid. The K centroid rows are broadcast; the
@@ -138,6 +133,26 @@ object Semantic extends graft.Family {
     }
     (assigned, cents)
   }
+
+  /** The pair-metric inputs (llm_rouge_pairs, llm_self_bleu2): the token
+    * arrays `(doc_id, toks)` of documents 0..9, and their unigram and
+    * bigram counts `(doc_id, g, c)`. */
+  private def pairMetricGrams(s: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val docs = t(s, d, "documents").filter(col("doc_id") < 10)
+      .select(col("doc_id"), split(col("text"), " ").as("toks"))
+    val uni = docs.select(col("doc_id"), explode(col("toks")).as("g"))
+      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
+    val bi = docs.select(col("doc_id"),
+        explode(expr("transform(slice(toks, 1, size(toks) - 1)," +
+          " (x, i) -> concat(x, ' ', toks[i + 1]))")).as("g"))
+      .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
+    (docs, uni, bi)
+  }
+
+  /** Per-document gram total `out` of a `(doc_id, g, c)` count table. */
+  private def totals(grams: DataFrame, out: String): DataFrame =
+    grams.groupBy(col("doc_id")).agg(sum(col("c")).as(out))
 
   val defs: Map[String, Q] = Map(
 
@@ -256,14 +271,7 @@ object Semantic extends graft.Family {
     // when the candidate is shorter, bleu2 = BP·√(p1·p2) — one exp and
     // one sqrt per pair on exact-rational operands, floor-ppm output.
     "llm_self_bleu2" -> ((s, d) => {
-      val docs = t(s, d, "documents").filter(col("doc_id") < 10)
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      val uni = docs.select(col("doc_id"), explode(col("toks")).as("g"))
-        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      val bi = docs.select(col("doc_id"),
-          explode(expr("transform(slice(toks, 1, size(toks) - 1)," +
-            " (x, i) -> concat(x, ' ', toks[i + 1]))")).as("g"))
-        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
+      val (docs, uni, bi) = pairMetricGrams(s, d)
       def clipped(grams: DataFrame, out: String): DataFrame =
         grams.select(col("doc_id").as("id_cand"), col("g"),
             col("c").as("cc"))
@@ -272,8 +280,6 @@ object Semantic extends graft.Family {
           .filter(col("id_cand") =!= col("id_ref"))
           .groupBy(col("id_cand"), col("id_ref"))
           .agg(sum(least(col("cc"), col("cr"))).as(out))
-      def totals(grams: DataFrame, out: String): DataFrame =
-        grams.groupBy(col("doc_id")).agg(sum(col("c")).as(out))
       val ids = docs.select(col("doc_id"))
       val pairs = ids.select(col("doc_id").as("id_cand"))
         .crossJoin(ids.select(col("doc_id").as("id_ref")))
@@ -300,14 +306,7 @@ object Semantic extends graft.Family {
     }),
 
     "llm_rouge_pairs" -> ((s, d) => {
-      val docs = t(s, d, "documents").filter(col("doc_id") < 10)
-        .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      val uni = docs.select(col("doc_id"), explode(col("toks")).as("g"))
-        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-      val bi = docs.select(col("doc_id"),
-          explode(expr("transform(slice(toks, 1, size(toks) - 1)," +
-            " (x, i) -> concat(x, ' ', toks[i + 1]))")).as("g"))
-        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
+      val (docs, uni, bi) = pairMetricGrams(s, d)
       def overlap(grams: DataFrame, out: String): DataFrame =
         grams.select(col("doc_id").as("id_a"), col("g"), col("c").as("ca"))
           .join(grams.select(col("doc_id").as("id_b"), col("g"),
@@ -315,8 +314,6 @@ object Semantic extends graft.Family {
           .filter(col("id_a") < col("id_b"))
           .groupBy(col("id_a"), col("id_b"))
           .agg(sum(least(col("ca"), col("cb"))).as(out))
-      def totals(grams: DataFrame, out: String): DataFrame =
-        grams.groupBy(col("doc_id")).agg(sum(col("c")).as(out))
       val ids = docs.select(col("doc_id"))
       val pairs = ids.select(col("doc_id").as("id_a"))
         .crossJoin(ids.select(col("doc_id").as("id_b")))
@@ -366,7 +363,7 @@ object Semantic extends graft.Family {
         .select(col("doc_id"), col("lang"), col("source"),
           explode(split(col("text"), " ")).as("tok"))
         .select(col("doc_id"), col("lang"), col("source"),
-          (h16("dsir:", col("tok")) % 256).as("f"))
+          (md5Prefix(concat(lit("dsir:"), col("tok")), 4) % 256).as("f"))
       val isTgt = col("lang") === "en" &&
         col("source").isin("src0", "src1", "src2", "src3")
       val perF = toks.groupBy(col("f"))

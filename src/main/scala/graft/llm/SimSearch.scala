@@ -86,18 +86,7 @@ object SimSearch extends graft.Family {
     * scale) the same recall needs far fewer probes. */
   def ivfSearch(index: IvfIndex, queryPred: Column,
                 nProbe: Int, topK: Int = 5): DataFrame = {
-    val queries = index.assigned.filter(queryPred)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val qCells = queries.crossJoin(broadcast(index.centroids))
-      .withColumn("csim", expr("cosine_similarity(qvec, centroid)"))
-      // probe ranking on round(csim, 6) — the assignTo discipline: a 1-ulp
-      // cross-engine summation difference cannot flip the probe set except
-      // exactly at a rounding boundary, so the DuckDB twin replays it
-      .withColumn("crn", row_number().over(
-        Window.partitionBy(col("qid"))
-          .orderBy(round(col("csim"), 6).desc, col("cell"))))
-      .filter(col("crn") <= nProbe)
-      .select(col("qid"), col("qvec"), col("cell"))
+    val qCells = ivfProbes(index, queryPred, nProbe)
     val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
     index.assigned
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"), col("cell"))
@@ -108,6 +97,48 @@ object SimSearch extends graft.Family {
       .dropDuplicates("qid", "cid")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= topK)
+  }
+
+  /** `(qid, qvec, cell)`: each query vector (an indexed vector matching
+    * `queryPred`) with its `nProbe` closest cells against the broadcast
+    * centroid table. The probe ranking is on round(csim, 6) — the
+    * assignTo discipline: a 1-ulp cross-engine summation difference
+    * cannot flip the probe set except exactly at a rounding boundary, so
+    * the DuckDB twin replays it. */
+  private def ivfProbes(index: IvfIndex, queryPred: Column,
+                        nProbe: Int): DataFrame =
+    index.assigned.filter(queryPred)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+      .crossJoin(broadcast(index.centroids))
+      .withColumn("csim", expr("cosine_similarity(qvec, centroid)"))
+      .withColumn("crn", row_number().over(
+        Window.partitionBy(col("qid"))
+          .orderBy(round(col("csim"), 6).desc, col("cell"))))
+      .filter(col("crn") <= nProbe)
+      .select(col("qid"), col("qvec"), col("cell"))
+
+  /** The retrieval split of the embeddings: the query vectors
+    * (vec_id < 20) as `(qid, qvec)` and every vector as a candidate
+    * `(cid, cvec)`, each with its label (`qlabel` / `clabel`) when
+    * `labels` is set. */
+  private def querySplit(emb: DataFrame, labels: Boolean = false)
+      : (DataFrame, DataFrame) = {
+    def side(id: String, vec: String, label: String): Seq[Column] =
+      Seq(col("vec_id").as(id), col("embedding").as(vec)) ++
+        (if (labels) Seq(col("label").as(label)) else Nil)
+    (emb.filter(col("vec_id") < 20).select(side("qid", "qvec", "qlabel"): _*),
+      emb.select(side("cid", "cvec", "clabel"): _*))
+  }
+
+  /** Every (query, candidate) pair's cosine over the full vectors (`simf`)
+    * and over their first 16 dims (`simt`, the Matryoshka truncation). */
+  private def fullAndTruncatedSims(emb: DataFrame): DataFrame = {
+    val (queries, cands) = querySplit(emb)
+    cands.join(broadcast(queries), col("cid") =!= col("qid"))
+      .withColumn("simf", expr("cosine_similarity(qvec, cvec)"))
+      .withColumn("simt",
+        expr("cosine_similarity(slice(qvec, 1, 16), slice(cvec, 1, 16))"))
+      .select(col("qid"), col("cid"), col("simf"), col("simt"))
   }
 
   /** A fitted product-quantization index: per-vector code arrays + the
@@ -471,10 +502,7 @@ object SimSearch extends graft.Family {
   val defs: Map[String, Q] = Map(
     // exact brute-force cosine top-5 per query vector
     "llm_cosine_topk" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val queries = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val cands = emb.select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+      val (queries, cands) = querySplit(t(s, d, "embeddings"))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("sim").desc, col("cid"))
       cands.join(broadcast(queries), col("cid") =!= col("qid"))
@@ -497,11 +525,7 @@ object SimSearch extends graft.Family {
     // like search); everything after is bounded by pool² = 64 rows per
     // query. Twin: 4 unrolled greedy steps over the same integer scores.
     "llm_mmr_rerank" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val queries = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val cands = emb.select(col("vec_id").as("cid"),
-        col("embedding").as("cvec"))
+      val (queries, cands) = querySplit(t(s, d, "embeddings"))
       val wp = Window.partitionBy(col("qid"))
         .orderBy(col("r").desc, col("cid"))
       val pool = cands.join(broadcast(queries), col("cid") =!= col("qid"))
@@ -521,16 +545,7 @@ object SimSearch extends graft.Family {
     // exact-pool ground truth (oracle-checked floor).
     "llm_mmr_rerank_ann" -> ((s, d) => {
       val ivf = ivfIndexFor(s, d, k = 16)
-      val queries = ivf.assigned.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      // probe ranking on round(csim, 6) — ivfSearch's window verbatim
-      val qCells = queries.crossJoin(broadcast(ivf.centroids))
-        .withColumn("csim", expr("cosine_similarity(qvec, centroid)"))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy(col("qid"))
-            .orderBy(round(col("csim"), 6).desc, col("cell"))))
-        .filter(col("crn") <= 8)
-        .select(col("qid"), col("qvec"), col("cell"))
+      val qCells = ivfProbes(ivf, col("vec_id") < 20, 8)
       val wp = Window.partitionBy(col("qid"))
         .orderBy(col("r").desc, col("cid"))
       val pool = ivf.assigned
@@ -553,12 +568,7 @@ object SimSearch extends graft.Family {
     // projected away before the top-k shuffle); at corpus scale the
     // candidate stage swaps to the ANN index exactly like search does.
     "llm_hard_negatives" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val queries = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-          col("label").as("qlabel"))
-      val cands = emb.select(col("vec_id").as("cid"),
-        col("embedding").as("cvec"), col("label").as("clabel"))
+      val (queries, cands) = querySplit(t(s, d, "embeddings"), labels = true)
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("sim").desc, col("cid"))
       cands.join(broadcast(queries),
@@ -575,12 +585,7 @@ object SimSearch extends graft.Family {
     // retrieval pipeline reports. Same broadcast-query top-k shape as
     // llm_cosine_topk, rolled up to one exact ratio per query.
     "ml_precision_at_k" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val queries = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-          col("label").as("qlabel"))
-      val cands = emb.select(col("vec_id").as("cid"),
-        col("embedding").as("cvec"), col("label").as("clabel"))
+      val (queries, cands) = querySplit(t(s, d, "embeddings"), labels = true)
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("sim").desc, col("cid"))
       cands.join(broadcast(queries), col("cid") =!= col("qid"))
@@ -607,15 +612,10 @@ object SimSearch extends graft.Family {
     // counted on the SAME per-query partition the rank window already
     // shuffles, so no extra pass. Scale shape = llm_cosine_topk.
     "ml_ndcg" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val queries = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-          col("label").as("qlabel"))
+      val (queries, cands) = querySplit(t(s, d, "embeddings"), labels = true)
       val wQ = Window.partitionBy(col("qid"))
       val wRank = wQ.orderBy(col("sim").desc, col("cid"))
-      emb.select(col("vec_id").as("cid"), col("embedding").as("cvec"),
-          col("label").as("clabel"))
-        .join(broadcast(queries), col("cid") =!= col("qid"))
+      cands.join(broadcast(queries), col("cid") =!= col("qid"))
         .withColumn("sim", expr("cosine_similarity(qvec, cvec)"))
         .withColumn("rel",
           when(col("clabel") === col("qlabel"), 1L).otherwise(0L))
@@ -789,16 +789,7 @@ object SimSearch extends graft.Family {
     // rows-only contract. Scale shape = llm_cosine_topk (queries
     // broadcast, facts stream, only (qid,cid,sim) crosses the shuffle).
     "llm_mrl_truncation" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val queries = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val cands = emb.select(col("vec_id").as("cid"),
-        col("embedding").as("cvec"))
-      val joined = cands.join(broadcast(queries), col("cid") =!= col("qid"))
-        .withColumn("simf", expr("cosine_similarity(qvec, cvec)"))
-        .withColumn("simt",
-          expr("cosine_similarity(slice(qvec, 1, 16), slice(cvec, 1, 16))"))
-        .select(col("qid"), col("cid"), col("simf"), col("simt"))
+      val joined = fullAndTruncatedSims(t(s, d, "embeddings"))
       val wf = Window.partitionBy(col("qid"))
         .orderBy(col("simf").desc, col("cid"))
       val wt = Window.partitionBy(col("qid"))
@@ -828,16 +819,7 @@ object SimSearch extends graft.Family {
     // Scale shape = llm_cosine_topk: queries broadcast, facts stream,
     // only (qid, cid, sim) crosses the shuffle.
     "llm_rrf_fusion" -> ((s, d) => {
-      val emb = t(s, d, "embeddings")
-      val queries = emb.filter(col("vec_id") < 20)
-        .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      val cands = emb.select(col("vec_id").as("cid"),
-        col("embedding").as("cvec"))
-      val joined = cands.join(broadcast(queries), col("cid") =!= col("qid"))
-        .withColumn("simf", expr("cosine_similarity(qvec, cvec)"))
-        .withColumn("simt",
-          expr("cosine_similarity(slice(qvec, 1, 16), slice(cvec, 1, 16))"))
-        .select(col("qid"), col("cid"), col("simf"), col("simt"))
+      val joined = fullAndTruncatedSims(t(s, d, "embeddings"))
       val wf = Window.partitionBy(col("qid"))
         .orderBy(col("simf").desc, col("cid"))
       val wt = Window.partitionBy(col("qid"))

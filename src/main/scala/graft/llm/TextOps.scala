@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables.{spread, t}
+import graft.functions.SaltedHash.md5Prefix
 
 /** LLM-training-data text operators over `documents` (BASELINE.json
   * north_star: dedup + text analysis, designed for 100 TB).
@@ -29,8 +30,7 @@ object TextOps extends graft.Family {
     * `llm_curation_pipeline`, so a retune cannot silently diverge the two
     * (a doc's split must never depend on which query assigned it). */
   private[llm] def splitBucket: org.apache.spark.sql.Column =
-    conv(substring(md5(concat(lit("graft:"), col("doc_id").cast("string"))),
-      1, 4), 16, 10).cast("long") % 100
+    md5Prefix(concat(lit("graft:"), col("doc_id").cast("string")), 4) % 100
 
   /** 80/10/10 bucket → label mapping (same sharing rationale). */
   private[llm] def splitLabel(bucket: org.apache.spark.sql.Column)
@@ -1611,16 +1611,7 @@ object TextOps extends graft.Family {
     // wider than a document), and the output is one row per doc. All
     // integer arithmetic — full DuckDB value twin.
     "llm_winnow_positional" -> ((s, d) => {
-      // length >= 5 filter on BOTH sides: Spark's sequence(1, n) DESCENDS
-      // for n < 1 (it would emit bogus positions), DuckDB's range is
-      // simply empty — pinning the domain makes the twins identical
-      val grams = spread(t(s, d, "documents"))
-        .filter(length(col("text")) >= 5)
-        .select(col("doc_id"), col("text"),
-          posexplode(sequence(lit(1), length(col("text")) - 4))
-            .as(Seq("i0", "p")))
-        .select(col("doc_id"), col("p").cast("long").as("p"),
-          expr(winnowHash).as("h"))
+      val grams = charGramHashes(s, d)
       val n = grams.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_grams"))
       val w = Window.partitionBy(col("doc_id")).orderBy(col("p"))
@@ -1653,16 +1644,7 @@ object TextOps extends graft.Family {
     // lag window per doc + one aggregate; left join keeps boundary-free
     // docs as a single whole-doc chunk. All integer — full DuckDB twin.
     "llm_cdc_chunks" -> ((s, d) => {
-      // length >= 5 filter on BOTH sides: Spark's sequence(1, n) DESCENDS
-      // for n < 1 (it would emit bogus positions), DuckDB's range is
-      // simply empty — pinning the domain makes the twins identical
-      val grams = spread(t(s, d, "documents"))
-        .filter(length(col("text")) >= 5)
-        .select(col("doc_id"), col("text"),
-          posexplode(sequence(lit(1), length(col("text")) - 4))
-            .as(Seq("i0", "p")))
-        .select(col("doc_id"), col("p").cast("long").as("p"),
-          expr(winnowHash).as("h"))
+      val grams = charGramHashes(s, d)
       val n = grams.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_grams"))
       val wLag = Window.partitionBy(col("doc_id")).orderBy(col("p"))
@@ -1702,12 +1684,7 @@ object TextOps extends graft.Family {
     // COVERAGE.md: a mod-p affine family has weaker avalanche than
     // xxhash64, which only matters against adversarial token sets.
     "llm_simhash" -> ((s, d) => {
-      spread(t(s, d, "documents"))
-        .select(col("doc_id"),
-          explode(array_distinct(split(col("text"), " "))).as("tok"))
-        .filter(length(col("tok")) > 0)
-        .withColumn("h", expr(
-          "poly_hash(tok)"))
+      distinctTokenHashes(s, d)
         .withColumn("h60",
           col("h") + pmod(col("h") * 131 + 13, lit(1000000007L)) *
             lit(1L << 30))
@@ -1724,12 +1701,7 @@ object TextOps extends graft.Family {
     // h < 2^30, so bits 30..63 vote -1 per token and stay clear on both
     // sides. Empty tokens (split artifacts) are dropped on both sides.
     "llm_simhash_poly" -> ((s, d) => {
-      spread(t(s, d, "documents"))
-        .select(col("doc_id"),
-          explode(array_distinct(split(col("text"), " "))).as("tok"))
-        .filter(length(col("tok")) > 0)
-        .withColumn("h", expr(
-          "poly_hash(tok)"))
+      distinctTokenHashes(s, d)
         .groupBy(col("doc_id"))
         .agg(expr("simhash64(h)").as("simhash"))
     }),
@@ -1739,12 +1711,7 @@ object TextOps extends graft.Family {
     // minhash signature semantics (min over a permuted hash, distinct
     // tokens), mirroring what minhash16/64 do with the splitmix remix.
     "llm_minhash_poly" -> ((s, d) => {
-      spread(t(s, d, "documents"))
-        .select(col("doc_id"),
-          explode(array_distinct(split(col("text"), " "))).as("tok"))
-        .filter(length(col("tok")) > 0)
-        .withColumn("h", expr(
-          "poly_hash(tok)"))
+      distinctTokenHashes(s, d)
         .groupBy(col("doc_id"))
         .agg(
           min(col("h")).as("mh0"),
@@ -1786,6 +1753,29 @@ object TextOps extends graft.Family {
     (0 until 5).foldLeft("CAST(7 AS BIGINT)") { (acc, i) =>
       s"(($acc * 31 + ascii(substr(text, p + $i, 1))) % 1000000007)"
     }
+
+  /** `(doc_id, p, h)`: the [[winnowHash]] of every 5-char gram at its
+    * 1-based start `p`, over documents of at least 5 chars. The length
+    * filter is on BOTH sides: Spark's sequence(1, n) DESCENDS for n < 1
+    * (it would emit bogus positions), DuckDB's range is simply empty —
+    * pinning the domain makes the twins identical. */
+  private def charGramHashes(s: SparkSession, d: String): DataFrame =
+    spread(t(s, d, "documents"))
+      .filter(length(col("text")) >= 5)
+      .select(col("doc_id"), col("text"),
+        posexplode(sequence(lit(1), length(col("text")) - 4))
+          .as(Seq("i0", "p")))
+      .select(col("doc_id"), col("p").cast("long").as("p"),
+        expr(winnowHash).as("h"))
+
+  /** `(doc_id, tok, h)`: each document's distinct non-empty
+    * space-separated tokens with their portable `poly_hash`. */
+  private def distinctTokenHashes(s: SparkSession, d: String): DataFrame =
+    spread(t(s, d, "documents"))
+      .select(col("doc_id"),
+        explode(array_distinct(split(col("text"), " "))).as("tok"))
+      .filter(length(col("tok")) > 0)
+      .withColumn("h", expr("poly_hash(tok)"))
 
   private def mergeFold(src: String): String =
     s"""list_reduce(string_split($src, chr(31)),

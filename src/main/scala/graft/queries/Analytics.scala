@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables.t
+import graft.functions.SaltedHash.md5Prefix
 import graft.ops.Partitioning
 
 /** Business-analytics extension queries (SURVEY.md §2 tier-C): concentration
@@ -24,6 +25,24 @@ object Analytics extends graft.Family {
     * both factors exact integers recovered from the 2-decimal doubles. */
   private def revU(price: Column, disc: Column): Column =
     round(price * 100).cast("bigint") * (lit(100) - round(disc * 100).cast("bigint"))
+
+  /** Per (nationkey, c_custkey): the customer's order revenue `rev_c` in
+    * exact cents — the input of the inequality family (gini, theil,
+    * lorenz). */
+  private def customerRevenue(s: SparkSession, d: String): DataFrame = {
+    val c = t(s, d, "customer")
+    val o = t(s, d, "orders")
+    c.join(o, o("o_custkey") === c("c_custkey"))
+      .groupBy(col("c_nationkey").as("nationkey"), col("c_custkey"))
+      .agg(sum(round(col("o_totalprice") * 100).cast("bigint")).as("rev_c"))
+  }
+
+  /** The orders' status × priority contingency table `(status, priority,
+    * c)`, checkpointed: its margins and total re-read it. */
+  private def statusPriorityCells(s: SparkSession, d: String): DataFrame =
+    t(s, d, "orders").groupBy(col("o_orderstatus").as("status"),
+        col("o_orderpriority").as("priority"))
+      .agg(count(lit(1)).as("c")).ckpt()
 
   val defs: Map[String, Q] = Map(
 
@@ -55,11 +74,7 @@ object Analytics extends graft.Family {
     // window partitions by nation (parallel); all sums are exact integer
     // cents, so the final double division is engine-identical.
     "agg_gini" -> ((s, d) => {
-      val c = t(s, d, "customer")
-      val o = t(s, d, "orders")
-      val crev = c.join(o, o("o_custkey") === c("c_custkey"))
-        .groupBy(col("c_nationkey").as("nationkey"), col("c_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("bigint")).as("rev_c"))
+      val crev = customerRevenue(s, d)
       val w = Window.partitionBy(col("nationkey"))
         .orderBy(col("rev_c"), col("c_custkey"))
       crev.withColumn("i", row_number().over(w).cast("bigint"))
@@ -81,11 +96,7 @@ object Analytics extends graft.Family {
     // (the ml_confusion discipline), and the rank-free construction
     // needs no sort at all — one grouped aggregate + per-nation windows.
     "agg_theil" -> ((s, d) => {
-      val c = t(s, d, "customer")
-      val o = t(s, d, "orders")
-      val crev = c.join(o, o("o_custkey") === c("c_custkey"))
-        .groupBy(col("c_nationkey").as("nationkey"), col("c_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("bigint")).as("rev_c"))
+      val crev = customerRevenue(s, d)
       val w = Window.partitionBy(col("nationkey"))
       crev
         .withColumn("n", count(lit(1)).over(w))
@@ -135,11 +146,7 @@ object Analytics extends graft.Family {
     // per-nation sort; the cumulative windows run over the ≤10-row
     // per-nation decile table.
     "agg_lorenz" -> ((s, d) => {
-      val c = t(s, d, "customer")
-      val o = t(s, d, "orders")
-      val crev = c.join(o, o("o_custkey") === c("c_custkey"))
-        .groupBy(col("c_nationkey").as("nationkey"), col("c_custkey"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("bigint")).as("rev_c"))
+      val crev = customerRevenue(s, d)
       val w = Window.partitionBy(col("nationkey"))
         .orderBy(col("rev_c"), col("c_custkey"))
       val wn = Window.partitionBy(col("nationkey"))
@@ -249,9 +256,7 @@ object Analytics extends graft.Family {
     // content without moving rows.
     "etl_table_fingerprint" -> ((s, d) => {
       def fp(df: DataFrame, name: String, cols: Seq[Column]): DataFrame =
-        df.select(
-            conv(substring(md5(concat_ws("|", cols: _*)), 1, 15), 16, 10)
-              .cast("bigint").as("h64"))
+        df.select(md5Prefix(concat_ws("|", cols: _*), 15).as("h64"))
           .agg(count(lit(1)).as("n_rows"), bit_xor(col("h64")).as("fp"))
           .select(lit(name).as("table_name"), col("n_rows"), col("fp"))
       val cust = fp(t(s, d, "customer"), "customer", Seq(
@@ -718,10 +723,7 @@ object Analytics extends graft.Family {
     // before DECIMAL is required — and only the final square/divide is
     // double, computed identically on both engines and rounded once.
     "agg_chi2" -> ((s, d) => {
-      val o = t(s, d, "orders")
-      val cells = o.groupBy(col("o_orderstatus").as("status"),
-          col("o_orderpriority").as("priority"))
-        .agg(count(lit(1)).as("c")).ckpt()
+      val cells = statusPriorityCells(s, d)
       val rm = cells.groupBy(col("status")).agg(sum(col("c")).as("r"))
       val cm = cells.groupBy(col("priority")).agg(sum(col("c")).as("k"))
       val n = cells.agg(sum(col("c")).as("n"))
@@ -745,10 +747,7 @@ object Analytics extends graft.Family {
     // integer addition is associative, so Spark's partial-agg order and
     // DuckDB's sequential order provably agree; one division on output.
     "agg_mutual_info" -> ((s, d) => {
-      val o = t(s, d, "orders")
-      val cells = o.groupBy(col("o_orderstatus").as("status"),
-          col("o_orderpriority").as("priority"))
-        .agg(count(lit(1)).as("c")).ckpt()
+      val cells = statusPriorityCells(s, d)
       val rm = cells.groupBy(col("status")).agg(sum(col("c")).as("r"))
       val cm = cells.groupBy(col("priority")).agg(sum(col("c")).as("k"))
       val tot = cells.agg(sum(col("c")).as("n"),
@@ -1005,8 +1004,8 @@ object Analytics extends graft.Family {
             col("c_custkey").cast("string").as("k2"),
             col("c_mktsegment").as("k3"))
       def fp(df: DataFrame): DataFrame =
-        df.select(conv(substring(md5(concat_ws("|", col("k1"), col("k2"),
-            col("k3"))), 1, 15), 16, 10).cast("bigint").as("h64"))
+        df.select(md5Prefix(concat_ws("|", col("k1"), col("k2"), col("k3")),
+            15).as("h64"))
           .agg(count(lit(1)).as("n"), bit_xor(col("h64")).as("f"))
       val inc = fp(v(aOld, bOld).unionAll(v(dA, bOld))
         .unionAll(v(aOld, dB)).unionAll(v(dA, dB)))

@@ -18,6 +18,32 @@ object EventsBatch extends graft.Family {
   private val typeDomainCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[String]]
 
+  /** Event-type transition counts `(prev_type, next_type, n)` over each
+    * user's (ts, event_id)-ordered events — the Markov-chain input. */
+  private def transitionCounts(s: SparkSession, d: String): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    t(s, d, "events")
+      .select(col("user_id"), col("ts"), col("event_id"),
+        col("event_type"))
+      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
+      .filter(col("prev_type").isNotNull)
+      .groupBy(col("prev_type"), col("event_type").as("next_type"))
+      .agg(count(lit(1)).as("n"))
+  }
+
+  /** Per event type, each event's exact-µs `gap` to the previous one in
+    * (us, event_id) order; the first event of a type has none. */
+  private def interArrivalGaps(s: SparkSession, d: String): DataFrame = {
+    val w = Window.partitionBy(col("event_type"))
+      .orderBy(col("us"), col("event_id"))
+    t(s, d, "events")
+      .select(col("event_type"), col("event_id"),
+        unix_micros(col("ts")).as("us"))
+      .withColumn("gap", col("us") - lag(col("us"), 1).over(w))
+      .filter(col("gap").isNotNull)
+  }
+
   val defs: Map[String, Q] = Map(
     // frequent ordered 2-sequences (the sequence-mining support count):
     // for every ordered event-type pair (a, b), how many users performed
@@ -324,13 +350,7 @@ object EventsBatch extends graft.Family {
     // > 1 hour; exact-µs counts, totals, and the longest gap — the
     // islands complement of evt_interarrival's distribution view.
     "evt_gap_report" -> ((s, d) => {
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("us"), col("event_id"))
-      t(s, d, "events")
-        .select(col("event_type"), col("event_id"),
-          unix_micros(col("ts")).as("us"))
-        .withColumn("gap", col("us") - lag(col("us"), 1).over(w))
-        .filter(col("gap").isNotNull)
+      interArrivalGaps(s, d)
         .groupBy(col("event_type"))
         .agg(
           sum(when(col("gap") > 3600000000L, 1L).otherwise(0L))
@@ -347,13 +367,7 @@ object EventsBatch extends graft.Family {
     // (percentile_disc cast BIGINT — the dtype discipline). No FP in
     // the output at all.
     "evt_interarrival" -> ((s, d) => {
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("us"), col("event_id"))
-      t(s, d, "events")
-        .select(col("event_type"), col("event_id"),
-          unix_micros(col("ts")).as("us"))
-        .withColumn("gap", col("us") - lag(col("us"), 1).over(w))
-        .filter(col("gap").isNotNull)
+      interArrivalGaps(s, d)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_gaps"),
           expr("sum(gap) div count(1)").as("mean_gap_us"),
@@ -532,15 +546,7 @@ object EventsBatch extends graft.Family {
     // the graph_components pattern) — the only data-sized job is the
     // transition-count aggregate.
     "evt_markov_steady" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val tr = t(s, d, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
-        .groupBy(col("prev_type"), col("event_type").as("next_type"))
-        .agg(count(lit(1)).as("n"))
+      val tr = transitionCounts(s, d)
       val cellsDf = tr.withColumn("np",
           sum(col("n")).over(Window.partitionBy(col("prev_type"))))
         .selectExpr("prev_type", "next_type",
@@ -1091,16 +1097,8 @@ object EventsBatch extends graft.Family {
     // ml_confusion discipline — the BIGINT sum is order-independent and
     // each ln runs on identical integer-valued operands in both engines).
     "evt_markov_entropy" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
       val ws = Window.partitionBy(col("prev_type"))
-      t(s, d, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
-        .groupBy(col("prev_type"), col("event_type").as("next_type"))
-        .agg(count(lit(1)).as("n"))
+      transitionCounts(s, d)
         .withColumn("ns", sum(col("n")).over(ws))
         .withColumn("term_ppm",
           expr("CAST(floor(1e6 * (CAST(n AS DOUBLE) / CAST(ns AS DOUBLE))" +

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables.t
+import graft.functions.SaltedHash.md5Prefix
 
 /** Feature-engineering operators — the transforms a training-data
   * pipeline applies between the warehouse and the trainer: target
@@ -20,11 +21,6 @@ import graft.core.Tables.t
   * of 6-figure values; past that, switch the sums to DECIMAL(38,0).
   */
 object FeatureEng extends graft.Family {
-  /** Deterministic 16-bit salted hash of a string column — the same
-    * portable construction llm_split_assign uses (md5 hex prefix). */
-  private def h16(salt: String, c: org.apache.spark.sql.Column) =
-    conv(substring(md5(concat(lit(salt), c)), 1, 4), 16, 10).cast("bigint")
-
   val defs: Map[String, Q] = Map(
 
     // leave-one-out target encoding of order priority against the order
@@ -62,8 +58,10 @@ object FeatureEng extends graft.Family {
           col("o_orderpriority")).as("feature"))
         .distinct()
         .select(col("feature"),
-          (h16("fh:", col("feature")) % 64).as("slot"),
-          (h16("fs:", col("feature")) % 2 * 2 - 1).as("sign"))
+          (md5Prefix(concat(lit("fh:"), col("feature")), 4) % 64)
+            .as("slot"),
+          (md5Prefix(concat(lit("fs:"), col("feature")), 4) % 2 * 2 - 1)
+            .as("sign"))
       val load = crosses.groupBy(col("slot"))
         .agg(count(lit(1)).as("slot_load"))
       crosses.join(load, Seq("slot"))
@@ -139,7 +137,8 @@ object FeatureEng extends graft.Family {
     "etl_impute" -> ((s, d) => {
       val c = t(s, d, "customer")
         .select(col("c_custkey"), col("c_nationkey").as("nationkey"),
-          when(h16("imp:", col("c_custkey").cast("string")) % 10 === 0,
+          when(md5Prefix(concat(lit("imp:"),
+              col("c_custkey").cast("string")), 4) % 10 === 0,
             lit(null).cast("bigint"))
             .otherwise(round(col("c_acctbal") * 100).cast("bigint"))
             .as("bal_u"))
@@ -194,8 +193,8 @@ object FeatureEng extends graft.Family {
       val est = f.select(col("k"), col("f"),
           explode(array((0 until 16).map(lit): _*)).as("e"))
         .withColumn("sgn",
-          h16("ams:", concat(col("e").cast("string"), lit(":"),
-            col("k").cast("string"))) % 2 * 2 - 1)
+          md5Prefix(concat(lit("ams:"), concat(col("e").cast("string"),
+            lit(":"), col("k").cast("string"))), 4) % 2 * 2 - 1)
         .groupBy(col("e")).agg(sum(col("sgn") * col("f")).as("sx"))
         .agg(avg(col("sx") * col("sx")).as("est"))
       ex.crossJoin(broadcast(est))

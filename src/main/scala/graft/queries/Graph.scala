@@ -101,6 +101,14 @@ object Graph extends graft.Family {
     e.withColumn("rn", rn).filter(col("rn") <= 3).select("src", "dst")
   }
 
+  /** [[sparseEdges]] as undirected edges `(a, b)`, a < b, each once —
+    * checkpointed, since every consumer reads it more than once. */
+  private def undirectedSparseEdges(s: SparkSession, d: String): DataFrame =
+    sparseEdges(s, d)
+      .select(least(col("src"), col("dst")).as("a"),
+              greatest(col("src"), col("dst")).as("b"))
+      .distinct().ckpt()
+
   val damping = 0.85
   val prIters = 10
 
@@ -795,10 +803,7 @@ object Graph extends graft.Family {
 
     "graph_triangles" -> ((s, d) => {
       val nation = t(s, d, "nation")
-      val und = sparseEdges(s, d)
-        .select(least(col("src"), col("dst")).as("a"),
-                greatest(col("src"), col("dst")).as("b"))
-        .distinct().ckpt()
+      val und = undirectedSparseEdges(s, d)
       val e1 = und.select(col("a").as("x"), col("b").as("y"))
       val e2 = und.select(col("a").as("y2"), col("b").as("z"))
       val wedges = e1.join(e2, col("y") === col("y2"))
@@ -820,10 +825,7 @@ object Graph extends graft.Family {
     // only FP op — same double on both engines.
     "graph_clustering_coeff" -> ((s, d) => {
       val nation = t(s, d, "nation")
-      val und = sparseEdges(s, d)
-        .select(least(col("src"), col("dst")).as("a"),
-                greatest(col("src"), col("dst")).as("b"))
-        .distinct().ckpt()
+      val und = undirectedSparseEdges(s, d)
       val deg = und.select(col("a").as("node"))
         .union(und.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -855,10 +857,7 @@ object Graph extends graft.Family {
     // edge set; the wedge middle always has degree ≥ 2 so ln never sees
     // 1. Top-10 by rounded score with a full (a, b) tiebreak.
     "graph_adamic_adar" -> ((s, d) => {
-      val und = sparseEdges(s, d)
-        .select(least(col("src"), col("dst")).as("a"),
-                greatest(col("src"), col("dst")).as("b"))
-        .distinct().ckpt()
+      val und = undirectedSparseEdges(s, d)
       val adj = und.select(col("a").as("u"), col("b").as("v"))
         .union(und.select(col("b").as("u"), col("a").as("v")))
       val deg = adj.groupBy(col("v").as("w")).agg(count(lit(1)).as("degw"))
@@ -886,10 +885,7 @@ object Graph extends graft.Family {
     // only through a shared neighbor, so the join volume is sum of
     // squared degrees, never |V|^2.
     "graph_node_jaccard" -> ((s, d) => {
-      val und = sparseEdges(s, d)
-        .select(least(col("src"), col("dst")).as("a"),
-                greatest(col("src"), col("dst")).as("b"))
-        .distinct().ckpt()
+      val und = undirectedSparseEdges(s, d)
       val adj = und.select(col("a").as("u"), col("b").as("v"))
         .union(und.select(col("b").as("u"), col("a").as("v")))
       val deg = adj.groupBy(col("u").as("w")).agg(count(lit(1)).as("degw"))
@@ -1064,10 +1060,7 @@ object Graph extends graft.Family {
     // Σj = Σk and Σj² = Σk², so r = (M·Σjk − (Σj)²) / (M·Σj² − (Σj)²) —
     // every sum an exact integer, one double expression at the end.
     "graph_assortativity" -> ((s, d) => {
-      val und = sparseEdges(s, d)
-        .select(least(col("src"), col("dst")).as("a"),
-                greatest(col("src"), col("dst")).as("b"))
-        .distinct().ckpt()
+      val und = undirectedSparseEdges(s, d)
       val deg = und.select(col("a").as("node"))
         .union(und.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))

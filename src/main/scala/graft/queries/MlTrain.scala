@@ -1,7 +1,8 @@
 package graft.queries
 import graft.core.Ckpt._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset,
+  SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables.t
@@ -168,8 +169,74 @@ object MlTrain extends graft.Family {
     u16 * u16
   }
 
-  private def gdFit(s: SparkSession, d: String)
-      : (DataFrame, Double, Double, Double) = {
+  /** An exact integer-valued sum in `decimal(precision, 0)` (28 fits the
+    * cents moments; 38 where products of counts and placements need it),
+    * cast to double once — engine summation order cannot move it. */
+  private def dsum(e: Column, precision: Int = 28): Column =
+    sum(e.cast(s"decimal($precision,0)")).cast("double")
+
+  /** The OLS moments of y on (x1, x2) as one aggregate of `g`: the row
+    * count `n` and the nine sums `<p>1 <p>2 <p>11 <p>12 <p>22 <p>y <p>1y
+    * <p>2y <p>yy` (`s` for a model's moments, `f` for per-fold ones); the
+    * two squares take `diag` as a name suffix (ridge adds λ to them). */
+  private def linregMoments(g: RelationalGroupedDataset, p: String,
+                            n: String = "n", diag: String = ""): DataFrame = {
+    val (x1, x2, y) = (col("x1"), col("x2"), col("y"))
+    g.agg(count(lit(1)).cast("double").as(n),
+      dsum(x1).as(s"${p}1"), dsum(x2).as(s"${p}2"),
+      dsum(x1 * x1).as(s"${p}11$diag"),
+      dsum(x1 * x2).as(s"${p}12"),
+      dsum(x2 * x2).as(s"${p}22$diag"),
+      dsum(y).as(s"${p}y"),
+      dsum(x1 * y).as(s"${p}1y"),
+      dsum(x2 * y).as(s"${p}2y"),
+      dsum(y * y).as(s"${p}yy"))
+  }
+
+  /** The moments of the pair (x, y): n, sx, sy, sxx, sxy, syy. */
+  private def pairMoments(df: DataFrame, precision: Int): DataFrame = {
+    val (x, y) = (col("x"), col("y"))
+    df.agg(count(lit(1)).cast("double").as("n"),
+      dsum(x, precision).as("sx"), dsum(y, precision).as("sy"),
+      dsum(x * x, precision).as("sxx"),
+      dsum(x * y, precision).as("sxy"),
+      dsum(y * y, precision).as("syy"))
+  }
+
+  /** The GD classifier's linear score over gdFit's frame. */
+  private def gdScore(w0: Double, w1: Double, w2: Double): Column =
+    (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
+
+  /** The rational sigmoid σ(z) = ½(1 + z/(1+|z|)). */
+  private def sigmoid(z: Column): Column =
+    lit(0.5) * (lit(1.0) + z / (lit(1.0) + abs(z)))
+
+  /** Count of positive labels (yy = 1) in a group. */
+  private def positives: Column =
+    sum(when(col("yy") === 1.0, 1L).otherwise(0L))
+
+  /** gdFit's frame and fitted weights, with the score tables its
+    * consumers share. */
+  private final case class GdModel(raw: DataFrame,
+                                   w0: Double, w1: Double, w2: Double) {
+    def z: Column = gdScore(w0, w1, w2)
+    def sg: Column = sigmoid(z)
+
+    /** Rows per distinct exact score `v`: `n_v`, of them `n1_v` positive. */
+    def byScore: DataFrame = raw.select(z.as("v"), col("yy"))
+      .groupBy(col("v"))
+      .agg(count(lit(1)).as("n_v"), positives.as("n1_v"))
+
+    /** Every row's sg, label and 0.005-wide score bin (sg = 1 → bin 199). */
+    def binned: DataFrame = raw.select(sg.as("sg"), col("yy"))
+      .withColumn("bin", least(floor(col("sg") * 200), lit(199L)))
+
+    /** The ≤200-row bin table: `n` rows and `pos` positives per bin. */
+    def binCounts(pos: String): DataFrame = binned.groupBy(col("bin"))
+      .agg(count(lit(1)).as("n"), positives.as(pos))
+  }
+
+  private def gdFit(s: SparkSession, d: String): GdModel = {
     val raw = t(s, d, "lineitem").select(
       (round(col("l_quantity")).cast("double") / 50.0).as("x1"),
       (round(col("l_discount") * 100).cast("double") / 10.0).as("x2"),
@@ -179,8 +246,7 @@ object MlTrain extends graft.Family {
     val nD = raw.count().toDouble
     var w0 = 0.0; var w1 = 0.0; var w2 = 0.0
     for (_ <- 1 to 3) {
-      val z = (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
-      val sg = lit(0.5) * (lit(1.0) + z / (lit(1.0) + abs(z)))
+      val sg = sigmoid(gdScore(w0, w1, w2))
       // per-row contribution stays a bigint on the 1e-12 grid, but the
       // SUM is decimal(38,0): |contrib| ≤ ~2e13, so a long sum wraps
       // silently past ~9e5 rows-per-unit headroom (sf ≳ 1.5) while the
@@ -200,7 +266,7 @@ object MlTrain extends graft.Family {
     }
     (w0, w1, w2)
     })
-    (raw, c0, c1, c2)
+    GdModel(raw, c0, c1, c2)
   }
 
   // one scored frame per corpus per session: ml_naive_bayes /
@@ -242,7 +308,7 @@ object MlTrain extends graft.Family {
     // 6 decimals: a cross-engine ulp in the ORDER-DEPENDENT sum near a
     // 6th-decimal boundary flipped a rounded score, and a flip on a
     // near-tied argmax changed `pred` → the r7/r8 ml_confusion driver
-    // hash-fails. The argmax (nbWindow) now compares exact integers.
+    // hash-fails. The argmax (nbPredicted) now compares exact integers.
     val termPpm = floor(lit(1e6) *
       log((coalesce(col("cnt"), lit(0L)) + lit(1)).cast("double") /
           (col("tot") + col("v")).cast("double")) + lit(0.5)).cast("long")
@@ -256,9 +322,23 @@ object MlTrain extends graft.Family {
       .agg((sum(col("tf") * termPpm) + first(priorPpm)).as("score_ppm"))
   }
 
-  private def nbWindow =
-    Window.partitionBy(col("doc_id"))
-      .orderBy(col("score_ppm").desc, col("cls"))
+  /** The NB prediction per test doc: its top-scoring class `cls` (ties
+    * to the smaller class name), an exact integer argmax. */
+  private def nbPredicted(s: SparkSession, d: String): DataFrame =
+    nbScored(s, d)
+      .withColumn("rn", row_number().over(Window.partitionBy(col("doc_id"))
+        .orderBy(col("score_ppm").desc, col("cls"))))
+      .filter(col("rn") === 1)
+
+  /** The NB confusion margins per class: `(cls, n_act, tp)` over the
+    * actual class and `(cls, n_pred)` over the predicted one. */
+  private def nbMargins(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val pred = nbPredicted(s, d).select(col("actual"), col("cls").as("pred"))
+    (pred.groupBy(col("actual").as("cls"))
+      .agg(count(lit(1)).as("n_act"),
+        sum(when(col("actual") === col("pred"), 1L).otherwise(0L)).as("tp")),
+      pred.groupBy(col("pred").as("cls")).agg(count(lit(1)).as("n_pred")))
+  }
 
   val defs: Map[String, Q] = Map(
 
@@ -271,17 +351,7 @@ object MlTrain extends graft.Family {
         round(col("l_extendedprice") * 100).cast("bigint").as("y"),
         round(col("l_quantity")).cast("bigint").as("x1"),
         round(col("l_discount") * 100).cast("bigint").as("x2"))
-      def dsum(e: Column) = sum(e.cast("decimal(28,0)")).cast("double")
-      raw.agg(
-          count(lit(1)).cast("double").as("n"),
-          dsum(col("x1")).as("s1"), dsum(col("x2")).as("s2"),
-          dsum(col("x1") * col("x1")).as("s11"),
-          dsum(col("x1") * col("x2")).as("s12"),
-          dsum(col("x2") * col("x2")).as("s22"),
-          dsum(col("y")).as("sy"),
-          dsum(col("x1") * col("y")).as("s1y"),
-          dsum(col("x2") * col("y")).as("s2y"),
-          dsum(col("y") * col("y")).as("syy"))
+      linregMoments(raw.groupBy(), "s")
         .selectExpr(linregL1: _*).selectExpr(linregL2: _*)
         .selectExpr(linregL3: _*)
     }),
@@ -311,17 +381,7 @@ object MlTrain extends graft.Family {
           round(col("l_quantity")).cast("bigint").as("x1"),
           round(col("l_discount") * 100).cast("bigint").as("x2"),
           pmod(col("l_orderkey"), lit(5)).cast("int").as("split"))
-      def dsum(e: Column) = sum(e.cast("decimal(28,0)")).cast("double")
-      val w = raw.filter(col("split") >= 2).agg(
-          count(lit(1)).cast("double").as("n"),
-          dsum(col("x1")).as("s1"), dsum(col("x2")).as("s2"),
-          dsum(col("x1") * col("x1")).as("s11"),
-          dsum(col("x1") * col("x2")).as("s12"),
-          dsum(col("x2") * col("x2")).as("s22"),
-          dsum(col("y")).as("sy"),
-          dsum(col("x1") * col("y")).as("s1y"),
-          dsum(col("x2") * col("y")).as("s2y"),
-          dsum(col("y") * col("y")).as("syy"))
+      val w = linregMoments(raw.filter(col("split") >= 2).groupBy(), "s")
         .selectExpr(linregL1: _*).selectExpr(linregL2: _*)
         .selectExpr("round(b0, 6) AS b0", "round(b1, 6) AS b1",
           "round(b2, 6) AS b2")
@@ -371,13 +431,7 @@ object MlTrain extends graft.Family {
       val raw = t(s, d, "lineitem").select(
         round(col("l_quantity")).cast("bigint").as("x"),
         round(col("l_discount") * 100).cast("bigint").as("y"))
-      def dsum(e: Column) = sum(e.cast("decimal(28,0)")).cast("double")
-      raw.agg(
-          count(lit(1)).cast("double").as("n"),
-          dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
-          dsum(col("x") * col("x")).as("sxx"),
-          dsum(col("x") * col("y")).as("sxy"),
-          dsum(col("y") * col("y")).as("syy"))
+      pairMoments(raw, 28)
         .selectExpr(pcaL1: _*).selectExpr(pcaL2: _*).selectExpr(pcaL3: _*)
     }),
 
@@ -388,21 +442,18 @@ object MlTrain extends graft.Family {
     // collected gradient is 3 decimals (bounded driver action) and the
     // weight update replays the oracle's formula on identical doubles.
     "ml_logreg_gd" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val zf = (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
-      raw.agg(
-        round(lit(w0), 6).as("w0"), round(lit(w1), 6).as("w1"),
-        round(lit(w2), 6).as("w2"),
-        round(avg(when((zf >= 0) === (col("yy") === 1.0), 1.0)
+      val m = gdFit(s, d)
+      m.raw.agg(
+        round(lit(m.w0), 6).as("w0"), round(lit(m.w1), 6).as("w1"),
+        round(lit(m.w2), 6).as("w2"),
+        round(avg(when((m.z >= 0) === (col("yy") === 1.0), 1.0)
           .otherwise(0.0)), 6).as("acc"))
     }),
 
     // Multinomial NB with Laplace smoothing: predict `lang` of held-out
     // docs (doc_id % 5 = 0) from token counts of the other 80%.
     "ml_naive_bayes" -> ((s, d) => {
-      nbScored(s, d)
-        .withColumn("rn", row_number().over(nbWindow))
-        .filter(col("rn") === 1)
+      nbPredicted(s, d)
         .select(col("doc_id"), col("actual"), col("cls").as("pred"),
           col("score_ppm"))
     }),
@@ -412,17 +463,9 @@ object MlTrain extends graft.Family {
     // one shared CASE text (confusionSel) evaluated identically by both
     // engines.
     "ml_confusion" -> ((s, d) => {
-      val pred = nbScored(s, d)
-        .withColumn("rn", row_number().over(nbWindow))
-        .filter(col("rn") === 1)
-        .select(col("actual"), col("cls").as("pred"))
+      val (byActual, byPred) = nbMargins(s, d)
       val classes = t(s, d, "documents")
         .select(col("lang").as("cls")).distinct()
-      val byActual = pred.groupBy(col("actual").as("cls"))
-        .agg(count(lit(1)).as("n_act"),
-          sum(when(col("actual") === col("pred"), 1L).otherwise(0L)).as("tp"))
-      val byPred = pred.groupBy(col("pred").as("cls"))
-        .agg(count(lit(1)).as("n_pred"))
       classes
         .join(byActual, Seq("cls"), "left")
         .join(byPred, Seq("cls"), "left")
@@ -438,15 +481,7 @@ object MlTrain extends graft.Family {
     // the one-number summary ml_confusion's per-class table rolls up to.
     // All inputs exact integers; three ratios at the end.
     "ml_cohens_kappa" -> ((s, d) => {
-      val pred = nbScored(s, d)
-        .withColumn("rn", row_number().over(nbWindow))
-        .filter(col("rn") === 1)
-        .select(col("actual"), col("cls").as("pred"))
-      val byActual = pred.groupBy(col("actual").as("cls"))
-        .agg(count(lit(1)).as("n_act"),
-          sum(when(col("actual") === col("pred"), 1L).otherwise(0L)).as("tp"))
-      val byPred = pred.groupBy(col("pred").as("cls"))
-        .agg(count(lit(1)).as("n_pred"))
+      val (byActual, byPred) = nbMargins(s, d)
       byActual.join(byPred, Seq("cls"), "full")
         .select(coalesce(col("tp"), lit(0L)).as("tp"),
           coalesce(col("n_act"), lit(0L)).as("n_act"),
@@ -471,18 +506,8 @@ object MlTrain extends graft.Family {
         round(col("l_quantity")).cast("bigint").as("x1"),
         round(col("l_discount") * 100).cast("bigint").as("x2"))
         .ckpt(eager = false) // moment pass + scoring pass
-      def dsum(e: Column) = sum(e.cast("decimal(28,0)")).cast("double")
-      val byFold = raw.filter(col("fold") =!= 0)
-        .groupBy(col("fold")).agg(
-          count(lit(1)).cast("double").as("fn"),
-          dsum(col("x1")).as("f1"), dsum(col("x2")).as("f2"),
-          dsum(col("x1") * col("x1")).as("f11"),
-          dsum(col("x1") * col("x2")).as("f12"),
-          dsum(col("x2") * col("x2")).as("f22"),
-          dsum(col("y")).as("fy"),
-          dsum(col("x1") * col("y")).as("f1y"),
-          dsum(col("x2") * col("y")).as("f2y"),
-          dsum(col("y") * col("y")).as("fyy"))
+      val byFold = linregMoments(
+        raw.filter(col("fold") =!= 0).groupBy(col("fold")), "f", "fn")
       val wCum = Window.orderBy(col("fold"))
         .rowsBetween(Window.unboundedPreceding, 0)
       val cum = byFold.select(col("fold").as("k") +:
@@ -514,13 +539,7 @@ object MlTrain extends graft.Family {
     // prefix sum for ranks — no global window, tie-averaged rank sum in
     // exact bigints (the agg_mannwhitney machinery).
     "ml_auc" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val byv = raw
-        .select(((lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2"))
-          .as("v"), col("yy"))
-        .groupBy(col("v"))
-        .agg(count(lit(1)).as("n_v"),
-          sum(when(col("yy") === 1.0, 1L).otherwise(0L)).as("n1_v"))
+      val byv = gdFit(s, d).byScore
       val cum = Partitioning.rankedCumSum(
         byv, col("n_v"), Seq(col("v")), 32, "cum_n")
       cum.agg(
@@ -545,16 +564,10 @@ object MlTrain extends graft.Family {
     // ~10¹² rows, far past any tested sf. Sums accumulate in
     // decimal(38,0).
     "ml_auc_delong" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      def dsum(e: Column) = sum(e.cast("decimal(38,0)")).cast("double")
+      val m = gdFit(s, d)
       def cnt(c: Column) = c.cast("decimal(12,0)")
       def plc(c: Column) = c.cast("decimal(13,0)")
-      val byv = raw
-        .select(((lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2"))
-          .as("v"), col("yy"))
-        .groupBy(col("v"))
-        .agg(count(lit(1)).as("n_v"),
-          sum(when(col("yy") === 1.0, 1L).otherwise(0L)).as("n1_v"))
+      val byv = m.byScore
         .withColumn("n0_v", col("n_v") - col("n1_v"))
       val cum = Partitioning.rankedCumSumMulti(byv,
         Seq(col("n0_v") -> "cum0", col("n1_v") -> "cum1"),
@@ -566,10 +579,12 @@ object MlTrain extends graft.Family {
         .agg(
           max(col("t1")).cast("double").as("n1"),
           max(col("t0")).cast("double").as("n0"),
-          dsum(cnt(col("n1_v")) * plc(col("p2"))).as("sp"),
-          dsum(cnt(col("n1_v")) * plc(col("p2")) * plc(col("p2"))).as("spp"),
-          dsum(cnt(col("n0_v")) * plc(col("q2"))).as("sq"),
-          dsum(cnt(col("n0_v")) * plc(col("q2")) * plc(col("q2"))).as("sqq"))
+          dsum(cnt(col("n1_v")) * plc(col("p2")), 38).as("sp"),
+          dsum(cnt(col("n1_v")) * plc(col("p2")) * plc(col("p2")), 38)
+            .as("spp"),
+          dsum(cnt(col("n0_v")) * plc(col("q2")), 38).as("sq"),
+          dsum(cnt(col("n0_v")) * plc(col("q2")) * plc(col("q2")), 38)
+            .as("sqq"))
         .selectExpr(delongL1: _*).selectExpr(delongL2: _*)
     }),
 
@@ -579,16 +594,12 @@ object MlTrain extends graft.Family {
     // rate. Bin membership is an integer floor of the deterministic
     // per-row sigmoid — it cannot ulp-flip across engines.
     "ml_calibration" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val z = (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
-      val sg = lit(0.5) * (lit(1.0) + z / (lit(1.0) + abs(z)))
-      raw.select(sg.as("sg"), col("yy"))
-        .withColumn("bin", least(floor(col("sg") * 200), lit(199L)))
+      gdFit(s, d).binned
         .groupBy(col("bin"))
         .agg(count(lit(1)).as("n"),
           round(avg(col("sg")), 6).as("pred_rate"),
-          round(sum(when(col("yy") === 1.0, 1L).otherwise(0L))
-            .cast("double") / count(lit(1)).cast("double"), 6).as("obs_rate"))
+          round(positives.cast("double") / count(lit(1)).cast("double"), 6)
+            .as("obs_rate"))
     }),
 
     // Brier score of the GD classifier — mean squared error between the
@@ -600,11 +611,9 @@ object MlTrain extends graft.Family {
     // integer sum. One map-side-combinable aggregate over the shared
     // cached gdFit frame.
     "ml_brier" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val z = (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
-      val sg = lit(0.5) * (lit(1.0) + z / (lit(1.0) + abs(z)))
-      raw.select(
-          floor(lit(1e6) * (sg - col("yy")) * (sg - col("yy")) + lit(0.5))
+      val m = gdFit(s, d)
+      m.raw.select(
+          floor(lit(1e6) * (m.sg - col("yy")) * (m.sg - col("yy")) + lit(0.5))
             .cast("long").as("sq_ppm"))
         .agg(count(lit(1)).as("n"), sum(col("sq_ppm")).as("brier_sum_ppm"))
         .withColumn("brier_ppm",
@@ -652,11 +661,9 @@ object MlTrain extends graft.Family {
     // One aggregate over the cached gdFit frame; the sigmoid compare at
     // exactly 0.5 is engine-identical because sg is the same double.
     "ml_mcnemar" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val z = (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
-      val sg = lit(0.5) * (lit(1.0) + z / (lit(1.0) + abs(z)))
-      raw.select(
-          when(sg >= 0.5, 1L).otherwise(0L).as("gd"),
+      val m = gdFit(s, d)
+      m.raw.select(
+          when(m.sg >= 0.5, 1L).otherwise(0L).as("gd"),
           when(col("x1") <= 0.5, 1L).otherwise(0L).as("st"),
           col("yy").cast("long").as("y"))
         .agg(count(lit(1)).as("n"),
@@ -712,14 +719,7 @@ object MlTrain extends graft.Family {
     // are exact BIGINTs — C = Σ n1_v·prev_n0, D = Σ n0_v·prev_n1,
     // T = Σ n1_v·n0_v — and the statistic is one floor-ppm division.
     "ml_somers_d" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val byv = raw
-        .select(((lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2"))
-          .as("v"), col("yy"))
-        .groupBy(col("v"))
-        .agg(count(lit(1)).as("n_v"),
-          sum(when(col("yy") === 1.0, 1L).otherwise(0L)).as("n1_v"))
-      Partitioning.rankedCumSumMulti(byv,
+      Partitioning.rankedCumSumMulti(gdFit(s, d).byScore,
           Seq(col("n_v") -> "cum_n", col("n1_v") -> "cum_n1"),
           Seq(col("v")), 32)
         .select(col("n_v"), col("n1_v"),
@@ -747,13 +747,7 @@ object MlTrain extends graft.Family {
     // rate (pos·N / (n·P) — one IEEE-deterministic division of exact
     // integers), and cumulative gain over the ≤10-row decile table.
     "ml_lift_table" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val byv = raw
-        .select(((lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2"))
-          .as("v"), col("yy"))
-        .groupBy(col("v"))
-        .agg(count(lit(1)).as("n_v"),
-          sum(when(col("yy") === 1.0, 1L).otherwise(0L)).as("n1_v"))
+      val byv = gdFit(s, d).byScore
       val cum = Partitioning.rankedCumSum(
         byv, col("n_v"), Seq(col("v").desc), 32, "cum_n")
       val tot = byv.agg(sum(col("n_v")).as("nn"), sum(col("n1_v")).as("pp"))
@@ -786,14 +780,7 @@ object MlTrain extends graft.Family {
     // output quantized floor-ppm. Monotonicity + equality with a
     // reference sequential PAVA are pinned in Round9Spec.
     "ml_isotonic" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val z = (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
-      val sg = lit(0.5) * (lit(1.0) + z / (lit(1.0) + abs(z)))
-      val bins = raw.select(sg.as("sg"), col("yy"))
-        .withColumn("bin", least(floor(col("sg") * 200), lit(199L)))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("yy") === 1.0, 1L).otherwise(0L)).as("pos"))
+      val bins = gdFit(s, d).binCounts("pos")
       val wc = Window.orderBy(col("bin"))
         .rowsBetween(Window.unboundedPreceding, 0)
       val cums = bins
@@ -829,11 +816,9 @@ object MlTrain extends graft.Family {
     // (IEEE mul/sqrt are correctly rounded, hence engine-deterministic
     // on identical operands), then a floor-ppm division.
     "ml_mcc" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val z = (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
-      val sg = lit(0.5) * (lit(1.0) + z / (lit(1.0) + abs(z)))
-      raw.select(
-          when(sg >= 0.5, 1L).otherwise(0L).as("p"),
+      val m = gdFit(s, d)
+      m.raw.select(
+          when(m.sg >= 0.5, 1L).otherwise(0L).as("p"),
           col("yy").cast("long").as("y"))
         .agg(
           sum(when(col("p") === 1L && col("y") === 1L, 1L).otherwise(0L))
@@ -861,14 +846,7 @@ object MlTrain extends graft.Family {
     // task by design; ratios are floor-ppm integers (the ml_confusion
     // discipline).
     "ml_pr_curve" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val z = (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
-      val sg = lit(0.5) * (lit(1.0) + z / (lit(1.0) + abs(z)))
-      val bins = raw.select(sg.as("sg"), col("yy"))
-        .withColumn("bin", least(floor(col("sg") * 200), lit(199L)))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("yy") === 1.0, 1L).otherwise(0L)).as("np"))
+      val bins = gdFit(s, d).binCounts("np")
       val w = Window.orderBy(col("bin").desc)
         .rowsBetween(Window.unboundedPreceding, 0)
       val tot = bins.agg(sum(col("np")).as("npos_total"))
@@ -890,15 +868,10 @@ object MlTrain extends graft.Family {
     // |1e6·pos_b − Σ sg_ppm| is pure BIGINT and ECE is ONE terminal
     // floor division by N. Same ≤200-bin table as the pr-curve family.
     "ml_ece" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val z = (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
-      val sg = lit(0.5) * (lit(1.0) + z / (lit(1.0) + abs(z)))
-      raw.select(sg.as("sg"), col("yy"))
-        .withColumn("bin", least(floor(col("sg") * 200), lit(199L)))
+      gdFit(s, d).binned
         .withColumn("sgq", floor(lit(1e6) * col("sg") + 0.5).cast("long"))
         .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("yy") === 1.0, 1L).otherwise(0L)).as("pos"),
+        .agg(count(lit(1)).as("n"), positives.as("pos"),
           sum(col("sgq")).as("conf_sum_ppm"))
         .agg(count(lit(1)).as("n_bins"), sum(col("n")).as("n_rows"),
           sum(abs(lit(1000000L) * col("pos") - col("conf_sum_ppm")))
@@ -968,14 +941,7 @@ object MlTrain extends graft.Family {
     // N₁·N₀ — so the ARGMAX runs on pure BIGINT numerators (no FP in
     // the decision at all) and only the reported j_ppm divides once.
     "ml_youden_j" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val z = (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
-      val sg = lit(0.5) * (lit(1.0) + z / (lit(1.0) + abs(z)))
-      val bins = raw.select(sg.as("sg"), col("yy"))
-        .withColumn("bin", least(floor(col("sg") * 200), lit(199L)))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("yy") === 1.0, 1L).otherwise(0L)).as("np"))
+      val bins = gdFit(s, d).binCounts("np")
       val w = Window.orderBy(col("bin").desc)
         .rowsBetween(Window.unboundedPreceding, 0)
       val tot = bins.agg(sum(col("np")).as("n1"),
@@ -1001,14 +967,7 @@ object MlTrain extends graft.Family {
     // same ≤200-row suffix-sum table plus ONE argmax with a bin
     // tiebreak. Exact counts; one floor-ppm division per bin.
     "ml_best_f1" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val z = (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
-      val sg = lit(0.5) * (lit(1.0) + z / (lit(1.0) + abs(z)))
-      val bins = raw.select(sg.as("sg"), col("yy"))
-        .withColumn("bin", least(floor(col("sg") * 200), lit(199L)))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("yy") === 1.0, 1L).otherwise(0L)).as("np"))
+      val bins = gdFit(s, d).binCounts("np")
       val w = Window.orderBy(col("bin").desc)
         .rowsBetween(Window.unboundedPreceding, 0)
       val tot = bins.agg(sum(col("np")).as("p_total"))
@@ -1131,14 +1090,7 @@ object MlTrain extends graft.Family {
     // exact-count ratios, so the argmax bin and the statistic are
     // engine-identical.
     "ml_ks_model" -> ((s, d) => {
-      val (raw, w0, w1, w2) = gdFit(s, d)
-      val z = (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
-      val sg = lit(0.5) * (lit(1.0) + z / (lit(1.0) + abs(z)))
-      val bins = raw.select(sg.as("sg"), col("yy"))
-        .withColumn("bin", least(floor(col("sg") * 200), lit(199L)))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("yy") === 1.0, 1L).otherwise(0L)).as("np"))
+      val bins = gdFit(s, d).binCounts("np")
       val w = Window.orderBy(col("bin"))
         .rowsBetween(Window.unboundedPreceding, 0)
       val tot = bins.agg(sum(col("np")).as("tp"),
@@ -1413,13 +1365,7 @@ object MlTrain extends graft.Family {
         round(col("l_extendedprice") * 100).cast("bigint").as("y"),
         round(col("l_quantity")).cast("bigint").as("x"))
         .ckpt(eager = false) // OLS + 2 IRLS aggregates read it
-      def dsum(e: Column) = sum(e.cast("decimal(38,0)")).cast("double")
-      val ols = raw.agg(
-          count(lit(1)).cast("double").as("n"),
-          dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
-          dsum(col("x") * col("x")).as("sxx"),
-          dsum(col("x") * col("y")).as("sxy"),
-          dsum(col("y") * col("y")).as("syy"))
+      val ols = pairMoments(raw, 38)
         .selectExpr("n", "sx", "sy", "sxy", "syy",
           "(n*sxy - sx*sy) / (n*sxx - sx*sx) AS b")
         .selectExpr("n", "sxy", "syy", "sy", "b",
@@ -1436,11 +1382,11 @@ object MlTrain extends graft.Family {
           .cast("long"))
         .agg(max(col("k")).as("k"),
           sum(when(col("w") < 1000000L, 1L).otherwise(0L)).as("nd"),
-          dsum(col("w")).as("sw"),
-          dsum(col("w") * col("x")).as("swx"),
-          dsum(col("w") * col("y")).as("swy"),
-          dsum(col("w") * col("x") * col("x")).as("swxx"),
-          dsum(col("w") * col("x") * col("y")).as("swxy"))
+          dsum(col("w"), 38).as("sw"),
+          dsum(col("w") * col("x"), 38).as("swx"),
+          dsum(col("w") * col("y"), 38).as("swy"),
+          dsum(col("w") * col("x") * col("x"), 38).as("swxx"),
+          dsum(col("w") * col("x") * col("y"), 38).as("swxy"))
         .selectExpr(huberC1: _*).selectExpr(huberC2: _*)
       val fit = irls(irls(ols))
       ols.select(round(col("a"), 6).as("a_ols"),
@@ -1466,17 +1412,7 @@ object MlTrain extends graft.Family {
           round(col("l_extendedprice") * 100).cast("bigint").as("y"),
           round(col("l_quantity")).cast("bigint").as("x1"),
           round(col("l_discount") * 100).cast("bigint").as("x2"))
-      def dsum(e: Column) = sum(e.cast("decimal(28,0)")).cast("double")
-      raw.groupBy(col("g")).agg(
-          count(lit(1)).cast("double").as("n"),
-          dsum(col("x1")).as("s1"), dsum(col("x2")).as("s2"),
-          dsum(col("x1") * col("x1")).as("s11"),
-          dsum(col("x1") * col("x2")).as("s12"),
-          dsum(col("x2") * col("x2")).as("s22"),
-          dsum(col("y")).as("sy"),
-          dsum(col("x1") * col("y")).as("s1y"),
-          dsum(col("x2") * col("y")).as("s2y"),
-          dsum(col("y") * col("y")).as("syy"))
+      linregMoments(raw.groupBy(col("g")), "s")
         .selectExpr(("g" +: linregL1): _*)
         .selectExpr(("g" +: linregL2): _*)
         .selectExpr(("g" +: linregL3): _*)
@@ -1487,17 +1423,7 @@ object MlTrain extends graft.Family {
         round(col("l_extendedprice") * 100).cast("bigint").as("y"),
         round(col("l_quantity")).cast("bigint").as("x1"),
         round(col("l_discount") * 100).cast("bigint").as("x2"))
-      def dsum(e: Column) = sum(e.cast("decimal(28,0)")).cast("double")
-      raw.agg(
-          count(lit(1)).cast("double").as("n"),
-          dsum(col("x1")).as("s1"), dsum(col("x2")).as("s2"),
-          dsum(col("x1") * col("x1")).as("s11r"),
-          dsum(col("x1") * col("x2")).as("s12"),
-          dsum(col("x2") * col("x2")).as("s22r"),
-          dsum(col("y")).as("sy"),
-          dsum(col("x1") * col("y")).as("s1y"),
-          dsum(col("x2") * col("y")).as("s2y"),
-          dsum(col("y") * col("y")).as("syy"))
+      linregMoments(raw.groupBy(), "s", diag = "r")
         .selectExpr("n", "s1", "s2", "s12", "sy", "s1y", "s2y", "syy",
           "s11r + 10000.0 AS s11", "s22r + 10000.0 AS s22")
         .selectExpr(linregL1: _*).selectExpr(linregL2: _*)
@@ -1522,17 +1448,7 @@ object MlTrain extends graft.Family {
         round(col("l_extendedprice") * 100).cast("bigint").as("y"),
         round(col("l_quantity")).cast("bigint").as("x1"),
         round(col("l_discount") * 100).cast("bigint").as("x2"))
-      def dsum(e: Column) = sum(e.cast("decimal(28,0)")).cast("double")
-      val byFold = raw.groupBy(col("fold")).agg(
-        count(lit(1)).cast("double").as("fn"),
-        dsum(col("x1")).as("f1"), dsum(col("x2")).as("f2"),
-        dsum(col("x1") * col("x1")).as("f11"),
-        dsum(col("x1") * col("x2")).as("f12"),
-        dsum(col("x2") * col("x2")).as("f22"),
-        dsum(col("y")).as("fy"),
-        dsum(col("x1") * col("y")).as("f1y"),
-        dsum(col("x2") * col("y")).as("f2y"),
-        dsum(col("y") * col("y")).as("fyy"))
+      val byFold = linregMoments(raw.groupBy(col("fold")), "f", "fn")
       // leave-fold-out moments = column-wise (total − fold) over the
       // 5-row fold table (bounded window)
       val wAll = Window.partitionBy()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables.t
+import graft.functions.SaltedHash.md5Prefix
 
 /** Relational operator surface: aggregations, joins, set ops, sorts
   * (SURVEY.md §2 tier B/C — "Aggregations", "Joins", "Sorts / limits /
@@ -41,6 +42,17 @@ object Relational extends graft.Family {
       baskets.agg(coalesce(max(size(col("parts"))), lit(0)))
         .head().getInt(0))
 
+  /** `(p1, p2, n_both)`: how many baskets hold each part pair p1 < p2.
+    * `parts` is sorted, so the posexplode + sliced explode (two stacked
+    * codegen generators) emits every pair once. */
+  private def basketPairCounts(baskets: DataFrame): DataFrame =
+    baskets
+      .filter(size(col("parts")) >= 2)
+      .select(col("parts"), posexplode(col("parts")).as(Seq("i", "p1")))
+      .select(col("p1"), explode(expr(
+        "slice(parts, i + 2, size(parts) - i - 1)")).as("p2"))
+      .groupBy(col("p1"), col("p2")).agg(count(lit(1)).as("n_both"))
+
   private def revenue = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
 
   /** Exact-integer revenue in 1/10000-dollar units (cents × (100 −
@@ -53,6 +65,12 @@ object Relational extends graft.Family {
   private def revenueU = round(col("l_extendedprice") * 100).cast("bigint") *
     (lit(100L) - round(col("l_discount") * 100).cast("bigint"))
   private def sumRevenue = sum(revenueU).cast("double") / 10000.0
+
+  /** A supplier's synthetic grid coordinate on one axis, 0..9999: the
+    * 4-hex-digit salted hash of `s_suppkey` (`gx:` / `gy:`), shared by the
+    * spatial joins, DBSCAN and the Hilbert / geohash encoders. */
+  private[queries] def supplierAxis(salt: String): Column =
+    md5Prefix(concat(lit(salt), col("s_suppkey").cast("string")), 4) % 10000
 
   val defs: Map[String, Q] = Map(
     // ---- Aggregations --------------------------------------------------
@@ -230,12 +248,7 @@ object Relational extends graft.Family {
       val perPart = baskets
         .select(explode(col("parts")).as("pk"))
         .groupBy(col("pk")).agg(count(lit(1)).as("n_pk"))
-      val pairs = baskets
-        .filter(size(col("parts")) >= 2)
-        .select(col("parts"), posexplode(col("parts")).as(Seq("i", "p1")))
-        .select(col("p1"), explode(expr(
-          "slice(parts, i + 2, size(parts) - i - 1)")).as("p2"))
-        .groupBy(col("p1"), col("p2")).agg(count(lit(1)).as("n_both"))
+      val pairs = basketPairCounts(baskets)
       // top-50 FIRST: the rank key (n_both, p1, p2) lives entirely on the
       // pair aggregate, so the per-part lift joins run on 50 rows instead
       // of the full pair table — at sf1 that removes two sort-merge joins
@@ -706,13 +719,9 @@ object Relational extends graft.Family {
     // neighbor key. The DuckDB oracle is the brute-force quadratic form,
     // so hash parity proves blocked ≡ exact.
     "join_spatial_knn" -> ((s, d) => {
-      def axis(salt: String): Column =
-        conv(substring(md5(concat(lit(salt),
-          col("s_suppkey").cast("string"))), 1, 4), 16, 10)
-          .cast("bigint") % 10000
       val pts = t(s, d, "supplier")
         .select(col("s_suppkey").as("k"),
-          axis("gx:").as("xi"), axis("gy:").as("yi"))
+          supplierAxis("gx:").as("xi"), supplierAxis("gy:").as("yi"))
       val pairs = graft.ops.SpatialGrid.radiusSelfJoin(pts, 1200L)
         .filter(col("k1") =!= col("k2"))
       val sym = pairs.select(col("k1").as("anchor"), col("k2").as("nb"),
@@ -725,13 +734,9 @@ object Relational extends graft.Family {
     }),
 
     "join_spatial_grid" -> ((s, d) => {
-      def axis(salt: String): Column =
-        conv(substring(md5(concat(lit(salt),
-          col("s_suppkey").cast("string"))), 1, 4), 16, 10)
-          .cast("bigint") % 10000
       val pts = t(s, d, "supplier")
         .select(col("s_suppkey").as("k"),
-          axis("gx:").as("xi"), axis("gy:").as("yi"))
+          supplierAxis("gx:").as("xi"), supplierAxis("gy:").as("yi"))
       graft.ops.SpatialGrid.radiusSelfJoin(pts, 1200L)
         .select(col("k1"), col("k2"),
           round(sqrt(col("d2").cast("double")) / 10.0, 3).as("dist"))
@@ -751,13 +756,9 @@ object Relational extends graft.Family {
     // Twin: brute-force pairs + recursive-CTE closure (the dedup_exact
     // pattern), so driver hash parity proves blocked ≡ exact again.
     "spatial_dbscan" -> ((s, d) => {
-      def axis(salt: String): Column =
-        conv(substring(md5(concat(lit(salt),
-          col("s_suppkey").cast("string"))), 1, 4), 16, 10)
-          .cast("bigint") % 10000
       val pts = t(s, d, "supplier")
         .select(col("s_suppkey").as("k"),
-          axis("gx:").as("xi"), axis("gy:").as("yi"))
+          supplierAxis("gx:").as("xi"), supplierAxis("gy:").as("yi"))
         .ckpt(eager = false) // pairs leg + noise anti-join leg
       val pairs = graft.ops.SpatialGrid.radiusSelfJoin(pts, 600L)
         .select(col("k1"), col("k2"))
@@ -1138,12 +1139,7 @@ object Relational extends graft.Family {
       // instead of the nested interpreted transform/flatten lambda —
       // the exactPairCommon lesson (r13): HOF lambdas run interpreted
       // per element, and this expansion touches every basket
-      val pairs = baskets
-        .filter(size(col("parts")) >= 2)
-        .select(col("parts"), posexplode(col("parts")).as(Seq("i", "p1")))
-        .select(col("p1"), explode(expr(
-          "slice(parts, i + 2, size(parts) - i - 1)")).as("p2"))
-        .groupBy(col("p1"), col("p2")).agg(count(lit(1)).as("n_both"))
+      val pairs = basketPairCounts(baskets)
       val sym = pairs.union(pairs.select(col("p2"), col("p1"), col("n_both")))
       val w = Window.partitionBy(col("p1"))
         .orderBy(col("cos_ppm").desc, col("p2"))

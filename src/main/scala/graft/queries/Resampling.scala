@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables.t
+import graft.functions.SaltedHash.md5Prefix
 
 /** Resampling, reweighting, and distribution alignment (SURVEY.md §2
   * tier C — the survey-statistics / experiment-infrastructure family):
@@ -111,8 +112,7 @@ object Resampling extends graft.Family {
       val cnt = t(s, d, "orders")
         .groupBy(col("o_orderpriority").as("priority"))
         .agg(count(lit(1)).as("cnt"))
-      val hv = conv(substring(md5(concat(lit("dp:"), col("priority"))),
-        1, 8), 16, 10).cast("bigint")
+      val hv = md5Prefix(concat(lit("dp:"), col("priority")), 8)
       val u = (hv.cast("double") + 0.5) / 4294967296.0
       val noise = lit(-2.0) * signum(u - 0.5) *
         log(lit(1.0) - lit(2.0) * abs(u - 0.5))
@@ -128,8 +128,7 @@ object Resampling extends graft.Family {
     "llm_weighted_sample" -> ((s, d) => {
       val docs = t(s, d, "documents")
         .select(col("doc_id"), col("n_chars"))
-      val hv = conv(substring(md5(concat(lit("ws:"), col("doc_id"))),
-        1, 8), 16, 10).cast("bigint")
+      val hv = md5Prefix(concat(lit("ws:"), col("doc_id")), 8)
       val u = (hv.cast("double") + 0.5) / 4294967296.0
       docs
         .withColumn("skey", round(log(u) / col("n_chars").cast("double"), 12))
@@ -246,9 +245,8 @@ object Resampling extends graft.Family {
         round(col("l_extendedprice") * 100).cast("bigint").as("cents"))
       val reps = li.select(col("ok"), col("ln"), col("cents"),
         explode(sequence(lit(0), lit(15))).as("r"))
-      val u32 = conv(substring(md5(
-          concat(lit("boot"), col("r"), lit(":"), col("ok"),
-            lit(":"), col("ln"))), 1, 8), 16, 10).cast("bigint")
+      val u32 = md5Prefix(concat(lit("boot"), col("r"), lit(":"), col("ok"),
+        lit(":"), col("ln")), 8)
       val wgt = when(u32 < pThresh(0), 0L)
         .when(u32 < pThresh(1), 1L)
         .when(u32 < pThresh(2), 2L)

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables.{t, registerAll}
+import graft.functions.SaltedHash.md5Prefix
+import Relational.supplierAxis
 
 /** Scalar function families (SURVEY.md §2 "Scalar function families"):
   * string, date/time, math, conditional, array, JSON, cast.
@@ -262,9 +264,8 @@ object Scalars extends graft.Family {
     // double division in both engines).
     "fn_point_in_polygon" -> ((s, d) => {
       def frac(salt: String, span: Int): Column =
-        (conv(substring(md5(concat(lit(salt),
-          col("c_custkey").cast("string"))), 1, 6), 16, 10)
-          .cast("bigint") % span) / 10000.0
+        (md5Prefix(concat(lit(salt), col("c_custkey").cast("string")), 6)
+          % span) / 10000.0
       val pts = t(s, d, "customer").filter(col("c_custkey") <= 500)
         .select(col("c_custkey"),
           (lit(40.2) + frac("pilat:", 12000)).as("py"),
@@ -295,13 +296,10 @@ object Scalars extends graft.Family {
     // DuckDB twin unrolls the identical 14-step rotate/reflect loop in
     // SQL, so hash parity differentially tests the kernel.
     "fn_hilbert" -> ((s, d) => {
-      def axis(salt: String): Column =
-        conv(substring(md5(concat(lit(salt),
-          col("s_suppkey").cast("string"))), 1, 4), 16, 10)
-          .cast("bigint") % 10000
       t(s, d, "supplier")
         .select(col("s_suppkey").as("k"),
-          axis("gx:").cast("int").as("xi"), axis("gy:").cast("int").as("yi"))
+          supplierAxis("gx:").cast("int").as("xi"),
+          supplierAxis("gy:").cast("int").as("yi"))
         .select(col("k"), col("xi").cast("bigint").as("xi"),
           col("yi").cast("bigint").as("yi"),
           expr("hilbert_index(xi, yi)").as("h"))
@@ -315,14 +313,10 @@ object Scalars extends graft.Family {
     // the SAME morton with an INDEPENDENT shift-mask spread — the oracle
     // is therefore also a differential test of the custom expression.
     "fn_geohash" -> ((s, d) => {
-      def axis(salt: String): Column =
-        conv(substring(md5(concat(lit(salt),
-          col("s_suppkey").cast("string"))), 1, 4), 16, 10)
-          .cast("bigint") % 10000
       val b32 = "0123456789bcdefghjkmnpqrstuvwxyz"
       val q = t(s, d, "supplier")
         .select(col("s_suppkey").as("k"),
-          axis("gx:").as("xi"), axis("gy:").as("yi"))
+          supplierAxis("gx:").as("xi"), supplierAxis("gy:").as("yi"))
         .select(col("k"), col("xi"), col("yi"),
           expr("CAST(xi * 32768 DIV 10000 AS INT)").as("lonq"),
           expr("CAST(yi * 32768 DIV 10000 AS INT)").as("latq"))
@@ -344,9 +338,8 @@ object Scalars extends graft.Family {
     // scan-side projection + one tiny broadcast join.
     "fn_inet" -> ((s, d) => {
       def oct(i: Int): Column =
-        conv(substring(md5(concat(lit(s"ip$i:"),
-          col("c_custkey").cast("string"))), 1, 2), 16, 10)
-          .cast("bigint") % 256
+        md5Prefix(concat(lit(s"ip$i:"), col("c_custkey").cast("string")),
+          2) % 256
       val ips = t(s, d, "customer").filter(col("c_custkey") <= 500)
         .select(col("c_custkey"), oct(1).as("o1"), oct(2).as("o2"),
           oct(3).as("o3"), oct(4).as("o4"))
@@ -379,9 +372,8 @@ object Scalars extends graft.Family {
 
     "fn_geo" -> ((s, d) => {
       def deg(salt: String, span: Int): Column =
-        (conv(substring(md5(concat(lit(salt),
-          col("c_custkey").cast("string"))), 1, 6), 16, 10)
-          .cast("bigint") % (span * 20000L) - span * 10000L) / 10000.0
+        (md5Prefix(concat(lit(salt), col("c_custkey").cast("string")), 6)
+          % (span * 20000L) - span * 10000L) / 10000.0
       val pts = t(s, d, "customer").filter(col("c_custkey") <= 500)
         .select(col("c_custkey"), deg("lat:", 90).as("lat"),
           deg("lon:", 180).as("lon"))

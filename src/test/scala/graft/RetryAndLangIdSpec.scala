@@ -23,6 +23,20 @@ class RetryAndLangIdSpec extends AnyFunSuite {
     assert(ex.getCause.getMessage == "always")
   }
 
+  test("withRetry does not retry a fatal error and rejects attempts < 1") {
+    val calls = new AtomicInteger(0)
+    intercept[InterruptedException] {
+      Retry.withRetry(attempts = 5, delayMs = 1) {
+        calls.incrementAndGet(); throw new InterruptedException("stop")
+      }
+    }
+    assert(calls.get() == 1, "an interrupt must propagate on the first call")
+    val ex = intercept[IllegalArgumentException] {
+      Retry.withRetry(attempts = 0, delayMs = 1) { 1 }
+    }
+    assert(ex.getMessage.contains("attempts >= 1"))
+  }
+
   test("awaitJdbc probes an embedded Derby endpoint") {
     val url = s"jdbc:derby:${java.nio.file.Files.createTempDirectory("graft-probe")}/db;create=true"
     Retry.awaitJdbc(url, new java.util.Properties(), attempts = 3, delayMs = 10,
