@@ -14,6 +14,8 @@ import org.apache.spark.sql.functions.udaf
   * at run time.
   */
 object Aggregators {
+  // Each aggregator names itself in `toString`: query plans print it, and
+  // the default `Object.toString` would add a per-JVM identity hash.
 
   /** Kahan-compensated double sum: a drop-in `sum` with O(1) extra state
     * that keeps the FP error independent of row count — the money-sum
@@ -23,6 +25,7 @@ object Aggregators {
   case class KahanBuf(var sum: Double, var c: Double)
 
   object KahanSum extends Aggregator[Double, KahanBuf, Double] {
+    override def toString: String = "KahanSum"
     override def zero: KahanBuf = KahanBuf(0.0, 0.0)
     override def reduce(b: KahanBuf, x: Double): KahanBuf = {
       val y = x - b.c
@@ -48,6 +51,7 @@ object Aggregators {
   case class MinHashBuf(var mins: Array[Long])
 
   class MinHashAgg(k: Int) extends Aggregator[Long, MinHashBuf, Seq[Long]] {
+    override def toString: String = s"MinHashAgg($k)"
     private def remix(h: Long, i: Int): Long = {
       var z = h + 0x9e3779b97f4a7c15L * (i + 1)
       z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
@@ -85,6 +89,7 @@ object Aggregators {
   case class SimHashBuf(var votes: Array[Int])
 
   object SimHashAgg extends Aggregator[Long, SimHashBuf, Long] {
+    override def toString: String = "SimHashAgg"
     override def zero: SimHashBuf = SimHashBuf(new Array[Int](64))
     override def reduce(b: SimHashBuf, h: Long): SimHashBuf = {
       var bit = 0
@@ -127,6 +132,7 @@ object Aggregators {
   case class TopKBuf(var entries: Seq[TopKEntry])
 
   class TopKAgg(k: Int) extends Aggregator[TopKEntry, TopKBuf, Seq[TopKEntry]] {
+    override def toString: String = s"TopKAgg($k)"
     private def beats(a: TopKEntry, b: TopKEntry): Boolean =
       a.ord > b.ord || (a.ord == b.ord && a.tie < b.tie)
     override def zero: TopKBuf = TopKBuf(Vector.empty)
@@ -163,6 +169,7 @@ object Aggregators {
   case class DecHistBuf(var counts: Array[Long])
 
   object DecHistAgg extends Aggregator[Long, DecHistBuf, Seq[Long]] {
+    override def toString: String = "DecHistAgg"
     private val Slots = 19 * 90
     /** bin index for v > 0: (len−1)·90 + first2 − 10, where a 1-digit v
       * uses v·10 as its 2-digit prefix. */

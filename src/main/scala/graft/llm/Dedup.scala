@@ -280,6 +280,38 @@ object Dedup extends graft.Family {
       .distinct()
   }
 
+  /** DuckDB replay of the exact near-dup pair graph: the shingles of
+    * [[TextOps.shingleCtes]], then `jp(doc1, doc2)`, every doc pair whose
+    * shingle Jaccard is at least 0.2. */
+  private val exactPairCtes: String = s"""${TextOps.shingleCtes()}, counts AS (
+        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
+      ), jp AS (
+        SELECT doc1, doc2 FROM (
+          SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS common
+          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+          GROUP BY a.doc_id, b.doc_id
+        ) p
+        JOIN counts n1 ON doc1 = n1.doc_id
+        JOIN counts n2 ON doc2 = n2.doc_id
+        WHERE CAST(common AS DOUBLE) /
+              CAST(n1.n_sh + n2.n_sh - common AS DOUBLE) >= 0.2
+      )"""
+
+  /** DuckDB replay of [[connectedComponentsFast]] over the pair set
+    * `jp(doc1, doc2)`: the transitive closure `reach` (recursive), and
+    * `comp(node, label)`, each node's component minimum. */
+  private val componentCtes: String = """edges AS (
+        SELECT doc1 AS src, doc2 AS dst FROM jp
+        UNION ALL
+        SELECT doc2, doc1 FROM jp
+      ), reach(node, r) AS (
+        SELECT DISTINCT src, src FROM edges
+        UNION
+        SELECT e.dst, rr.r FROM reach rr JOIN edges e ON e.src = rr.node
+      ), comp AS (
+        SELECT node, min(r) AS label FROM reach GROUP BY node
+      )"""
+
   /** PRODUCTION connected components: alternating large-star / small-star
     * (Kiveris et al. SoCC'14). Converges in O(log d) rounds where
     * min-label propagation needs O(d) — on a 100 TB corpus a single long
@@ -313,28 +345,15 @@ object Dedup extends graft.Family {
       _.dataType == org.apache.spark.sql.types.LongType)
     val probe = if (edgeTypesOk) e.limit(ccDriverCap + 1).collect() else null
     if (probe != null && probe.length <= ccDriverCap) {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent(c); parent(c) = r; c = nxt
-        }
-        r
-      }
-      probe.foreach { row =>
-        val (ru, rv) = (find(row.getLong(0)), find(row.getLong(1)))
-        if (ru < rv) parent(rv) = ru
-        else if (rv < ru) parent(ru) = rv
-      }
+      val uf = new graft.core.MinUnionFind
+      probe.foreach(row => uf.union(row.getLong(0), row.getLong(1)))
       val nodes = probe.iterator
         .flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
         .toArray.distinct.sorted
       val s = vertices.sparkSession
       import s.implicits._
       val lab = s.createDataset(
-          nodes.map(n => (n, find(n))).toSeq)
+          nodes.map(n => (n, uf.find(n))).toSeq)
         .toDF("doc_id", "cclab")
       vertices.select(col("doc_id"))
         .join(broadcast(lab), Seq("doc_id"), "left")
@@ -678,36 +697,8 @@ object Dedup extends graft.Family {
     val bands = (0 until 32).map { i =>
       s"SELECT doc_id, $i AS band, mh${2 * i} * 1073741824 + mh${2 * i + 1} AS bk FROM m"
     }.mkString("\n        UNION ALL ")
-    s"""rawtoks AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), toks AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id,
-                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-                   AS shingle,
-                 lead(tok, 2) OVER w AS t2
-          FROM rawtoks
-          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE t2 IS NOT NULL
-      ), pow31(i, v) AS (
-        SELECT 0, CAST(1 AS BIGINT)
-        UNION ALL
-        SELECT i + 1, (v * 31) % $P FROM pow31
-        WHERE i < (SELECT max(length(shingle)) FROM toks)
-      ), chars AS (
-        SELECT doc_id, shingle,
-               unnest(string_split(shingle, '')) AS c,
-               generate_subscripts(string_split(shingle, ''), 1) AS pos,
-               length(shingle) AS n
-        FROM toks
-      ), csums AS (
-        SELECT doc_id, shingle,
-               sum((CAST(ascii(c) AS BIGINT) * p.v) % $P) AS tsum
-        FROM chars JOIN pow31 p ON p.i = chars.n - chars.pos
-        GROUP BY doc_id, shingle
-      ), thash AS (
+    s"""${TextOps.shingleCtes("rawtoks", "toks")},
+      ${TextOps.polyHashCtes("shingle")}, thash AS (
         SELECT t.doc_id,
                CAST(((7 * pn.v) % $P +
                      coalesce(s.tsum, 0) % $P) % $P AS BIGINT) AS h
@@ -740,6 +731,23 @@ object Dedup extends graft.Family {
         JOIN m n2 ON n2.doc_id = co.doc2
       )"""
   }
+
+  /** DuckDB replay of [[graft.streaming.DedupGate.signOctant]]:
+    * `b(vec_id, v, bucket)`, each embedding as DOUBLE[] with the sign
+    * octant of its first 8 dimensions. */
+  private val signOctantCte: String = """b AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+               (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END)
+             + 2 * (CASE WHEN embedding[2] >= 0 THEN 1 ELSE 0 END)
+             + 4 * (CASE WHEN embedding[3] >= 0 THEN 1 ELSE 0 END)
+             + 8 * (CASE WHEN embedding[4] >= 0 THEN 1 ELSE 0 END)
+             + 16 * (CASE WHEN embedding[5] >= 0 THEN 1 ELSE 0 END)
+             + 32 * (CASE WHEN embedding[6] >= 0 THEN 1 ELSE 0 END)
+             + 64 * (CASE WHEN embedding[7] >= 0 THEN 1 ELSE 0 END)
+             + 128 * (CASE WHEN embedding[8] >= 0 THEN 1 ELSE 0 END)
+               AS bucket
+        FROM embeddings
+      )"""
 
   // The xxhash-based SimHash/random-hyperplane families stay rows-only
   // (their hashes are engine-specific); the banded MinHash production
@@ -807,17 +815,7 @@ object Dedup extends graft.Family {
     "llm_dedup_apply" -> s"""
       WITH RECURSIVE ${minhashSigCtes}, jp AS (
         SELECT doc1, doc2 FROM jacc WHERE jaccard >= 0.3
-      ), edges AS (
-        SELECT doc1 AS src, doc2 AS dst FROM jp
-        UNION ALL
-        SELECT doc2, doc1 FROM jp
-      ), reach(node, r) AS (
-        SELECT DISTINCT src, src FROM edges
-        UNION
-        SELECT e.dst, rr.r FROM reach rr JOIN edges e ON e.src = rr.node
-      ), comp AS (
-        SELECT node, min(r) AS label FROM reach GROUP BY node
-      )
+      ), $componentCtes
       SELECT d.doc_id, d.lang, d.source, d.n_chars
       FROM documents d
       LEFT JOIN comp c ON c.node = d.doc_id
@@ -835,33 +833,8 @@ object Dedup extends graft.Family {
              pow(1.0 / b, 1.0 / r) AS s_mid
       FROM grid ORDER BY b, r, s""",
 
-    "llm_dedup_exact" -> """
-      WITH RECURSIVE toks AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), sh AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id,
-                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-                   AS shingle,
-                 lead(tok, 2) OVER w AS t2
-          FROM toks
-          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE t2 IS NOT NULL
-      ), counts AS (
-        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-      ), jp AS (
-        SELECT doc1, doc2 FROM (
-          SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS common
-          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id
-        ) p
-        JOIN counts n1 ON doc1 = n1.doc_id
-        JOIN counts n2 ON doc2 = n2.doc_id
-        WHERE CAST(common AS DOUBLE) /
-              CAST(n1.n_sh + n2.n_sh - common AS DOUBLE) >= 0.2
-      ), edges AS (
+    "llm_dedup_exact" -> s"""
+      WITH RECURSIVE $exactPairCtes, edges AS (
         SELECT doc1 AS src, doc2 AS dst FROM jp
         UNION ALL
         SELECT doc2, doc1 FROM jp
@@ -880,20 +853,8 @@ object Dedup extends graft.Family {
              coalesce(c.survivor, d.doc_id) = d.doc_id AS is_survivor
       FROM documents d LEFT JOIN comp c ON d.doc_id = c.node""",
 
-    "llm_embedding_neardup_exact" -> """
-      WITH b AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-               (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END)
-             + 2 * (CASE WHEN embedding[2] >= 0 THEN 1 ELSE 0 END)
-             + 4 * (CASE WHEN embedding[3] >= 0 THEN 1 ELSE 0 END)
-             + 8 * (CASE WHEN embedding[4] >= 0 THEN 1 ELSE 0 END)
-             + 16 * (CASE WHEN embedding[5] >= 0 THEN 1 ELSE 0 END)
-             + 32 * (CASE WHEN embedding[6] >= 0 THEN 1 ELSE 0 END)
-             + 64 * (CASE WHEN embedding[7] >= 0 THEN 1 ELSE 0 END)
-             + 128 * (CASE WHEN embedding[8] >= 0 THEN 1 ELSE 0 END)
-               AS bucket
-        FROM embeddings
-      )
+    "llm_embedding_neardup_exact" -> s"""
+      WITH $signOctantCte
       SELECT id1, id2, cos FROM (
         SELECT a.vec_id AS id1, b2.vec_id AS id2,
                list_cosine_similarity(a.v, b2.v) AS cos
@@ -905,37 +866,9 @@ object Dedup extends graft.Family {
     // poly hash (llm_minhash_poly CTE shape), band explode via UNION ALL,
     // the same stateless first-matching-band pair-dedup, and exact
     // shingle-Jaccard verification computed relationally.
-    "llm_neardup_gate" -> """
-      WITH RECURSIVE rawtoks AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), toks AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id,
-                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-                   AS shingle,
-                 lead(tok, 2) OVER w AS t2
-          FROM rawtoks
-          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE t2 IS NOT NULL
-      ), pow31(i, v) AS (
-        SELECT 0, CAST(1 AS BIGINT)
-        UNION ALL
-        SELECT i + 1, (v * 31) % 1000000007 FROM pow31
-        WHERE i < (SELECT max(length(shingle)) FROM toks)
-      ), chars AS (
-        SELECT doc_id, shingle,
-               unnest(string_split(shingle, '')) AS c,
-               generate_subscripts(string_split(shingle, ''), 1) AS pos,
-               length(shingle) AS n
-        FROM toks
-      ), csums AS (
-        SELECT doc_id, shingle,
-               sum((CAST(ascii(c) AS BIGINT) * p.v) % 1000000007) AS tsum
-        FROM chars JOIN pow31 p ON p.i = chars.n - chars.pos
-        GROUP BY doc_id, shingle
-      ), thash AS (
+    "llm_neardup_gate" -> s"""
+      WITH RECURSIVE ${TextOps.shingleCtes("rawtoks", "toks")},
+      ${TextOps.polyHashCtes("shingle")}, thash AS (
         SELECT t.doc_id, t.shingle,
                CAST(((7 * pn.v) % 1000000007 +
                      coalesce(s.tsum, 0) % 1000000007) % 1000000007 AS BIGINT)
@@ -996,43 +929,8 @@ object Dedup extends graft.Family {
       WHERE CAST(co.n_common AS DOUBLE) /
               CAST(na.n_sh + nb.n_sh - co.n_common AS DOUBLE) >= 0.2""",
 
-    "llm_dedup_quality" -> """
-      WITH RECURSIVE toks AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), sh AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id,
-                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-                   AS shingle,
-                 lead(tok, 2) OVER w AS t2
-          FROM toks
-          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE t2 IS NOT NULL
-      ), counts AS (
-        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-      ), jp AS (
-        SELECT doc1, doc2 FROM (
-          SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS common
-          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id
-        ) p
-        JOIN counts n1 ON doc1 = n1.doc_id
-        JOIN counts n2 ON doc2 = n2.doc_id
-        WHERE CAST(common AS DOUBLE) /
-              CAST(n1.n_sh + n2.n_sh - common AS DOUBLE) >= 0.2
-      ), edges AS (
-        SELECT doc1 AS src, doc2 AS dst FROM jp
-        UNION ALL
-        SELECT doc2, doc1 FROM jp
-      ), reach(node, r) AS (
-        SELECT DISTINCT src, src FROM edges
-        UNION
-        SELECT e.dst, rr.r FROM reach rr JOIN edges e ON e.src = rr.node
-      ), comp AS (
-        SELECT node, min(r) AS label FROM reach GROUP BY node
-      ), q AS (
+    "llm_dedup_quality" -> s"""
+      WITH RECURSIVE $exactPairCtes, $componentCtes, q AS (
         SELECT doc_id,
                CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE) /
                  CAST(len(string_split(text, ' ')) AS DOUBLE) AS dr
@@ -1053,20 +951,8 @@ object Dedup extends graft.Family {
       FROM labeled l
       JOIN ranked s ON s.label = l.label AND s.rn = 1""",
 
-    "llm_embed_gate" -> """
-      WITH b AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-               (CASE WHEN embedding[1] >= 0 THEN 1 ELSE 0 END)
-             + 2 * (CASE WHEN embedding[2] >= 0 THEN 1 ELSE 0 END)
-             + 4 * (CASE WHEN embedding[3] >= 0 THEN 1 ELSE 0 END)
-             + 8 * (CASE WHEN embedding[4] >= 0 THEN 1 ELSE 0 END)
-             + 16 * (CASE WHEN embedding[5] >= 0 THEN 1 ELSE 0 END)
-             + 32 * (CASE WHEN embedding[6] >= 0 THEN 1 ELSE 0 END)
-             + 64 * (CASE WHEN embedding[7] >= 0 THEN 1 ELSE 0 END)
-             + 128 * (CASE WHEN embedding[8] >= 0 THEN 1 ELSE 0 END)
-               AS bucket
-        FROM embeddings
-      )
+    "llm_embed_gate" -> s"""
+      WITH $signOctantCte
       SELECT n.vec_id AS new_id, c.vec_id AS match_id,
              list_cosine_similarity(n.v, c.v) AS cos
       FROM b n JOIN b c ON n.bucket = c.bucket

@@ -158,6 +158,36 @@ object Multimodal extends graft.Family {
             .cast("long"))
   }
 
+  /** DuckDB replay of [[audioRms]] up to its window table over the
+    * fixture: the s16le samples `sgn(file_name, i, smp)` and their
+    * 1024-sample windows `agg(file_name, win, n, energy)`. */
+  private val audioWindowCtes: String = s"""a AS (
+        SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
+               hex(content) AS hx,
+               CAST(octet_length(content) // 2 AS BIGINT) AS n_samples
+        FROM read_blob('$fixtureDir/*')
+      ), smp AS (
+        SELECT file_name,
+               CAST(unnest(range(0, n_samples)) AS BIGINT) AS i, hx
+        FROM a WHERE n_samples > 0
+      ), dec AS (
+        SELECT file_name, i,
+               CAST(('0x' || substr(hx, CAST(i * 4 + 1 AS BIGINT), 4))
+                 AS BIGINT) AS v
+        FROM smp
+      ), sgn AS (
+        SELECT file_name, i,
+               CASE WHEN (v % 256) * 256 + (v // 256) >= 32768
+                    THEN (v % 256) * 256 + (v // 256) - 65536
+                    ELSE (v % 256) * 256 + (v // 256) END AS smp
+        FROM dec
+      ), agg AS (
+        SELECT file_name, CAST(i // 1024 AS BIGINT) AS win,
+               CAST(count(*) AS BIGINT) AS n,
+               CAST(sum(smp * smp) AS BIGINT) AS energy
+        FROM sgn GROUP BY 1, 2
+      )"""
+
   // energy-gated activity segmentation (the VAD shape: which spans of
   // the audio carry signal?) over the audioRms window table: a
     // window is "active" iff its mean-square exceeds half the file's
@@ -318,63 +348,13 @@ object Multimodal extends graft.Family {
       FROM fl GROUP BY file_name""",
 
     "mm_audio_rms" -> s"""
-      WITH a AS (
-        SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
-               hex(content) AS hx,
-               CAST(octet_length(content) // 2 AS BIGINT) AS n_samples
-        FROM read_blob('$fixtureDir/*')
-      ), smp AS (
-        SELECT file_name,
-               CAST(unnest(range(0, n_samples)) AS BIGINT) AS i, hx
-        FROM a WHERE n_samples > 0
-      ), dec AS (
-        SELECT file_name, i,
-               CAST(('0x' || substr(hx, CAST(i * 4 + 1 AS BIGINT), 4))
-                 AS BIGINT) AS v
-        FROM smp
-      ), sgn AS (
-        SELECT file_name, i,
-               CASE WHEN (v % 256) * 256 + (v // 256) >= 32768
-                    THEN (v % 256) * 256 + (v // 256) - 65536
-                    ELSE (v % 256) * 256 + (v // 256) END AS smp
-        FROM dec
-      ), agg AS (
-        SELECT file_name, CAST(i // 1024 AS BIGINT) AS win,
-               CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(smp * smp) AS BIGINT) AS energy
-        FROM sgn GROUP BY 1, 2
-      )
+      WITH $audioWindowCtes
       SELECT file_name, win, n, energy,
              CAST(floor(1e6 * sqrt(energy / n) + 0.5) AS BIGINT) AS rms_ppm
       FROM agg""",
 
     "mm_audio_vad" -> s"""
-      WITH a AS (
-        SELECT regexp_extract(filename, '([^/]+)$$', 1) AS file_name,
-               hex(content) AS hx,
-               CAST(octet_length(content) // 2 AS BIGINT) AS n_samples
-        FROM read_blob('$fixtureDir/*')
-      ), smp AS (
-        SELECT file_name,
-               CAST(unnest(range(0, n_samples)) AS BIGINT) AS i, hx
-        FROM a WHERE n_samples > 0
-      ), dec AS (
-        SELECT file_name, i,
-               CAST(('0x' || substr(hx, CAST(i * 4 + 1 AS BIGINT), 4))
-                 AS BIGINT) AS v
-        FROM smp
-      ), sgn AS (
-        SELECT file_name, i,
-               CASE WHEN (v % 256) * 256 + (v // 256) >= 32768
-                    THEN (v % 256) * 256 + (v // 256) - 65536
-                    ELSE (v % 256) * 256 + (v // 256) END AS smp
-        FROM dec
-      ), agg AS (
-        SELECT file_name, CAST(i // 1024 AS BIGINT) AS win,
-               CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(smp * smp) AS BIGINT) AS energy
-        FROM sgn GROUP BY 1, 2
-      ), act AS (
+      WITH $audioWindowCtes, act AS (
         SELECT file_name, win, n, energy
         FROM (SELECT *, CAST(sum(energy) OVER (PARTITION BY file_name)
                           AS HUGEINT) AS te,

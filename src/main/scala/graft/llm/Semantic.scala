@@ -150,6 +150,22 @@ object Semantic extends graft.Family {
     (docs, uni, bi)
   }
 
+  /** DuckDB replay of [[pairMetricGrams]]: `docs(doc_id, toks)` and the
+    * counts `unic` and `bic`, both `(doc_id, g, c)`. */
+  private val pairMetricGramCtes: String = """docs AS (
+        SELECT doc_id, string_split(text, ' ') AS toks
+        FROM documents WHERE doc_id < 10
+      ), unic AS (
+        SELECT doc_id, g, count(*) AS c FROM (
+          SELECT doc_id, unnest(toks) AS g FROM docs) GROUP BY doc_id, g
+      ), bic AS (
+        SELECT doc_id, g, count(*) AS c FROM (
+          SELECT doc_id,
+                 unnest(list_transform(range(1, len(toks)),
+                   i -> toks[i] || ' ' || toks[i + 1])) AS g
+          FROM docs) GROUP BY doc_id, g
+      )"""
+
   /** Per-document gram total `out` of a `(doc_id, g, c)` count table. */
   private def totals(grams: DataFrame, out: String): DataFrame =
     grams.groupBy(col("doc_id")).agg(sum(col("c")).as(out))
@@ -623,20 +639,8 @@ object Semantic extends graft.Family {
                      ELSE 'tail' END AS ppl_bucket
       FROM b""",
 
-    "llm_self_bleu2" -> """
-      WITH docs AS (
-        SELECT doc_id, string_split(text, ' ') AS toks
-        FROM documents WHERE doc_id < 10
-      ), unic AS (
-        SELECT doc_id, g, count(*) AS c FROM (
-          SELECT doc_id, unnest(toks) AS g FROM docs) GROUP BY doc_id, g
-      ), bic AS (
-        SELECT doc_id, g, count(*) AS c FROM (
-          SELECT doc_id,
-                 unnest(list_transform(range(1, len(toks)),
-                   i -> toks[i] || ' ' || toks[i + 1])) AS g
-          FROM docs) GROUP BY doc_id, g
-      ), o1 AS (
+    "llm_self_bleu2" -> s"""
+      WITH $pairMetricGramCtes, o1 AS (
         SELECT a.doc_id AS id_cand, b.doc_id AS id_ref,
                sum(least(a.c, b.c)) AS o
         FROM unic a JOIN unic b ON a.g = b.g AND a.doc_id <> b.doc_id
@@ -669,20 +673,8 @@ object Semantic extends graft.Family {
       JOIN t1 t1r ON t1r.doc_id = p.id_ref
       JOIN t2 t2c ON t2c.doc_id = p.id_cand""",
 
-    "llm_rouge_pairs" -> """
-      WITH docs AS (
-        SELECT doc_id, string_split(text, ' ') AS toks
-        FROM documents WHERE doc_id < 10
-      ), unic AS (
-        SELECT doc_id, g, count(*) AS c FROM (
-          SELECT doc_id, unnest(toks) AS g FROM docs) GROUP BY doc_id, g
-      ), bic AS (
-        SELECT doc_id, g, count(*) AS c FROM (
-          SELECT doc_id,
-                 unnest(list_transform(range(1, len(toks)),
-                   i -> toks[i] || ' ' || toks[i + 1])) AS g
-          FROM docs) GROUP BY doc_id, g
-      ), o1 AS (
+    "llm_rouge_pairs" -> s"""
+      WITH $pairMetricGramCtes, o1 AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                sum(least(a.c, b.c)) AS o
         FROM unic a JOIN unic b ON a.g = b.g AND a.doc_id < b.doc_id

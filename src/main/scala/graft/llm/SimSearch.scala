@@ -130,6 +130,28 @@ object SimSearch extends graft.Family {
       emb.select(side("cid", "cvec", "clabel"): _*))
   }
 
+  /** `pos(vec_id, x, i)`: one row per embedding element, at its 1-based
+    * index — the positional form the DuckDB dot-product twins join on. */
+  private val embPosCte: String = """pos AS (
+        SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
+               generate_subscripts(embedding, 1) AS i
+        FROM embeddings
+      )"""
+
+  /** DuckDB replay of the [[querySplit]] pairing: `dots(qid, cid, dot,
+    * qq, cc)`, the dot product and squared norms of every query
+    * (vec_id < 20) with every other vector. */
+  private val queryDotCtes: String = s"""$embPosCte, dots AS (
+        SELECT q.vec_id AS qid, c.vec_id AS cid,
+               sum(q.x * c.x) AS dot,
+               sum(q.x * q.x) AS qq,
+               sum(c.x * c.x) AS cc
+        FROM pos q
+        JOIN pos c ON q.i = c.i AND c.vec_id <> q.vec_id
+        WHERE q.vec_id < 20
+        GROUP BY q.vec_id, c.vec_id
+      )"""
+
   /** Every (query, candidate) pair's cosine over the full vectors (`simf`)
     * and over their first 16 dims (`simt`, the Matryoshka truncation). */
   private def fullAndTruncatedSims(emb: DataFrame): DataFrame = {
@@ -140,6 +162,30 @@ object SimSearch extends graft.Family {
         expr("cosine_similarity(slice(qvec, 1, 16), slice(cvec, 1, 16))"))
       .select(col("qid"), col("cid"), col("simf"), col("simt"))
   }
+
+  /** DuckDB replay of [[fullAndTruncatedSims]], ranked:
+    * `ranked(qid, cid, rf, rt)`, each candidate's rank per query by the
+    * full (`rf`) and the 16-dim truncated (`rt`) cosine. */
+  private val truncRankCtes: String = s"""$embPosCte, dots AS (
+        SELECT q.vec_id AS qid, c.vec_id AS cid,
+               sum(q.x * c.x) AS dot,
+               sum(q.x * q.x) AS qq,
+               sum(c.x * c.x) AS cc,
+               sum(CASE WHEN q.i <= 16 THEN q.x * c.x ELSE 0 END) AS dott,
+               sum(CASE WHEN q.i <= 16 THEN q.x * q.x ELSE 0 END) AS qqt,
+               sum(CASE WHEN q.i <= 16 THEN c.x * c.x ELSE 0 END) AS cct
+        FROM pos q
+        JOIN pos c ON q.i = c.i AND c.vec_id <> q.vec_id
+        WHERE q.vec_id < 20
+        GROUP BY q.vec_id, c.vec_id
+      ), ranked AS (
+        SELECT qid, cid,
+               row_number() OVER (PARTITION BY qid
+                 ORDER BY dot / sqrt(qq * cc) DESC, cid) AS rf,
+               row_number() OVER (PARTITION BY qid
+                 ORDER BY dott / sqrt(qqt * cct) DESC, cid) AS rt
+        FROM dots
+      )"""
 
   /** A fitted product-quantization index: per-vector code arrays + the
     * (m × ksub rows, always-broadcast) sub-codebook table. `n` (corpus
@@ -1000,11 +1046,12 @@ object SimSearch extends graft.Family {
         GROUP BY a.sub, a.code, s.si
       )"""
 
-  /** Shared greedy tail of the MMR twins, downstream of a
-    * `pool(qid, cid, r)` CTE: pairwise pool similarities (index-ordered
-    * folds over `vecCte(vec_id, i, x)`), then the 4 unrolled greedy steps
-    * with the composite argmax key score·10⁸ − cid. */
-  private def mmrGreedySqlTail(vecCte: String): String = {
+  /** Shared tail of the MMR twins, downstream of a `scores(qid, cid, dot,
+    * qq, cc)` CTE: each query's top-8 `pool(qid, cid, r)` by floor-micro
+    * cosine, pairwise pool similarities (index-ordered folds over
+    * `vecCte(vec_id, i, x)`), then the 4 unrolled greedy steps with the
+    * composite argmax key score·10⁸ − cid. */
+  private def mmrGreedySqlTail(scores: String, vecCte: String): String = {
     val steps = (2 to 5).map { k =>
       s""", pen$k AS (
         SELECT w.qid, w.c1 AS cid, max(w.s) AS pen
@@ -1027,7 +1074,16 @@ object SimSearch extends graft.Family {
         UNION ALL SELECT qid, cid, r, pick FROM pick$k
       )"""
     }.mkString
-    s""", prs AS (
+    s""", pool AS MATERIALIZED (
+        SELECT qid, cid, r FROM (
+          SELECT qid, cid,
+                 CAST(floor(1e6 * dot / sqrt(qq * cc) + 0.5) AS BIGINT)
+                   AS r,
+                 row_number() OVER (PARTITION BY qid ORDER BY
+                   CAST(floor(1e6 * dot / sqrt(qq * cc) + 0.5) AS BIGINT)
+                     DESC, cid) AS rn
+          FROM $scores) WHERE rn <= 8
+      ), prs AS (
         SELECT p1.qid, p1.cid AS c1, p2.cid AS c2
         FROM pool p1 JOIN pool p2
           ON p1.qid = p2.qid AND p1.cid <> p2.cid
@@ -1207,31 +1263,8 @@ object SimSearch extends graft.Family {
     // truncation to the first 16 dims is a CASE on the dim index (adding
     // exact 0.0 terms cannot move a double sum, so the 16-term truncated
     // cosine is the same arithmetic the sliced kernel runs)
-    "llm_mrl_truncation" -> """
-      WITH pos AS (
-        SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings
-      ), dots AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cid,
-               sum(q.x * c.x) AS dot,
-               sum(q.x * q.x) AS qq,
-               sum(c.x * c.x) AS cc,
-               sum(CASE WHEN q.i <= 16 THEN q.x * c.x ELSE 0 END) AS dott,
-               sum(CASE WHEN q.i <= 16 THEN q.x * q.x ELSE 0 END) AS qqt,
-               sum(CASE WHEN q.i <= 16 THEN c.x * c.x ELSE 0 END) AS cct
-        FROM pos q
-        JOIN pos c ON q.i = c.i AND c.vec_id <> q.vec_id
-        WHERE q.vec_id < 20
-        GROUP BY q.vec_id, c.vec_id
-      ), ranked AS (
-        SELECT qid, cid,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY dot / sqrt(qq * cc) DESC, cid) AS rf,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY dott / sqrt(qqt * cct) DESC, cid) AS rt
-        FROM dots
-      )
+    "llm_mrl_truncation" -> s"""
+      WITH $truncRankCtes
       SELECT qid,
              CAST(sum(CASE WHEN rf <= 5 AND rt <= 5 THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_overlap,
@@ -1244,31 +1277,8 @@ object SimSearch extends graft.Family {
 
     // both source rankings replayed exactly as in the mrl twin; the
     // fusion itself is pure integral arithmetic (1e9 // (60+rank))
-    "llm_rrf_fusion" -> """
-      WITH pos AS (
-        SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings
-      ), dots AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cid,
-               sum(q.x * c.x) AS dot,
-               sum(q.x * q.x) AS qq,
-               sum(c.x * c.x) AS cc,
-               sum(CASE WHEN q.i <= 16 THEN q.x * c.x ELSE 0 END) AS dott,
-               sum(CASE WHEN q.i <= 16 THEN q.x * q.x ELSE 0 END) AS qqt,
-               sum(CASE WHEN q.i <= 16 THEN c.x * c.x ELSE 0 END) AS cct
-        FROM pos q
-        JOIN pos c ON q.i = c.i AND c.vec_id <> q.vec_id
-        WHERE q.vec_id < 20
-        GROUP BY q.vec_id, c.vec_id
-      ), ranked AS (
-        SELECT qid, cid,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY dot / sqrt(qq * cc) DESC, cid) AS rf,
-               row_number() OVER (PARTITION BY qid
-                 ORDER BY dott / sqrt(qqt * cct) DESC, cid) AS rt
-        FROM dots
-      ), scored AS (
+    "llm_rrf_fusion" -> s"""
+      WITH $truncRankCtes, scored AS (
         SELECT qid, cid, rf, rt,
                CAST(CASE WHEN rf <= 50 THEN 1000000000 // (60 + rf)
                          ELSE 0 END
@@ -1285,21 +1295,8 @@ object SimSearch extends graft.Family {
       ) WHERE fused_rank <= 5""",
 
     // same arithmetic, positional unnest join, all in double
-    "llm_cosine_topk" -> """
-      WITH pos AS (
-        SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings
-      ), dots AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cid,
-               sum(q.x * c.x) AS dot,
-               sum(q.x * q.x) AS qq,
-               sum(c.x * c.x) AS cc
-        FROM pos q
-        JOIN pos c ON q.i = c.i AND c.vec_id <> q.vec_id
-        WHERE q.vec_id < 20
-        GROUP BY q.vec_id, c.vec_id
-      )
+    "llm_cosine_topk" -> s"""
+      WITH $queryDotCtes
       SELECT qid, cid, sim, rn FROM (
         SELECT qid, cid, dot / sqrt(qq * cc) AS sim,
                row_number() OVER (PARTITION BY qid
@@ -1328,16 +1325,7 @@ object SimSearch extends graft.Family {
         FROM pos q JOIN pos c ON q.i = c.i AND c.vec_id <> q.vec_id
         WHERE q.vec_id < 20
         GROUP BY 1, 2
-      ), pool AS MATERIALIZED (
-        SELECT qid, cid, r FROM (
-          SELECT qid, cid,
-                 CAST(floor(1e6 * dot / sqrt(qq * cc) + 0.5) AS BIGINT)
-                   AS r,
-                 row_number() OVER (PARTITION BY qid ORDER BY
-                   CAST(floor(1e6 * dot / sqrt(qq * cc) + 0.5) AS BIGINT)
-                     DESC, cid) AS rn
-          FROM dots) WHERE rn <= 8
-      )${mmrGreedySqlTail("pos")}""",
+      )${mmrGreedySqlTail("dots", "pos")}""",
 
     // the IVF-pooled MMR variant: same Lloyd-fit + probe replay as the
     // llm_ann_ivf twin, candidates restricted to the 8 probed cells, and
@@ -1356,37 +1344,15 @@ object SimSearch extends graft.Family {
         JOIN v q ON q.vec_id = qc.qid
         JOIN v c ON c.vec_id = a.vec_id AND c.i = q.i
         GROUP BY 1, 2
-      ), pool AS MATERIALIZED (
-        SELECT qid, cid, r FROM (
-          SELECT qid, cid,
-                 CAST(floor(1e6 * dot / sqrt(qq * cc) + 0.5) AS BIGINT)
-                   AS r,
-                 row_number() OVER (PARTITION BY qid ORDER BY
-                   CAST(floor(1e6 * dot / sqrt(qq * cc) + 0.5) AS BIGINT)
-                     DESC, cid) AS rn
-          FROM ivfd) WHERE rn <= 8
-      )${mmrGreedySqlTail("v")}""",
+      )${mmrGreedySqlTail("ivfd", "v")}""",
 
     "llm_mmr_rerank_ann_recall" -> """
       SELECT CAST(count(DISTINCT vec_id) AS BIGINT) AS n_queries,
              TRUE AS recall_ok
       FROM embeddings WHERE vec_id < 20""",
 
-    "llm_hard_negatives" -> """
-      WITH pos AS (
-        SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings
-      ), dots AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cid,
-               sum(q.x * c.x) AS dot,
-               sum(q.x * q.x) AS qq,
-               sum(c.x * c.x) AS cc
-        FROM pos q
-        JOIN pos c ON q.i = c.i AND c.vec_id <> q.vec_id
-        WHERE q.vec_id < 20
-        GROUP BY q.vec_id, c.vec_id
-      )
+    "llm_hard_negatives" -> s"""
+      WITH $queryDotCtes
       SELECT qid, qlabel, cid, clabel, sim, rn FROM (
         SELECT d.qid, ql.label AS qlabel, d.cid, cl.label AS clabel,
                dot / sqrt(qq * cc) AS sim,
@@ -1398,20 +1364,8 @@ object SimSearch extends graft.Family {
         WHERE ql.label <> cl.label
       ) WHERE rn <= 3""",
 
-    "ml_precision_at_k" -> """
-      WITH pos AS (
-        SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings
-      ), dots AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cid,
-               sum(q.x * c.x) AS dot, sum(q.x * q.x) AS qq,
-               sum(c.x * c.x) AS cc
-        FROM pos q
-        JOIN pos c ON q.i = c.i AND c.vec_id <> q.vec_id
-        WHERE q.vec_id < 20
-        GROUP BY q.vec_id, c.vec_id
-      ), top5 AS (
+    "ml_precision_at_k" -> s"""
+      WITH $queryDotCtes, top5 AS (
         SELECT qid, cid FROM (
           SELECT qid, cid,
                  row_number() OVER (PARTITION BY qid
@@ -1466,20 +1420,8 @@ object SimSearch extends graft.Family {
         |UNION ALL SELECT 5, id, ms FROM pick5""".stripMargin
     },
 
-    "ml_ndcg" -> """
-      WITH pos AS (
-        SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings
-      ), dots AS (
-        SELECT q.vec_id AS qid, c.vec_id AS cid,
-               sum(q.x * c.x) AS dot, sum(q.x * q.x) AS qq,
-               sum(c.x * c.x) AS cc
-        FROM pos q
-        JOIN pos c ON q.i = c.i AND c.vec_id <> q.vec_id
-        WHERE q.vec_id < 20
-        GROUP BY q.vec_id, c.vec_id
-      ), scored AS (
+    "ml_ndcg" -> s"""
+      WITH $queryDotCtes, scored AS (
         SELECT d.qid, q.label AS qlabel, d.cid,
                CASE WHEN c.label = q.label THEN 1 ELSE 0 END AS rel,
                row_number() OVER (PARTITION BY d.qid
@@ -1506,12 +1448,8 @@ object SimSearch extends graft.Family {
                   ELSE CAST(0 AS BIGINT) END AS ndcg_ppm
       FROM rolled""",
 
-    "llm_knn_label" -> """
-      WITH pos AS (
-        SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-               generate_subscripts(embedding, 1) AS i
-        FROM embeddings
-      ), dots AS (
+    "llm_knn_label" -> s"""
+      WITH $embPosCte, dots AS (
         SELECT q.vec_id AS qid, c.vec_id AS cid,
                sum(q.x * c.x) / sqrt(sum(q.x * q.x) * sum(c.x * c.x)) AS sim
         FROM pos q

@@ -63,6 +63,43 @@ object TextOps extends graft.Family {
       .distinct()
   }
 
+  /** `toks(doc_id, tok, pos)`: every space-split token with its 1-based
+    * position, the input of the shingle and bigram twins. */
+  private def tokPosCte(toks: String): String = s"""$toks AS (
+        SELECT doc_id,
+               unnest(string_split(text, ' ')) AS tok,
+               generate_subscripts(string_split(text, ' '), 1) AS pos
+        FROM documents
+      )"""
+
+  /** DuckDB replay of `word_shingles(text, 3)`, the one 3-word-shingle
+    * definition every twin splices in: `toks(doc_id, tok, pos)` holds the
+    * space-split tokens, and `sh(doc_id, shingle)` every run of three
+    * consecutive tokens, distinct per document unless `distinct` is false.
+    * The minhash twins name the two CTEs `rawtoks` and `toks`. */
+  private[llm] def shingleCtes(toks: String = "toks", sh: String = "sh",
+      distinct: Boolean = true): String = s"""${tokPosCte(toks)}, $sh AS (
+        SELECT ${if (distinct) "DISTINCT " else ""}doc_id, shingle FROM (
+          SELECT doc_id,
+                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
+                   AS shingle,
+                 lead(tok, 2) OVER w AS t2
+          FROM $toks
+          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
+        ) WHERE t2 IS NOT NULL
+      )"""
+
+  /** `counts(doc_id, n_sh)` and the shared-shingle count of every doc
+    * pair, `pairs(doc1, doc2, common)` with doc1 < doc2, over `sh`: the
+    * DuckDB replay of [[exactAnchorFrames]]. */
+  private val shinglePairCtes: String = """counts AS (
+        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
+      ), pairs AS (
+        SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS common
+        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id
+      )"""
+
   /** Pairing budget of the EXACT near-dup anchors (llm_ngram_jaccard /
     * llm_containment): a shingle in f documents yields f² candidate pair
     * rows, and unlike llm_substring_dup (which drops hot windows with an
@@ -159,6 +196,16 @@ object TextOps extends graft.Family {
           "element_at(ts, i + 1) AS w2))")).as("p"))
       .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
 
+  /** DuckDB replay of [[adjacentBigrams]] over `toks`:
+    * `bigrams(doc_id, w1, w2)`. */
+  private val bigramCtes: String = s"""${tokPosCte("toks")}, bigrams AS (
+        SELECT doc_id,
+               lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS w1,
+               tok AS w2
+        FROM toks
+        QUALIFY w1 IS NOT NULL
+      )"""
+
   // fitted trigram profile table + language domain, cached per corpus
   // (r15, VERDICT r14 #7): the naive-Bayes PROFILES are a model fit —
   // the ivfCache amortization pattern (a langid deployment fits once and
@@ -244,6 +291,22 @@ object TextOps extends graft.Family {
   // are bound to the SparkSession that created them
   private val shingleCache = new graft.core.SessionCache[DataFrame]
   private val lmScoreCache = new graft.core.SessionCache[DataFrame]
+
+  /** DuckDB replay of [[decontaminate]]'s split of the shingles `sh`:
+    * `tr(doc_id, shingle)` for the train docs ([[splitBucket]] < 80) and
+    * `ev(doc_id, shingle)` for the held-out ones (>= 90). */
+  private val decontamSplitCtes: String = s"""${shingleCtes()}, buck AS (
+        SELECT doc_id,
+               CAST(('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
+                 1, 4)) AS INTEGER) % 100 AS bucket
+        FROM documents
+      ), tr AS (
+        SELECT sh.doc_id, sh.shingle FROM sh JOIN buck USING (doc_id)
+        WHERE buck.bucket < 80
+      ), ev AS (
+        SELECT sh.doc_id, sh.shingle FROM sh JOIN buck USING (doc_id)
+        WHERE buck.bucket >= 90
+      )"""
 
   def decontaminate(s: SparkSession, d: String,
                     evalBloom: Boolean): DataFrame = {
@@ -1768,6 +1831,18 @@ object TextOps extends graft.Family {
       .select(col("doc_id"), col("p").cast("long").as("p"),
         expr(winnowHash).as("h"))
 
+  /** DuckDB replay of [[charGramHashes]]: `hs(doc_id, p, h)`, and
+    * `n(doc_id, n_grams)` counting each document's grams. */
+  private def charGramHashCtes: String = s"""g AS (
+        SELECT doc_id,
+               CAST(unnest(range(1, length(text) - 3)) AS BIGINT) AS p, text
+        FROM documents WHERE length(text) >= 5
+      ), hs AS (
+        SELECT doc_id, p, $winnowHash AS h FROM g
+      ), n AS (
+        SELECT doc_id, count(*) AS n_grams FROM hs GROUP BY doc_id
+      )"""
+
   /** `(doc_id, tok, h)`: each document's distinct non-empty
     * space-separated tokens with their portable `poly_hash`. */
   private def distinctTokenHashes(s: SparkSession, d: String): DataFrame =
@@ -1776,6 +1851,45 @@ object TextOps extends graft.Family {
         explode(array_distinct(split(col("text"), " "))).as("tok"))
       .filter(length(col("tok")) > 0)
       .withColumn("h", expr("poly_hash(tok)"))
+
+  /** DuckDB replay of `poly_hash` over column `key` of `toks(doc_id, key)`:
+    * the powers of 31 mod 1e9+7 up to the longest value (`pow31`, hence
+    * WITH RECURSIVE), the per-character terms (`chars`) and their sum per
+    * value (`csums(doc_id, key, tsum)`). The caller adds the length term. */
+  private[llm] def polyHashCtes(key: String): String = s"""pow31(i, v) AS (
+        SELECT 0, CAST(1 AS BIGINT)
+        UNION ALL
+        SELECT i + 1, (v * 31) % 1000000007 FROM pow31
+        WHERE i < (SELECT max(length($key)) FROM toks)
+      ), chars AS (
+        SELECT doc_id, $key,
+               unnest(string_split($key, '')) AS c,
+               generate_subscripts(string_split($key, ''), 1) AS pos,
+               length($key) AS n
+        FROM toks
+      ), csums AS (
+        SELECT doc_id, $key,
+               sum((CAST(ascii(c) AS BIGINT) * p.v) % 1000000007) AS tsum
+        FROM chars JOIN pow31 p ON p.i = chars.n - chars.pos
+        GROUP BY doc_id, $key
+      )"""
+
+  /** DuckDB replay of [[distinctTokenHashes]]: each document's distinct
+    * non-empty tokens `toks(doc_id, tok)` and their hashes
+    * `thash(doc_id, h)`. Starts with RECURSIVE. */
+  private val tokHashCtes: String = s"""RECURSIVE toks AS (
+        SELECT DISTINCT doc_id, tok FROM (
+          SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+        ) WHERE length(tok) > 0
+      ), ${polyHashCtes("tok")}, thash AS (
+        SELECT t.doc_id,
+               CAST(((7 * pn.v) % 1000000007 +
+                     coalesce(s.tsum, 0) % 1000000007) % 1000000007 AS BIGINT)
+                 AS h
+        FROM toks t
+        JOIN pow31 pn ON pn.i = length(t.tok)
+        LEFT JOIN csums s ON s.doc_id = t.doc_id AND s.tok = t.tok
+      )"""
 
   private def mergeFold(src: String): String =
     s"""list_reduce(string_split($src, chr(31)),
@@ -1892,35 +2006,7 @@ object TextOps extends graft.Family {
     * threshold — exactly [[graft.functions.Aggregators.SimHashAgg]] over
     * the h60 column that `llm_simhash` aggregates. Ends with
     * `sig(doc_id, simhash)`; also used by Dedup's clusters/neardup twins. */
-  private[llm] val simhash60Ctes: String = """RECURSIVE toks AS (
-        SELECT DISTINCT doc_id, tok FROM (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-        ) WHERE length(tok) > 0
-      ), pow31(i, v) AS (
-        SELECT 0, CAST(1 AS BIGINT)
-        UNION ALL
-        SELECT i + 1, (v * 31) % 1000000007 FROM pow31
-        WHERE i < (SELECT max(length(tok)) FROM toks)
-      ), chars AS (
-        SELECT doc_id, tok,
-               unnest(string_split(tok, '')) AS c,
-               generate_subscripts(string_split(tok, ''), 1) AS pos,
-               length(tok) AS n
-        FROM toks
-      ), csums AS (
-        SELECT doc_id, tok,
-               sum((CAST(ascii(c) AS BIGINT) * p.v) % 1000000007) AS tsum
-        FROM chars JOIN pow31 p ON p.i = chars.n - chars.pos
-        GROUP BY doc_id, tok
-      ), thash AS (
-        SELECT t.doc_id,
-               CAST(((7 * pn.v) % 1000000007 +
-                     coalesce(s.tsum, 0) % 1000000007) % 1000000007 AS BIGINT)
-                 AS h
-        FROM toks t
-        JOIN pow31 pn ON pn.i = length(t.tok)
-        LEFT JOIN csums s ON s.doc_id = t.doc_id AND s.tok = t.tok
-      ), thash60 AS (
+  private[llm] val simhash60Ctes: String = s"""$tokHashCtes, thash60 AS (
         SELECT doc_id,
                h + ((131 * h + 13) % 1000000007)
                    * (CAST(1 AS BIGINT) << 30) AS h
@@ -2382,22 +2468,8 @@ object TextOps extends graft.Family {
       )
       GROUP BY 1, 2""",
 
-    "llm_source_overlap" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), sh AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id,
-                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-                   AS shingle,
-                 lead(tok, 2) OVER w AS t2
-          FROM toks
-          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE t2 IS NOT NULL
-      ), ss AS (
+    "llm_source_overlap" -> s"""
+      WITH ${shingleCtes()}, ss AS (
         SELECT DISTINCT shingle, source
         FROM sh JOIN documents USING (doc_id)
       )
@@ -2407,66 +2479,16 @@ object TextOps extends graft.Family {
         ON a.shingle = b.shingle AND a.source < b.source
       GROUP BY 1, 2""",
 
-    "llm_decontaminate" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), sh AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id,
-                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-                   AS shingle,
-                 lead(tok, 2) OVER w AS t2
-          FROM toks
-          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE t2 IS NOT NULL
-      ), buck AS (
-        SELECT doc_id,
-               CAST(('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                 1, 4)) AS INTEGER) % 100 AS bucket
-        FROM documents
-      ), tr AS (
-        SELECT sh.doc_id, sh.shingle FROM sh JOIN buck USING (doc_id)
-        WHERE buck.bucket < 80
-      ), ev AS (
-        SELECT sh.doc_id, sh.shingle FROM sh JOIN buck USING (doc_id)
-        WHERE buck.bucket >= 90
-      )
+    "llm_decontaminate" -> s"""
+      WITH $decontamSplitCtes
       SELECT tr.doc_id AS train_doc,
              count(DISTINCT tr.shingle) AS n_shared_shingles,
              count(DISTINCT ev.doc_id) AS n_eval_docs
       FROM tr JOIN ev ON tr.shingle = ev.shingle
       GROUP BY tr.doc_id""",
 
-    "llm_decontaminate_frac" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), sh AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id,
-                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-                   AS shingle,
-                 lead(tok, 2) OVER w AS t2
-          FROM toks
-          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE t2 IS NOT NULL
-      ), buck AS (
-        SELECT doc_id,
-               CAST(('0x' || substr(md5('graft:' || CAST(doc_id AS VARCHAR)),
-                 1, 4)) AS INTEGER) % 100 AS bucket
-        FROM documents
-      ), tr AS (
-        SELECT sh.doc_id, sh.shingle FROM sh JOIN buck USING (doc_id)
-        WHERE buck.bucket < 80
-      ), ev AS (
-        SELECT sh.doc_id, sh.shingle FROM sh JOIN buck USING (doc_id)
-        WHERE buck.bucket >= 90
-      ), evn AS (
+    "llm_decontaminate_frac" -> s"""
+      WITH $decontamSplitCtes, evn AS (
         SELECT doc_id AS eval_doc, count(*) AS n_ev FROM ev GROUP BY doc_id
       ), ov AS (
         SELECT tr.doc_id AS train_doc, ev.doc_id AS eval_doc,
@@ -2480,22 +2502,8 @@ object TextOps extends graft.Family {
       FROM ov JOIN evn ON evn.eval_doc = ov.eval_doc
       WHERE CAST(ov.n_shared AS DOUBLE) / CAST(evn.n_ev AS DOUBLE) >= 0.2""",
 
-    "llm_boilerplate" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), inst AS (
-        SELECT doc_id, shingle FROM (
-          SELECT doc_id,
-                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-                   AS shingle,
-                 lead(tok, 2) OVER w AS t2
-          FROM toks
-          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE t2 IS NOT NULL
-      ), boiler AS (
+    "llm_boilerplate" -> s"""
+      WITH ${shingleCtes(sh = "inst", distinct = false)}, boiler AS (
         SELECT shingle FROM (
           SELECT shingle, count(DISTINCT doc_id) AS ndocs
           FROM inst GROUP BY shingle
@@ -2512,22 +2520,8 @@ object TextOps extends graft.Family {
       FROM inst LEFT JOIN boiler ON inst.shingle = boiler.shingle
       GROUP BY doc_id""",
 
-    "llm_repetition" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), sh AS (
-        SELECT doc_id, shingle FROM (
-          SELECT doc_id,
-                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-                   AS shingle,
-                 lead(tok, 2) OVER w AS t2
-          FROM toks
-          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE t2 IS NOT NULL
-      )
+    "llm_repetition" -> s"""
+      WITH ${shingleCtes(distinct = false)}
       SELECT doc_id,
              count(*) AS n_shingles,
              count(DISTINCT shingle) AS n_distinct,
@@ -2602,28 +2596,8 @@ object TextOps extends graft.Family {
              count(DISTINCT source) AS n_sources
       FROM documents GROUP BY lang""",
 
-    "llm_ngram_jaccard" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), sh AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id,
-                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-                   AS shingle,
-                 lead(tok, 2) OVER w AS t2
-          FROM toks
-          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE t2 IS NOT NULL
-      ), counts AS (
-        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-      ), pairs AS (
-        SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS common
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-      )
+    "llm_ngram_jaccard" -> s"""
+      WITH ${shingleCtes()}, $shinglePairCtes
       SELECT doc1, doc2, common,
              CAST(common AS DOUBLE) / CAST(n1.n_sh + n2.n_sh - common AS DOUBLE)
                AS jaccard
@@ -2633,28 +2607,8 @@ object TextOps extends graft.Family {
       WHERE CAST(common AS DOUBLE) / CAST(n1.n_sh + n2.n_sh - common AS DOUBLE)
             >= 0.2""",
 
-    "llm_containment" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), sh AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id,
-                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-                   AS shingle,
-                 lead(tok, 2) OVER w AS t2
-          FROM toks
-          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE t2 IS NOT NULL
-      ), counts AS (
-        SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
-      ), pairs AS (
-        SELECT a.doc_id AS doc1, b.doc_id AS doc2, count(*) AS common
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-      )
+    "llm_containment" -> s"""
+      WITH ${shingleCtes()}, $shinglePairCtes
       SELECT doc1, doc2, common,
              round(CAST(common AS DOUBLE) / n1.n_sh, 6) AS c_fwd,
              round(CAST(common AS DOUBLE) / n2.n_sh, 6) AS c_rev
@@ -2717,15 +2671,7 @@ object TextOps extends graft.Family {
     // winnowing replay: same shared winnowHash text, same packed
     // (h, −pos) running-min window, same distinct+rollup
     "llm_winnow_positional" -> s"""
-      WITH g AS (
-        SELECT doc_id,
-               CAST(unnest(range(1, length(text) - 3)) AS BIGINT) AS p, text
-        FROM documents WHERE length(text) >= 5
-      ), hs AS (
-        SELECT doc_id, p, $winnowHash AS h FROM g
-      ), n AS (
-        SELECT doc_id, count(*) AS n_grams FROM hs GROUP BY doc_id
-      ), win AS (
+      WITH $charGramHashCtes, win AS (
         SELECT doc_id,
                min(h * 1073741824 + (1073741823 - p)) OVER w AS selkey,
                count(*) OVER w AS wn
@@ -2745,15 +2691,7 @@ object TextOps extends graft.Family {
     // CDC replay: boundary rule h % 64 = 0 over the same hash stream,
     // lag-window gaps, left join for boundary-free whole-doc chunks
     "llm_cdc_chunks" -> s"""
-      WITH g AS (
-        SELECT doc_id,
-               CAST(unnest(range(1, length(text) - 3)) AS BIGINT) AS p, text
-        FROM documents WHERE length(text) >= 5
-      ), hs AS (
-        SELECT doc_id, p, $winnowHash AS h FROM g
-      ), n AS (
-        SELECT doc_id, count(*) AS n_grams FROM hs GROUP BY doc_id
-      ), b AS (
+      WITH $charGramHashCtes, b AS (
         SELECT doc_id, p,
                p - coalesce(lag(p) OVER (PARTITION BY doc_id ORDER BY p),
                  0) AS gap
@@ -2812,19 +2750,8 @@ object TextOps extends graft.Family {
                '\b\d{3}[-.]\d{3}[-.]\d{4}\b')) AS INT) AS n_phones
       FROM documents""",
 
-    "llm_lm_score" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), bigrams AS (
-        SELECT doc_id,
-               lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS w1,
-               tok AS w2
-        FROM toks
-        QUALIFY w1 IS NOT NULL
-      ), bc AS (
+    "llm_lm_score" -> s"""
+      WITH $bigramCtes, bc AS (
         SELECT w1, w2, count(*) AS c_big FROM bigrams GROUP BY 1, 2
       ), uc AS (
         SELECT tok AS w1, count(*) AS c_uni FROM toks GROUP BY 1
@@ -2923,22 +2850,8 @@ object TextOps extends graft.Family {
                  ELSE CAST(0 AS BIGINT) END AS jsd_ppb
       FROM terms GROUP BY source ORDER BY source""",
 
-    "llm_novelty" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), sh AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id,
-                 tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
-                   AS shingle,
-                 lead(tok, 2) OVER w AS t2
-          FROM toks
-          WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-        ) WHERE t2 IS NOT NULL
-      ), first AS (
+    "llm_novelty" -> s"""
+      WITH ${shingleCtes()}, first AS (
         SELECT shingle, MIN(doc_id) AS first_doc FROM sh GROUP BY 1
       )
       SELECT sh.doc_id,
@@ -2982,19 +2895,8 @@ object TextOps extends graft.Family {
       FROM terms GROUP BY 1
       ORDER BY bm25 DESC, doc_id LIMIT 20""",
 
-    "llm_pmi_collocations" -> """
-      WITH toks AS (
-        SELECT doc_id,
-               unnest(string_split(text, ' ')) AS tok,
-               generate_subscripts(string_split(text, ' '), 1) AS pos
-        FROM documents
-      ), bigrams AS (
-        SELECT doc_id,
-               lag(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS w1,
-               tok AS w2
-        FROM toks
-        QUALIFY w1 IS NOT NULL
-      ), bc AS (
+    "llm_pmi_collocations" -> s"""
+      WITH $bigramCtes, bc AS (
         SELECT w1, w2, CAST(count(*) AS BIGINT) AS c_big
         FROM bigrams GROUP BY 1, 2
       ), uc AS (
@@ -3015,36 +2917,8 @@ object TextOps extends graft.Family {
 
     // portable-hash simhash: fp-style polynomial hash per DISTINCT token,
     // then the bit-vote rule (vote ≥ 0 ⇒ bit set) replayed bit by bit
-    "llm_simhash_poly" -> """
-      WITH RECURSIVE toks AS (
-        SELECT DISTINCT doc_id, tok FROM (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-        ) WHERE length(tok) > 0
-      ), pow31(i, v) AS (
-        SELECT 0, CAST(1 AS BIGINT)
-        UNION ALL
-        SELECT i + 1, (v * 31) % 1000000007 FROM pow31
-        WHERE i < (SELECT max(length(tok)) FROM toks)
-      ), chars AS (
-        SELECT doc_id, tok,
-               unnest(string_split(tok, '')) AS c,
-               generate_subscripts(string_split(tok, ''), 1) AS pos,
-               length(tok) AS n
-        FROM toks
-      ), csums AS (
-        SELECT doc_id, tok,
-               sum((CAST(ascii(c) AS BIGINT) * p.v) % 1000000007) AS tsum
-        FROM chars JOIN pow31 p ON p.i = chars.n - chars.pos
-        GROUP BY doc_id, tok
-      ), thash AS (
-        SELECT t.doc_id,
-               CAST(((7 * pn.v) % 1000000007 +
-                     coalesce(s.tsum, 0) % 1000000007) % 1000000007 AS BIGINT)
-                 AS h
-        FROM toks t
-        JOIN pow31 pn ON pn.i = length(t.tok)
-        LEFT JOIN csums s ON s.doc_id = t.doc_id AND s.tok = t.tok
-      ), votes AS (
+    "llm_simhash_poly" -> s"""
+      WITH $tokHashCtes, votes AS (
         SELECT doc_id, b.bit,
                sum(CASE WHEN ((h >> b.bit) & 1) = 1 THEN 1 ELSE -1 END) AS v
         FROM thash, generate_series(0, 63) b(bit)
@@ -3058,36 +2932,8 @@ object TextOps extends graft.Family {
 
     // portable-hash minhash: min of four affine permutations of the same
     // polynomial token hash
-    "llm_minhash_poly" -> """
-      WITH RECURSIVE toks AS (
-        SELECT DISTINCT doc_id, tok FROM (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-        ) WHERE length(tok) > 0
-      ), pow31(i, v) AS (
-        SELECT 0, CAST(1 AS BIGINT)
-        UNION ALL
-        SELECT i + 1, (v * 31) % 1000000007 FROM pow31
-        WHERE i < (SELECT max(length(tok)) FROM toks)
-      ), chars AS (
-        SELECT doc_id, tok,
-               unnest(string_split(tok, '')) AS c,
-               generate_subscripts(string_split(tok, ''), 1) AS pos,
-               length(tok) AS n
-        FROM toks
-      ), csums AS (
-        SELECT doc_id, tok,
-               sum((CAST(ascii(c) AS BIGINT) * p.v) % 1000000007) AS tsum
-        FROM chars JOIN pow31 p ON p.i = chars.n - chars.pos
-        GROUP BY doc_id, tok
-      ), thash AS (
-        SELECT t.doc_id,
-               CAST(((7 * pn.v) % 1000000007 +
-                     coalesce(s.tsum, 0) % 1000000007) % 1000000007 AS BIGINT)
-                 AS h
-        FROM toks t
-        JOIN pow31 pn ON pn.i = length(t.tok)
-        LEFT JOIN csums s ON s.doc_id = t.doc_id AND s.tok = t.tok
-      )
+    "llm_minhash_poly" -> s"""
+      WITH $tokHashCtes
       SELECT doc_id,
              min(h) AS mh0,
              min((h * 31 + 7) % 1000000007) AS mh1,

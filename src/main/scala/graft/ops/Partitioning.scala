@@ -74,28 +74,9 @@ object Partitioning {
     * sort first (bucket -1), keeping NULL rows co-located, not dropped. */
   def clusterByZOrder(df: DataFrame, n: Int, colA: String, colB: String)
       : DataFrame = {
-    // date/timestamp keys go through an epoch-number view first (DATE has
-    // no direct double cast; NTZ reuses the session-UTC instant)
-    def num(c: String): Column = df.schema(c).dataType match {
-      case org.apache.spark.sql.types.DateType => unix_date(col(c)).cast("double")
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        col(c).cast("timestamp_ltz").cast("double")
-      case _ => col(c).cast("double")
-    }
-    val bounds = df.agg(
-      min(num(colA)).as("mna"), max(num(colA)).as("mxa"),
-      min(num(colB)).as("mnb"), max(num(colB)).as("mxb")).head()
-    // an all-NULL column yields NULL bounds → every ordinal hits the
-    // coalesce(-1) arm; 0.0 here just keeps the arithmetic well-defined
-    def b(i: Int): Double = if (bounds.isNullAt(i)) 0.0 else bounds.getDouble(i)
-    def ordinal(c: String, mn: Double, mx: Double): Column = {
-      val scaled =
-        if (mx > mn) ((num(c) - lit(mn)) / lit(mx - mn) * lit(65535.0))
-        else lit(0.0)
-      coalesce(scaled.cast("int"), lit(-1))
-    }
-    df.withColumn("__za", ordinal(colA, b(0), b(1)))
-      .withColumn("__zb", ordinal(colB, b(2), b(3)))
+    val (za, zb) = ordinals(df, colA, colB, bits = 16)
+    df.withColumn("__za", za)
+      .withColumn("__zb", zb)
       .withColumn("__zkey", expr("interleave_bits(__za, __zb)"))
       .repartitionByRange(n, col("__zkey"))
       .sortWithinPartitions(col("__zkey"))
@@ -111,6 +92,22 @@ object Partitioning {
     * engines ship as HILBERT clustering. */
   def clusterByHilbert(df: DataFrame, n: Int, colA: String, colB: String)
       : DataFrame = {
+    val (ha, hb) = ordinals(df, colA, colB, bits = 14)
+    df.withColumn("__ha", ha)
+      .withColumn("__hb", hb)
+      .withColumn("__hkey", expr("hilbert_index(__ha, __hb)"))
+      .repartitionByRange(n, col("__hkey"))
+      .sortWithinPartitions(col("__hkey"))
+      .drop("__ha", "__hb", "__hkey")
+  }
+
+  /** The min-max normalisation both 2-D layouts key on: `colA` and `colB`
+    * as `bits`-bit bucket ordinals, NULL as -1, from one 1-row bounds
+    * probe. */
+  private def ordinals(df: DataFrame, colA: String, colB: String,
+                       bits: Int): (Column, Column) = {
+    // date/timestamp keys go through an epoch-number view first (DATE has
+    // no direct double cast; NTZ reuses the session-UTC instant)
     def num(c: String): Column = df.schema(c).dataType match {
       case org.apache.spark.sql.types.DateType => unix_date(col(c)).cast("double")
       case org.apache.spark.sql.types.TimestampNTZType =>
@@ -120,19 +117,17 @@ object Partitioning {
     val bounds = df.agg(
       min(num(colA)).as("mna"), max(num(colA)).as("mxa"),
       min(num(colB)).as("mnb"), max(num(colB)).as("mxb")).head()
+    // an all-NULL column yields NULL bounds → every ordinal hits the
+    // coalesce(-1) arm; 0.0 here just keeps the arithmetic well-defined
     def b(i: Int): Double = if (bounds.isNullAt(i)) 0.0 else bounds.getDouble(i)
+    val top = ((1 << bits) - 1).toDouble
     def ordinal(c: String, mn: Double, mx: Double): Column = {
       val scaled =
-        if (mx > mn) ((num(c) - lit(mn)) / lit(mx - mn) * lit(16383.0))
+        if (mx > mn) ((num(c) - lit(mn)) / lit(mx - mn) * lit(top))
         else lit(0.0)
       coalesce(scaled.cast("int"), lit(-1))
     }
-    df.withColumn("__ha", ordinal(colA, b(0), b(1)))
-      .withColumn("__hb", ordinal(colB, b(2), b(3)))
-      .withColumn("__hkey", expr("hilbert_index(__ha, __hb)"))
-      .repartitionByRange(n, col("__hkey"))
-      .sortWithinPartitions(col("__hkey"))
-      .drop("__ha", "__hb", "__hkey")
+    (ordinal(colA, b(0), b(1)), ordinal(colB, b(2), b(3)))
   }
 
   /** The first level of every `ranked*` kernel below: range-partition on

@@ -32,6 +32,17 @@ object EventsBatch extends graft.Family {
       .agg(count(lit(1)).as("n"))
   }
 
+  /** DuckDB replay of [[transitionCounts]]: `c(prev_type, next_type, n)`. */
+  private val transitionCtes: String = """pairs AS (
+        SELECT lag(event_type) OVER (PARTITION BY user_id
+                 ORDER BY ts, event_id) AS prev_type,
+               event_type AS next_type
+        FROM events
+      ), c AS (
+        SELECT prev_type, next_type, count(*) AS n FROM pairs
+        WHERE prev_type IS NOT NULL GROUP BY prev_type, next_type
+      )"""
+
   /** Per event type, each event's exact-µs `gap` to the previous one in
     * (us, event_id) order; the first event of a type has none. */
   private def interArrivalGaps(s: SparkSession, d: String): DataFrame = {
@@ -43,6 +54,15 @@ object EventsBatch extends graft.Family {
       .withColumn("gap", col("us") - lag(col("us"), 1).over(w))
       .filter(col("gap").isNotNull)
   }
+
+  /** DuckDB replay of [[interArrivalGaps]], before its null filter:
+    * `g(event_type, gap)`. */
+  private val interArrivalCte: String = """g AS (
+        SELECT event_type,
+               epoch_us(ts) - lag(epoch_us(ts)) OVER (
+                 PARTITION BY event_type
+                 ORDER BY epoch_us(ts), event_id) AS gap
+        FROM events)"""
 
   val defs: Map[String, Q] = Map(
     // frequent ordered 2-sequences (the sequence-mining support count):
@@ -1591,6 +1611,17 @@ object EventsBatch extends graft.Family {
     })
   )
 
+  /** `hourly(event_type, hr, y, rn)`: events per type and hour, with
+    * each type's hours numbered in order — the series the Holt and
+    * burst recurrences walk. */
+  private val hourlyCte: String =
+    """hourly AS (
+      |  SELECT event_type, date_trunc('hour', ts) AS hr,
+      |         CAST(count(*) AS BIGINT) AS y,
+      |         CAST(row_number() OVER (PARTITION BY event_type
+      |              ORDER BY date_trunc('hour', ts)) AS BIGINT) AS rn
+      |  FROM events GROUP BY 1, 2)""".stripMargin
+
   /** Holt twin: the identical integer recurrence replayed as a recursive
     * CTE (rn = rn+1 join per type). FD = floor division by 10 written as
     * subtract-positive-remainder — engine-exact on negatives too (trend
@@ -1600,12 +1631,7 @@ object EventsBatch extends graft.Family {
       s"CAST((($x) - ((($x) % 10) + 10) % 10) / 10 AS BIGINT)"
     val lnew = fd("2*h.y*1000000 + 8*(s.l + s.b)")
     val bnew = fd(s"$lnew - s.l + 9*s.b")
-    s"""WITH RECURSIVE hourly AS (
-      |  SELECT event_type, date_trunc('hour', ts) AS hr,
-      |         CAST(count(*) AS BIGINT) AS y,
-      |         CAST(row_number() OVER (PARTITION BY event_type
-      |              ORDER BY date_trunc('hour', ts)) AS BIGINT) AS rn
-      |  FROM events GROUP BY 1, 2),
+    s"""WITH RECURSIVE $hourlyCte,
       |st AS (
       |  SELECT event_type, rn, hr, y,
       |         y * 1000000 AS l, CAST(0 AS BIGINT) AS b
@@ -1626,12 +1652,7 @@ object EventsBatch extends graft.Family {
     val lam1 = s"(3.0 * $lam0)"
     def cost(lam: String, y: String) =
       s"CAST(floor(1e6 * ($lam - $y * ln($lam)) + 0.5) AS BIGINT)"
-    s"""WITH RECURSIVE hourly AS (
-      |  SELECT event_type, date_trunc('hour', ts) AS hr,
-      |         CAST(count(*) AS BIGINT) AS y,
-      |         CAST(row_number() OVER (PARTITION BY event_type
-      |              ORDER BY date_trunc('hour', ts)) AS BIGINT) AS rn
-      |  FROM events GROUP BY 1, 2),
+    s"""WITH RECURSIVE $hourlyCte,
       |rates AS (
       |  SELECT event_type,
       |         CAST(floor(1e6 * sum(y) / count(*) + 0.5) AS BIGINT)
@@ -1653,6 +1674,34 @@ object EventsBatch extends graft.Family {
       |SELECT event_type, hr, y, v0, v1, v1 < v0 AS burst
       |FROM st""".stripMargin
   }
+
+  /** DuckDB replay of the evt_funnel stages: each user's first view
+    * `v(user_id, t_view)`, first click after it `c(user_id, t_click)` and
+    * first purchase after that `p(user_id, t_purchase)`. */
+  private val funnelCtes: String = """v AS (
+        SELECT user_id, min(ts) AS t_view FROM events
+        WHERE event_type = 'view' GROUP BY 1
+      ), c AS (
+        SELECT e.user_id, min(e.ts) AS t_click
+        FROM events e JOIN v ON e.user_id = v.user_id
+        WHERE e.event_type = 'click' AND e.ts > v.t_view
+        GROUP BY 1
+      ), p AS (
+        SELECT e.user_id, min(e.ts) AS t_purchase
+        FROM events e JOIN c ON e.user_id = c.user_id
+        WHERE e.event_type = 'purchase' AND e.ts > c.t_click
+        GROUP BY 1
+      )"""
+
+  /** The brute-force interval join that join_interval and
+    * join_interval_native both answer. */
+  private val intervalJoinTwin: String = """
+      SELECT s.event_id AS iv_id, count(*) AS n_clicks,
+             min(c.ts) AS first_click
+      FROM (SELECT * FROM events WHERE event_type = 'signup') s
+      JOIN (SELECT * FROM events WHERE event_type = 'click') c
+        ON c.ts >= s.ts AND c.ts < s.ts + INTERVAL 90 MINUTE
+      GROUP BY s.event_id"""
 
   val sql: Map[String, String] = Map(
     "evt_holt" -> holtTwin,
@@ -1897,15 +1946,7 @@ object EventsBatch extends graft.Family {
       )"""
       }.mkString
       s"""
-      WITH pairs AS (
-        SELECT lag(event_type) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id) AS prev_type,
-               event_type AS next_type
-        FROM events
-      ), c AS (
-        SELECT prev_type, next_type, count(*) AS n FROM pairs
-        WHERE prev_type IS NOT NULL GROUP BY prev_type, next_type
-      ), tm AS MATERIALIZED (
+      WITH $transitionCtes, tm AS MATERIALIZED (
         SELECT prev_type AS i, next_type AS j,
                CAST(floor(1e9 * n / sum(n) OVER (PARTITION BY prev_type)
                  + 0.5) AS BIGINT) AS t
@@ -2017,16 +2058,8 @@ object EventsBatch extends graft.Family {
       ORDER BY r.channel"""
     },
 
-    "evt_markov_transitions" -> """
-      WITH pairs AS (
-        SELECT lag(event_type) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id) AS prev_type,
-               event_type AS next_type
-        FROM events
-      ), c AS (
-        SELECT prev_type, next_type, count(*) AS n FROM pairs
-        WHERE prev_type IS NOT NULL GROUP BY prev_type, next_type
-      )
+    "evt_markov_transitions" -> s"""
+      WITH $transitionCtes
       SELECT prev_type, next_type, n,
              round(n / sum(n) OVER (PARTITION BY prev_type), 6) AS p
       FROM c""",
@@ -2063,21 +2096,8 @@ object EventsBatch extends graft.Family {
              CAST(sum(n) AS BIGINT) AS n_events
       FROM b GROUP BY 1""",
 
-    "evt_funnel" -> """
-      WITH v AS (
-        SELECT user_id, min(ts) AS t_view FROM events
-        WHERE event_type = 'view' GROUP BY 1
-      ), c AS (
-        SELECT e.user_id, min(e.ts) AS t_click
-        FROM events e JOIN v ON e.user_id = v.user_id
-        WHERE e.event_type = 'click' AND e.ts > v.t_view
-        GROUP BY 1
-      ), p AS (
-        SELECT e.user_id, min(e.ts) AS t_purchase
-        FROM events e JOIN c ON e.user_id = c.user_id
-        WHERE e.event_type = 'purchase' AND e.ts > c.t_click
-        GROUP BY 1
-      )
+    "evt_funnel" -> s"""
+      WITH $funnelCtes
       SELECT v.user_id, t_view, t_click, t_purchase,
              1 + CASE WHEN t_click IS NOT NULL THEN 1 ELSE 0 END
                + CASE WHEN t_purchase IS NOT NULL THEN 1 ELSE 0 END AS stage
@@ -2085,21 +2105,8 @@ object EventsBatch extends graft.Family {
       LEFT JOIN c ON v.user_id = c.user_id
       LEFT JOIN p ON v.user_id = p.user_id""",
 
-    "evt_conversion_latency" -> """
-      WITH v AS (
-        SELECT user_id, min(ts) AS t_view FROM events
-        WHERE event_type = 'view' GROUP BY 1
-      ), c AS (
-        SELECT e.user_id, min(e.ts) AS t_click
-        FROM events e JOIN v ON e.user_id = v.user_id
-        WHERE e.event_type = 'click' AND e.ts > v.t_view
-        GROUP BY 1
-      ), p AS (
-        SELECT e.user_id, min(e.ts) AS t_purchase
-        FROM events e JOIN c ON e.user_id = c.user_id
-        WHERE e.event_type = 'purchase' AND e.ts > c.t_click
-        GROUP BY 1
-      ), lat AS (
+    "evt_conversion_latency" -> s"""
+      WITH $funnelCtes, lat AS (
         SELECT CAST(date_diff('second', v.t_view, p.t_purchase) AS DOUBLE)
                  AS latency_s
         FROM v JOIN p ON v.user_id = p.user_id
@@ -2182,23 +2189,11 @@ object EventsBatch extends graft.Family {
         ON p.user_id = c.user_id
        AND c.ts <= p.ts AND p.ts <= c.ts + INTERVAL 1 HOUR""",
 
-    "join_interval" -> """
-      SELECT s.event_id AS iv_id, count(*) AS n_clicks,
-             min(c.ts) AS first_click
-      FROM (SELECT * FROM events WHERE event_type = 'signup') s
-      JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        ON c.ts >= s.ts AND c.ts < s.ts + INTERVAL 90 MINUTE
-      GROUP BY s.event_id""",
+    "join_interval" -> intervalJoinTwin,
 
     // identical semantics through the native broadcast range join —
     // hash parity proves native ≡ bucket-composed ≡ this brute force
-    "join_interval_native" -> """
-      SELECT s.event_id AS iv_id, count(*) AS n_clicks,
-             min(c.ts) AS first_click
-      FROM (SELECT * FROM events WHERE event_type = 'signup') s
-      JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        ON c.ts >= s.ts AND c.ts < s.ts + INTERVAL 90 MINUTE
-      GROUP BY s.event_id""",
+    "join_interval_native" -> intervalJoinTwin,
 
     "join_asof_forward" -> """
       SELECT p.event_id, p.user_id, p.ts, c.ts AS next_click_ts
@@ -2246,13 +2241,8 @@ object EventsBatch extends graft.Family {
              CAST(count(*) AS BIGINT) AS n_points
       FROM run""",
 
-    "evt_gap_report" -> """
-      WITH g AS (
-        SELECT event_type,
-               epoch_us(ts) - lag(epoch_us(ts)) OVER (
-                 PARTITION BY event_type
-                 ORDER BY epoch_us(ts), event_id) AS gap
-        FROM events)
+    "evt_gap_report" -> s"""
+      WITH $interArrivalCte
       SELECT event_type,
              CAST(sum(CASE WHEN gap > 3600000000 THEN 1 ELSE 0 END)
                AS BIGINT) AS n_outages,
@@ -2262,13 +2252,8 @@ object EventsBatch extends graft.Family {
       FROM g WHERE gap IS NOT NULL
       GROUP BY event_type""",
 
-    "evt_interarrival" -> """
-      WITH g AS (
-        SELECT event_type,
-               epoch_us(ts) - lag(epoch_us(ts)) OVER (
-                 PARTITION BY event_type
-                 ORDER BY epoch_us(ts), event_id) AS gap
-        FROM events)
+    "evt_interarrival" -> s"""
+      WITH $interArrivalCte
       SELECT event_type, CAST(count(*) AS BIGINT) AS n_gaps,
              CAST(sum(gap) // count(*) AS BIGINT) AS mean_gap_us,
              CAST(quantile_disc(gap, 0.5) AS BIGINT) AS p50_gap_us,

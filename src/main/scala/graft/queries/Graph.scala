@@ -1107,18 +1107,10 @@ object Graph extends graft.Family {
       val edges = graft.core.Bounded.collect(kept, 1024,
         "graph_components above-mean edges (nation-domain, <= 25^2)")
         .map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x
-        else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (u, v) =>
-        val (ru, rv) = (find(u), find(v))
-        if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
-      }
+      val uf = new graft.core.MinUnionFind
+      edges.foreach { case (u, v) => uf.union(u, v) }
       val labeled = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(n => (n, find(n))).toSeq
+        .map(n => (n, uf.find(n))).toSeq
       import s.implicits._
       val compDf = s.createDataset(labeled).toDF("node", "comp")
       nation
@@ -1154,17 +1146,8 @@ object Graph extends graft.Family {
           1024, "graph_mst nation-domain edges (<= 25^2)")
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .sortBy { case (a, b, w) => (-w, a, b) }
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x
-        else { val r = find(p); parent(x) = r; r }
-      }
-      val chosen = edges.filter { case (a, b, _) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra == rb) false
-        else { parent(math.max(ra, rb)) = math.min(ra, rb); true }
-      }
+      val uf = new graft.core.MinUnionFind
+      val chosen = edges.filter { case (a, b, _) => uf.union(a, b) }
       import s.implicits._
       s.createDataset(chosen.toSeq).toDF("a", "b", "wu")
         .select(col("a"), col("b"), col("wu"),
@@ -1196,6 +1179,19 @@ object Graph extends graft.Family {
         .as("wu"))
   }
 
+  /** DuckDB replay of [[exactEdgesBuild]]: `eedges(src, dst, wu)`. */
+  private val exactEdgesCte =
+    """eedges AS (
+      |    SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+      |           sum(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT)
+      |               * (100 - CAST(ROUND(l.l_discount * 100) AS BIGINT)))
+      |             AS wu
+      |    FROM lineitem l
+      |    JOIN orders o   ON l.l_orderkey = o.o_orderkey
+      |    JOIN customer c ON o.o_custkey  = c.c_custkey
+      |    JOIN supplier s ON l.l_suppkey  = s.s_suppkey
+      |    GROUP BY 1, 2)""".stripMargin
+
   private val edgesCte =
     """edges AS (
       |    SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
@@ -1215,6 +1211,36 @@ object Graph extends graft.Family {
       |                                ORDER BY w DESC, dst) AS rn
       |      FROM edges WHERE src <> dst)
       |    WHERE rn <= 3)""".stripMargin
+
+  /** DuckDB replay of [[undirectedSparseEdges]]: `und(a, b)`, a < b. */
+  private val undCte =
+    s"""$sparseCte,
+      |  und AS (
+      |    SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+      |    FROM sparse)""".stripMargin
+
+  /** `bi(u, v)`: both directions of every `und` edge, as BIGINT. */
+  private val biCtes =
+    s"""$undCte,
+      |  bi AS (SELECT CAST(a AS BIGINT) AS u, CAST(b AS BIGINT) AS v
+      |         FROM und
+      |         UNION ALL
+      |         SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM und)""".stripMargin
+
+  /** `deg(node, deg)`: each node's degree in `und`. */
+  private val undDegCtes =
+    s"""$undCte,
+      |  deg AS (
+      |    SELECT node, count(*) AS deg FROM (
+      |      SELECT a AS node FROM und UNION ALL SELECT b FROM und)
+      |    GROUP BY node)""".stripMargin
+
+  /** `adj(u, v)`: both directions of every `und` edge. */
+  private val undAdjCtes =
+    s"""$undCte,
+      |  adj AS (
+      |    SELECT a AS u, b AS v FROM und
+      |    UNION ALL SELECT b, a FROM und)""".stripMargin
 
   /** PageRank twin: the 10 supersteps unroll to 10 chained CTEs (DuckDB,
     * like Postgres, disallows aggregates in a recursive term). Same math,
@@ -1262,14 +1288,7 @@ object Graph extends graft.Family {
       |    SELECT p.node, coalesce(u.lbl, p.lbl) AS lbl
       |    FROM l${i - 1} p LEFT JOIN u$i u ON u.node = p.node)""".stripMargin
     }.mkString
-    s"""$sparseCte,
-      |  und AS (
-      |    SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      |    FROM sparse),
-      |  bi AS (SELECT CAST(a AS BIGINT) AS u, CAST(b AS BIGINT) AS v
-      |         FROM und
-      |         UNION ALL
-      |         SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM und),
+    s"""$biCtes,
       |  l0 AS (SELECT CAST(n_nationkey AS BIGINT) AS node,
       |                CAST(n_nationkey AS BIGINT) AS lbl FROM nation)$rounds"""
       .stripMargin
@@ -1411,14 +1430,7 @@ object Graph extends graft.Family {
       |    SELECT p.node, CAST(coalesce(u.hn, 0) AS BIGINT) AS h
       |    FROM h${i - 1} p LEFT JOIN u$i u ON u.node = p.node)""".stripMargin
     }.mkString
-    s"""WITH $sparseCte,
-      |  und AS (
-      |    SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      |    FROM sparse),
-      |  bi AS (SELECT CAST(a AS BIGINT) AS u, CAST(b AS BIGINT) AS v
-      |         FROM und
-      |         UNION ALL
-      |         SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM und),
+    s"""WITH $biCtes,
       |  deg AS (SELECT u AS node, count(*) AS dg FROM bi GROUP BY 1),
       |  h0 AS (
       |    SELECT CAST(n_nationkey AS BIGINT) AS node,
@@ -1445,14 +1457,7 @@ object Graph extends graft.Family {
     }.mkString
     val unions = (1 to 6).map(k =>
       s"SELECT s, t, c, $k AS k FROM w$k").mkString("\n      |  UNION ALL ")
-    s"""$sparseCte,
-      |  und AS (
-      |    SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      |    FROM sparse),
-      |  bi AS (SELECT CAST(a AS BIGINT) AS u, CAST(b AS BIGINT) AS v
-      |         FROM und
-      |         UNION ALL
-      |         SELECT CAST(b AS BIGINT), CAST(a AS BIGINT) FROM und),
+    s"""$biCtes,
       |  w1 AS (SELECT u AS s, v AS t, CAST(1 AS BIGINT) AS c FROM bi)$powers,
       |  allw AS (
       |  $unions),
@@ -1687,10 +1692,7 @@ object Graph extends graft.Family {
     // hop-BFS via a depth-capped recursive walk (depth < 6 mirrors the
     // engine's 6-hop metric cap); 1/d summed as exact 60/d integers
     "graph_harmonic_centrality" ->
-      s"""WITH RECURSIVE $sparseCte,
-        |  und AS (
-        |    SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        |    FROM sparse),
+      s"""WITH RECURSIVE $undCte,
         |  bi AS (SELECT a AS s, b AS d FROM und
         |         UNION ALL SELECT b, a FROM und),
         |  walk(src, node, depth) AS (
@@ -1713,10 +1715,7 @@ object Graph extends graft.Family {
         |ORDER BY n_name""".stripMargin,
 
     "graph_triangles" ->
-      s"""WITH $sparseCte,
-        |  und AS (
-        |    SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        |    FROM sparse),
+      s"""WITH $undCte,
         |  tri AS (
         |    SELECT e1.a AS x, e1.b AS y, e2.b AS z
         |    FROM und e1
@@ -1732,14 +1731,7 @@ object Graph extends graft.Family {
         |ORDER BY n.n_name""".stripMargin,
 
     "graph_clustering_coeff" ->
-      s"""WITH $sparseCte,
-        |  und AS (
-        |    SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        |    FROM sparse),
-        |  deg AS (
-        |    SELECT node, count(*) AS deg FROM (
-        |      SELECT a AS node FROM und UNION ALL SELECT b FROM und)
-        |    GROUP BY node),
+      s"""WITH $undDegCtes,
         |  tri AS (
         |    SELECT e1.a AS x, e1.b AS y, e2.b AS z
         |    FROM und e1
@@ -1762,13 +1754,7 @@ object Graph extends graft.Family {
         |ORDER BY n.n_name""".stripMargin,
 
     "graph_adamic_adar" ->
-      s"""WITH $sparseCte,
-        |  und AS (
-        |    SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        |    FROM sparse),
-        |  adj AS (
-        |    SELECT a AS u, b AS v FROM und
-        |    UNION ALL SELECT b, a FROM und),
+      s"""WITH $undAdjCtes,
         |  deg AS (SELECT v AS w, count(*) AS degw FROM adj GROUP BY v),
         |  wedges AS (
         |    SELECT p.u AS a, q.u AS b, p.v AS w
@@ -1786,13 +1772,7 @@ object Graph extends graft.Family {
         |LIMIT 10""".stripMargin,
 
     "graph_node_jaccard" ->
-      s"""WITH $sparseCte,
-        |  und AS (
-        |    SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        |    FROM sparse),
-        |  adj AS (
-        |    SELECT a AS u, b AS v FROM und
-        |    UNION ALL SELECT b, a FROM und),
+      s"""WITH $undAdjCtes,
         |  deg AS (SELECT u AS w, count(*) AS degw FROM adj GROUP BY u),
         |  wedges AS (
         |    SELECT p.u AS a, q.u AS b
@@ -1868,14 +1848,7 @@ object Graph extends graft.Family {
         |ORDER BY n.n_name""".stripMargin,
 
     "graph_assortativity" ->
-      s"""WITH $sparseCte,
-        |  und AS (
-        |    SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        |    FROM sparse),
-        |  deg AS (
-        |    SELECT node, count(*) AS deg FROM (
-        |      SELECT a AS node FROM und UNION ALL SELECT b FROM und)
-        |    GROUP BY node),
+      s"""WITH $undDegCtes,
         |  dir AS (
         |    SELECT a AS u, b AS v FROM und
         |    UNION ALL SELECT b, a FROM und),
@@ -1896,16 +1869,7 @@ object Graph extends graft.Family {
     // terminates at the transitive closure; min over reached labels ≡ the
     // min-label-propagation fixpoint.
     "graph_components" ->
-      """WITH RECURSIVE eedges AS (
-        |    SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-        |           sum(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT)
-        |               * (100 - CAST(ROUND(l.l_discount * 100) AS BIGINT)))
-        |             AS wu
-        |    FROM lineitem l
-        |    JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        |    JOIN customer c ON o.o_custkey  = c.c_custkey
-        |    JOIN supplier s ON l.l_suppkey  = s.s_suppkey
-        |    GROUP BY 1, 2),
+      s"""WITH RECURSIVE $exactEdgesCte,
         |  und AS (
         |    SELECT least(src, dst) AS a, greatest(src, dst) AS b,
         |           sum(wu) AS wu
@@ -1927,16 +1891,7 @@ object Graph extends graft.Family {
     // endpoints are not connected by strictly earlier edges under the
     // (wu DESC, a, b) total order
     "graph_mst" ->
-      """WITH RECURSIVE eedges AS (
-        |    SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-        |           sum(CAST(ROUND(l.l_extendedprice * 100) AS BIGINT)
-        |               * (100 - CAST(ROUND(l.l_discount * 100) AS BIGINT)))
-        |             AS wu
-        |    FROM lineitem l
-        |    JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        |    JOIN customer c ON o.o_custkey  = c.c_custkey
-        |    JOIN supplier s ON l.l_suppkey  = s.s_suppkey
-        |    GROUP BY 1, 2),
+      s"""WITH RECURSIVE $exactEdgesCte,
         |  und AS (
         |    SELECT least(src, dst) AS a, greatest(src, dst) AS b,
         |           CAST(sum(wu) AS BIGINT) AS wu

@@ -203,6 +203,38 @@ object MlTrain extends graft.Family {
       dsum(y * y, precision).as("syy"))
   }
 
+  /** DuckDB replay of [[linregMoments]]: the select list of the same
+    * aggregate, with the same names. */
+  private def linregSums(p: String, n: String = "n",
+                         diag: String = ""): Seq[String] = Seq(
+    s"CAST(count(*) AS DOUBLE) AS $n",
+    s"CAST(sum(x1) AS DOUBLE) AS ${p}1", s"CAST(sum(x2) AS DOUBLE) AS ${p}2",
+    s"CAST(sum(x1*x1) AS DOUBLE) AS ${p}11$diag",
+    s"CAST(sum(x1*x2) AS DOUBLE) AS ${p}12",
+    s"CAST(sum(x2*x2) AS DOUBLE) AS ${p}22$diag",
+    s"CAST(sum(y) AS DOUBLE) AS ${p}y",
+    s"CAST(sum(x1*y) AS DOUBLE) AS ${p}1y",
+    s"CAST(sum(x2*y) AS DOUBLE) AS ${p}2y",
+    s"CAST(sum(y*y) AS DOUBLE) AS ${p}yy")
+
+  /** DuckDB replay of the OLS frame `raw(y, x1, x2)`: price in cents
+    * on quantity and discount points, each row led by the `lead`
+    * columns. */
+  private def olsRawCte(lead: String = ""): String =
+    s"""raw AS (
+        |  SELECT ${lead}CAST(ROUND(l_extendedprice*100) AS BIGINT) AS y,
+        |         CAST(ROUND(l_quantity) AS BIGINT) AS x1,
+        |         CAST(ROUND(l_discount*100) AS BIGINT) AS x2
+        |  FROM lineitem)""".stripMargin
+
+  /** DuckDB replay of [[pairMoments]]'s select list. */
+  private val pairSums = Seq(
+    "CAST(count(*) AS DOUBLE) AS n",
+    "CAST(sum(x) AS DOUBLE) AS sx", "CAST(sum(y) AS DOUBLE) AS sy",
+    "CAST(sum(x*x) AS DOUBLE) AS sxx",
+    "CAST(sum(x*y) AS DOUBLE) AS sxy",
+    "CAST(sum(y*y) AS DOUBLE) AS syy")
+
   /** The GD classifier's linear score over gdFit's frame. */
   private def gdScore(w0: Double, w1: Double, w2: Double): Column =
     (lit(w0) + lit(w1) * col("x1")) + lit(w2) * col("x2")
@@ -1664,6 +1696,41 @@ object MlTrain extends graft.Family {
         |       FROM s2, g3, nn)"""
       .stripMargin
 
+  /** DuckDB replay of [[GdModel.sg]] after [[logregCtes]]:
+    * `sc(sg, yy)`, every row's sigmoid score and label. */
+  private val gdScoreCte =
+    """sc AS (SELECT 0.5*(1.0 + ((w0 + w1*x1) + w2*x2)/(1.0 + abs((w0 + w1*x1) + w2*x2))) AS sg, yy
+        |       FROM raw, s3)""".stripMargin
+
+  /** DuckDB replay of [[GdModel.binCounts]]: `bins(bin, n, np)`. */
+  private val gdBinCtes =
+    s"""$gdScoreCte,
+        |bins AS (
+        |  SELECT least(CAST(floor(sg*200) AS BIGINT), 199) AS bin,
+        |         count(*) AS n,
+        |         sum(CASE WHEN yy = 1.0 THEN 1 ELSE 0 END) AS np
+        |  FROM sc GROUP BY 1)""".stripMargin
+
+  /** `cum(bin, tp, pp)`: the positives and all rows scored at or above
+    * each bin, the threshold sweep of the PR-style twins. */
+  private val gdCumCtes =
+    s"""$gdBinCtes,
+        |cum AS (
+        |  SELECT bin,
+        |         CAST(sum(np) OVER (ORDER BY bin DESC ROWS BETWEEN
+        |           UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
+        |         CAST(sum(n) OVER (ORDER BY bin DESC ROWS BETWEEN
+        |           UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
+        |  FROM bins)""".stripMargin
+
+  /** DuckDB replay of [[GdModel.byScore]]: `byv(v, n_v, n1_v)`. */
+  private val gdByScoreCtes =
+    """zz AS (SELECT ((w0 + w1*x1) + w2*x2) AS v, yy FROM raw, s3),
+        |byv AS (SELECT v, CAST(count(*) AS BIGINT) AS n_v,
+        |               CAST(sum(CASE WHEN yy = 1.0 THEN 1 ELSE 0 END)
+        |                    AS BIGINT) AS n1_v
+        |        FROM zz GROUP BY v)""".stripMargin
+
   private val nbCtes =
     """toks AS (
         |  SELECT doc_id, lang, w
@@ -1698,6 +1765,16 @@ object MlTrain extends graft.Family {
         |  LEFT JOIN counts k ON k.cls = c.cls AND k.w = t.w
         |  GROUP BY t.doc_id, t.actual, c.cls, c.nd, s.ndall)"""
       .stripMargin
+
+  /** `pred(actual, pred)`: each scored document's top class, after
+    * [[nbCtes]]. */
+  private val nbPredCte =
+    """pred AS (
+        |  SELECT actual, cls AS pred FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY doc_id
+        |        ORDER BY score_ppm DESC, cls) AS rn
+        |    FROM scored)
+        |  WHERE rn = 1)""".stripMargin
 
   /** ml_gbm_stumps twin: the per-cell prediction adjustment of an
     * already-chosen stump `w` (CTE alias), as applied to cell alias `c`. */
@@ -1896,11 +1973,7 @@ object MlTrain extends graft.Family {
         |         CAST(ROUND(l_quantity) AS BIGINT) AS x
         |  FROM lineitem),
         |sums AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n,
-        |         CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
-        |         CAST(sum(x*x) AS DOUBLE) AS sxx,
-        |         CAST(sum(x*y) AS DOUBLE) AS sxy,
-        |         CAST(sum(y*y) AS DOUBLE) AS syy
+        |  SELECT ${sel(pairSums)}
         |  FROM raw),
         |o1 AS (SELECT n, sx, sy, sxy, syy,
         |              (n*sxy - sx*sy) / (n*sxx - sx*sx) AS b FROM sums),
@@ -1926,36 +1999,16 @@ object MlTrain extends graft.Family {
         |         CAST(ROUND(l_discount*100) AS BIGINT) AS x2
         |  FROM lineitem li JOIN supplier s ON li.l_suppkey = s.s_suppkey),
         |sums AS (
-        |  SELECT g, CAST(count(*) AS DOUBLE) AS n,
-        |         CAST(sum(x1) AS DOUBLE) AS s1, CAST(sum(x2) AS DOUBLE) AS s2,
-        |         CAST(sum(x1*x1) AS DOUBLE) AS s11,
-        |         CAST(sum(x1*x2) AS DOUBLE) AS s12,
-        |         CAST(sum(x2*x2) AS DOUBLE) AS s22,
-        |         CAST(sum(y) AS DOUBLE) AS sy,
-        |         CAST(sum(x1*y) AS DOUBLE) AS s1y,
-        |         CAST(sum(x2*y) AS DOUBLE) AS s2y,
-        |         CAST(sum(y*y) AS DOUBLE) AS syy
+        |  SELECT g, ${sel(linregSums("s"))}
         |  FROM raw GROUP BY g),
         |l1 AS (SELECT g, ${sel(linregL1)} FROM sums),
         |l2 AS (SELECT g, ${sel(linregL2)} FROM l1)
         |SELECT g, ${sel(linregL3)} FROM l2""".stripMargin,
 
     "ml_linreg" ->
-      s"""WITH raw AS (
-        |  SELECT CAST(ROUND(l_extendedprice*100) AS BIGINT) AS y,
-        |         CAST(ROUND(l_quantity) AS BIGINT) AS x1,
-        |         CAST(ROUND(l_discount*100) AS BIGINT) AS x2
-        |  FROM lineitem),
+      s"""WITH ${olsRawCte()},
         |sums AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n,
-        |         CAST(sum(x1) AS DOUBLE) AS s1, CAST(sum(x2) AS DOUBLE) AS s2,
-        |         CAST(sum(x1*x1) AS DOUBLE) AS s11,
-        |         CAST(sum(x1*x2) AS DOUBLE) AS s12,
-        |         CAST(sum(x2*x2) AS DOUBLE) AS s22,
-        |         CAST(sum(y) AS DOUBLE) AS sy,
-        |         CAST(sum(x1*y) AS DOUBLE) AS s1y,
-        |         CAST(sum(x2*y) AS DOUBLE) AS s2y,
-        |         CAST(sum(y*y) AS DOUBLE) AS syy
+        |  SELECT ${sel(linregSums("s"))}
         |  FROM raw),
         |l1 AS (SELECT ${sel(linregL1)} FROM sums),
         |l2 AS (SELECT ${sel(linregL2)} FROM l1)
@@ -1969,15 +2022,7 @@ object MlTrain extends graft.Family {
         |         CAST(l_orderkey % 5 AS INTEGER) AS split
         |  FROM lineitem),
         |sums AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n,
-        |         CAST(sum(x1) AS DOUBLE) AS s1, CAST(sum(x2) AS DOUBLE) AS s2,
-        |         CAST(sum(x1*x1) AS DOUBLE) AS s11,
-        |         CAST(sum(x1*x2) AS DOUBLE) AS s12,
-        |         CAST(sum(x2*x2) AS DOUBLE) AS s22,
-        |         CAST(sum(y) AS DOUBLE) AS sy,
-        |         CAST(sum(x1*y) AS DOUBLE) AS s1y,
-        |         CAST(sum(x2*y) AS DOUBLE) AS s2y,
-        |         CAST(sum(y*y) AS DOUBLE) AS syy
+        |  SELECT ${sel(linregSums("s"))}
         |  FROM raw WHERE split >= 2),
         |l1 AS (SELECT ${sel(linregL1)} FROM sums),
         |l2 AS (SELECT ${sel(linregL2)} FROM l1),
@@ -2016,11 +2061,7 @@ object MlTrain extends graft.Family {
         |         CAST(ROUND(l_discount*100) AS BIGINT) AS y
         |  FROM lineitem),
         |sums AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n,
-        |         CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
-        |         CAST(sum(x*x) AS DOUBLE) AS sxx,
-        |         CAST(sum(x*y) AS DOUBLE) AS sxy,
-        |         CAST(sum(y*y) AS DOUBLE) AS syy
+        |  SELECT ${sel(pairSums)}
         |  FROM raw),
         |l1 AS (SELECT n, ${sel(pcaL1)} FROM sums),
         |l2 AS (SELECT ${sel(pcaL2)} FROM l1)
@@ -2044,12 +2085,7 @@ object MlTrain extends graft.Family {
 
     "ml_confusion" ->
       s"""WITH $nbCtes,
-        |pred AS (
-        |  SELECT actual, cls AS pred FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY doc_id
-        |        ORDER BY score_ppm DESC, cls) AS rn
-        |    FROM scored)
-        |  WHERE rn = 1),
+        |$nbPredCte,
         |cl AS (SELECT DISTINCT lang AS cls FROM documents),
         |ba AS (SELECT actual AS cls, count(*) AS n_act,
         |              sum(CASE WHEN actual = pred THEN 1 ELSE 0 END) AS tp
@@ -2064,12 +2100,7 @@ object MlTrain extends graft.Family {
 
     "ml_cohens_kappa" ->
       s"""WITH $nbCtes,
-        |pred AS (
-        |  SELECT actual, cls AS pred FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY doc_id
-        |        ORDER BY score_ppm DESC, cls) AS rn
-        |    FROM scored)
-        |  WHERE rn = 1),
+        |$nbPredCte,
         |ba AS (SELECT actual AS cls, count(*) AS n_act,
         |              sum(CASE WHEN actual = pred THEN 1 ELSE 0 END) AS tp
         |       FROM pred GROUP BY actual),
@@ -2090,22 +2121,9 @@ object MlTrain extends graft.Family {
         |FROM tot""".stripMargin,
 
     "ml_learning_curve" ->
-      s"""WITH raw AS (
-        |  SELECT l_orderkey % 5 AS fold,
-        |         CAST(ROUND(l_extendedprice*100) AS BIGINT) AS y,
-        |         CAST(ROUND(l_quantity) AS BIGINT) AS x1,
-        |         CAST(ROUND(l_discount*100) AS BIGINT) AS x2
-        |  FROM lineitem),
+      s"""WITH ${olsRawCte("l_orderkey % 5 AS fold, ")},
         |byfold AS (
-        |  SELECT fold, CAST(count(*) AS DOUBLE) AS fn,
-        |         CAST(sum(x1) AS DOUBLE) AS f1, CAST(sum(x2) AS DOUBLE) AS f2,
-        |         CAST(sum(x1*x1) AS DOUBLE) AS f11,
-        |         CAST(sum(x1*x2) AS DOUBLE) AS f12,
-        |         CAST(sum(x2*x2) AS DOUBLE) AS f22,
-        |         CAST(sum(y) AS DOUBLE) AS fy,
-        |         CAST(sum(x1*y) AS DOUBLE) AS f1y,
-        |         CAST(sum(x2*y) AS DOUBLE) AS f2y,
-        |         CAST(sum(y*y) AS DOUBLE) AS fyy
+        |  SELECT fold, ${sel(linregSums("f", n = "fn"))}
         |  FROM raw WHERE fold <> 0 GROUP BY fold),
         |cum AS (
         |  SELECT fold AS k,
@@ -2176,8 +2194,7 @@ object MlTrain extends graft.Family {
 
     "ml_calibration" ->
       s"""WITH $logregCtes,
-        |sc AS (SELECT 0.5*(1.0 + ((w0 + w1*x1) + w2*x2)/(1.0 + abs((w0 + w1*x1) + w2*x2))) AS sg, yy
-        |       FROM raw, s3)
+        |$gdScoreCte
         |SELECT least(CAST(floor(sg*200) AS BIGINT), 199) AS bin,
         |       count(*) AS n,
         |       round(avg(sg), 6) AS pred_rate,
@@ -2242,11 +2259,7 @@ object MlTrain extends graft.Family {
 
     "ml_somers_d" ->
       s"""WITH $logregCtes,
-        |zz AS (SELECT ((w0 + w1*x1) + w2*x2) AS v, yy FROM raw, s3),
-        |byv AS (SELECT v, CAST(count(*) AS BIGINT) AS n_v,
-        |               CAST(sum(CASE WHEN yy = 1.0 THEN 1 ELSE 0 END)
-        |                    AS BIGINT) AS n1_v
-        |        FROM zz GROUP BY v),
+        |$gdByScoreCtes,
         |cum AS (SELECT *, CAST(sum(n_v) OVER (ORDER BY v) AS BIGINT)
         |                    AS cum_n,
         |               CAST(sum(n1_v) OVER (ORDER BY v) AS BIGINT)
@@ -2268,11 +2281,7 @@ object MlTrain extends graft.Family {
 
     "ml_lift_table" ->
       s"""WITH $logregCtes,
-        |zz AS (SELECT ((w0 + w1*x1) + w2*x2) AS v, yy FROM raw, s3),
-        |byv AS (SELECT v, CAST(count(*) AS BIGINT) AS n_v,
-        |               CAST(sum(CASE WHEN yy = 1.0 THEN 1 ELSE 0 END)
-        |                    AS BIGINT) AS n1_v
-        |        FROM zz GROUP BY v),
+        |$gdByScoreCtes,
         |cum AS (SELECT *, CAST(sum(n_v) OVER (ORDER BY v DESC)
         |                    AS BIGINT) AS cum_n
         |        FROM byv),
@@ -2296,8 +2305,7 @@ object MlTrain extends graft.Family {
 
     "ml_isotonic" ->
       s"""WITH $logregCtes,
-        |sc AS (SELECT 0.5*(1.0 + ((w0 + w1*x1) + w2*x2)/(1.0 + abs((w0 + w1*x1) + w2*x2))) AS sg, yy
-        |       FROM raw, s3),
+        |$gdScoreCte,
         |bins AS (SELECT least(CAST(floor(sg*200) AS BIGINT), 199) AS bin,
         |                CAST(count(*) AS BIGINT) AS n,
         |                CAST(sum(CASE WHEN yy = 1.0 THEN 1 ELSE 0 END)
@@ -2323,8 +2331,7 @@ object MlTrain extends graft.Family {
 
     "ml_mcc" ->
       s"""WITH $logregCtes,
-        |sc AS (SELECT 0.5*(1.0 + ((w0 + w1*x1) + w2*x2)/(1.0 + abs((w0 + w1*x1) + w2*x2))) AS sg, yy
-        |       FROM raw, s3),
+        |$gdScoreCte,
         |cells AS (
         |  SELECT CASE WHEN sg >= 0.5 THEN 1 ELSE 0 END AS p,
         |         CAST(yy AS BIGINT) AS y
@@ -2350,8 +2357,7 @@ object MlTrain extends graft.Family {
 
     "ml_brier" ->
       s"""WITH $logregCtes,
-        |sc AS (SELECT 0.5*(1.0 + ((w0 + w1*x1) + w2*x2)/(1.0 + abs((w0 + w1*x1) + w2*x2))) AS sg, yy
-        |       FROM raw, s3),
+        |$gdScoreCte,
         |q AS (
         |  SELECT CAST(floor(1e6 * (sg - yy) * (sg - yy) + 0.5) AS BIGINT)
         |           AS sq_ppm
@@ -2388,20 +2394,7 @@ object MlTrain extends graft.Family {
 
     "ml_pr_curve" ->
       s"""WITH $logregCtes,
-        |sc AS (SELECT 0.5*(1.0 + ((w0 + w1*x1) + w2*x2)/(1.0 + abs((w0 + w1*x1) + w2*x2))) AS sg, yy
-        |       FROM raw, s3),
-        |bins AS (
-        |  SELECT least(CAST(floor(sg*200) AS BIGINT), 199) AS bin,
-        |         count(*) AS n,
-        |         sum(CASE WHEN yy = 1.0 THEN 1 ELSE 0 END) AS np
-        |  FROM sc GROUP BY 1),
-        |cum AS (
-        |  SELECT bin,
-        |         CAST(sum(np) OVER (ORDER BY bin DESC ROWS BETWEEN
-        |           UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
-        |         CAST(sum(n) OVER (ORDER BY bin DESC ROWS BETWEEN
-        |           UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
-        |  FROM bins),
+        |$gdCumCtes,
         |tot AS (SELECT CAST(sum(np) AS BIGINT) AS npos_total FROM bins)
         |SELECT bin, tp, pp,
         |       CAST(floor(1e6*tp/pp + 0.5) AS BIGINT) AS prec_ppm,
@@ -2455,20 +2448,7 @@ object MlTrain extends graft.Family {
 
     "ml_youden_j" ->
       s"""WITH $logregCtes,
-        |sc AS (SELECT 0.5*(1.0 + ((w0 + w1*x1) + w2*x2)/(1.0 + abs((w0 + w1*x1) + w2*x2))) AS sg, yy
-        |       FROM raw, s3),
-        |bins AS (
-        |  SELECT least(CAST(floor(sg*200) AS BIGINT), 199) AS bin,
-        |         count(*) AS n,
-        |         sum(CASE WHEN yy = 1.0 THEN 1 ELSE 0 END) AS np
-        |  FROM sc GROUP BY 1),
-        |cum AS (
-        |  SELECT bin,
-        |         CAST(sum(np) OVER (ORDER BY bin DESC ROWS BETWEEN
-        |           UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
-        |         CAST(sum(n) OVER (ORDER BY bin DESC ROWS BETWEEN
-        |           UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
-        |  FROM bins),
+        |$gdCumCtes,
         |tot AS (SELECT CAST(sum(np) AS BIGINT) AS n1,
         |               CAST(sum(n - np) AS BIGINT) AS n0 FROM bins),
         |scored AS (
@@ -2485,8 +2465,7 @@ object MlTrain extends graft.Family {
 
     "ml_ece" ->
       s"""WITH $logregCtes,
-        |sc AS (SELECT 0.5*(1.0 + ((w0 + w1*x1) + w2*x2)/(1.0 + abs((w0 + w1*x1) + w2*x2))) AS sg, yy
-        |       FROM raw, s3),
+        |$gdScoreCte,
         |bins AS (
         |  SELECT least(CAST(floor(sg*200) AS BIGINT), 199) AS bin,
         |         CAST(count(*) AS BIGINT) AS n,
@@ -2508,20 +2487,7 @@ object MlTrain extends graft.Family {
 
     "ml_best_f1" ->
       s"""WITH $logregCtes,
-        |sc AS (SELECT 0.5*(1.0 + ((w0 + w1*x1) + w2*x2)/(1.0 + abs((w0 + w1*x1) + w2*x2))) AS sg, yy
-        |       FROM raw, s3),
-        |bins AS (
-        |  SELECT least(CAST(floor(sg*200) AS BIGINT), 199) AS bin,
-        |         count(*) AS n,
-        |         sum(CASE WHEN yy = 1.0 THEN 1 ELSE 0 END) AS np
-        |  FROM sc GROUP BY 1),
-        |cum AS (
-        |  SELECT bin,
-        |         CAST(sum(np) OVER (ORDER BY bin DESC ROWS BETWEEN
-        |           UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS tp,
-        |         CAST(sum(n) OVER (ORDER BY bin DESC ROWS BETWEEN
-        |           UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pp
-        |  FROM bins),
+        |$gdCumCtes,
         |tot AS (SELECT CAST(sum(np) AS BIGINT) AS p_total FROM bins),
         |scored AS (
         |  SELECT bin, tp, pp, p_total,
@@ -2535,13 +2501,7 @@ object MlTrain extends graft.Family {
 
     "ml_ks_model" ->
       s"""WITH $logregCtes,
-        |sc AS (SELECT 0.5*(1.0 + ((w0 + w1*x1) + w2*x2)/(1.0 + abs((w0 + w1*x1) + w2*x2))) AS sg, yy
-        |       FROM raw, s3),
-        |bins AS (
-        |  SELECT least(CAST(floor(sg*200) AS BIGINT), 199) AS bin,
-        |         count(*) AS n,
-        |         sum(CASE WHEN yy = 1.0 THEN 1 ELSE 0 END) AS np
-        |  FROM sc GROUP BY 1),
+        |$gdBinCtes,
         |cum AS (
         |  SELECT bin,
         |         CAST(sum(np) OVER (ORDER BY bin ROWS BETWEEN UNBOUNDED
@@ -2657,21 +2617,9 @@ object MlTrain extends graft.Family {
         |SELECT CAST(2 AS BIGINT), pol, q, err, w, alpha_ppm FROM a2""".stripMargin,
 
     "ml_ridge" ->
-      s"""WITH raw AS (
-        |  SELECT CAST(ROUND(l_extendedprice*100) AS BIGINT) AS y,
-        |         CAST(ROUND(l_quantity) AS BIGINT) AS x1,
-        |         CAST(ROUND(l_discount*100) AS BIGINT) AS x2
-        |  FROM lineitem),
+      s"""WITH ${olsRawCte()},
         |sums AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n,
-        |         CAST(sum(x1) AS DOUBLE) AS s1, CAST(sum(x2) AS DOUBLE) AS s2,
-        |         CAST(sum(x1*x1) AS DOUBLE) AS s11r,
-        |         CAST(sum(x1*x2) AS DOUBLE) AS s12,
-        |         CAST(sum(x2*x2) AS DOUBLE) AS s22r,
-        |         CAST(sum(y) AS DOUBLE) AS sy,
-        |         CAST(sum(x1*y) AS DOUBLE) AS s1y,
-        |         CAST(sum(x2*y) AS DOUBLE) AS s2y,
-        |         CAST(sum(y*y) AS DOUBLE) AS syy
+        |  SELECT ${sel(linregSums("s", diag = "r"))}
         |  FROM raw),
         |pen AS (SELECT n, s1, s2, s12, sy, s1y, s2y, syy,
         |               s11r + 10000.0 AS s11, s22r + 10000.0 AS s22
@@ -2681,22 +2629,9 @@ object MlTrain extends graft.Family {
         |SELECT ${sel(linregL3.filter(_.contains(" AS b")))} FROM l2""".stripMargin,
 
     "ml_kfold_cv" ->
-      s"""WITH raw AS (
-        |  SELECT l_orderkey % 5 AS fold,
-        |         CAST(ROUND(l_extendedprice*100) AS BIGINT) AS y,
-        |         CAST(ROUND(l_quantity) AS BIGINT) AS x1,
-        |         CAST(ROUND(l_discount*100) AS BIGINT) AS x2
-        |  FROM lineitem),
+      s"""WITH ${olsRawCte("l_orderkey % 5 AS fold, ")},
         |byfold AS (
-        |  SELECT fold, CAST(count(*) AS DOUBLE) AS fn,
-        |         CAST(sum(x1) AS DOUBLE) AS f1, CAST(sum(x2) AS DOUBLE) AS f2,
-        |         CAST(sum(x1*x1) AS DOUBLE) AS f11,
-        |         CAST(sum(x1*x2) AS DOUBLE) AS f12,
-        |         CAST(sum(x2*x2) AS DOUBLE) AS f22,
-        |         CAST(sum(y) AS DOUBLE) AS fy,
-        |         CAST(sum(x1*y) AS DOUBLE) AS f1y,
-        |         CAST(sum(x2*y) AS DOUBLE) AS f2y,
-        |         CAST(sum(y*y) AS DOUBLE) AS fyy
+        |  SELECT fold, ${sel(linregSums("f", n = "fn"))}
         |  FROM raw GROUP BY fold),
         |loo AS (
         |  SELECT fold,

@@ -72,6 +72,15 @@ object Relational extends graft.Family {
   private[queries] def supplierAxis(salt: String): Column =
     md5Prefix(concat(lit(salt), col("s_suppkey").cast("string")), 4) % 10000
 
+  /** DuckDB replay of [[supplierAxis]]: every supplier `k` with its grid
+    * coordinates `xi` and `yi`. */
+  private val supplierPointsSql: String = """SELECT s_suppkey AS k,
+               CAST(('0x' || substr(md5('gx:' || CAST(s_suppkey AS VARCHAR)),
+                 1, 4)) AS BIGINT) % 10000 AS xi,
+               CAST(('0x' || substr(md5('gy:' || CAST(s_suppkey AS VARCHAR)),
+                 1, 4)) AS BIGINT) % 10000 AS yi
+        FROM supplier"""
+
   val defs: Map[String, Q] = Map(
     // ---- Aggregations --------------------------------------------------
     // TPC-H Q1 shape: multi-key hash aggregate with sum/avg/count.
@@ -1475,14 +1484,9 @@ object Relational extends graft.Family {
        AND a.c_custkey < b.c_custkey
       WHERE levenshtein(a.c_name, b.c_name) <= 1""",
 
-    "join_spatial_knn" -> """
+    "join_spatial_knn" -> s"""
       WITH pts AS (
-        SELECT s_suppkey AS k,
-               CAST(('0x' || substr(md5('gx:' || CAST(s_suppkey AS VARCHAR)),
-                 1, 4)) AS BIGINT) % 10000 AS xi,
-               CAST(('0x' || substr(md5('gy:' || CAST(s_suppkey AS VARCHAR)),
-                 1, 4)) AS BIGINT) % 10000 AS yi
-        FROM supplier
+        $supplierPointsSql
       ), cand AS (
         SELECT a.k AS anchor, b.k AS nb,
                (a.xi-b.xi)*(a.xi-b.xi) + (a.yi-b.yi)*(a.yi-b.yi) AS d2
@@ -1496,14 +1500,9 @@ object Relational extends graft.Family {
         FROM cand)
       WHERE rn <= 3""",
 
-    "join_spatial_grid" -> """
+    "join_spatial_grid" -> s"""
       WITH pts AS (
-        SELECT s_suppkey AS k,
-               CAST(('0x' || substr(md5('gx:' || CAST(s_suppkey AS VARCHAR)),
-                 1, 4)) AS BIGINT) % 10000 AS xi,
-               CAST(('0x' || substr(md5('gy:' || CAST(s_suppkey AS VARCHAR)),
-                 1, 4)) AS BIGINT) % 10000 AS yi
-        FROM supplier)
+        $supplierPointsSql)
       SELECT a.k AS k1, b.k AS k2,
              ROUND(SQRT(CAST((a.xi-b.xi)*(a.xi-b.xi)
                            + (a.yi-b.yi)*(a.yi-b.yi) AS DOUBLE))/10.0, 3)
@@ -1512,14 +1511,9 @@ object Relational extends graft.Family {
       WHERE (a.xi-b.xi)*(a.xi-b.xi) + (a.yi-b.yi)*(a.yi-b.yi) <= 1440000
       ORDER BY k1, k2""",
 
-    "spatial_dbscan" -> """
+    "spatial_dbscan" -> s"""
       WITH RECURSIVE pts AS (
-        SELECT s_suppkey AS k,
-               CAST(('0x' || substr(md5('gx:' || CAST(s_suppkey AS VARCHAR)),
-                 1, 4)) AS BIGINT) % 10000 AS xi,
-               CAST(('0x' || substr(md5('gy:' || CAST(s_suppkey AS VARCHAR)),
-                 1, 4)) AS BIGINT) % 10000 AS yi
-        FROM supplier
+        $supplierPointsSql
       ), prs AS (
         SELECT a.k AS k1, b.k AS k2
         FROM pts a JOIN pts b ON a.k < b.k

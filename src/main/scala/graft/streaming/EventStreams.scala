@@ -255,32 +255,9 @@ object EventStreams {
     * beyond-session_window path of SURVEY §2): emits a session row when a
     * user goes quiet past the processing-time timeout. */
   def sessionize(events: Dataset[Ev], gapMs: Long = 30 * 60 * 1000L)
-      : Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionOut(uid, s.n, s.total))
-          } else {
-            var s = state.getOption.getOrElse(SessionState(0L, 0.0, 0L))
-            var closed = List.empty[SessionOut]
-            rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-              if (s.n > 0 && e.ts.getTime - s.lastTs >= gapMs) {
-                closed ::= SessionOut(uid, s.n, s.total)
-                s = SessionState(0L, 0.0, 0L)
-              }
-              s = SessionState(s.n + 1, s.total + e.value, e.ts.getTime)
-            }
-            state.update(s)
-            state.setTimeoutDuration(gapMs)
-            closed.reverseIterator
-          }
-      }
-  }
+      : Dataset[SessionOut] =
+    sessions(events, GroupStateTimeout.ProcessingTimeTimeout, gapMs)(
+      (state, _) => state.setTimeoutDuration(gapMs))
 
   /** Event-time sessionization via flatMapGroupsWithState with
     * EventTimeTimeout: sessions close when the WATERMARK passes the last
@@ -289,12 +266,23 @@ object EventStreams {
     * which ProcessingTimeTimeout cannot guarantee). Requires a watermark
     * on `ts` (set here). */
   def sessionizeEventTime(events: Dataset[Ev], gapMs: Long = 30 * 60 * 1000L)
+      : Dataset[SessionOut] =
+    sessions(events.withWatermark("ts", "10 minutes"),
+      GroupStateTimeout.EventTimeTimeout, gapMs)(
+      (state, s) => state.setTimeoutTimestamp(s.lastTs + gapMs))
+
+  /** The per-user session state machine both sessionizers run: a timed-out
+    * session is emitted and dropped; otherwise the batch's events extend
+    * the open session in (ts, event_id) order, a gap of `gapMs` or more
+    * closes it, and `rearm` sets the timeout of the session left open. */
+  private def sessions(events: Dataset[Ev], timeout: GroupStateTimeout,
+                       gapMs: Long)(
+      rearm: (GroupState[SessionState], SessionState) => Unit)
       : Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    events.withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
+    events.groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        OutputMode.Append, timeout) {
         (uid: Long, rows: Iterator[Ev], state: GroupState[SessionState]) =>
           if (state.hasTimedOut) {
             val s = state.get
@@ -311,8 +299,7 @@ object EventStreams {
               s = SessionState(s.n + 1, s.total + e.value, e.ts.getTime)
             }
             state.update(s)
-            // close when the event-time watermark passes lastTs + gap
-            state.setTimeoutTimestamp(s.lastTs + gapMs)
+            rearm(state, s)
             closed.reverseIterator
           }
       }

@@ -125,4 +125,18 @@ class AggregatorsSpec extends AnyFunSuite {
     // 16 permutations, p = 1/3 ⇒ expect ~5 agreements; allow a wide band
     assert(agree >= 1 && agree <= 11, s"agreement $agree implausible for J=1/3")
   }
+
+  test("typed-aggregate query plans name each aggregator without an object hash") {
+    val queries = Seq("agg_custom_udaf", "agg_hdr_quantiles", "llm_simhash",
+      "llm_simhash_clusters", "llm_simhash_neardup", "llm_simhash_poly",
+      "win_topk_agg")
+    val named = "(KahanSum|DecHistAgg|MinHashAgg|SimHashAgg|TopKAgg)".r
+    queries.foreach { q =>
+      val plan = SparkEntry.queries(q)(spark, TestSession.sf).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      assert(named.findFirstIn(plan).isDefined, s"$q: no typed aggregate\n$plan")
+      assert("""[\w$]@[0-9a-f]{4,}""".r.findFirstIn(plan).isEmpty,
+        s"$q: plan prints an identity hash\n$plan")
+    }
+  }
 }

@@ -437,6 +437,96 @@ class StreamingSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
   }
 
+  /** Every row `op` emits over the files of `dir`, read one per
+    * micro-batch through a checkpointed, batch-id-keyed sink, as strings.
+    * With `restartAfter = Some(k)` the query first sees only the first k
+    * files and stops; a new query then resumes from the same checkpoint
+    * with the rest of the files in place. */
+  def replayRows(session: SparkSession, dir: String, restartAfter: Option[Int],
+      op: DataFrame => DataFrame): Seq[String] = {
+    import org.apache.spark.sql.streaming.Trigger
+    val base = Files.createTempDirectory("graft-restart").toString
+    val (in, ckpt) = (s"$base/in", s"$base/ckpt")
+    new java.io.File(in).mkdirs()
+    val files = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+    // a re-run batch (same id) replaces its rows: an idempotent sink
+    val out = scala.collection.concurrent.TrieMap.empty[Long, Seq[String]]
+    def stage(fs: Seq[java.io.File]): Unit = fs.foreach(f => Files.copy(
+      f.toPath, new java.io.File(in, f.getName).toPath,
+      java.nio.file.StandardCopyOption.COPY_ATTRIBUTES))
+    def run(): Unit = {
+      val q = op(session.readStream.schema(EventStreams.eventSchema)
+          .option("maxFilesPerTrigger", 1).parquet(in))
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (df: DataFrame, id: Long) =>
+          out(id) = df.collect().map(_.toString).toSeq; ()
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(120000), "replay did not finish")
+      q.exception.foreach(e => throw e)
+    }
+    val k = restartAfter.getOrElse(files.size)
+    stage(files.take(k)); run()
+    if (k < files.size) { stage(files.drop(k)); run() }
+    out.values.flatten.toSeq.sorted
+  }
+
+  /** `op` restarted from its checkpoint after 3 of 6 disordered files
+    * emits the same multiset of rows as one uninterrupted run. */
+  def restartEquivalent(provider: Option[String], noDataBatches: Boolean,
+      op: DataFrame => DataFrame): Unit = {
+    val session = spark.newSession()
+    provider.foreach(
+      session.conf.set("spark.sql.streaming.stateStore.providerClass", _))
+    // with no-data batches on (Spark's default), AvailableNow ends the
+    // first run with a watermark-only batch that evicts state before
+    // batch k + 1's late rows can still join it, which the uninterrupted
+    // run never does; off, a stopped query runs no further batch
+    session.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
+      noDataBatches.toString)
+    val dir = disorderedReplay(seed = 11L, nFiles = 6)
+    val whole = replayRows(session, dir, None, op)
+    val restarted = replayRows(session, dir, Some(3), op)
+    assert(whole.nonEmpty, "the replay emitted nothing")
+    val (extra, missing) = (restarted.diff(whole), whole.diff(restarted))
+    assert(extra.isEmpty && missing.isEmpty, s"restarted ${restarted.size}" +
+      s" rows, uninterrupted ${whole.size}; only restarted: $extra;" +
+      s" only uninterrupted: $missing")
+  }
+
+  val restartOps: Seq[(String, DataFrame => DataFrame)] =
+    ("event-time sessionization", { (in: DataFrame) =>
+      import in.sparkSession.implicits._
+      EventStreams.sessionizeEventTime(
+        in.filter(col("user_id").isNotNull && col("ts").isNotNull)
+          .selectExpr("event_id", "ts", "user_id", "event_type", "value")
+          .as[EventStreams.Ev]).toDF()
+    }) +: Seq("inner", "left_outer").map { jt =>
+      (s"$jt attribution", (in: DataFrame) => EventStreams.attributeClicks(
+        in.filter(col("event_type") === "click"),
+        in.filter(col("event_type") === "purchase"), jt))
+    }
+
+  Seq("HDFS" -> None, "RocksDB" -> Some(
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+    .foreach { case (store, provider) =>
+      restartOps.foreach { case (name, op) =>
+        test(s"restarted $name equals an uninterrupted run ($store state store)") {
+          restartEquivalent(provider, noDataBatches = false, op)
+        }
+        // Known defect at Spark's default (ROADMAP.md, net state): the
+        // first run's trailing watermark-only batch evicts state early.
+        // Reported pending while the rows differ; fails once they match,
+        // so drop the wrapper then.
+        test(s"restarted $name equals an uninterrupted run with no-data batches on ($store state store)") {
+          pendingUntilFixed {
+            restartEquivalent(provider, noDataBatches = true, op)
+          }
+        }
+      }
+    }
+
   test("streamed attribution keeps one state store per shuffle partition") {
     val s = EventStreams.readEventStream(spark, replayDir)
     val q = EventStreams.attributeClicks(
