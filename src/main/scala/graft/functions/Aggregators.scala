@@ -44,41 +44,6 @@ object Aggregators {
     override def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 
-  /** Exact MinHash signature as a typed aggregate over (already-hashed)
-    * shingle hashes: per group keeps the k smallest-by-permutation hash
-    * values. A native alternative to ml.MinHashLSH when signatures need to
-    * live in ordinary columns. k permutations via splitmix-style remix. */
-  case class MinHashBuf(var mins: Array[Long])
-
-  class MinHashAgg(k: Int) extends Aggregator[Long, MinHashBuf, Seq[Long]] {
-    override def toString: String = s"MinHashAgg($k)"
-    private def remix(h: Long, i: Int): Long = {
-      var z = h + 0x9e3779b97f4a7c15L * (i + 1)
-      z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-      z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-      z ^ (z >>> 31)
-    }
-    override def zero: MinHashBuf = MinHashBuf(Array.fill(k)(Long.MaxValue))
-    override def reduce(b: MinHashBuf, h: Long): MinHashBuf = {
-      var i = 0
-      while (i < k) {
-        val v = remix(h, i)
-        if (v < b.mins(i)) b.mins(i) = v
-        i += 1
-      }
-      b
-    }
-    override def merge(a: MinHashBuf, b: MinHashBuf): MinHashBuf = {
-      var i = 0
-      while (i < k) { if (b.mins(i) < a.mins(i)) a.mins(i) = b.mins(i); i += 1 }
-      a
-    }
-    override def finish(b: MinHashBuf): Seq[Long] = b.mins.toSeq
-    override def bufferEncoder: Encoder[MinHashBuf] = Encoders.product[MinHashBuf]
-    override def outputEncoder: Encoder[Seq[Long]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
-  }
-
   /** SimHash-64 as ONE partial+final aggregate over (already-hashed) token
     * hashes: the buffer is the 64 bit-vote counters, one row per doc comes
     * out. Replaces the explode(sequence(0,63)) formulation, which emitted
@@ -162,7 +127,7 @@ object Aggregators {
     * two-significant-digit log10 resolution (≤ 2% relative error), the
     * HdrHistogram idea on a base-10 grid. Everything is INTEGER (string
     * length + prefix, exact counts, ceil thresholds via (n·p + 99) div
-    * 100), so unlike the engine-hash sketches (HLL/CMS/minhash) this
+    * 100), so unlike the engine-hash sketches (HLL/CMS) this
     * sketch is bit-replayable in DuckDB SQL and hash-checkable. The
     * buffer is a fixed 19×90 count array: constant size per group, safe
     * map-side partials, shuffle carries the array not the data. */
@@ -221,10 +186,6 @@ object Aggregators {
   private[functions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "kahan_sum" -> udaf(KahanSum),
     "dec_hist" -> udaf(DecHistAgg),
-    "minhash16" -> udaf(new MinHashAgg(16)),
-    // 64 permutations: feeds r=2/b=32 banding in Dedup (r·b = 64), which
-    // needs the longer signature to keep recall ≥ 0.95 at J = 0.3
-    "minhash64" -> udaf(new MinHashAgg(64)),
     "simhash64" -> udaf(SimHashAgg),
     "topk3_by" -> udaf(new TopKAgg(3))
   ).map { case (name, agg) =>

@@ -59,21 +59,7 @@ case class BpeApplyMerges(child: Expression,
     var ri = 0
     while (ri < compiled.length) {
       val (l, r, lr) = compiled(ri)
-      val out = new Array[UTF8String](cur.length)
-      var n = 0
-      var j = 0
-      while (j < cur.length) {
-        val x = cur(j)
-        if (n > 0 && out(n - 1) != null && x != null &&
-            out(n - 1).equals(l) && x.equals(r)) {
-          out(n - 1) = lr
-        } else {
-          out(n) = x
-          n += 1
-        }
-        j += 1
-      }
-      cur = java.util.Arrays.copyOf(out, n)
+      cur = BpeApplyMerges.mergePass(cur, l, r, lr)
       ri += 1
     }
     new GenericArrayData(cur.asInstanceOf[Array[Any]])
@@ -84,6 +70,24 @@ case class BpeApplyMerges(child: Expression,
 }
 
 object BpeApplyMerges {
+  /** One greedy left-to-right merge pass of the rule (l, r): a symbol
+    * equal to `r` that follows an output symbol equal to `l` merges into
+    * it as `lr`, and a merged symbol may match `l` again ("aaa" → [aa, a]
+    * under (a, a)). A null symbol never matches. The one kernel of the
+    * expression and of `TextOps.bpeTrain`'s driver loop. */
+  def mergePass[T <: AnyRef](syms: Array[T], l: T, r: T, lr: T): Array[T] = {
+    val out = syms.clone()
+    var n = 0
+    var j = 0
+    while (j < syms.length) {
+      val x = syms(j)
+      if (n > 0 && l.equals(out(n - 1)) && r.equals(x)) out(n - 1) = lr
+      else { out(n) = x; n += 1 }
+      j += 1
+    }
+    java.util.Arrays.copyOf[T](out, n)
+  }
+
   /** Builder for the function registry: trailing args are the literal
     * (l, r) rule strings in application order. */
   def fromArgs(es: Seq[Expression]): BpeApplyMerges = {

@@ -13,26 +13,32 @@ import org.apache.spark.sql.types._
   * Why an Expression and not a UDF / higher-order-function composition: at
   * the 100 TB design point the similarity kernel sits inside a broadcast
   * nested-loop (brute force) or bucket join (LSH) and runs billions of
-  * times; `doGenCode` keeps it inside whole-stage codegen with a tight
-  * primitive loop — no per-row boxing, no lambda dispatch. The HOF
+  * times; `doGenCode` keeps it inside whole-stage codegen as one static
+  * call into the companion's primitive loop — no per-row boxing, no
+  * lambda dispatch, and the interpreted path runs the same loop. The HOF
   * formulation (see `Scalars.fn_array`) is kept for differential testing.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(left, right).forall(e => e.dataType match {
-      case ArrayType(FloatType, _) => true; case _ => false
-    })) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<float> arguments, " +
-      s"got ${left.dataType.sql} and ${right.dataType.sql}")
-  override def dataType: DataType = DoubleType
+    extends FloatArrayPair {
   override def prettyName: String = "cosine_similarity"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.CosineSimilarity.cosine($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  /** Static kernel shared by interpreted eval and generated code: the
+    * first min(|x|, |y|) positions, accumulated in double; a zero vector
+    * scores 0.0. */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
@@ -44,35 +50,37 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
     if (nx == 0.0 || ny == 0.0) 0.0 else dot / math.sqrt(nx * ny)
   }
+}
+
+/** Dot product twin (same design rationale). */
+case class DotProduct(left: Expression, right: Expression)
+    extends FloatArrayPair {
+  override def prettyName: String = "dot_product"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    DotProduct.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot"); val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi"); val yi = ctx.freshName("yi")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $xi = (double) $a.getFloat($i);
-          double $yi = (double) $b.getFloat($i);
-          $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-        }
-        ${ev.value} = ($nx == 0.0 || $ny == 0.0)
-          ? 0.0 : $dot / java.lang.Math.sqrt($nx * $ny);
-      """
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.DotProduct.dot($a, $b)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 }
 
-/** Dot product twin (same design rationale). */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
+object DotProduct {
+  /** Static kernel shared by interpreted eval and generated code. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0
+    var i = 0
+    while (i < n) { dot += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
+    dot
+  }
+}
 
+/** A double-valued kernel over two `array<float>` columns. */
+sealed trait FloatArrayPair extends BinaryExpression with Serializable {
   override def checkInputDataTypes(): TypeCheckResult =
     if (Seq(left, right).forall(e => e.dataType match {
       case ArrayType(FloatType, _) => true; case _ => false
@@ -81,35 +89,6 @@ case class DotProduct(left: Expression, right: Expression)
       s"$prettyName requires two array<float> arguments, " +
       s"got ${left.dataType.sql} and ${right.dataType.sql}")
   override def dataType: DataType = DoubleType
-  override def prettyName: String = "dot_product"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var i = 0
-    while (i < n) { dot += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-    dot
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double $dot = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          $dot += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-        }
-        ${ev.value} = $dot;
-      """
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** SQL functions so queries can say `cosine_similarity(a, b)` /

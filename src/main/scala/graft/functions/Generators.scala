@@ -25,19 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `llm_ngram_jaccard` keeps hashing identical shingle strings.
   */
 case class WordShingles(child: Expression, kExpr: Expression)
-    extends Generator with CodegenFallback {
-
-  override def children: Seq[Expression] = Seq(child, kExpr)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && kExpr.dataType == IntegerType &&
-        kExpr.foldable)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"word_shingles requires (string, foldable int), got " +
-      s"${child.dataType.sql}, ${kExpr.dataType.sql}")
-
-  private lazy val k: Int = kExpr.eval(null).asInstanceOf[Int]
+    extends StringGrams {
+  override protected def sqlName: String = "word_shingles"
 
   override def elementSchema: StructType =
     StructType(StructField("shingle", StringType) :: Nil)
@@ -73,19 +62,8 @@ case class WordShingles(child: Expression, kExpr: Expression)
   * language-ID hot path: higher-order lambdas run interpreted per element
   * AND materialize the full array before explode. */
 case class CharGrams(child: Expression, kExpr: Expression)
-    extends Generator with CodegenFallback {
-
-  override def children: Seq[Expression] = Seq(child, kExpr)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType && kExpr.dataType == IntegerType &&
-        kExpr.foldable)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"char_grams requires (string, foldable int), got " +
-      s"${child.dataType.sql}, ${kExpr.dataType.sql}")
-
-  private lazy val k: Int = kExpr.eval(null).asInstanceOf[Int]
+    extends StringGrams {
+  override protected def sqlName: String = "char_grams"
 
   override def elementSchema: StructType =
     StructType(StructField("gram", StringType) :: Nil)
@@ -106,4 +84,24 @@ case class CharGrams(child: Expression, kExpr: Expression)
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression =
     copy(child = newChildren(0), kExpr = newChildren(1))
+}
+
+/** A generator of the grams of a string column, `k` a foldable int read
+  * once (`word_shingles`, `char_grams`). */
+sealed trait StringGrams extends Generator with CodegenFallback {
+  def child: Expression
+  def kExpr: Expression
+  protected def sqlName: String
+
+  override def children: Seq[Expression] = Seq(child, kExpr)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType && kExpr.dataType == IntegerType &&
+        kExpr.foldable)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$sqlName requires (string, foldable int), got " +
+      s"${child.dataType.sql}, ${kExpr.dataType.sql}")
+
+  protected lazy val k: Int = kExpr.eval(null).asInstanceOf[Int]
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Hilbert-curve index — the locality-preserving sibling of the Z-order
   * Morton code (`ZOrder.scala`): consecutive Hilbert indices are ALWAYS
@@ -48,15 +46,7 @@ object HilbertBits {
   * the order-14 (16384×16384) grid, matching the synthetic 0..9999 point
   * domain used by the spatial queries. */
 case class HilbertIndex(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == IntegerType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two int arguments, " +
-      s"got ${left.dataType.sql} and ${right.dataType.sql}")
-  override def dataType: DataType = LongType
+    extends IntPairKey {
   override def prettyName: String = "hilbert_index"
 
   override def nullSafeEval(a: Any, b: Any): Any =

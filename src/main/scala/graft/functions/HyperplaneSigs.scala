@@ -16,10 +16,11 @@ import org.apache.spark.sql.types._
   * chains) builds a ~100-node expression tree that re-reads the embedding
   * array once PER PLANE and dominated the LSH queries' runtime (measured
   * ~1.5 s of llm_ann_lsh's 2.5 s at sf0.1). Here the embedding is read
-  * once and the plane matrix lives in a reference object — a compact
-  * codegen'd triple loop, the same "kernel inside whole-stage codegen"
-  * rationale as [[CosineSimilarity]]. At the 100 TB design point this runs
-  * once per corpus row, so per-row constant factors are the whole cost.
+  * once and the plane matrix lives in a reference object — one static
+  * triple loop that generated code calls, the same "kernel inside
+  * whole-stage codegen" rationale as [[CosineSimilarity]]. At the 100 TB
+  * design point this runs once per corpus row, so per-row constant
+  * factors are the whole cost.
   *
   * Plane components are PORTABLE integer pseudo-uniforms in [-500, 499]
   * (a Weyl-style multiply-mod of the (plane, dim) key — the llm_minhash_poly
@@ -47,8 +48,26 @@ case class HyperplaneSigs(child: Expression, nTables: Int, bits: Int, dim: Int)
   @transient private lazy val planes: Array[Array[Float]] =
     Array.tabulate(nTables * bits)(p => HyperplaneSigs.planeVector(p, dim))
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any =
+    HyperplaneSigs.signatures(a.asInstanceOf[ArrayData], planes, nTables, bits)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val pRef = ctx.addReferenceObj("hyperplanes", planes, "float[][]")
+    defineCodeGen(ctx, ev, a =>
+      s"graft.functions.HyperplaneSigs.signatures($a, $pRef, $nTables, $bits)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object HyperplaneSigs {
+  /** Static kernel shared by interpreted eval and generated code: table
+    * `tt`'s signature is `tt << bits` with bit j set iff the dot with
+    * plane `tt * bits + j` (over the first min(|x|, |plane|) positions,
+    * folded in index order) is ≥ 0. */
+  def signatures(x: ArrayData, planes: Array[Array[Float]],
+                 nTables: Int, bits: Int): ArrayData = {
     val n = x.numElements()
     val sigs = new Array[Long](nTables)
     var tt = 0
@@ -70,40 +89,6 @@ case class HyperplaneSigs(child: Expression, nTables: Int, bits: Int, dim: Int)
     ArrayData.toArrayData(sigs)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val pRef = ctx.addReferenceObj("hyperplanes", planes, "float[][]")
-      val n = ctx.freshName("n"); val sigs = ctx.freshName("sigs")
-      val tt = ctx.freshName("t"); val s = ctx.freshName("s")
-      val j = ctx.freshName("j"); val p = ctx.freshName("p")
-      val m = ctx.freshName("m"); val dot = ctx.freshName("dot")
-      val i = ctx.freshName("i")
-      s"""
-        int $n = $a.numElements();
-        long[] $sigs = new long[$nTables];
-        for (int $tt = 0; $tt < $nTables; $tt++) {
-          long $s = ((long) $tt) << $bits;
-          for (int $j = 0; $j < $bits; $j++) {
-            float[] $p = $pRef[$tt * $bits + $j];
-            int $m = java.lang.Math.min($n, $p.length);
-            double $dot = 0.0;
-            for (int $i = 0; $i < $m; $i++) {
-              $dot += (double) $a.getFloat($i) * (double) $p[$i];
-            }
-            if ($dot >= 0.0) $s |= (1L << $j);
-          }
-          $sigs[$tt] = $s;
-        }
-        ${ev.value} =
-          org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($sigs);
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object HyperplaneSigs {
   /** Deterministic hyperplane component for (plane p, dim i): portable
     * integer pseudo-uniform in [-500, 499] — the first 16 bits of
     * md5("plane:p:i") mod 1000, minus 500 (the salted-md5 `h16`

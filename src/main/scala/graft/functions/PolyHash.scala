@@ -50,7 +50,26 @@ case class PolyHash(child: Expression)
 }
 
 object PolyHash {
+  /** Modulus of the portable hash family: every hash and permuted value
+    * lives in [0, P) < 2^30, so `h·a` stays under 2^60 (exact in BIGINT on
+    * both engines) and an (mh, mh') pair packs injectively into one 64-bit
+    * key as `mh·2^30 + mh'`. */
   final val P = 1000000007L
+
+  /** The affine permutations `h → (a·h + b) mod P` of the portable MinHash
+    * signatures, in order: the first 4 are llm_minhash_poly's, the first 8
+    * `DedupGate`'s bands, and all 64 the banded `Dedup` pipeline's, the
+    * last 56 a deterministic 31×/7× extension. One value feeds the engine
+    * aggregates and the generated DuckDB twin text, so the two sides
+    * cannot drift. */
+  val minhashPerms: Seq[(Long, Long)] = {
+    val base = Seq((1L, 0L), (31L, 7L), (131L, 13L), (1031L, 101L),
+      (8191L, 19L), (131071L, 29L), (524287L, 37L), (2097143L, 43L))
+    val more = Iterator.iterate((2097143L * 31 % P, (43L * 7 + 5) % P)) {
+      case (a, b) => (a * 31 % P, (b * 7 + 5) % P)
+    }.take(56).toSeq
+    base ++ more
+  }
 
   /** The compiled fold — shared by eval and generated code. */
   def hash(u: UTF8String): Long = {

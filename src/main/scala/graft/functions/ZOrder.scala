@@ -42,15 +42,7 @@ object ZOrderBits {
   * (`sql/init.sql:45-47`) once data no longer fits one Postgres.
   */
 case class InterleaveBits(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == IntegerType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two int arguments, " +
-      s"got ${left.dataType.sql} and ${right.dataType.sql}")
-  override def dataType: DataType = LongType
+    extends IntPairKey {
   override def prettyName: String = "interleave_bits"
 
   override def nullSafeEval(a: Any, b: Any): Any =
@@ -63,4 +55,16 @@ case class InterleaveBits(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** A bigint layout key of two int cell ordinals (`interleave_bits`,
+  * `hilbert_index`). */
+private[functions] trait IntPairKey extends BinaryExpression with Serializable {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (left.dataType == IntegerType && right.dataType == IntegerType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires two int arguments, " +
+      s"got ${left.dataType.sql} and ${right.dataType.sql}")
+  override def dataType: DataType = LongType
 }

@@ -6,16 +6,17 @@ import org.apache.spark.ml.linalg.SparseVector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables.{spread, t}
+import graft.functions.PolyHash.{P, minhashPerms}
 
 /** Approximate dedup family for 100 TB corpora (BASELINE.json north_star).
   * Exact anchors (md5 group, exact n-gram Jaccard) live in [[TextOps]];
   * this file holds the scale paths:
   *
-  *  - native banded MinHash (primary, [[minhashPairsNative]]): shingle
-  *    hashes → minhash64 UDAF signature → r=2/b=32 bucket join → exact
-  *    verification on candidates only, so cost is O(near-dup pairs), not
-  *    O(n²). The `spark.ml.feature.MinHashLSH` variant ([[minhashPairs]])
-  *    is kept as a cross-check.
+  *  - native banded MinHash (primary, [[minhashPairsNative]]): portable
+  *    polynomial shingle hashes → 64-permutation min aggregate → r=2/b=32
+  *    bucket join → exact verification on candidates only, so cost is
+  *    O(near-dup pairs), not O(n²). The `spark.ml.feature.MinHashLSH`
+  *    variant ([[minhashPairs]]) is kept as a cross-check.
   *  - SimHash: in [[TextOps]] (`llm_simhash`); signature clustering here.
   *  - Embedding near-dup: cosine ≥ threshold via the LSH signature join
   *    from [[SimSearch]].
@@ -27,35 +28,18 @@ import graft.core.Tables.{spread, t}
   * additionally validates recall against the exact-Jaccard ground truth.
   */
 object Dedup extends graft.Family {
-  /** Banded candidate pairs from MinHash signatures: signature positions
-    * are grouped into `b` bands of `r` consecutive positions; two docs are
-    * candidates iff they agree on ALL r positions of SOME band
-    * (P = 1 − (1−J^r)^b). The r values of a band are collapsed to one
-    * 64-bit key with xxhash64, so the bucket join stays a plain bigint
-    * equi-join whatever r is.
+  /** Native banded MinHash near-dup pairs: shingles → portable polynomial
+    * hash → 64-permutation signature as one min aggregate (the
+    * permutations are [[graft.functions.PolyHash.minhashPerms]]) →
+    * r=2/b=32 banding → exact Jaccard verification restricted to
+    * candidate pairs only. Two docs are candidates iff they
+    * agree on both positions of some band: P(candidate) = 1 − (1−J²)^32.
     *
-    * Why r > 1 matters at 100 TB: with r=1 every single agreeing position
+    * Why r = 2 matters at 100 TB: with r=1 every single agreeing position
     * makes a candidate — at J=0.1 (boilerplate-level similarity) 16 bands
     * admit a pair with p ≈ 0.81, so a boilerplate-heavy corpus degenerates
     * toward the quadratic all-pairs check. r=2 drops that to
-    * 1 − (1−0.01)^32 ≈ 0.27 while b=32 keeps J=0.3 recall ≈ 0.96. */
-  def bandedCandidates(sigs: DataFrame, r: Int, b: Int): DataFrame = {
-    val elems = (1 to r).map(j => s"element_at(sig, $r*i+$j)").mkString(", ")
-    val bands = expr(s"transform(sequence(0, ${b - 1}), i -> xxhash64($elems))")
-    val banded = sigs.select(col("doc_id"),
-      posexplode(bands).as(Seq("band", "minh")))
-    banded.select(col("doc_id").as("doc1"), col("band"), col("minh"))
-      .join(banded.select(col("doc_id").as("doc2"), col("band"), col("minh")),
-        Seq("band", "minh"))
-      .filter(col("doc1") < col("doc2"))
-      .select("doc1", "doc2").distinct()
-  }
-
-  /** Native banded MinHash near-dup pairs: shingles → xxhash64 → 64-perm
-    * signature via the [[graft.functions.Aggregators.MinHashAgg]] UDAF →
-    * r=2/b=32 banding (see [[bandedCandidates]]: J=0.3 recall ≈ 0.96,
-    * J=0.1 false-candidate rate ≈ 0.27 vs 0.81 for r=1) → exact Jaccard
-    * verification restricted to candidate pairs only.
+    * 1 − (1−0.01)^32 ≈ 0.27 while b=32 keeps J=0.3 recall ≈ 0.96.
     *
     * This is the 100 TB shape: one aggregate to build signatures, one
     * equi-join on (band, bandkey) buckets, and the quadratic exact
@@ -69,31 +53,6 @@ object Dedup extends graft.Family {
                          threshold: Double = 0.2): DataFrame =
     minhashPairsCache.getOrElseUpdate(s, s"$d#$threshold",
       minhashPairsBuild(s, d, threshold).ckpt(eager = false))
-
-  /** Modulus of the portable polynomial hash family (shared with
-    * llm_minhash_poly / DedupGate): every hash and permuted value lives
-    * in [0, P) < 2^30, so `h·a` stays under 2^60 (exact in BIGINT on
-    * both engines) and an (mh even, mh odd) pair packs injectively into
-    * one 64-bit band key as `mh·2^30 + mh'`. */
-  private val P = 1000000007L
-
-  /** The 64 affine permutations `h → (a·h + b) mod P` of the PRODUCTION
-    * banded pipeline — the first 8 are DedupGate's table (themselves
-    * extending llm_minhash_poly's 4), the rest a deterministic 31×/7×
-    * extension. ONE Scala value feeds both the engine aggregate and the
-    * generated DuckDB twin text ([[minhashSigCtes]]), so the two sides
-    * cannot drift — that is what moved llm_minhash_pairs/llm_dedup_apply
-    * from rows-only to hash-checked (VERDICT r8 #6): with an
-    * engine-portable hash trajectory, the oracle replays not just the
-    * verified Jaccard but WHICH pairs the banding catches. */
-  private[llm] val minhashPerms: Seq[(Long, Long)] = {
-    val base = Seq((1L, 0L), (31L, 7L), (131L, 13L), (1031L, 101L),
-      (8191L, 19L), (131071L, 29L), (524287L, 37L), (2097143L, 43L))
-    val more = Iterator.iterate((2097143L * 31 % P, (43L * 7 + 5) % P)) {
-      case (a, b) => (a * 31 % P, (b * 7 + 5) % P)
-    }.take(56).toSeq
-    base ++ more
-  }
 
   /** Per-shingle portable polynomial hash (the llm_simhash_poly kernel,
     * over shingle strings) — the compiled [[graft.functions.PolyHash]]
@@ -112,18 +71,17 @@ object Dedup extends graft.Family {
       .select("doc_id", "h")
       .ckpt(eager = false)
     // 64-permutation signature as ONE hash aggregate (64 min columns +
-    // n_sh): map-side partials carry a constant-width row per doc, same
-    // shuffle shape as the previous minhash64 UDAF but value-portable
+    // n_sh): map-side partials carry a constant-width row per doc, and
+    // every value is portable, so the twin replays it
     val minCols = minhashPerms.zipWithIndex.map { case ((a, b), i) =>
       min(pmod(col("h") * a + b, lit(P))).as(s"mh$i") }
     val aggCols = minCols :+ count(lit(1)).as("n_sh")
     val sigs = sh.groupBy(col("doc_id"))
       .agg(aggCols.head, aggCols.tail: _*)
       .ckpt(eager = false)
-    // r=2/b=32 banding (same P(catch) algebra as [[bandedCandidates]]):
-    // the two mins of a band pack injectively into one BIGINT key, so
-    // the bucket join is a plain equi-join and — unlike an xxhash64 of
-    // the pair — the key is engine-portable
+    // r=2/b=32 banding: the two mins of a band pack injectively into one
+    // BIGINT key (P < 2^30), so the bucket join is a plain equi-join and
+    // — unlike an xxhash64 of the pair — the key is engine-portable
     val bandKeys = (0 until 32).map { i =>
       col(s"mh${2 * i}") * lit(1L << 30) + col(s"mh${2 * i + 1}") }
     val banded = sigs.select(col("doc_id"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables.{spread, t}
 import graft.functions.SaltedHash.md5Prefix
+import graft.functions.BpeApplyMerges
 
 /** LLM-training-data text operators over `documents` (BASELINE.json
   * north_star: dedup + text analysis, designed for 100 TB).
@@ -416,8 +417,8 @@ object TextOps extends graft.Family {
     // driver loop replays the exact machinery: commutative Long pair
     // counts, the winner by (count desc, l, r) with strings compared in
     // UTF-8 BYTE order (Spark's string ordering — Java char order differs
-    // on supplementary planes), and the identical greedy left-to-right
-    // merge pass (BpeApplyMerges.nullSafeEval transliterated). Wider
+    // on supplementary planes), and the expression's own greedy
+    // left-to-right merge pass (BpeApplyMerges.mergePass). Wider
     // vocabularies keep the distributed loop — fallback, never failure.
     val vocabCap = 262144
     val probe = cur.limit(vocabCap + 1).collect()
@@ -459,18 +460,7 @@ object TextOps extends graft.Family {
           merges += ((r, l, rr, cnt))
           val lr = l + rr
           words = words.map { case (n, syms) =>
-            // the exact BpeApplyMerges greedy pass: merge a trailing l
-            // with a following r; the merged symbol may re-match as l
-            val out = new Array[String](syms.length)
-            var m = 0
-            var j = 0
-            while (j < syms.length) {
-              val x = syms(j)
-              if (m > 0 && out(m - 1) == l && x == rr) out(m - 1) = lr
-              else { out(m) = x; m += 1 }
-              j += 1
-            }
-            (n, java.util.Arrays.copyOf(out, m))
+            (n, BpeApplyMerges.mergePass(syms, l, rr, lr))
           }
           r += 1
         }
@@ -1772,7 +1762,7 @@ object TextOps extends graft.Family {
     // MinHash with the same portable hash: per-doc minimum of four affine
     // permutations of the token hash — value-level DuckDB twin for the
     // minhash signature semantics (min over a permuted hash, distinct
-    // tokens), mirroring what minhash16/64 do with the splitmix remix.
+    // tokens).
     "llm_minhash_poly" -> ((s, d) => {
       distinctTokenHashes(s, d)
         .groupBy(col("doc_id"))

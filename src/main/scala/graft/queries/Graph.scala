@@ -1,7 +1,7 @@
 package graft.queries
 import graft.core.Ckpt._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables.t
@@ -40,7 +40,15 @@ object Graph extends graft.Family {
     tradeCache.getOrElseUpdate(s, d,
       tradeEdgesBuild(s, d).ckpt(eager = false))
 
-  private def tradeEdgesBuild(s: SparkSession, d: String): DataFrame = {
+  private def tradeEdgesBuild(s: SparkSession, d: String): DataFrame =
+    nationEdges(s, d)(li =>
+      sum(li("l_extendedprice") * (lit(1.0) - li("l_discount"))).as("w"))
+
+  /** Customer-nation → supplier-nation edges of the lineitem ⋈ orders ⋈
+    * customer ⋈ supplier join, weighted by `weight` over the lineitem
+    * columns. */
+  private def nationEdges(s: SparkSession, d: String)(
+      weight: DataFrame => Column): DataFrame = {
     val li = t(s, d, "lineitem")
     val o  = t(s, d, "orders")
     val c  = t(s, d, "customer")
@@ -49,7 +57,7 @@ object Graph extends graft.Family {
       .join(c, o("o_custkey") === c("c_custkey"))
       .join(su, li("l_suppkey") === su("s_suppkey"))
       .groupBy(c("c_nationkey").as("src"), su("s_nationkey").as("dst"))
-      .agg(sum(li("l_extendedprice") * (lit(1.0) - li("l_discount"))).as("w"))
+      .agg(weight(li))
   }
 
   /** Sparsified graph: top-3 out-edges per source by weight (deterministic
@@ -1165,19 +1173,11 @@ object Graph extends graft.Family {
     exactCache.getOrElseUpdate(s, d,
       exactEdgesBuild(s, d).ckpt(eager = false))
 
-  private def exactEdgesBuild(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
-    val o  = t(s, d, "orders")
-    val c  = t(s, d, "customer")
-    val su = t(s, d, "supplier")
-    li.join(o, li("l_orderkey") === o("o_orderkey"))
-      .join(c, o("o_custkey") === c("c_custkey"))
-      .join(su, li("l_suppkey") === su("s_suppkey"))
-      .groupBy(c("c_nationkey").as("src"), su("s_nationkey").as("dst"))
-      .agg(sum(round(li("l_extendedprice") * 100).cast("bigint") *
-               (lit(100) - round(li("l_discount") * 100).cast("bigint")))
+  private def exactEdgesBuild(s: SparkSession, d: String): DataFrame =
+    nationEdges(s, d)(li =>
+      sum(round(li("l_extendedprice") * 100).cast("bigint") *
+          (lit(100) - round(li("l_discount") * 100).cast("bigint")))
         .as("wu"))
-  }
 
   /** DuckDB replay of [[exactEdgesBuild]]: `eedges(src, dst, wu)`. */
   private val exactEdgesCte =

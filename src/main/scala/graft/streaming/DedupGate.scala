@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.PolyHash.{P, minhashPerms}
 
 /** Streaming near-duplicate gate: admit a stream of NEW documents only
   * after checking them against a static, LSH-bucketed index of the
@@ -37,13 +38,11 @@ import org.apache.spark.sql.functions._
 object DedupGate {
 
   /** Affine permutations (min over `h*a+c mod P` of the per-shingle
-    * polynomial hash) — the first four shared with `llm_minhash_poly`,
-    * widened to 8 bands so a J=0.2 pair is a candidate with
+    * polynomial hash): the first 8 of the portable family, the first four
+    * shared with `llm_minhash_poly`, so a J=0.2 pair is a candidate with
     * p = 1-(1-J)^8 ≈ 0.83 (4 bands would catch only 59%). Every `a` keeps
     * `h*a` < 2^63 (h < P ≈ 1e9, a ≤ 2e6). */
-  private val P = 1000000007L
-  private val perms = Seq((1L, 0L), (31L, 7L), (131L, 13L), (1031L, 101L),
-    (8191L, 19L), (131071L, 29L), (524287L, 37L), (2097143L, 43L))
+  private val perms = minhashPerms.take(8)
 
   /** Distinct 3-gram word shingles of `textCol` as a scalar expression —
     * same shingle text ("tok1 tok2 tok3" on the raw split, no empty-token

@@ -506,7 +506,8 @@ class StreamingSpec extends AnyFunSuite {
       (s"$jt attribution", (in: DataFrame) => EventStreams.attributeClicks(
         in.filter(col("event_type") === "click"),
         in.filter(col("event_type") === "purchase"), jt))
-    }
+    } :+ ("tumbling counts", EventStreams.tumblingCounts _) :+
+      ("dedup", EventStreams.dedupStream _)
 
   Seq("HDFS" -> None, "RocksDB" -> Some(
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
