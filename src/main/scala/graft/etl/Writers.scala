@@ -37,17 +37,6 @@ object Writers {
   def writeDimension(dim: DataFrame, path: String): Unit =
     dim.write.mode(SaveMode.Overwrite).parquet(path)
 
-  /** The SURVEY §1.2 NUMERIC escape hatch, made concrete: the reference's
-    * DDL declares money columns NUMERIC (`sql/init.sql:32-41`) while its
-    * loader materializes float64 — this engine stores double end-to-end
-    * and callers who need exact money semantics cast at the writer
-    * boundary. Downstream decimal sums are then order-independent
-    * (see the `agg_decimal_money` oracle query). */
-  def withMoneyDecimals(df: DataFrame, moneyCols: Seq[String],
-                        precision: Int = 12, scale: Int = 2): DataFrame =
-    moneyCols.foldLeft(df)((acc, c) =>
-      acc.withColumn(c, col(c).cast(s"decimal($precision,$scale)")))
-
   /** Keyed MERGE (SCD type-1 upsert): rows of `updates` replace same-key
     * rows of `existing`; unmatched existing rows are kept, unmatched
     * updates are inserts. Expressed as anti-join ∪ updates — one shuffle
@@ -74,28 +63,6 @@ object Writers {
       .withColumn("effective_from", col(ts))
       .withColumn("effective_to", lead(col(ts), 1).over(w))
       .withColumn("is_current", col("effective_to").isNull)
-  }
-
-  /** Small-file compaction: rewrite a parquet directory into
-    * ⌈bytes/target⌉ files. The operational complement of the layout ops —
-    * streaming ingest and dynamic overwrite both strand small files, and
-    * at 100 TB a scan's task count (and the namenode's file count) follow
-    * file count, not data size. Rewrites into a sibling temp dir, then
-    * atomically swaps via rename; the read+repartition round-trip
-    * preserves rows, not intra-file order. Returns the new file count. */
-  def compactParquet(spark: org.apache.spark.sql.SparkSession, path: String,
-                     targetBytes: Long = 128L << 20): Int = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(hPath).getLength
-    val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compact_tmp")
-    spark.read.parquet(path).repartition(n)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(hPath, true)
-    if (!fs.rename(tmp, hPath))
-      throw new java.io.IOException(s"compaction swap failed for $path")
-    fs.listStatus(hPath).count(_.getPath.getName.endsWith(".parquet"))
   }
 
   /** JDBC parity sinks (A8/A10) — same SaveMode semantics against a

@@ -1,7 +1,5 @@
 package graft.llm
-import graft.core.Ckpt._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables.{spread, t}

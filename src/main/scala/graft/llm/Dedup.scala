@@ -1,8 +1,6 @@
 package graft.llm
 import graft.core.Ckpt._
 
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
-import org.apache.spark.ml.linalg.SparseVector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables.{spread, t}
@@ -12,11 +10,10 @@ import graft.functions.PolyHash.{P, minhashPerms}
   * Exact anchors (md5 group, exact n-gram Jaccard) live in [[TextOps]];
   * this file holds the scale paths:
   *
-  *  - native banded MinHash (primary, [[minhashPairsNative]]): portable
+  *  - native banded MinHash ([[minhashPairsNative]]): portable
   *    polynomial shingle hashes → 64-permutation min aggregate → r=2/b=32
   *    bucket join → exact verification on candidates only, so cost is
-  *    O(near-dup pairs), not O(n²). The `spark.ml.feature.MinHashLSH`
-  *    variant ([[minhashPairs]]) is kept as a cross-check.
+  *    O(near-dup pairs), not O(n²).
   *  - SimHash: in [[TextOps]] (`llm_simhash`); signature clustering here.
   *  - Embedding near-dup: cosine ≥ threshold via the LSH signature join
   *    from [[SimSearch]].
@@ -430,27 +427,6 @@ object Dedup extends graft.Family {
       .select(col("id1"), col("id2"), col("cos"))
   }
 
-  /** spark.ml MinHashLSH variant (kept as a cross-check of the native
-    * implementation; see DedupSpec). Deterministic: seed fixed. */
-  def minhashPairs(s: SparkSession, d: String, maxDist: Double = 0.8): DataFrame = {
-    val sh = TextOps.shingles(s, d)
-      .groupBy(col("doc_id")).agg(collect_list(col("shingle")).as("sh"))
-    val tf = new HashingTF().setInputCol("sh").setOutputCol("features")
-      .setNumFeatures(1 << 18)
-    val feats = tf.transform(sh)
-      // MinHashLSH requires at least one non-zero entry
-      .filter(udf((v: SparseVector) => v.numNonzeros > 0).apply(col("features")))
-    val lsh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(8).setSeed(42L)
-    val model = lsh.fit(feats)
-    model.approxSimilarityJoin(feats, feats, maxDist, "jaccard_dist")
-      .select(
-        col("datasetA.doc_id").as("doc1"),
-        col("datasetB.doc_id").as("doc2"),
-        col("jaccard_dist"))
-      .filter(col("doc1") < col("doc2"))
-  }
-
   // per-corpus cache of the exact-Jaccard CC labeling (the er-family
   // amortization): llm_dedup_exact and llm_dedup_quality both consume
   // the same pair graph + star-star labels
@@ -478,7 +454,7 @@ object Dedup extends graft.Family {
     // target Jaccard threshold is a lookup, not a rerun. Pure expression
     // arithmetic (identical fp trees both engines, no rounding needed);
     // reads no table — the signature length is the input.
-    "llm_lsh_tuning" -> ((s, d) => {
+    "llm_lsh_tuning" -> ((s, _) => {
       import s.implicits._
       val grid = (for {
         (b, r) <- Seq((2, 8), (4, 4), (8, 2), (16, 1)); i <- 1 to 9

@@ -1,80 +1,20 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Multimodal-column plumbing (BASELINE.json north_star): image/audio/video
-  * payloads as opaque `binary` columns with a typed metadata struct, plus
-  * decode / feature-extract / frame-sample operators.
+/** Multimodal-column plumbing (BASELINE.json north_star): image, audio
+  * and video payloads read as opaque `binary` columns through Spark's
+  * `binaryFile` source, and six kernels over them — asset manifest, frame
+  * sampling, audio RMS and activity segmentation, shot boundaries and the
+  * patch grid.
   *
-  * The DECODE KERNELS ARE STUBS — this container has no image/audio codecs,
-  * so `decodeStub` produces a deterministic fake feature vector from the
-  * bytes. Everything Spark-side is real and tested in `MultimodalSpec`:
-  * the schema contract, the `binaryFile` source mapping, partition-sized
-  * batching via `mapPartitions` (the Scala analogue of `mapInPandas` —
-  * one iterator per partition, so a real decoder would amortize model
-  * init per-partition, not per-row), and the output schema.
+  * This container has no image/audio codecs, so every kernel works on the
+  * raw bytes in place of decoded frames, samples or pixels. Each kernel
+  * has a DuckDB twin over the committed fixture assets in [[fixtureDir]].
   */
 object Multimodal extends graft.Family {
-  /** Contract for a multimodal asset row. */
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("payload", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("format", StringType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("n_frames", IntegerType))))))
-
-  /** Map Spark's `binaryFile` source (path, modificationTime, length,
-    * content) into the asset contract. */
-  def fromBinaryFiles(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("binaryFile").load(path)
-      .select(
-        xxhash64(col("path")).as("asset_id"),
-        col("content").as("payload"),
-        struct(
-          regexp_extract(col("path"), "\\.([A-Za-z0-9]+)$", 1).as("format"),
-          lit(null).cast(IntegerType).as("width"),
-          lit(null).cast(IntegerType).as("height"),
-          lit(null).cast(IntegerType).as("n_frames")).as("meta"))
-
-  /** STUB decode kernel: deterministic pseudo-features from payload bytes.
-    * A real implementation would replace ONLY the body of `features` —
-    * batch shape, schema, and partitioning stay identical. */
-  private def fakeFeatures(payload: Array[Byte], dim: Int): Array[Float] = {
-    val out = new Array[Float](dim)
-    var h = 1125899906842597L
-    var i = 0
-    while (i < payload.length) { h = 31 * h + payload(i); i += 1 }
-    var j = 0
-    while (j < dim) {
-      h ^= h >>> 33; h *= 0xff51afd7ed558ccdL; h ^= h >>> 33
-      out(j) = ((h % 1000L).toFloat / 1000.0f); j += 1
-    }
-    out
-  }
-
-  /** Decode+featurize: binary payload → `array<float>` feature column.
-    * Runs per-partition so heavyweight decoder state (a model, a codec
-    * context) initializes once per task at scale. */
-  def decodeStub(assets: DataFrame, dim: Int = 16): DataFrame = {
-    val outSchema = StructType(assets.schema.fields :+
-      StructField("features", ArrayType(FloatType)))
-    implicit val enc: ExpressionEncoder[Row] =
-      ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    assets.mapPartitions { rows =>
-      // per-partition init happens here (stub: nothing to init)
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]]("payload")
-        val feats = if (payload == null) null else fakeFeatures(payload, dim)
-        Row.fromSeq(r.toSeq :+ feats)
-      }
-    }
-  }
-
   /** Asset inventory profile: (file_name, fmt, byte_len, sha) per binary
     * asset — the manifest/integrity pass every multimodal ingest runs
     * before decode. Hash is sha256 over the UPPERCASE-HEX rendering of the
@@ -395,17 +335,4 @@ object Multimodal extends graft.Family {
       FROM (SELECT file_name, w, h, px,
                    unnest(range(0, (h - 1) // 32 + 1)) AS py
             FROM px)""")
-
-  /** Frame-sampling operator for video-like payloads: emit every k-th
-    * chunk of the payload as its own row (stub chunking = fixed-size
-    * byte windows standing in for decoded frames). */
-  def sampleFrames(assets: DataFrame, chunkBytes: Int = 1024, everyK: Int = 10): DataFrame =
-    assets
-      .withColumn("n_chunks",
-        greatest(lit(1), (length(col("payload")) / chunkBytes).cast(IntegerType)))
-      .withColumn("frame_idx",
-        explode(expr(s"filter(sequence(0, n_chunks - 1), i -> i % $everyK = 0)")))
-      .withColumn("frame_payload",
-        expr(s"substring(payload, frame_idx * $chunkBytes + 1, $chunkBytes)"))
-      .drop("n_chunks")
 }

@@ -56,7 +56,7 @@ object SimSearch extends graft.Family {
     * terms (nProbe/k of the corpus scanned per query vs k centroid
     * comparisons per query); the k = 16 default is sized for the test
     * fixtures. The fit is an INDEX BUILD, amortized over every search. */
-  def ivfFitPortable(s: SparkSession, emb: DataFrame, k: Int = 16,
+  def ivfFitPortable(emb: DataFrame, k: Int = 16,
                      rounds: Int = 3): IvfIndex = {
     val (assigned, cents) = Semantic.kmeansFit(emb, k, rounds)
     // cell ids are seed vec_ids (< k) — cast to INT, the public IvfIndex
@@ -76,7 +76,7 @@ object SimSearch extends graft.Family {
 
   def ivfIndexFor(s: SparkSession, d: String, k: Int): IvfIndex =
     ivfCache.getOrElseUpdate(s, s"$d#$k",
-      ivfFitPortable(s, t(s, d, "embeddings"), k))
+      ivfFitPortable(t(s, d, "embeddings"), k))
 
   /** IVF search: query → its nProbe closest cells (vs the broadcast
     * centroid table), exact cosine re-rank over just those cells' vectors.
@@ -188,99 +188,9 @@ object SimSearch extends graft.Family {
       )"""
 
   /** A fitted product-quantization index: per-vector code arrays + the
-    * (m × ksub rows, always-broadcast) sub-codebook table. `n` (corpus
-    * size at fit) sizes the default exact-re-rank pool at search time. */
+    * (m × ksub rows, always-broadcast) sub-codebook table. */
   case class PqIndex(codes: DataFrame, codebooks: DataFrame,
-                     m: Int, dsub: Int, ksub: Int, n: Long)
-
-  /** Persist a fitted IVF index. The assignment table is written
-    * PARTITIONED BY cell: an [[ivfSearch]] over the loaded index joins the
-    * corpus side on `cell` against the broadcast probe list, so Spark's
-    * dynamic partition pruning reads ONLY the nProbe/k probed directories —
-    * at 1B vectors a 16-of-30k probe touches 0.05% of the index files.
-    * That physical layout is the point of persisting (an in-memory fit is
-    * partitioned however the fit shuffle left it). */
-  def ivfSave(index: IvfIndex, path: String): Unit = {
-    index.assigned.write.mode("overwrite")
-      .partitionBy("cell").parquet(s"$path/assigned")
-    index.centroids.withColumn("k", lit(index.k))
-      .write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** Load a persisted IVF index (see [[ivfSave]]). */
-  def ivfLoad(s: SparkSession, path: String): IvfIndex = {
-    val cents = s.read.parquet(s"$path/centroids")
-    val k = cents.select(max(col("k"))).head.getInt(0)
-    IvfIndex(s.read.parquet(s"$path/assigned")
-        .select(col("vec_id"), col("embedding"), col("cell")),
-      cents.select(col("cell"), col("centroid")), k)
-  }
-
-  /** Nearest-centroid cell assignment as a PURE SCALAR column: the k
-    * centroids are folded into the plan as a literal (bounded, like the
-    * LSH plane constants), the 6-decimal-rounded cosine to each is a
-    * zip_with/aggregate chain, and the ascending-cell fold with a
-    * strict-improvement compare makes ties deterministic (lowest cell) —
-    * the SAME argmax [[Semantic.kmeansFit]]'s assignTo computes, so the
-    * expression agrees with the portable fit's own assignments exactly
-    * (r10). Because no
-    * aggregate or model object is involved, the same expression assigns
-    * cells in batch and under `readStream` with zero state — the
-    * streaming ingest path of the vector index:
-    * `stream.withColumn("cell", ivfAssignCol(index))
-    *        .writeStream.partitionBy("cell")` appends new vectors into
-    * exactly the cell-partitioned layout [[ivfSave]] produces. */
-  def ivfAssignCol(index: IvfIndex): Column = {
-    val rows = index.centroids.orderBy(col("cell"))
-      .collect()  // k rows — bounded by construction
-    val cells: Seq[Int] = rows.map(r => r.get(0) match {
-      case i: Int => i; case l: Long => l.toInt }).toSeq
-    val cents: Seq[Seq[Double]] =
-      rows.map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-    val c = typedlit(cents)
-    val cid = typedlit(cells)
-    val en = aggregate(col("embedding"), lit(0.0),
-      (a, x) => a + x.cast("double") * x.cast("double"))
-    aggregate(
-      transform(sequence(lit(0), lit(cents.size - 1)), i =>
-        struct(
-          round(
-            aggregate(
-              zip_with(col("embedding"), element_at(c, i + 1),
-                (x, y) => x.cast("double") * y),
-              lit(0.0), (a, v) => a + v) /
-            sqrt(en * aggregate(element_at(c, i + 1), lit(0.0),
-              (a, y) => a + y * y)), 6).as("s6"),
-          element_at(cid, i + 1).as("cell"))),
-      struct(lit(Double.MinValue).as("s6"), lit(-1).as("cell")),
-      // strict > over an ascending-cell scan keeps the LOWEST cell on a
-      // rounded tie — the (s6, -cell) struct-max assignTo computes
-      (best, cand) => when(cand("s6") > best("s6"), cand).otherwise(best))
-      .getField("cell")
-  }
-
-  /** Persist a fitted PQ index: the 8-byte code rows ARE the scan at
-    * search time (ADC never touches raw embeddings until re-rank), so the
-    * persisted codes table is the whole point — 16× smaller than the
-    * corpus it stands in for. Unlike [[ivfSave]] there is no pruning key:
-    * ADC scans every code row by design. */
-  def pqSave(index: PqIndex, path: String): Unit = {
-    index.codes.write.mode("overwrite").parquet(s"$path/codes")
-    index.codebooks
-      .withColumn("m", lit(index.m)).withColumn("dsub", lit(index.dsub))
-      .withColumn("ksub", lit(index.ksub)).withColumn("n", lit(index.n))
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-  }
-
-  /** Load a persisted PQ index (see [[pqSave]]). */
-  def pqLoad(s: SparkSession, path: String): PqIndex = {
-    val books = s.read.parquet(s"$path/codebooks")
-    val meta = books.select(max(col("m")), max(col("dsub")), max(col("ksub")),
-      max(col("n"))).head
-    PqIndex(s.read.parquet(s"$path/codes"),
-      books.select(col("sub"), col("code"), col("centroid")),
-      meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getLong(3))
-  }
+                     m: Int, dsub: Int, ksub: Int)
 
   /** Product-quantization fit, integer-exact (r10; the third ANN family
     * next to hyperplane LSH and IVF): the embedding splits into m
@@ -335,8 +245,7 @@ object SimSearch extends graft.Family {
     val codes = assigned.groupBy(col("vec_id"))
       .agg(expr("transform(array_sort(collect_list(struct(sub, code)))," +
         " p -> p.code)").as("codes"))
-    PqIndex(codes.ckpt(eager = false), books, m, dsub, ksub,
-      emb.count())
+    PqIndex(codes.ckpt(eager = false), books, m, dsub, ksub)
   }
 
   // one fit per corpus per JVM (same amortization story as ivfCache)
@@ -345,79 +254,19 @@ object SimSearch extends graft.Family {
   def pqIndexFor(s: SparkSession, d: String): PqIndex =
     pqCache.getOrElseUpdate(s, d, pqFitPortable(t(s, d, "embeddings")))
 
-  /** PQ-ADC search: each query builds an (m × ksub) lookup table of
-    * sub-dot-products against the broadcast codebooks; a candidate's
-    * approximate dot product is then the sum of m LUT entries addressed by
-    * its codes — NO candidate embedding is touched until the exact cosine
-    * re-rank over the rerankFactor·topK ADC survivors. Scale shape: the
-    * LUT is |Q|·m·ksub rows (broadcast); the corpus side carries only
-    * (cid, sub, code) rows whose LUT join + (qid, cid) sum both map-side
-    * combine; full-width embeddings rejoin for the tiny survivor set only.
-    * That is the PQ trade: scan compressed codes, not vectors. */
-  def pqSearch(index: PqIndex, corpus: DataFrame, queryPred: Column,
-               topK: Int = 5, rerankFactor: Int = 0): DataFrame = {
-    require(rerankFactor >= 0,
-      s"rerankFactor must be >= 0 (0 = auto pool); got $rerankFactor")
-    val m = index.m; val dsub = index.dsub
-    // rerankFactor = 0 ⇒ auto pool: max(8·topK, 6% of the corpus). ADC
-    // quantization error is constant in N while the distractor count grows
-    // linearly, so a FIXED pool loses recall as the corpus scales —
-    // measured on the near-random fixture: a 40-row pool recalls 0.73 of
-    // exact top-5 at N=500 but 0.53 at N=2000, while re-ranking ~6%
-    // (120 rows at N=2000) holds 0.76. A single flat PQ index honestly
-    // costs an O(N) re-rank fraction on data this unclustered; at extreme
-    // scale PQ composes with IVF cells so the fraction applies per probed
-    // cell, not per corpus (clustered real embeddings also need far less).
-    val pool = if (rerankFactor > 0) topK * rerankFactor
-               else math.max(topK * 8, math.ceil(index.n * 0.06).toInt)
-    val queries = corpus.filter(queryPred)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val lut = queries.select(col("qid"), posexplode(expr(
-        s"transform(sequence(0, ${m - 1})," +
-          s" j -> slice(qvec, j * $dsub + 1, $dsub))"))
-        .as(Seq("sub", "qsub")))
-      .join(broadcast(index.codebooks), Seq("sub"))
-      .withColumn("contrib", expr("dot_product(qsub, centroid)"))
-      .select(col("qid"), col("sub"), col("code"), col("contrib"))
-    // every (cid, sub) matches exactly one LUT row per qid, so the
-    // (qid, cid) aggregate sums exactly m contributions — ADC complete
-    val wAdc = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_dot").desc, col("cid"))
-    val survivors = index.codes
-      .select(col("vec_id").as("cid"),
-        posexplode(col("codes")).as(Seq("sub", "code")))
-      .join(broadcast(lut), Seq("sub", "code"))
-      .filter(col("cid") =!= col("qid"))
-      .groupBy(col("qid"), col("cid"))
-      .agg(sum(col("contrib")).as("adc_dot"))
-      .withColumn("arn", row_number().over(wAdc))
-      .filter(col("arn") <= pool)
-      .select(col("qid"), col("cid"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    survivors
-      .join(broadcast(queries), Seq("qid"))
-      .join(corpus.select(col("vec_id").as("cid"), col("embedding").as("cvec")),
-        Seq("cid"))
-      .withColumn("sim", expr("cosine_similarity(qvec, cvec)"))
-      .select(col("qid"), col("cid"), col("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-  }
-
   /** IVF-PQ composition — the scale-shape ANN index (VERDICT r8 directive):
     * IVF coarse cells bound WHERE a query looks (its nProbe closest of k
     * cells), PQ-ADC orders candidates INSIDE the probed cells from the
     * 8-byte code rows, and the exact cosine re-rank touches a CONSTANT
     * pool of ADC survivors (default 32·topK — independent of corpus size;
     * sized from the measured ADC ordering loss, see the inline note).
-    * Contrast with flat [[pqSearch]], whose honest auto pool re-ranked
+    * Contrast with a flat PQ scan, whose re-rank pool had to grow to
     * max(8·k, 6% of the corpus) per query to hold recall on unclustered
-    * data — an O(N) per-query cost that made llm_ann_pq the r8 board's
-    * slowest query (4.15 s). Here every per-query stage is bounded by the
-    * probed-cell population (~nProbe/k of the corpus; nProbe·√N rows at
-    * the k ≈ √N production sizing), the ADC join reads codes, never
-    * embeddings, and with the codes table cell-partitioned on disk
-    * ([[ivfSave]] layout) the scan prunes to the probed directories.
+    * data — an O(N) per-query cost that made the flat llm_ann_pq the r8
+    * board's slowest query (4.15 s). Here every per-query stage is bounded
+    * by the probed-cell population (~nProbe/k of the corpus; nProbe·√N
+    * rows at the k ≈ √N production sizing), and the ADC join reads codes,
+    * never embeddings.
     * Recall floor (llm_ann_pq_recall, oracle-checked): ≥ 0.6 of exact
     * top-5 — the IVF cell ceiling minus the ADC ordering loss that the
     * constant re-rank pool recovers. */
@@ -487,7 +336,7 @@ object SimSearch extends graft.Family {
   /** Corpus-level recall of an ANN result against the exact top-k ground
     * truth, as a 1-row contract frame: (n_queries, recall_ok). Both inputs
     * carry (qid, cid); recall = |ann ∩ exact| / |exact|. */
-  private def annRecall(s: SparkSession, ann: DataFrame, exact: DataFrame,
+  private def annRecall(ann: DataFrame, exact: DataFrame,
                         floor: Double): DataFrame = {
     val hits = exact.select(col("qid"), col("cid"))
       .join(ann.select(col("qid"), col("cid"), lit(1).as("hit")),
@@ -794,9 +643,7 @@ object SimSearch extends graft.Family {
     // llm_ann_ivf) + [[pqIndexFor]] codes + [[ivfPqSearch]] ADC within
     // probed cells and a constant re-rank pool. Completes the ANN
     // family: brute force (exact), LSH (bucketing), IVF (coarse cells),
-    // IVF-PQ (compressed-domain scan inside probed cells). The flat
-    // [[pqSearch]] stays as the single-index API (SimSearchSpec) but
-    // the board entry is the composed, scale-safe shape (VERDICT r8).
+    // IVF-PQ (compressed-domain scan inside probed cells).
     // FULLY ORACLE-CHECKED as of r10: both the IVF coarse fit and the
     // per-sub-space PQ codebooks come from the portable integer-exact
     // Lloyd loops ([[ivfFitPortable]]/[[pqFitPortable]]), and the probe +
@@ -806,10 +653,10 @@ object SimSearch extends graft.Family {
       ivfPqSearch(ivfIndexFor(s, d, k = 16), pqIndexFor(s, d),
         queryPred = col("vec_id") < 20, nProbe = 8)),
 
-    "llm_ann_lsh_recall" -> ((s, d) => annRecall(s,
+    "llm_ann_lsh_recall" -> ((s, d) => annRecall(
       defs("llm_ann_lsh")(s, d), defs("llm_cosine_topk")(s, d), 0.8)),
 
-    "llm_ann_ivf_recall" -> ((s, d) => annRecall(s,
+    "llm_ann_ivf_recall" -> ((s, d) => annRecall(
       defs("llm_ann_ivf")(s, d), defs("llm_cosine_topk")(s, d), 0.7)),
 
     // how much of the exact-pool MMR selection the IVF-pooled variant
@@ -817,10 +664,10 @@ object SimSearch extends graft.Family {
     // index at scale" claim. The floor reflects the 8-of-16-cell probe
     // ceiling compounded through the greedy (a pool miss can cascade into
     // later picks), measured with margin on the near-random fixture.
-    "llm_mmr_rerank_ann_recall" -> ((s, d) => annRecall(s,
+    "llm_mmr_rerank_ann_recall" -> ((s, d) => annRecall(
       defs("llm_mmr_rerank_ann")(s, d), defs("llm_mmr_rerank")(s, d), 0.5)),
 
-    "llm_ann_pq_recall" -> ((s, d) => annRecall(s,
+    "llm_ann_pq_recall" -> ((s, d) => annRecall(
       defs("llm_ann_pq")(s, d), defs("llm_cosine_topk")(s, d), 0.6)),
 
     // Matryoshka-truncation retrieval eval (the MRL question: how much

@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-safe point-in-interval join (SURVEY §2 "as-of / interval join",
-  * companion to [[AsOf]]): match each point row to every interval
-  * containing it WITHOUT a nested-loop join.
+  * companion to [[graft.plans.AsOfJoin]]): match each point row to every
+  * interval containing it WITHOUT a nested-loop join.
   *
   * Spark plans a plain `p.ts >= i.start && p.ts < i.end` condition as
   * BroadcastNestedLoopJoin — O(|points|·|intervals|) and an OOM once the

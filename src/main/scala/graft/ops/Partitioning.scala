@@ -6,28 +6,15 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Physical-layout utilities for the 100 TB design point (SURVEY.md §2
-  * "Partitioning & shuffle"): bucketed co-located joins, skew salting,
-  * partition-local sort.
+  * "Partitioning & shuffle"): range-clustered write layout, skew salting,
+  * and distributed prefix scans over a range partitioning.
   *
   * These are the knobs the reference solved with B-tree indexes and a
   * single sequential process (`sql/init.sql:45-47`); on Spark the
-  * equivalents are table LAYOUT (bucketing ≈ join index), SALT (skew
-  * spreading), and partition-aware writes.
+  * equivalents are table LAYOUT (range clustering ≈ a pruning index),
+  * SALT (skew spreading), and partition-aware scans.
   */
 object Partitioning {
-
-  /** Write a table bucketed+sorted by the join key. Two tables bucketed the
-    * same way join WITHOUT a shuffle on either side (verified in
-    * PartitioningSpec by asserting the executed plan has no Exchange) —
-    * the Spark analogue of the reference's location-id B-trees. */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-                    nBuckets: Int = 8): Unit =
-    df.write
-      .bucketBy(nBuckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .mode("overwrite")
-      .saveAsTable(table)
 
   /** Skew-spreading join: FACT side gets a row-local salt in [0, n);
     * DIM side is replicated n× with every salt value; the join key becomes
@@ -50,85 +37,10 @@ object Partitioning {
     saltedFact.join(saltedDim, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** Partition-local sort (no global shuffle) — e.g. to lay out parquet
-    * row groups by a pruning key within each partition. */
-  def sortWithin(df: DataFrame, cols: String*): DataFrame =
-    df.sortWithinPartitions(cols.map(col): _*)
-
   /** Range-partition + global sort layout for write-time clustering. */
   def clusterBy(df: DataFrame, n: Int, cols: String*): DataFrame =
     df.repartitionByRange(n, cols.map(col): _*)
       .sortWithinPartitions(cols.map(col): _*)
-
-  /** Two-dimensional Z-order clustering: each column is min-max normalized
-    * to a 16-bit bucket ordinal, the Morton interleave of the two ordinals
-    * (`functions.InterleaveBits`, codegen'd) becomes the layout key, and
-    * rows are range-partitioned + sorted by it. Files then tile the
-    * (a, b) plane in rectangles, so parquet footer min/max stats prune on
-    * EITHER column (~√selectivity of the files), where `clusterBy(a)`
-    * prunes only on `a`. The min/max fetch is one 1-row aggregate —
-    * bounded driver traffic at any scale, same class as the quality-filter
-    * cutoff broadcast.
-    *
-    * Numeric/date columns only (anything castable to double). NULL ordinals
-    * sort first (bucket -1), keeping NULL rows co-located, not dropped. */
-  def clusterByZOrder(df: DataFrame, n: Int, colA: String, colB: String)
-      : DataFrame = {
-    val (za, zb) = ordinals(df, colA, colB, bits = 16)
-    df.withColumn("__za", za)
-      .withColumn("__zb", zb)
-      .withColumn("__zkey", expr("interleave_bits(__za, __zb)"))
-      .repartitionByRange(n, col("__zkey"))
-      .sortWithinPartitions(col("__zkey"))
-      .drop("__za", "__zb", "__zkey")
-  }
-
-  /** Hilbert-curve variant of [[clusterByZOrder]]: identical ordinal
-    * normalization (14-bit here — hilbert_index's grid order), but the
-    * sort key is the Hilbert distance (functions/Hilbert.scala). The
-    * curve has NO diagonal jumps, so each range-partitioned file covers
-    * a contiguous curve segment whose bounding box is tighter in the
-    * worst case than the Morton tiling's — the layout the lakehouse
-    * engines ship as HILBERT clustering. */
-  def clusterByHilbert(df: DataFrame, n: Int, colA: String, colB: String)
-      : DataFrame = {
-    val (ha, hb) = ordinals(df, colA, colB, bits = 14)
-    df.withColumn("__ha", ha)
-      .withColumn("__hb", hb)
-      .withColumn("__hkey", expr("hilbert_index(__ha, __hb)"))
-      .repartitionByRange(n, col("__hkey"))
-      .sortWithinPartitions(col("__hkey"))
-      .drop("__ha", "__hb", "__hkey")
-  }
-
-  /** The min-max normalisation both 2-D layouts key on: `colA` and `colB`
-    * as `bits`-bit bucket ordinals, NULL as -1, from one 1-row bounds
-    * probe. */
-  private def ordinals(df: DataFrame, colA: String, colB: String,
-                       bits: Int): (Column, Column) = {
-    // date/timestamp keys go through an epoch-number view first (DATE has
-    // no direct double cast; NTZ reuses the session-UTC instant)
-    def num(c: String): Column = df.schema(c).dataType match {
-      case org.apache.spark.sql.types.DateType => unix_date(col(c)).cast("double")
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        col(c).cast("timestamp_ltz").cast("double")
-      case _ => col(c).cast("double")
-    }
-    val bounds = df.agg(
-      min(num(colA)).as("mna"), max(num(colA)).as("mxa"),
-      min(num(colB)).as("mnb"), max(num(colB)).as("mxb")).head()
-    // an all-NULL column yields NULL bounds → every ordinal hits the
-    // coalesce(-1) arm; 0.0 here just keeps the arithmetic well-defined
-    def b(i: Int): Double = if (bounds.isNullAt(i)) 0.0 else bounds.getDouble(i)
-    val top = ((1 << bits) - 1).toDouble
-    def ordinal(c: String, mn: Double, mx: Double): Column = {
-      val scaled =
-        if (mx > mn) ((num(c) - lit(mn)) / lit(mx - mn) * lit(top))
-        else lit(0.0)
-      coalesce(scaled.cast("int"), lit(-1))
-    }
-    (ordinal(colA, b(0), b(1)), ordinal(colB, b(2), b(3)))
-  }
 
   /** The first level of every `ranked*` kernel below: range-partition on
     * `order`, sort each partition locally, tag rows with their partition id

@@ -11,8 +11,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 
 /** Native as-of join — the full custom-operator ladder (SURVEY §2 "as-of
-  * join"; the composed union+window formulation lives in
-  * [[graft.ops.AsOf]] and stays the oracle-anchored reference):
+  * join"; the composed window formulation is the `join_asof` query in
+  * [[graft.queries.EventsBatch]] and stays the oracle-anchored reference):
   *
   *  - [[AsOfJoin]]: a logical `BinaryNode` carrying equi-keys, the two
   *    event-time expressions and the direction;

@@ -18,9 +18,10 @@ object EventsBatch extends graft.Family {
   private val typeDomainCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[String]]
 
-  /** Event-type transition counts `(prev_type, next_type, n)` over each
-    * user's (ts, event_id)-ordered events — the Markov-chain input. */
-  private def transitionCounts(s: SparkSession, d: String): DataFrame = {
+  /** Each event with the type of the same user's previous event in
+    * (ts, event_id) order, as `prev_type`; a user's first event has none
+    * and is dropped. */
+  private def transitionPairs(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     t(s, d, "events")
@@ -28,9 +29,14 @@ object EventsBatch extends graft.Family {
         col("event_type"))
       .withColumn("prev_type", lag(col("event_type"), 1).over(w))
       .filter(col("prev_type").isNotNull)
+  }
+
+  /** Event-type transition counts `(prev_type, next_type, n)` over each
+    * user's (ts, event_id)-ordered events — the Markov-chain input. */
+  private def transitionCounts(s: SparkSession, d: String): DataFrame =
+    transitionPairs(s, d)
       .groupBy(col("prev_type"), col("event_type").as("next_type"))
       .agg(count(lit(1)).as("n"))
-  }
 
   /** DuckDB replay of [[transitionCounts]]: `c(prev_type, next_type, n)`. */
   private val transitionCtes: String = """pairs AS (
@@ -541,20 +547,13 @@ object EventsBatch extends graft.Family {
     // lag pairs → pair counts → row-normalized probabilities. One
     // user-keyed window + one pair aggregate; the |types|² transition
     // table is bounded whatever the event volume.
-    "evt_markov_transitions" -> ((s, d) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      t(s, d, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("prev_type", lag(col("event_type"), 1).over(w))
-        .filter(col("prev_type").isNotNull)
+    "evt_markov_transitions" -> ((s, d) =>
+      transitionPairs(s, d)
         .select(col("prev_type"), col("event_type").as("next_type"))
         .groupBy(col("prev_type"), col("next_type"))
         .agg(count(lit(1)).as("n"))
         .withColumn("p", round(col("n") /
-          sum(col("n")).over(Window.partitionBy(col("prev_type"))), 6))
-    }),
+          sum(col("n")).over(Window.partitionBy(col("prev_type"))), 6))),
 
     // steady-state distribution of the event-type Markov chain: 10 power
     // steps from the uniform vector, ALL-INTEGER — transition cells on a
@@ -1474,7 +1473,7 @@ object EventsBatch extends graft.Family {
     // counted as non-overlapping regex matches of view→clicks*→purchase.
     // Scale shape: ONE user-keyed aggregate; the per-user sort happens
     // inside array_sort on the collected (bounded) history, not as a
-    // global sort — same cost class as the sessionize operators. The
+    // global sort — same cost class as the event-time sessionizer. The
     // regex runs once per user on the journey, not per event.
     "evt_pattern_match" -> ((s, d) => {
       t(s, d, "events")

@@ -66,6 +66,26 @@ object Relational extends graft.Family {
     (lit(100L) - round(col("l_discount") * 100).cast("bigint"))
   private def sumRevenue = sum(revenueU).cast("double") / 10000.0
 
+  /** Per `l_returnflag` (as `grp`), the exact-cent `l_extendedprice`
+    * quantile MEMBERS named by `qs` (fraction → column), as BIGINT cents.
+    * Spark's percentile_disc returns DOUBLE even for integral input; the
+    * selected value is an exact group member, so the BIGINT cast is
+    * lossless and REQUIRED (a float64 column would hash-mismatch the
+    * twin's BIGINT in the oracle's pandas comparison — the ml_confusion
+    * dtype trap). */
+  private def centQuartiles(s: SparkSession, d: String,
+                            qs: (Double, String)*): DataFrame = {
+    val q = qs.map { case (f, name) =>
+      expr(s"CAST(percentile_disc($f) WITHIN GROUP (ORDER BY v) AS BIGINT)")
+        .as(name)
+    }
+    t(s, d, "lineitem")
+      .select(col("l_returnflag").as("grp"),
+        round(col("l_extendedprice") * 100).cast("bigint").as("v"))
+      .groupBy(col("grp"))
+      .agg(q.head, q.tail: _*)
+  }
+
   /** A supplier's synthetic grid coordinate on one axis, 0..9999: the
     * 4-hex-digit salted hash of `s_suppkey` (`gx:` / `gy:`), shared by the
     * spatial joins, DBSCAN and the Hilbert / geohash encoders. */
@@ -367,22 +387,7 @@ object Relational extends graft.Family {
     // (percentile_disc returns an element, never an interpolation), so
     // the whole statistic is one floor-ppm division of BIGINTs.
     "agg_bowley_skew" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .select(col("l_returnflag").as("grp"),
-          round(col("l_extendedprice") * 100).cast("bigint").as("v"))
-        .groupBy(col("grp"))
-        .agg(
-          // Spark's percentile_disc returns DOUBLE even for integral
-          // input — the selected value is an exact group member, so the
-          // BIGINT cast is lossless and REQUIRED (a float64 column would
-          // hash-mismatch the twin's BIGINT in the driver's pandas
-          // bridge — the ml_confusion dtype trap)
-          expr("CAST(percentile_disc(0.25) WITHIN GROUP (ORDER BY v)" +
-            " AS BIGINT)").as("q1"),
-          expr("CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY v)" +
-            " AS BIGINT)").as("q2"),
-          expr("CAST(percentile_disc(0.75) WITHIN GROUP (ORDER BY v)" +
-            " AS BIGINT)").as("q3"))
+      centQuartiles(s, d, 0.25 -> "q1", 0.5 -> "q2", 0.75 -> "q3")
         .selectExpr("grp", "q1", "q2", "q3",
           "CASE WHEN q3 > q1 THEN CAST(floor(1e6 * (q3 + q1 - 2 * q2)" +
             " / (q3 - q1) + 0.5) AS BIGINT)" +
@@ -393,15 +398,7 @@ object Relational extends graft.Family {
     // ((q3−q1)/(q3+q1), the robust relative-spread monitor): same
     // exact-cent quartile members, one floor-ppm division.
     "agg_qcd" -> ((s, d) => {
-      t(s, d, "lineitem")
-        .select(col("l_returnflag").as("grp"),
-          round(col("l_extendedprice") * 100).cast("bigint").as("v"))
-        .groupBy(col("grp"))
-        .agg(
-          expr("CAST(percentile_disc(0.25) WITHIN GROUP (ORDER BY v)" +
-            " AS BIGINT)").as("q1"),
-          expr("CAST(percentile_disc(0.75) WITHIN GROUP (ORDER BY v)" +
-            " AS BIGINT)").as("q3"))
+      centQuartiles(s, d, 0.25 -> "q1", 0.75 -> "q3")
         .selectExpr("grp", "q1", "q3",
           "CASE WHEN q3 + q1 > 0 THEN CAST(floor(1e6 * (q3 - q1)" +
             " / (q3 + q1) + 0.5) AS BIGINT)" +

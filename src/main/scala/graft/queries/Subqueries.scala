@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.Tables.registerAll
 
 /** Subquery surface (Catalyst's subquery handling, SURVEY §4): scalar,

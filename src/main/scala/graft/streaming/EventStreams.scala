@@ -83,10 +83,6 @@ object EventStreams {
     events.withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Stream-static join: enrich the stream with a static dimension. */
-  def enrich(events: DataFrame, dim: DataFrame): DataFrame =
-    events.join(broadcast(dim), Seq("event_type"), "left")
-
   /** Click→purchase attribution (SURVEY.md §2 streaming table): every
     * purchase paired with each click by the same user in the hour up to
     * and including it (`click_ts ≤ purchase_ts ≤ click_ts + 1 hour`).
@@ -251,38 +247,23 @@ object EventStreams {
   case class SessionState(n: Long, total: Double, lastTs: Long)
   case class SessionOut(user_id: Long, n_events: Long, total_value: Double)
 
-  /** Custom sessionization via flatMapGroupsWithState (the
-    * beyond-session_window path of SURVEY §2): emits a session row when a
-    * user goes quiet past the processing-time timeout. */
-  def sessionize(events: Dataset[Ev], gapMs: Long = 30 * 60 * 1000L)
-      : Dataset[SessionOut] =
-    sessions(events, GroupStateTimeout.ProcessingTimeTimeout, gapMs)(
-      (state, _) => state.setTimeoutDuration(gapMs))
-
   /** Event-time sessionization via flatMapGroupsWithState with
     * EventTimeTimeout: sessions close when the WATERMARK passes the last
     * event + gap, not when wall-clock elapses — deterministic under replay
     * (a historical backfill closes the same sessions as the live run,
-    * which ProcessingTimeTimeout cannot guarantee). Requires a watermark
-    * on `ts` (set here). */
+    * which a processing-time timeout cannot guarantee). Requires a
+    * watermark on `ts` (set here).
+    *
+    * Per user, a timed-out session is emitted and dropped; otherwise the
+    * batch's events extend the open session in (ts, event_id) order, a gap
+    * of `gapMs` or more closes it, and the session left open times out at
+    * its last event + `gapMs`. */
   def sessionizeEventTime(events: Dataset[Ev], gapMs: Long = 30 * 60 * 1000L)
-      : Dataset[SessionOut] =
-    sessions(events.withWatermark("ts", "10 minutes"),
-      GroupStateTimeout.EventTimeTimeout, gapMs)(
-      (state, s) => state.setTimeoutTimestamp(s.lastTs + gapMs))
-
-  /** The per-user session state machine both sessionizers run: a timed-out
-    * session is emitted and dropped; otherwise the batch's events extend
-    * the open session in (ts, event_id) order, a gap of `gapMs` or more
-    * closes it, and `rearm` sets the timeout of the session left open. */
-  private def sessions(events: Dataset[Ev], timeout: GroupStateTimeout,
-                       gapMs: Long)(
-      rearm: (GroupState[SessionState], SessionState) => Unit)
       : Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
+    events.withWatermark("ts", "10 minutes").groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, timeout) {
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (uid: Long, rows: Iterator[Ev], state: GroupState[SessionState]) =>
           if (state.hasTimedOut) {
             val s = state.get
@@ -299,7 +280,7 @@ object EventStreams {
               s = SessionState(s.n + 1, s.total + e.value, e.ts.getTime)
             }
             state.update(s)
-            rearm(state, s)
+            state.setTimeoutTimestamp(s.lastTs + gapMs)
             closed.reverseIterator
           }
       }
@@ -336,203 +317,6 @@ object EventStreams {
         org.apache.spark.sql.streaming.OutputMode.Append())
   }
 
-  case class QuietAlert(user_id: Long, n_events: Long, quiet_since_ms: Long)
-
-  /** transformWithState TIMERS (the API surface flatMapGroupsWithState's
-    * setTimeoutDuration became): every batch of input re-arms a per-user
-    * processing-time timer `quietMs` ahead; if no input arrives before it
-    * fires, [[handleExpiredTimer]] emits one inactivity alert and clears
-    * the user's state — the push-based complement of [[sessionize]]'s
-    * timeout path. Timers are explicit here (register/delete, many per key
-    * allowed), vs the single implicit timeout slot of the old API. */
-  class InactivityAlertProcessor(quietMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Ev, QuietAlert] {
-    @transient private var st: org.apache.spark.sql.streaming.ValueState[SessionState] = _
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[SessionState]("seen",
-        org.apache.spark.sql.Encoders.product[SessionState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[Ev],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[QuietAlert] = {
-      val prev = if (st.exists()) st.get() else SessionState(0L, 0.0, 0L)
-      var n = prev.n; var total = prev.total
-      rows.foreach { e => n += 1; total += e.value }
-      val now = timerValues.getCurrentProcessingTimeInMs()
-      st.update(SessionState(n, total, now))
-      // re-arm: drop any previously registered timer, set a fresh one
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      getHandle.registerTimer(now + quietMs)
-      Iterator.empty
-    }
-    override def handleExpiredTimer(key: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[QuietAlert] = {
-      val s = if (st.exists()) st.get() else SessionState(0L, 0.0, 0L)
-      st.clear()
-      Iterator.single(QuietAlert(key, s.n, expiredTimerInfo.getExpiryTimeInMs()))
-    }
-  }
-
-  /** Inactivity alerts over a streaming Dataset[Ev] (processing time). */
-  def inactivityAlerts(events: Dataset[Ev], quietMs: Long): Dataset[QuietAlert] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new InactivityAlertProcessor(quietMs),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-  }
-
-  case class TypeCount(user_id: Long, event_type: String, n: Long)
-
-  /** transformWithState MAP STATE: per-user map keyed by event_type — the
-    * composite-state shape ValueState can't express without packing the
-    * whole map into one blob (and rewriting it wholesale every batch).
-    * MapState reads/writes only the touched keys — on the RocksDB store
-    * each map entry is its own KV pair, so a user with thousands of
-    * event types pays per-key, not per-map, I/O. Emits the updated
-    * (user, type, count) rows per batch. */
-  class TypeCountsProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Ev, TypeCount] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.MapState[String, Long] = _
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getMapState[String, Long]("type_counts",
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[Ev],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[TypeCount] = {
-      val touched = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      rows.foreach { e =>
-        val cur = touched.getOrElse(e.event_type,
-          if (st.containsKey(e.event_type)) st.getValue(e.event_type) else 0L)
-        touched(e.event_type) = cur + 1L
-      }
-      touched.foreach { case (t, n) => st.updateValue(t, n) }
-      touched.iterator.map { case (t, n) => TypeCount(key, t, n) }
-    }
-  }
-
-  case class RecentOut(user_id: Long, ts: java.sql.Timestamp, recent: String)
-
-  /** ListState processor (the third transformWithState state shape next to
-    * ValueState and MapState): a bounded per-user rolling history — after
-    * each event the list holds the last ≤3 event-type initials, emitted as
-    * a comma-joined trail. appendValue + a trim-on-overflow rewrite keeps
-    * the stored list at k elements whatever the stream length; rows within
-    * a micro-batch are sorted by ts because arrival order per key inside a
-    * batch is not guaranteed. */
-  class RecentEventsProcessor(k: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Ev, RecentOut] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.ListState[String] = _
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getListState[String]("recent",
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: Long, rows: Iterator[Ev],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[RecentOut] = {
-      var cur = st.get().toVector
-      val out = rows.toVector
-        .sortBy(e => (e.ts.getTime, e.ts.getNanos)).map { e =>
-        cur = (cur :+ e.event_type.substring(0, 1).toUpperCase).takeRight(k)
-        RecentOut(key, e.ts, cur.mkString(","))
-      }
-      st.put(cur.toArray)
-      out.iterator
-    }
-  }
-
-  /** Per-user rolling last-3 trail via ListState.
-    *
-    * Ordering contract: rows are event-time-sorted WITHIN each micro-batch
-    * (see [[RecentEventsProcessor]]), but state appends across batches in
-    * arrival order — an event that arrives in a later micro-batch than a
-    * newer-timestamped sibling lands after it in the trail. transformWithState
-    * has no watermark-driven reorder buffer, so callers feeding
-    * cross-batch-disordered streams must pre-sort upstream (or accept
-    * arrival-order trails); the batch twin assumes in-order arrival. */
-  def recentEvents(events: Dataset[Ev], k: Int = 3): Dataset[RecentOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new RecentEventsProcessor(k),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-  }
-
-  case class DailyCount(event_type: String, day: java.sql.Date, x: Long)
-  case class CusumOut(event_type: String, day: java.sql.Date, x: Long,
-                      cusum: Double, alarm: Boolean)
-  case class CusumSt(cum: Long, minCum: Long)
-
-  /** Streaming CUSUM drift gate — the online form of the batch
-    * `evt_cusum` query: consumes the compacted per-type DAILY count
-    * stream (an upstream windowed aggregate in production) and maintains
-    * CUSUM⁺ against a FIXED per-type target rate in a ValueState. The
-    * target arrives as an exact rational (num = historical total,
-    * den = historical n_days), so the per-day deviation x·den − num and
-    * both state fields stay exact integers — the same scaling discipline
-    * as the batch query, whose closed form cum − min(0, min-prefix) this
-    * recursion reproduces (Round6dSpec pins closed form ≡ recursion; the
-    * streaming spec pins streamed ≡ batch on the same target). minCum
-    * starts at 0, which is safe BECAUSE the emitted S folds min(minCum, 0)
-    * — the extra 0 is absorbed. Ordering contract: rows are day-sorted
-    * within each micro-batch; across batches days must arrive in order
-    * (same in-order contract as [[recentEvents]]). */
-  class CusumGateProcessor(target: Map[String, (Long, Long)])
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, DailyCount, CusumOut] {
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[CusumSt] = _
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[CusumSt]("cusum",
-        org.apache.spark.sql.Encoders.product[CusumSt],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(key: String, rows: Iterator[DailyCount],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[CusumOut] = {
-      val (num, den) = target.getOrElse(key, (0L, 1L))
-      val prev = if (st.exists()) st.get() else CusumSt(0L, 0L)
-      var cum = prev.cum; var minCum = prev.minCum
-      val out = rows.toVector.sortBy(_.day.getTime).map { r =>
-        cum += r.x * den - num
-        if (cum < minCum) minCum = cum
-        val s = cum - math.min(minCum, 0L)
-        CusumOut(key, r.day, r.x, s.toDouble / den, s > 25L * den)
-      }
-      st.update(CusumSt(cum, minCum))
-      out.iterator
-    }
-  }
-
-  /** Wire the CUSUM gate over a (possibly streaming) daily-count set. */
-  def cusumGate(daily: Dataset[DailyCount],
-                target: Map[String, (Long, Long)]): Dataset[CusumOut] = {
-    import daily.sparkSession.implicits._
-    daily.groupByKey(_.event_type)
-      .transformWithState(new CusumGateProcessor(target),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-  }
-
-  /** Per-type target rate from a HISTORY batch, as the exact rational
-    * (total, n_days) [[cusumGate]] expects. The collect is bounded by
-    * |event types|. */
-  def cusumTarget(dailyHistory: DataFrame): Map[String, (Long, Long)] =
-    dailyHistory.groupBy(col("event_type"))
-      .agg(org.apache.spark.sql.functions.sum(col("x")).as("total"),
-        org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n_days"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-
   /** Streaming threshold alerts: events whose value exceeds their type's
     * (static, precomputed) p99 baseline. The third stateless gate next to
     * [[DedupGate.gate]] and [[DedupGate.embedGate]]: baseline is a
@@ -558,64 +342,6 @@ object EventStreams {
     history.groupBy(col("event_type"))
       .agg(expr("percentile_disc(0.99) WITHIN GROUP (ORDER BY value)")
         .as("p99"))
-
-  /** Per-(user, event_type) streaming counts via MapState. */
-  def typeCounts(events: Dataset[Ev]): Dataset[TypeCount] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new TypeCountsProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
-  }
-
-  case class SeqSpanState(spans: Map[String, (Long, Long)],
-                          emitted: Seq[(String, String)])
-  case class SeqPairOut(user_id: Long, etype_a: String, etype_b: String)
-
-  /** Streaming ordered-2-sequence gate — the incremental twin of the
-    * batch `evt_frequent_seq2` support count: per user, emit (a, b) the
-    * FIRST time the observed history satisfies "some a-event strictly
-    * before some b-event" (⇔ min ts(a) < max ts(b)). State per user is
-    * |types| span pairs + the emitted-pair list (≤ |types|² entries) —
-    * bounded by the type vocabulary, never the event count. The
-    * satisfied-pair predicate is a monotone function of the span state
-    * (spans only widen), so the emitted SET is arrival-order invariant
-    * and converges to exactly the batch answer under any micro-batch
-    * replay (asserted streamed ≡ batch in StreamingSpec). */
-  def seqGate(events: Dataset[Ev]): Dataset[SeqPairOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SeqSpanState, SeqPairOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[SeqSpanState]) =>
-          var s = state.getOption
-            .getOrElse(SeqSpanState(Map.empty, Seq.empty))
-          var emitted = s.emitted.toSet
-          val out = scala.collection.mutable.ListBuffer.empty[SeqPairOut]
-          rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val ts = e.ts.getTime
-            val (lo, hi) = s.spans.getOrElse(e.event_type,
-              (Long.MaxValue, Long.MinValue))
-            s = s.copy(spans = s.spans.updated(e.event_type,
-              (math.min(lo, ts), math.max(hi, ts))))
-            val (nlo, nhi) = s.spans(e.event_type)
-            s.spans.foreach { case (other, (olo, ohi)) =>
-              if (other != e.event_type) {
-                if (nlo < ohi && !emitted((e.event_type, other))) {
-                  out += SeqPairOut(uid, e.event_type, other)
-                  emitted += ((e.event_type, other))
-                }
-                if (olo < nhi && !emitted((other, e.event_type))) {
-                  out += SeqPairOut(uid, other, e.event_type)
-                  emitted += ((other, e.event_type))
-                }
-              }
-            }
-          }
-          state.update(SeqSpanState(s.spans, emitted.toSeq))
-          out.iterator
-      }
-  }
 
   /** Run any of the above to the memory sink table `name`, processing all
     * available input once (deterministic batch replay for tests); read the

@@ -3,11 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.core.Tables.t
-import graft.ops.AsOf
 
-/** The generic AsOf operator must agree with the oracle-checked
-  * `join_asof` query (its events-specialized form) and handle the
-  * strict-inequality edge. */
+/** Interval and as-of joins: the bucketed interval join must equal the
+  * nested-loop range join without planning one, and the as-of queries
+  * must keep their strict-inequality edge. */
 class AsOfSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   val sf = TestSession.sf
@@ -78,39 +77,5 @@ class AsOfSpec extends AnyFunSuite {
     assert(sec(back(3L)) == Some(100L), s"backward picked ${back(3L)}")
     // strictly later: the 300s click, NOT the tied 200s click
     assert(sec(fwd(3L)) == Some(300L), s"forward picked ${fwd(3L)}")
-  }
-
-  test("generic joinAsOf equals the oracle-checked specialized query") {
-    val ev = t(spark, sf, "events")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts")
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("ts").as("click_ts"))
-    val generic = AsOf.joinAsOf(purchases, clicks, Seq("user_id"),
-        "ts", "ts", Seq("click_ts"))
-      .select(col("event_id"), col("click_ts_asof"))
-      .collect().map(r => r.getLong(0) ->
-        Option(r.get(1)).map(_.toString)).toMap
-    val specialized = graft.queries.EventsBatch.defs("join_asof")(spark, sf)
-      .select(col("event_id"), col("last_click_ts"))
-      .collect().map(r => r.getLong(0) ->
-        Option(r.get(1)).map(_.toString)).toMap
-    assert(generic == specialized)
-  }
-
-  test("strictly-prior semantics: equal-timestamp right rows do not match") {
-    import spark.implicits._
-    val left = Seq((1L, "2024-01-01 10:00:00"), (2L, "2024-01-01 11:00:00"))
-      .toDF("id", "lts").select($"id", $"lts".cast("timestamp").as("lts"))
-      .withColumn("k", lit("a"))
-    val right = Seq(("2024-01-01 10:00:00", 100.0), ("2024-01-01 10:30:00", 200.0))
-      .toDF("rts", "v").select($"rts".cast("timestamp").as("rts"), $"v")
-      .withColumn("k", lit("a"))
-    val got = AsOf.joinAsOf(left, right, Seq("k"), "lts", "rts", Seq("v"))
-      .orderBy("id").collect()
-    // id=1 at 10:00 has NO strictly-prior right row (10:00 is equal, not prior)
-    assert(got(0).isNullAt(got(0).fieldIndex("v_asof")))
-    // id=2 at 11:00 matches the latest prior (10:30 → 200.0)
-    assert(got(1).getDouble(got(1).fieldIndex("v_asof")) == 200.0)
   }
 }

@@ -10,18 +10,6 @@ class DedupSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   val sf = TestSession.sf
 
-  test("MinHash recalls most true near-dup pairs, with sane precision") {
-    val exact = TextOps.defs("llm_ngram_jaccard")(spark, sf)
-      .select(col("doc1"), col("doc2"), col("jaccard"))
-    val truth = exact.filter(col("jaccard") >= 0.3)
-      .select("doc1", "doc2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val mh = Dedup.minhashPairs(spark, sf, maxDist = 0.8)
-      .select("doc1", "doc2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(truth.nonEmpty, "fixture should contain near-dup pairs")
-    val recalled = truth.intersect(mh).size.toDouble / truth.size
-    assert(recalled >= 0.8, s"MinHash recall too low: $recalled (|truth|=${truth.size}, |mh|=${mh.size})")
-  }
-
   test("native banded MinHash: near-exact recall, no false positives") {
     val exact = TextOps.defs("llm_ngram_jaccard")(spark, sf)
       .filter(col("jaccard") >= 0.3)
@@ -151,16 +139,21 @@ class DedupSpec extends AnyFunSuite {
     val dups = base.take(12).map { case (i, v) =>
       (i + 1000L, v.map(x => x + 0.05f * rnd.nextGaussian().toFloat))
     }
-    val emb = (base ++ dups).toDF("vec_id", "embedding")
-    val got = Dedup.embeddingNearDup(emb)
-      .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // and one byte-identical copy (2020 of 20), which must pair at cos 1.0
+    val same = Seq((2020L, base(20)._2))
+    val emb = (base ++ dups ++ same).toDF("vec_id", "embedding")
+    val rows = Dedup.embeddingNearDup(emb).collect()
+      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    assert(rows.get((20L, 2020L)).exists(c => math.abs(c - 1.0) < 1e-9),
+      s"identical vectors not paired at cosine 1.0: ${rows.get((20L, 2020L))}")
+    val got = rows.keySet
     val planted = (0 until 12).map(i => (i.toLong, i + 1000L)).toSet
     // exact cosine re-check ⇒ anything found must really be ≥ 0.95
     def cos(a: Array[Float], b: Array[Float]) = {
       val dot = a.zip(b).map { case (x, y) => x.toDouble * y }.sum
       dot / math.sqrt(a.map(x => x.toDouble * x).sum * b.map(x => x.toDouble * x).sum)
     }
-    val all = (base ++ dups).toMap
+    val all = (base ++ dups ++ same).toMap
     got.foreach { case (i, j) =>
       assert(cos(all(i), all(j)) >= 0.95, s"false positive pair ($i,$j)") }
     val recall = got.intersect(planted).size.toDouble / planted.size

@@ -5,43 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.core.Tables.t
 import graft.ops.Partitioning
 
-/** Physical-layout behaviors: bucketed join must be shuffle-free, salted
-  * join must be result-identical to the plain join, partition-local sort
-  * must actually sort within partitions. */
+/** Physical-layout behaviors: the salted join must be result-identical to
+  * the plain join, and AQE must split a skewed join partition. */
 class PartitioningSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
   val sf = TestSession.sf
-
-  test("bucketed-by-key join executes without a shuffle") {
-    // a previous JVM's managed-table dirs survive while the in-memory
-    // metastore doesn't — clear both, or saveAsTable refuses the location
-    Seq("b_orders", "b_lineitem").foreach { tbl =>
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new java.io.File(s"spark-warehouse/$tbl")
-      if (loc.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(loc).deleteRecursively()
-      }
-    }
-    Partitioning.writeBucketed(
-      t(spark, sf, "orders"), "b_orders", "o_orderkey", 4)
-    Partitioning.writeBucketed(
-      t(spark, sf, "lineitem"), "b_lineitem", "l_orderkey", 4)
-    val joined = spark.table("b_lineitem")
-      .join(spark.table("b_orders"),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_orderstatus")).agg(sum(col("l_quantity")).as("q"))
-    joined.collect()
-    val plan = joined.queryExecution.executedPlan.toString
-    // the join itself must not introduce an Exchange on either side; the
-    // only allowed exchange is the final aggregation shuffle
-    val joinPart = plan.split("HashAggregate").last
-    assert(joinPart.contains("SortMergeJoin") || joinPart.contains("BroadcastHashJoin"))
-    assert(!joinPart.contains("Exchange hashpartitioning(l_orderkey"),
-      s"bucketed join re-shuffled the fact side:\n$plan")
-    assert(!joinPart.contains("Exchange hashpartitioning(o_orderkey"),
-      s"bucketed join re-shuffled the build side:\n$plan")
-  }
 
   test("salted join returns exactly the plain-join result") {
     val li = t(spark, sf, "lineitem").select("l_orderkey", "l_quantity")
@@ -87,20 +55,6 @@ class PartitioningSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
-  }
-
-  test("sortWithinPartitions yields monotone runs per partition, no shuffle") {
-    val df = Partitioning.sortWithin(
-      t(spark, sf, "orders").repartition(4, col("o_orderstatus")), "o_orderkey")
-    assert(!df.queryExecution.executedPlan.toString
-      .split("Sort ").last.contains("ENSURE_REQUIREMENTS, [plan_id"))
-    val ok = df.select("o_orderkey")
-      .mapPartitions { it =>
-        val keys = it.map(_.getLong(0)).toSeq
-        Iterator.single(keys == keys.sorted)
-      }(org.apache.spark.sql.Encoders.scalaBoolean)
-      .collect()
-    assert(ok.forall(identity))
   }
 
   test("approx_count_distinct within rsd bounds of exact") {

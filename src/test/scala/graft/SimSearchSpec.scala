@@ -66,87 +66,4 @@ class SimSearchSpec extends AnyFunSuite {
     // genuinely close neighbors (cos ≥ 0.8) fewer, longer tables would do
     assert(recall >= 0.8, s"ANN recall too low: $recall")
   }
-
-  test("persisted IVF index: loaded search ≡ fit search, cell layout prunes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
-    val fit = SimSearch.ivfIndexFor(spark, sf, 16)
-    SimSearch.ivfSave(fit, dir)
-    val loaded = SimSearch.ivfLoad(spark, dir)
-    assert(loaded.k == fit.k)
-
-    def results(ix: SimSearch.IvfIndex) =
-      SimSearch.ivfSearch(ix, col("vec_id") < 20, nProbe = 8)
-        .select("qid", "cid").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(results(loaded) == results(fit),
-      "search over the persisted index must equal search over the fit index")
-
-    // the cell-partitioned layout is what makes nProbe/k pruning physical:
-    // a static cell predicate must reach the scan as a partition filter
-    val pruned = loaded.assigned.filter(col("cell") === 3)
-      .queryExecution.executedPlan.toString
-    assert(pruned.contains("PartitionFilters: [isnotnull(cell"),
-      s"cell predicate did not become a partition filter:\n$pruned")
-  }
-
-  test("streaming IVF ingest: scalar cell assignment matches the fit, appends into the cell layout") {
-    import org.apache.spark.sql.types._
-    val ix = SimSearch.ivfIndexFor(spark, sf, 16)
-
-    // batch: the plan-constant expression agrees with the k-means model's
-    // own assignments (same squared-L2 argmin; fp re-association may flip
-    // genuine near-ties, hence ≥ 99% not 100%)
-    val byExpr = graft.core.Tables.t(spark, sf, "embeddings")
-      .withColumn("cell2", SimSearch.ivfAssignCol(ix))
-      .select("vec_id", "cell2")
-    val agree = ix.assigned.select(col("vec_id"), col("cell"))
-      .join(byExpr, "vec_id")
-      .agg(avg(when(col("cell") === col("cell2"), 1.0).otherwise(0.0)))
-      .head.getDouble(0)
-    assert(agree >= 0.99, s"expression vs model assignment agreement $agree")
-
-    // streaming: the same expression runs stateless under readStream and
-    // partitionBy lands each vector in its cell directory — the ingest
-    // path of the ivfSave layout
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-ivf-in").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-ivf-out").toString
-    graft.core.Tables.t(spark, sf, "embeddings").limit(100)
-      .select("vec_id", "embedding").write.parquet(srcDir + "/batch0")
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val q = spark.readStream.schema(schema).parquet(srcDir + "/*")
-      .withColumn("cell", SimSearch.ivfAssignCol(ix))
-      .writeStream.format("parquet").partitionBy("cell")
-      .option("path", outDir + "/assigned")
-      .option("checkpointLocation", outDir + "/ckpt")
-      .start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.read.parquet(outDir + "/assigned")
-      .select(col("vec_id"), col("cell")).collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toMap
-    val batch = graft.core.Tables.t(spark, sf, "embeddings").limit(100)
-      .withColumn("cell", SimSearch.ivfAssignCol(ix))
-      .select("vec_id", "cell").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toMap
-    assert(streamed == batch, "streamed cell assignment must equal batch")
-    val cellDirs = new java.io.File(outDir + "/assigned")
-      .listFiles.filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell="))
-    assert(cellDirs.nonEmpty, "partitionBy(cell) produced no cell directories")
-  }
-
-  test("persisted PQ index: loaded search ≡ fit search") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
-    val corpus = graft.core.Tables.t(spark, sf, "embeddings")
-    val fit = SimSearch.pqIndexFor(spark, sf)
-    SimSearch.pqSave(fit, dir)
-    val loaded = SimSearch.pqLoad(spark, dir)
-    assert((loaded.m, loaded.dsub, loaded.ksub) == (fit.m, fit.dsub, fit.ksub))
-    def results(ix: SimSearch.PqIndex) =
-      SimSearch.pqSearch(ix, corpus, col("vec_id") < 20)
-        .select("qid", "cid").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(results(loaded) == results(fit),
-      "search over the persisted PQ index must equal search over the fit index")
-  }
 }

@@ -118,17 +118,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.table("deduped").count() == 100)
   }
 
-  test("stream-static broadcast enrichment") {
-    import spark.implicits._
-    val dim = Seq(("click", 1.0), ("view", 0.5), ("purchase", 5.0),
-      ("signup", 3.0), ("error", -1.0)).toDF("event_type", "weight")
-    val stream = EventStreams.readEventStream(spark, replayDir)
-    EventStreams.runToMemory(EventStreams.enrich(stream, dim), "enriched")
-    val got = spark.table("enriched")
-    assert(got.count() == t(spark, sf, "events").count())
-    assert(got.filter(col("weight").isNull).count() == 0)
-  }
-
   test("stream-stream join with watermarks equals the oracle-checked batch twin") {
     // two independent streaming inputs from the same replay dir; the join
     // carries both-side watermarks + a 1h event-time bound (state eviction)
@@ -557,41 +546,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("streamed seq gate emits exactly the batch evt_frequent_seq2 support") {
-    import spark.implicits._
-    val src = EventStreams.readEventStream(spark, replayDir)
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreams.Ev]
-    EventStreams.runToMemory(EventStreams.seqGate(src).toDF(), "seq_gate")
-    val triples = spark.table("seq_gate").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    // each (user, a, b) emitted at most once
-    assert(triples.distinct.length == triples.length)
-    val got = triples.groupBy(t => (t._2, t._3))
-      .map { case (k, v) => k -> v.length.toLong }
-    val want = graft.queries.EventsBatch.defs("evt_frequent_seq2")(spark, sf)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(got == want, s"streamed support ${got.size} pairs vs ${want.size}")
-  }
-
-  test("flatMapGroupsWithState sessionization closes gap-separated sessions") {
-    import spark.implicits._
-    // batch-mode execution of the stateful function: every session CLOSED
-    // by a ≥30min gap inside the data is emitted; the trailing open session
-    // per user is retained in (discarded) state, not emitted
-    val ev = t(spark, sf, "events")
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[EventStreams.Ev]
-    val out = EventStreams.sessionize(ev).collect()
-    val batchSessions = graft.queries.EventsBatch.defs("evt_session_window")(spark, sf)
-    val expected = batchSessions.count() -
-      batchSessions.select("user_id").distinct().count() // minus open tails
-    assert(out.length == expected,
-      s"closed sessions ${out.length} != gaps-and-islands minus tails $expected")
-    assert(out.forall(s => s.n_events > 0 && s.user_id >= 0))
-  }
-
   test("event-time sessionization closes sessions as the watermark passes") {
     import spark.implicits._
     val src = EventStreams.readEventStream(spark, replayDir)
@@ -634,66 +588,6 @@ class StreamingSpec extends AnyFunSuite {
       s"streamed ${streamed.size} alerts != batch ${batch.size}")
   }
 
-  test("transformWithState MapState per-type counts equal batch aggregates") {
-    import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val src = EventStreams.readEventStream(spark, replayDir)
-        .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-        .as[EventStreams.Ev]
-      EventStreams.runToMemory(EventStreams.typeCounts(src).toDF(), "tws_types")
-      // append mode re-emits a (user, type) row per touching batch with the
-      // RUNNING count — the max per pair is the final count
-      val got = spark.table("tws_types")
-        .groupBy("user_id", "event_type").agg(max("n").as("n"))
-        .collect().map(r => ((r.getLong(0), r.getString(1)), r.getLong(2))).toMap
-      val want = t(spark, sf, "events").groupBy("user_id", "event_type")
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => ((r.getLong(0), r.getString(1)), r.getLong(2))).toMap
-      assert(got == want)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("transformWithState ListState rolling trail equals batch window collect") {
-    import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val src = EventStreams.readEventStream(spark, replayDir)
-        .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-        .as[EventStreams.Ev]
-      EventStreams.runToMemory(EventStreams.recentEvents(src).toDF(), "tws_recent")
-      val got = spark.table("tws_recent")
-        .select("user_id", "ts", "recent").collect()
-        .map(r => ((r.getLong(0), r.getTimestamp(1)), r.getString(2))).toMap
-      // batch twin: last-3 trail via a rows-frame window collect
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts"))
-        .rowsBetween(-2, org.apache.spark.sql.expressions.Window.currentRow)
-      val want = t(spark, sf, "events")
-        .withColumn("code", upper(substring(col("event_type"), 1, 1)))
-        .withColumn("recent",
-          concat_ws(",", collect_list(col("code")).over(w)))
-        .select("user_id", "ts", "recent").collect()
-        .map(r => ((r.getLong(0), r.getTimestamp(1)), r.getString(2))).toMap
-      assert(got.size == want.size)
-      assert(got == want)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("transformWithState running totals equal batch per-user aggregates") {
     import spark.implicits._
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
@@ -716,98 +610,6 @@ class StreamingSpec extends AnyFunSuite {
         assert(got(u)._1 == n && math.abs(got(u)._2 - v) < 1e-6, s"user $u") }
     } finally {
       prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("cusum gate: streamed across micro-batches equals the batch query") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // daily per-type counts from the batch table, and the SAME-data
-      // target — under which the gate must reproduce evt_cusum exactly
-      val daily = t(spark, sf, "events")
-        .groupBy(col("event_type"), col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("x"))
-      val target = EventStreams.cusumTarget(daily)
-      val rows = daily.as[EventStreams.DailyCount].collect()
-        .sortBy(_.day.getTime)
-      val src = MemoryStream[EventStreams.DailyCount](spark)
-      val gated = EventStreams.cusumGate(src.toDS(), target)
-      val q = gated.toDF().writeStream.outputMode("append")
-        .format("memory").queryName("cusum_gate").start()
-      try {
-        // three micro-batches split on day boundaries → state must carry
-        // cum and min-prefix across batch boundaries to stay ≡ batch
-        rows.grouped(math.max(1, rows.length / 3 + 1)).foreach { chunk =>
-          src.addData(chunk.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      val got = spark.table("cusum_gate")
-        .collect().map(r => (r.getString(0), r.getDate(1).toString) ->
-          (r.getDouble(3), r.getBoolean(4))).toMap
-      val want = SparkEntry.queries("evt_cusum")(spark, sf)
-        .collect().map(r => (r.getString(0), r.getDate(1).toString) ->
-          (r.getDouble(3), r.getBoolean(4))).toMap
-      assert(got.keySet == want.keySet)
-      want.foreach { case (k, (c, a)) =>
-        assert(math.abs(got(k)._1 - c) < 1e-3, s"cusum mismatch at $k")
-        assert(got(k)._2 == a, s"alarm mismatch at $k")
-      }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("transformWithState timers fire inactivity alerts for quiet users") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val prevProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // few partitions = few RocksDB instances per (frequent) timer batch
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
-      val src = MemoryStream[EventStreams.Ev](spark)
-      val alerts = EventStreams.inactivityAlerts(src.toDS(), quietMs = 500L)
-      val q = alerts.toDF().writeStream.outputMode("append")
-        .format("memory").queryName("quiet_alerts").start()
-      def ev(id: Long, uid: Long) = EventStreams.Ev(id,
-        new java.sql.Timestamp(1700000000000L + id), uid, "click", 1.0)
-      try {
-        // users 1 (two events) and 2 (one event) — timers armed. NOTE: with
-        // ProcessingTime TimeMode the engine keeps scheduling batches while
-        // timers are pending, so processAllAvailable() would NEVER return
-        // (shouldRunAnotherBatch stays true) — poll the sink instead.
-        src.addData(ev(1, 1), ev(2, 1), ev(3, 2))
-        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-        def alertsNow() = spark.table("quiet_alerts")
-          .select("user_id", "n_events").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toMap
-        var got = alertsNow()
-        while (got.size < 2 && System.nanoTime() < deadline) {
-          Thread.sleep(250)
-          q.exception.foreach(e => fail(s"query failed: $e"))
-          got = alertsNow()
-        }
-        // both users went quiet past 500ms → exactly one alert each,
-        // carrying the per-user event counts accumulated in state
-        assert(got == Map(1L -> 2L, 2L -> 1L),
-          s"expected quiet alerts for users 1 and 2, got $got")
-      } finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      prevProv match {
         case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }

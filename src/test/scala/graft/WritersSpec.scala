@@ -87,38 +87,4 @@ class WritersSpec extends AnyFunSuite {
     assert(k1(2)._3.isEmpty)
     assert(hist.count(h => h._1 == 2L && h._4) == 1)
   }
-
-  test("compactParquet: shrinks file count, preserves rows, swaps atomically") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact").toString + "/t"
-    val df = (1 to 10000).map(i => (i.toLong, s"row$i")).toDF("id", "s")
-    df.repartition(32).write.parquet(dir)
-    val before = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(before == 32)
-    // target sized so ~32 small files fold into very few
-    val after = Writers.compactParquet(spark, dir, targetBytes = 8L << 20)
-    assert(after < before, s"compaction did not shrink: $before -> $after")
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 10000)
-    assert(back.agg(sum(col("id"))).collect()(0).getLong(0) ==
-      (1 to 10000).map(_.toLong).sum)
-  }
-
-  test("money decimal cast at the writer boundary round-trips exactly") {
-    import org.apache.spark.sql.types.DecimalType
-    val dir = Files.createTempDirectory("graft-money").toString + "/trips"
-    // 0.10 is not representable in binary double; after the DECIMAL(12,2)
-    // writer cast, 1000 × 0.10 must sum to exactly 100.00 on read-back
-    val batch = trips((1 to 1000).map(i =>
-      f"2025-10-${i % 28 + 1}%02d 10:00:00" -> 0.10): _*)
-    Writers.writeTripsMonthly(
-      Writers.withMoneyDecimals(batch, Seq("total_amount")), dir)
-    val back = spark.read.parquet(dir)
-    assert(back.schema("total_amount").dataType == DecimalType(12, 2),
-      s"writer cast lost: ${back.schema("total_amount").dataType}")
-    val total = back.agg(sum(col("total_amount"))).collect()(0).getDecimal(0)
-    assert(total.compareTo(new java.math.BigDecimal("100.00")) == 0,
-      s"decimal sum drifted: $total")
-  }
 }
