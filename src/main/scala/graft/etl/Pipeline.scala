@@ -2,11 +2,16 @@ package graft.etl
 
 import org.apache.spark.sql.{Observation, SparkSession}
 
+import graft.core.Tables
+
 /** EP1 end-to-end (SURVEY.md §3): the reference's
   * `python/ingest_data.py main()` dataflow as one declarative Spark job —
   * zones refresh (truncate-replace) + trips monthly load (normalize →
   * idempotent partitioned write). Download (A1) happens outside the
-  * engine, exactly as the reference separates fetch from load.
+  * engine, exactly as the reference separates fetch from load. Both sources
+  * are read through `Tables.read`, so re-loading an unchanged file (the
+  * reference's idempotent re-run) infers no schema and the write's own
+  * jobs are the load's only ones.
   */
 object Pipeline {
 
@@ -28,7 +33,7 @@ object Pipeline {
 
   /** Zones: CSV → normalize → truncate-replace dimension (A3, A4, A9). */
   def refreshZones(spark: SparkSession, conf: Conf): LoadReport = {
-    val raw = spark.read.option("header", "true").csv(conf.zonesSource)
+    val raw = Tables.read(spark, conf.zonesSource, "csv", Map("header" -> "true"))
     val (zones, obs) = Normalize.normalizeZones(raw)
     Writers.writeDimension(zones, s"${conf.warehouse}/taxi_zones")
     report(obs)
@@ -38,7 +43,7 @@ object Pipeline {
     * null-rejection) → month-partitioned dynamic-overwrite write (A2,
     * A4–A8). Re-running the same month is idempotent. */
   def loadTrips(spark: SparkSession, conf: Conf): LoadReport = {
-    val raw = spark.read.parquet(conf.tripsSource)
+    val raw = Tables.read(spark, conf.tripsSource)
     val (trips, obs) = Normalize.normalizeTrips(raw)
     Writers.writeTripsMonthly(Normalize.withTripId(trips), s"${conf.warehouse}/taxi_trips")
     report(obs)

@@ -1,5 +1,10 @@
 package graft.etl
 
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -18,8 +23,21 @@ import org.apache.spark.sql.functions._
   * window too — SURVEY §7.4.5): dynamic overwrite reproduces it exactly,
   * because every month present in the batch gets (re)written, months absent
   * from the batch are untouched.
+  *
+  * Both parquet sinks carry their own local filesystem as writer options
+  * (`localFs`). Without libhadoop, Hadoop's local filesystem forks a `chmod`
+  * process for every file and directory it creates, 14 per monthly load;
+  * `NioLocalFileSystem` sets the same permissions through `java.nio`
+  * instead. As writer options the choice holds in any caller's session and
+  * touches no other read or write; disabling the cache makes Hadoop honour
+  * `fs.file.impl` even when the stock `file:` filesystem is already cached.
+  * Permissions and `.crc` checksums are those of the stock filesystem.
   */
 object Writers {
+
+  private val localFs = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
 
   /** Fact sink: partition by trip month, dynamic overwrite. At 100 TB the
     * partition column doubles as the pruning key for date-range queries
@@ -28,6 +46,7 @@ object Writers {
     trips
       .withColumn("trip_month", date_format(col("pickup_datetime"), "yyyy-MM"))
       .write
+      .options(localFs)
       .partitionBy("trip_month")
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
@@ -35,7 +54,7 @@ object Writers {
 
   /** Dimension sink: truncate-and-replace (A9). */
   def writeDimension(dim: DataFrame, path: String): Unit =
-    dim.write.mode(SaveMode.Overwrite).parquet(path)
+    dim.write.options(localFs).mode(SaveMode.Overwrite).parquet(path)
 
   /** Keyed MERGE (SCD type-1 upsert): rows of `updates` replace same-key
     * rows of `existing`; unmatched existing rows are kept, unmatched
@@ -76,4 +95,27 @@ object Writers {
                             props: java.util.Properties): Unit =
     df.write.mode(SaveMode.Overwrite).option("truncate", true)
       .jdbc(url, table, props)
+}
+
+/** Hadoop's checksummed local filesystem over `NioRawLocalFileSystem`. */
+final class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+
+/** Hadoop's raw local filesystem, except that `setPermission` maps the
+  * permission's `toShort` bits to `PosixFilePermission`s and sets them with
+  * `Files.setPosixFilePermissions` (the same chmod(2) as the stock path's
+  * forked `chmod`). A sticky bit has no `PosixFilePermission`, so such a
+  * permission goes to the stock implementation. */
+final class NioRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val bits = permission.toShort & 0xffff
+    if ((bits & ~0x1ff) != 0) super.setPermission(p, permission) // not only rwx (0777)
+    else {
+      // values() runs OWNER_READ .. OTHERS_EXECUTE, bits 0400 .. 0001
+      val perms = new java.util.HashSet[PosixFilePermission]()
+      PosixFilePermission.values.zipWithIndex.foreach { case (pp, i) =>
+        if ((bits & (0x100 >> i)) != 0) perms.add(pp)
+      }
+      Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
+    }
+  }
 }

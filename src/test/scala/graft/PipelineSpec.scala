@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -43,43 +40,21 @@ class PipelineSpec extends AnyFunSuite {
     val conf = Pipeline.Conf(s"$root/raw", s"$root/zones.csv", s"$root/wh")
     assert(Pipeline.refreshZones(spark, conf) == LoadReport(3, 1, 2))
 
-    // every job the load starts, in order, with its SQL execution id
-    val sc = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[(String, Option[String])]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .filter(_.startsWith("pipeline-spec"))
-          .foreach(g => jobs.add(g -> Option(e.properties.getProperty("spark.sql.execution.id"))))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("pipeline-spec-load", "loadTrips")
-      val first = Pipeline.loadTrips(spark, conf)
-      // a marker job: once the listener has seen it, it has seen every job
-      // the load started (the bus delivers in order)
-      sc.setJobGroup("pipeline-spec-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      def seen = jobs.asScala.toSeq
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.exists(_._1 == "pipeline-spec-marker") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      val load = seen.takeWhile(_._1 == "pipeline-spec-load").map(_._2)
-      assert(first == LoadReport(22, 5, 17))
-      // the write is the only SQL execution, and no job starts after its
-      // first one outside it (a count() or collect() would be a second)
-      assert(load.flatten.distinct.size == 1, s"jobs by execution id: $load")
-      assert(load.dropWhile(_.isEmpty).forall(_.isDefined), s"jobs by execution id: $load")
+    // the write is the only SQL execution, and no job starts after its
+    // first one outside it (a count() or collect() would be a second)
+    val (first, load) = Jobs.during(spark)(Pipeline.loadTrips(spark, conf))
+    assert(first == LoadReport(22, 5, 17))
+    assert(load.flatten.distinct.size == 1, s"jobs by execution id: $load")
+    assert(load.dropWhile(_.isEmpty).forall(_.isDefined), s"jobs by execution id: $load")
 
-      val table = s"$root/wh/taxi_trips"
-      assert(spark.read.parquet(table).count() == 17)
-      // a re-load of the same month: same report, same table
-      assert(Pipeline.loadTrips(spark, conf) == first)
-      assert(spark.read.parquet(table).count() == 17)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val table = s"$root/wh/taxi_trips"
+    assert(spark.read.parquet(table).count() == 17)
+    // a re-load of the same month: same report, same table, and every job
+    // is the write's (the source's schema is not inferred again)
+    val (again, reload) = Jobs.during(spark)(Pipeline.loadTrips(spark, conf))
+    assert(again == first)
+    assert(reload.nonEmpty && reload.forall(_.isDefined) && reload.flatten.distinct.size == 1,
+      s"re-load jobs by execution id: $reload")
+    assert(spark.read.parquet(table).count() == 17)
   }
 }

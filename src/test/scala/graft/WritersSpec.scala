@@ -1,9 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import java.net.URI
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.etl.Writers
+import graft.etl.{NioRawLocalFileSystem, Writers}
 
 /** Idempotency parity with the reference's windowed-DELETE semantics
   * (SURVEY.md §7.4 risk 5): dynamic partition overwrite must (a) be
@@ -49,6 +54,64 @@ class WritersSpec extends AnyFunSuite {
     Writers.writeDimension(Seq((3, "c")).toDF("id", "z"), dir)
     val got = spark.read.parquet(dir).collect()
     assert(got.length == 1 && got(0).getInt(0) == 3)
+  }
+
+  /** Every file and directory under `root` with its POSIX permissions, the
+    * per-write UUID of Spark's part-file names masked. */
+  private def tree(root: String): Seq[(String, String)] = {
+    val r = Paths.get(root)
+    Files.walk(r).iterator.asScala.filter(_ != r).map { p =>
+      r.relativize(p).toString.replaceAll("part-(\\d+)-[0-9a-f-]{36}", "part-$1") ->
+        PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    }.toSeq.sorted
+  }
+
+  test("the sinks write the stock local filesystem's permissions and checksums, through java.nio") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-sink-perms").toString
+    // the same writes by hand, through Hadoop's stock local filesystem
+    val stockFs = Map("fs.file.impl" -> classOf[LocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    val (nio, stock) = (FileSystem.getStatistics("file", classOf[NioRawLocalFileSystem]),
+      FileSystem.getStatistics("file", classOf[RawLocalFileSystem]))
+    val before = (nio.getBytesWritten, stock.getBytesWritten)
+    val rows = trips("2025-10-15 10:00:00" -> 10.0, "2025-11-01 09:00:00" -> 20.0)
+    Writers.writeTripsMonthly(rows, s"$root/sink/trips")
+    rows.withColumn("trip_month", date_format(col("pickup_datetime"), "yyyy-MM"))
+      .write.options(stockFs).partitionBy("trip_month").option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite").parquet(s"$root/stock/trips")
+    val dim = Seq((1, "a"), (2, "b")).toDF("id", "z")
+    Writers.writeDimension(dim, s"$root/sink/zones")
+    dim.write.options(stockFs).mode("overwrite").parquet(s"$root/stock/zones")
+    assert(nio.getBytesWritten > before._1, "the sinks did not write through NioRawLocalFileSystem")
+    assert(stock.getBytesWritten > before._2, "the by-hand writes did not use the stock filesystem")
+    val sink = tree(s"$root/sink")
+    assert(sink == tree(s"$root/stock"))
+    val parquet = sink.map(_._1).filter(_.endsWith(".parquet"))
+    assert(parquet.size >= 3)
+    parquet.foreach { f =>
+      val crc = Paths.get(f).resolveSibling(s".${Paths.get(f).getFileName}.crc").toString
+      assert(sink.exists(_._1 == crc), s"no checksum for $f")
+    }
+  }
+
+  test("setPermission sets rwx bits like the stock chmod and hands a sticky bit to it") {
+    val conf = spark.sessionState.newHadoopConf()
+    val (nio, stock) = (new NioRawLocalFileSystem, new RawLocalFileSystem)
+    Seq(nio, stock).foreach(_.initialize(new URI("file:///"), conf))
+    def mode(p: java.nio.file.Path) = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+    for (m <- Seq("640", "751", "777", "421", "0", "1755", "1700")) {
+      val bits = Integer.parseInt(m, 8)
+      val got = Seq(nio, stock).map { fs =>
+        val d = Files.createTempDirectory("graft-perm")
+        fs.setPermission(new Path(d.toUri), new FsPermission(bits.toShort))
+        val r = mode(d)
+        Files.setPosixFilePermissions(d, PosixFilePermissions.fromString("rwx------"))
+        Files.delete(d)
+        r
+      }
+      assert(got == Seq(bits, bits), s"mode $m: nio, stock = ${got.map(_.toOctalString)}")
+    }
   }
 
   test("mergeUpsert: updates win, inserts append, untouched rows survive; idempotent") {
