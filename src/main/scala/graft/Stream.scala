@@ -13,6 +13,10 @@ import graft.streaming.EventStreams
   *   runMain graft.Stream <eventsDir|sfDir>
   *     [tumbling|sliding|session|dedup|totals|join|sessions_et|gate]
   *
+  * It prints one line per micro-batch, its Spark job time (`addBatch_ms`)
+  * apart from its checkpoint commits (`commit_ms`: `walCommit` +
+  * `commitOffsets`), then the last batch's state stores.
+  *
   * `<eventsDir>` must contain micros-timestamp events parquet (e.g. written
   * by `Tables.t(spark, sf, "events").write.parquet(dir)`); the `gate` op
   * takes an sf dir instead.
@@ -70,7 +74,18 @@ object Stream {
       case other => sys.error(
         s"unknown op '$other' (tumbling|sliding|session|dedup|totals|join|sessions_et|gate)")
     }
-    EventStreams.runToMemory(out, "stream_out", mode)
+    val progress = EventStreams.runToMemory(out, "stream_out", mode)
+    progress.foreach { p =>
+      def ms(k: String): Long = Option(p.durationMs.get(k)).fold(0L)(_.longValue)
+      println(s"[stream] batch=${p.batchId} rows=${p.numInputRows}" +
+        s" addBatch_ms=${ms("addBatch")}" +
+        s" commit_ms=${ms("walCommit") + ms("commitOffsets")}")
+    }
+    progress.lastOption.foreach(_.stateOperators.foreach { s =>
+      println(s"[stream] state op=${s.operatorName} stores=${s.numStateStoreInstances}" +
+        s" rows=${s.numRowsTotal} commit_ms=${s.commitTimeMs}" +
+        s" memory_bytes=${s.memoryUsedBytes}")
+    })
     val result = spark.table("stream_out")
     println(s"[stream] op=$op rows=${result.count()}")
     result.show(10, truncate = false)

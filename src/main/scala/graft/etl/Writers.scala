@@ -1,9 +1,15 @@
 package graft.etl
 
+import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import scala.annotation.unused
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
@@ -24,20 +30,15 @@ import org.apache.spark.sql.functions._
   * because every month present in the batch gets (re)written, months absent
   * from the batch are untouched.
   *
-  * Both parquet sinks carry their own local filesystem as writer options
-  * (`localFs`). Without libhadoop, Hadoop's local filesystem forks a `chmod`
-  * process for every file and directory it creates, 14 per monthly load;
-  * `NioLocalFileSystem` sets the same permissions through `java.nio`
-  * instead. As writer options the choice holds in any caller's session and
-  * touches no other read or write; disabling the cache makes Hadoop honour
-  * `fs.file.impl` even when the stock `file:` filesystem is already cached.
-  * Permissions and `.crc` checksums are those of the stock filesystem.
+  * Both parquet sinks write through the engine's local filesystem, which
+  * `graft.plans.GraftExtensions` installs on every session (see
+  * [[NioLocalFs.install]]). Without libhadoop, Hadoop's local filesystem
+  * forks a `chmod` process for every file and directory it creates, 14 per
+  * monthly load; `NioLocalFileSystem` sets the same permissions through
+  * `java.nio` instead. Permissions and `.crc` checksums are those of the
+  * stock filesystem.
   */
 object Writers {
-
-  private val localFs = Map(
-    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
-    "fs.file.impl.disable.cache" -> "true")
 
   /** Fact sink: partition by trip month, dynamic overwrite. At 100 TB the
     * partition column doubles as the pruning key for date-range queries
@@ -46,7 +47,6 @@ object Writers {
     trips
       .withColumn("trip_month", date_format(col("pickup_datetime"), "yyyy-MM"))
       .write
-      .options(localFs)
       .partitionBy("trip_month")
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
@@ -54,7 +54,7 @@ object Writers {
 
   /** Dimension sink: truncate-and-replace (A9). */
   def writeDimension(dim: DataFrame, path: String): Unit =
-    dim.write.options(localFs).mode(SaveMode.Overwrite).parquet(path)
+    dim.write.mode(SaveMode.Overwrite).parquet(path)
 
   /** Keyed MERGE (SCD type-1 upsert): rows of `updates` replace same-key
     * rows of `existing`; unmatched existing rows are kept, unmatched
@@ -97,14 +97,61 @@ object Writers {
       .jdbc(url, table, props)
 }
 
-/** Hadoop's checksummed local filesystem over `NioRawLocalFileSystem`. */
+/** Hadoop's checksummed local filesystem over `NioRawLocalFileSystem`: the
+  * `FileSystem` for `file:` paths (`fs.file.impl`). */
 final class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 
-/** Hadoop's raw local filesystem, except that `setPermission` maps the
-  * permission's `toShort` bits to `PosixFilePermission`s and sets them with
-  * `Files.setPosixFilePermissions` (the same chmod(2) as the stock path's
-  * forked `chmod`). A sticky bit has no `PosixFilePermission`, so such a
-  * permission goes to the stock implementation. */
+/** Hadoop's `FileContext` local filesystem (`fs.AbstractFileSystem.file.impl`,
+  * through which Spark writes streaming checkpoints and state stores):
+  * Hadoop's `LocalFs`, checksums over `RawLocalFs`, with
+  * `NioRawLocalFileSystem` under it. Like `LocalFs` it ignores the URI it is
+  * given. */
+final class NioLocalFs(@unused uri: URI, conf: Configuration)
+  extends ChecksumFs(new NioRawLocalFs(conf))
+
+object NioLocalFs {
+  private val keys = Seq(
+    "fs.file.impl" -> classOf[NioLocalFileSystem],
+    "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs])
+
+  /** Makes `conf`'s local filesystems the engine's own, both the
+    * `FileSystem` and the `FileContext` one. Each key is set only while it
+    * is unset or holds Hadoop's shipped default (its one source is
+    * `core-default.xml`), so an explicit setting, such as a session's
+    * `spark.hadoop.fs.AbstractFileSystem.file.impl`, wins, and a second
+    * call changes nothing. */
+  def install(conf: Configuration): Unit = keys.foreach { case (key, cls) =>
+    val sources = conf.getPropertySources(key)
+    if (sources == null || sources.forall(_ == "core-default.xml"))
+      conf.set(key, cls.getName, "graft.plans.GraftExtensions")
+  }
+}
+
+/** Hadoop's `RawLocalFs` over `NioRawLocalFileSystem`. `RawLocalFs`'s
+  * constructors are package-private, so this copies its overrides. */
+private[etl] final class NioRawLocalFs(conf: Configuration)
+  extends DelegateToFileSystem(FsConstants.LOCAL_FS_URI, new NioRawLocalFileSystem,
+    conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
+  override def getUriDefaultPort: Int = -1 // file:/// has no port
+  override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
+  @deprecated("as in AbstractFileSystem", "Hadoop 2")
+  override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
+  // local filesystems differ in what names they accept: the OS decides
+  override def isValidName(src: String): Boolean = true
+}
+
+/** Hadoop's raw local filesystem, without its forks:
+  *
+  *  - `setPermission` maps the permission's `toShort` bits to
+  *    `PosixFilePermission`s and sets them with
+  *    `Files.setPosixFilePermissions` (the same chmod(2) as the stock path's
+  *    forked `chmod`). A sticky bit has no `PosixFilePermission`, so such a
+  *    permission goes to the stock implementation.
+  *  - `getFileLinkStatus` of a path that is not a symlink is its
+  *    `getFileStatus`, which is what the stock path returns after forking
+  *    `readlink` to find out. A symlink, dangling or not, takes the stock
+  *    path.
+  */
 final class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = {
     val bits = permission.toShort & 0xffff
@@ -118,4 +165,8 @@ final class NioRawLocalFileSystem extends RawLocalFileSystem {
       Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
     }
   }
+
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    else getFileStatus(f)
 }

@@ -227,9 +227,16 @@ case class AsOfJoinExec(
   * every graft SQL function of [[graft.functions.GraftFunctions.builders]],
   * the typed aggregates (`kahan_sum`, `topk3_by`, …) included, at session
   * build (so `spark.sql("SELECT cosine_similarity…")` works with no
-  * registration call). */
+  * registration call). It also makes the engine's java.nio local
+  * filesystems those of the session's SparkContext
+  * ([[graft.etl.NioLocalFs.install]]), so no parquet sink, streaming
+  * checkpoint or state-store commit forks a `chmod` or `readlink` process.
+  * Spark applies extensions once the context runs, before the session's
+  * shared state copies the context's Hadoop configuration. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    GraftSqlBridge.activeContext
+      .foreach(sc => graft.etl.NioLocalFs.install(sc.hadoopConfiguration))
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
     e.injectPlannerStrategy(_ => RangeJoinStrategy)
     e.injectOptimizerRule(_ => AsOfJoinKeyPushdown)

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQueryProgress}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface over the `events` table (SURVEY.md §2
@@ -345,11 +346,16 @@ object EventStreams {
 
   /** Run any of the above to the memory sink table `name`, processing all
     * available input once (deterministic batch replay for tests); read the
-    * result back with `spark.table(name)`. */
+    * result back with `spark.table(name)`. Returns the query's
+    * `recentProgress`, one entry per micro-batch: `durationMs` splits a
+    * batch into its Spark jobs (`addBatch`) and its checkpoint commits
+    * (`walCommit`, `commitOffsets`), and `stateOperators` holds each state
+    * store's rows and commit time. */
   def runToMemory(df: DataFrame, name: String,
-                  mode: OutputMode = OutputMode.Append): Unit = {
+                  mode: OutputMode = OutputMode.Append): Array[StreamingQueryProgress] = {
     val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
     q.processAllAvailable()
     q.stop()
+    q.recentProgress
   }
 }

@@ -15,6 +15,8 @@ import org.apache.spark.sql.expressions.{UserDefinedAggregator, UserDefinedFunct
   *  - [[scalaAggregator]] turns a typed `udaf(Aggregator)` into the Catalyst
   *    aggregate Spark's UDF registration builds for it, so
   *    `graft.plans.GraftExtensions` can inject it as a SQL function.
+  *  - [[activeContext]] is the running SparkContext, if any, without
+  *    starting one, for `GraftExtensions`' filesystem install.
   */
 object GraftSqlBridge {
   def ofRows(s: SparkSession, plan: LogicalPlan): DataFrame =
@@ -22,4 +24,7 @@ object GraftSqlBridge {
 
   def scalaAggregator(udaf: UserDefinedFunction, children: Seq[Expression]): Expression =
     ScalaAggregator(udaf.asInstanceOf[UserDefinedAggregator[_, _, _]], children)
+
+  def activeContext: Option[org.apache.spark.SparkContext] =
+    org.apache.spark.SparkContext.getActive
 }

@@ -429,12 +429,13 @@ class StreamingSpec extends AnyFunSuite {
   /** Every row `op` emits over the files of `dir`, read one per
     * micro-batch through a checkpointed, batch-id-keyed sink, as strings.
     * With `restartAfter = Some(k)` the query first sees only the first k
-    * files and stops; a new query then resumes from the same checkpoint
-    * with the rest of the files in place. */
+    * files and stops; a new query then resumes from the same checkpoint,
+    * in `resumeIn`, with the rest of the files in place. The checkpoint is
+    * `base/ckpt`. */
   def replayRows(session: SparkSession, dir: String, restartAfter: Option[Int],
-      op: DataFrame => DataFrame): Seq[String] = {
+      op: DataFrame => DataFrame, resumeIn: Option[SparkSession] = None,
+      base: String = Files.createTempDirectory("graft-restart").toString): Seq[String] = {
     import org.apache.spark.sql.streaming.Trigger
-    val base = Files.createTempDirectory("graft-restart").toString
     val (in, ckpt) = (s"$base/in", s"$base/ckpt")
     new java.io.File(in).mkdirs()
     val files = new java.io.File(dir).listFiles()
@@ -444,7 +445,7 @@ class StreamingSpec extends AnyFunSuite {
     def stage(fs: Seq[java.io.File]): Unit = fs.foreach(f => Files.copy(
       f.toPath, new java.io.File(in, f.getName).toPath,
       java.nio.file.StandardCopyOption.COPY_ATTRIBUTES))
-    def run(): Unit = {
+    def run(session: SparkSession): Unit = {
       val q = op(session.readStream.schema(EventStreams.eventSchema)
           .option("maxFilesPerTrigger", 1).parquet(in))
         .writeStream.option("checkpointLocation", ckpt)
@@ -456,8 +457,8 @@ class StreamingSpec extends AnyFunSuite {
       q.exception.foreach(e => throw e)
     }
     val k = restartAfter.getOrElse(files.size)
-    stage(files.take(k)); run()
-    if (k < files.size) { stage(files.drop(k)); run() }
+    stage(files.take(k)); run(session)
+    if (k < files.size) { stage(files.drop(k)); run(resumeIn.getOrElse(session)) }
     out.values.flatten.toSeq.sorted
   }
 
@@ -516,6 +517,92 @@ class StreamingSpec extends AnyFunSuite {
         }
       }
     }
+
+  private val rocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** A session on `provider` (None = the HDFS-backed default) without
+    * no-data micro-batches (see `restartEquivalent`), whose checkpoints go
+    * through Hadoop's stock `LocalFs` when `stock`, else through the
+    * engine's `NioLocalFs`, which `GraftExtensions` installs. */
+  def checkpointSession(provider: Option[String], stock: Boolean): SparkSession = {
+    import org.apache.hadoop.fs.AbstractFileSystem
+    val session = spark.newSession()
+    provider.foreach(
+      session.conf.set("spark.sql.streaming.stateStore.providerClass", _))
+    session.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    if (stock) session.conf.set("fs.AbstractFileSystem.file.impl",
+      classOf[org.apache.hadoop.fs.local.LocalFs].getName)
+    val fs = AbstractFileSystem.get(new java.net.URI("file:///"),
+      session.sessionState.newHadoopConf()).getClass
+    assert(fs == (if (stock) classOf[org.apache.hadoop.fs.local.LocalFs]
+      else classOf[graft.etl.NioLocalFs]), s"checkpoint filesystem $fs")
+    session
+  }
+
+  /** Every file and directory under `root` with its POSIX permissions;
+    * the UUIDs in temp and RocksDB file names masked. */
+  def modeTree(root: String): Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val r = java.nio.file.Paths.get(root)
+    Files.walk(r).iterator.asScala.filter(_ != r).map { p =>
+      r.relativize(p).toString.replaceAll(
+        "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>") ->
+        java.nio.file.attribute.PosixFilePermissions.toString(
+          Files.getPosixFilePermissions(p))
+    }.toSeq.sorted
+  }
+
+  Seq("HDFS" -> None, "RocksDB" -> Some(rocksDb)).foreach { case (store, provider) =>
+    test(s"a replay's checkpoint has the same files and modes under NioLocalFs as under stock LocalFs ($store state store)") {
+      val dir = disorderedReplay(seed = 11L, nFiles = 6)
+      val trees = Seq(true, false).map { stock =>
+        val base = Files.createTempDirectory("graft-ckpt-fs").toString
+        val session = checkpointSession(provider, stock)
+        // which SST files a RocksDB commit uploads depends on whether a
+        // background compaction finished first; compacting in the commit
+        // makes the set the same in every run
+        session.conf.set("spark.sql.streaming.stateStore.rocksdb.compactOnCommit", "true")
+        val rows = replayRows(session, dir, None, EventStreams.dedupStream _, base = base)
+        (rows, modeTree(s"$base/ckpt"))
+      }
+      val (stockTree, nioTree) = (trees(0)._2, trees(1)._2)
+      assert(trees(0)._1.nonEmpty && trees(0)._1 == trees(1)._1, "replays differ")
+      assert(stockTree.exists(_._1.startsWith("state/")), s"no state files: $stockTree")
+      assert(stockTree.exists(_._1.endsWith(".crc")), s"no checksums: $stockTree")
+      val (onlyStock, onlyNio) = (stockTree.diff(nioTree), nioTree.diff(stockTree))
+      assert(onlyStock.isEmpty && onlyNio.isEmpty,
+        s"only under LocalFs: $onlyStock; only under NioLocalFs: $onlyNio")
+    }
+
+    test(s"a checkpoint written under stock LocalFs restarts under NioLocalFs with the same rows ($store state store)") {
+      val dir = disorderedReplay(seed = 11L, nFiles = 6)
+      val op = restartOps.find(_._1 == "left_outer attribution").get._2
+      val nio = checkpointSession(provider, stock = false)
+      val whole = replayRows(nio, dir, None, op)
+      val restarted = replayRows(checkpointSession(provider, stock = true), dir,
+        Some(3), op, resumeIn = Some(nio))
+      assert(whole.nonEmpty, "the replay emitted nothing")
+      val (extra, missing) = (restarted.diff(whole), whole.diff(restarted))
+      assert(extra.isEmpty && missing.isEmpty, s"restarted ${restarted.size}" +
+        s" rows, uninterrupted ${whole.size}; only restarted: $extra;" +
+        s" only uninterrupted: $missing")
+    }
+  }
+
+  test("runToMemory returns each batch's job time apart from its commit time") {
+    val progress = EventStreams.runToMemory(
+      EventStreams.dedupStream(EventStreams.readEventStream(spark, replayDir)),
+      "dedup_progress")
+    assert(progress.nonEmpty)
+    progress.foreach { p =>
+      Seq("addBatch", "walCommit", "commitOffsets").foreach(k =>
+        assert(p.durationMs.containsKey(k), s"batch ${p.batchId}: no $k in ${p.durationMs}"))
+    }
+    val ops = progress.last.stateOperators
+    assert(ops.length == 1 && ops.head.numStateStoreInstances ==
+      spark.conf.get("spark.sql.shuffle.partitions").toLong, ops.toSeq)
+  }
 
   test("streamed attribution keeps one state store per shuffle partition") {
     val s = EventStreams.readEventStream(spark, replayDir)

@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSyst
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.etl.{NioRawLocalFileSystem, Writers}
+import graft.etl.{NioLocalFs, NioRawLocalFileSystem, Writers}
 
 /** Idempotency parity with the reference's windowed-DELETE semantics
   * (SURVEY.md §7.4 risk 5): dynamic partition overwrite must (a) be
@@ -114,6 +114,83 @@ class WritersSpec extends AnyFunSuite {
     }
   }
 
+  test("getFileLinkStatus equals the stock filesystem's for a file, a directory and symlinks") {
+    val conf = spark.sessionState.newHadoopConf()
+    val (nio, stock) = (new NioRawLocalFileSystem, new RawLocalFileSystem)
+    Seq(nio, stock).foreach(_.initialize(new URI("file:///"), conf))
+    val d = Files.createTempDirectory("graft-link")
+    val file = Files.write(d.resolve("f"), "x".getBytes)
+    val dir = Files.createDirectory(d.resolve("d"))
+    val link = Files.createSymbolicLink(d.resolve("l"), file)
+    val dangling = Files.createSymbolicLink(d.resolve("g"), d.resolve("gone"))
+    // the stock path runs `readlink` on the path's string, so it finds a
+    // symlink only through a scheme-less path; a qualified one reads as the
+    // link's target, and a dangling link as missing
+    def outcome(fs: FileSystem, p: Path) =
+      scala.util.Try(fs.getFileLinkStatus(p)).map(s =>
+        (s.getPath, s.isFile, s.isDirectory, s.isSymlink,
+          if (s.isSymlink) Some(s.getSymlink) else None, s.getLen,
+          s.getModificationTime, s.getPermission, s.getOwner, s.getGroup)
+      ).toEither.left.map(_.getClass)
+    for (p <- Seq(file, dir, link, dangling, d.resolve("missing"));
+         path <- Seq(new Path(p.toUri), new Path(p.toString))) {
+      val Seq(got, want) = Seq(nio, stock).map(outcome(_, path))
+      assert(got == want, s"$path: nio $got, stock $want")
+    }
+    Seq(link, dangling).foreach(p =>
+      assert(nio.getFileLinkStatus(new Path(p.toString)).isSymlink, p))
+    Seq(nio, stock).foreach { fs =>
+      intercept[java.io.FileNotFoundException](
+        fs.getFileLinkStatus(new Path(d.resolve("missing").toUri)))
+    }
+  }
+
+  /** `LocalFsProbe`'s output in a JVM of its own: a session built by hand,
+    * as perfbench builds one, needs a SparkContext this JVM has not
+    * started yet. */
+  private lazy val probed: Seq[String] = {
+    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq.sliding(2).collect {
+        case Seq("--add-opens", v) => Seq("--add-opens", v)
+      }.flatten.toSeq
+    val cmd = Seq(javaBin, "-Xmx1g") ++ opens ++
+      Seq("-cp", sys.props("java.class.path"), "graft.LocalFsProbe")
+    val out = scala.sys.process.Process(cmd).!!(scala.sys.process.ProcessLogger(_ => ()))
+    out.linesIterator.filter(_.startsWith("[probe]")).toSeq
+  }
+
+  test("GraftExtensions installs NioLocalFs on a session built by hand with only the extension") {
+    assert(probed.contains(s"[probe] default ${classOf[NioLocalFs].getName}"), probed)
+  }
+
+  test("GraftExtensions does nothing to filesystems when no SparkContext runs") {
+    assert(probed.contains("[probe] no context: none started"), probed)
+  }
+
+  test("NioLocalFs.install replaces only Hadoop's shipped defaults, and only once") {
+    import org.apache.hadoop.conf.Configuration
+    val keys = Seq("fs.AbstractFileSystem.file.impl", "fs.file.impl")
+    def state(c: Configuration) = keys.map(k => (c.get(k), c.getPropertySources(k).toSeq))
+    val conf = new Configuration()
+    assert(conf.getPropertySources(keys.head).toSeq == Seq("core-default.xml"))
+    NioLocalFs.install(conf)
+    assert(keys.map(conf.get) ==
+      Seq(classOf[NioLocalFs].getName, classOf[graft.etl.NioLocalFileSystem].getName))
+    val once = state(conf)
+    NioLocalFs.install(conf)
+    assert(state(conf) == once)
+    val explicit = new Configuration()
+    keys.foreach(explicit.set(_, "x.Explicit", "spark.hadoop"))
+    NioLocalFs.install(explicit)
+    assert(keys.map(explicit.get) == Seq("x.Explicit", "x.Explicit"))
+  }
+
+  test("an explicit spark.hadoop.fs.AbstractFileSystem.file.impl wins over GraftExtensions") {
+    assert(probed.contains(
+      s"[probe] explicit ${classOf[org.apache.hadoop.fs.local.LocalFs].getName}"), probed)
+  }
+
   test("mergeUpsert: updates win, inserts append, untouched rows survive; idempotent") {
     import spark.implicits._
     val existing = Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0))
@@ -149,5 +226,38 @@ class WritersSpec extends AnyFunSuite {
     assert(k1(1)._3.contains(java.sql.Timestamp.valueOf("2025-03-01 00:00:00")))
     assert(k1(2)._3.isEmpty)
     assert(hist.count(h => h._1 == 2L && h._4) == 1)
+  }
+}
+
+/** Applies `GraftExtensions` with no SparkContext running, then builds two
+  * sessions by hand, one after the other, each with only the
+  * settings perfbench's session shares with the engine's
+  * (`spark.sql.extensions=graft.plans.GraftExtensions`), the second also
+  * with an explicit `spark.hadoop.fs.AbstractFileSystem.file.impl`, and
+  * prints the `file:` FileContext filesystem each session's Hadoop
+  * configuration resolves to. */
+object LocalFsProbe {
+  def main(args: Array[String]): Unit = {
+    new graft.plans.GraftExtensions()
+      .apply(new org.apache.spark.sql.SparkSessionExtensions)
+    println("[probe] no context: " +
+      org.apache.spark.sql.GraftSqlBridge.activeContext.fold("none started")(_ => "started"))
+    sessions()
+  }
+
+  private def sessions(): Unit = Seq(
+    "default" -> None,
+    "explicit" -> Some(classOf[org.apache.hadoop.fs.local.LocalFs].getName)
+  ).foreach { case (name, impl) =>
+    val b = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]").appName("local-fs-probe")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    impl.foreach(b.config("spark.hadoop.fs.AbstractFileSystem.file.impl", _))
+    val spark = b.getOrCreate()
+    val fs = org.apache.hadoop.fs.AbstractFileSystem.get(new URI("file:///"),
+      spark.sessionState.newHadoopConf())
+    println(s"[probe] $name ${fs.getClass.getName}")
+    spark.stop()
   }
 }
